@@ -91,7 +91,6 @@ def bm25_topk(
     docs: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    salt_buckets: int = 32,
     text_col: str = "text",
     id_col: str = "doc_id",
     qid_col: str = "query_id",
@@ -99,10 +98,9 @@ def bm25_topk(
 ) -> DataFrame:
     """(query_id, doc_id, score_q, rank) — each query's top-k docs by
     quantized BM25 (set-of-words queries; ties broken by doc_id ASC).
-    Docs sharing no term with a query never appear.  `salt_buckets` is
-    kept for API compatibility; the partial top-k now happens inside
-    the scoring kernel (see module docstring), so no salted window is
-    needed."""
+    Docs sharing no term with a query never appear.  The partial top-k
+    happens inside the scoring kernel (see module docstring), so no
+    salted window is needed."""
     from pyspark.storagelevel import StorageLevel
 
     spark = docs.sparkSession
@@ -142,7 +140,7 @@ def bm25_topk(
     # one tokenize pass -> (doc, token) tf -> one row per doc carrying
     # dl + the packed matched entries.  The repartition parallelizes
     # the tokenize+partial-agg map stage when the source arrives as a
-    # single small file (same rationale as dedup._ensure_parallel).
+    # single small file.
     occ = _occurrences(
         docs.repartition(spark.sparkContext.defaultParallelism),
         text_col, id_col,

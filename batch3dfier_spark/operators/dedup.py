@@ -4,8 +4,7 @@ SimHash, and n-gram Jaccard verification.
 Scale design (100 TB):
 - exact dedup: groupBy(sha2(text)).agg(min,count) + join-back — the
   partial map-side combine absorbs hot duplicate groups before the
-  shuffle and AQE can skew-split the join; a single-shuffle window
-  shape remains behind use_window=True for hot-key-free corpora.
+  shuffle and AQE can skew-split the join.
 - MinHash: signatures are computed in one Arrow-batched pandas UDF
   (numpy matrix ops per batch, no per-row Python math); LSH banding
   explodes each doc into `bands` rows and groupBys on (band, band_hash)
@@ -38,6 +37,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType
+
+from ..session import ensure_parallel
 
 __all__ = [
     "exact_dedup",
@@ -48,6 +50,7 @@ __all__ = [
     "band_rows",
     "lsh_candidates",
     "verified_near_dups",
+    "signature_matches",
     "minhash_near_dups",
     "simhash_signatures",
     "simhash_near_dups",
@@ -64,78 +67,27 @@ MERSENNE = (1 << 61) - 1
 _NUM_PERM_DEFAULT = 64
 
 
-def _ensure_parallel(df: DataFrame) -> DataFrame:
-    """CPU-bound Arrow UDF stages need >= core-count partitions; a
-    single small parquet file arrives as ONE partition and would
-    serialize the stage.  Round-robin repartition, decided from the
-    FILE COUNT of the source (round-7): `df.inputFiles()` is a
-    driver-side plan walk — unlike probing `df.rdd.getNumPartitions()`
-    it forces no plan->RDD conversion (that was measured 5-8x slower
-    on the composed dedup funnels) — so a many-file corpus whose scan
-    is already parallel skips the repartition outright instead of
-    paying a full payload shuffle, while few-file sources (and
-    non-file sources, where the count is unknowable) still fan out.
-    Call this on SOURCE frames only; join outputs already carry
-    shuffle-partition parallelism."""
-    want = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = []
-    if len(files) >= want:
-        return df
-    if files:
-        # tiny sources: below ~2 MB the Arrow kernel finishes faster
-        # than the shuffle + task fan-out costs (measured +0.2 s on the
-        # sf0.1 ANN queries), so keep the scan's own partitioning
-        import os
-        from urllib.parse import urlparse
-
-        try:
-            total = sum(
-                os.path.getsize(urlparse(f).path or f) for f in files
-            )
-            if total < (2 << 20):
-                return df
-        except OSError:
-            pass  # non-local paths: fall through to the repartition
-    return df.repartition(want)
-
-
 def exact_dedup(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    use_window: bool = False,
 ) -> DataFrame:
     """Exact near-zero-cost dedup: keeper = min id per sha2(text) group.
     Returns (id, text_sha, group_size, is_dup) — is_dup marks rows to
     drop.  Pure JVM.
 
-    Default shape (the line_dedup lesson applied to its sibling) is
-    groupBy + join-back: hash aggregation does PARTIAL map-side
-    combine, so a hot exact-duplicate document (empty pages, error
-    pages, boilerplate mirrors — repeated 1e6-1e9x in a web corpus)
-    collapses to one (text_sha, min, count) row per input partition
-    before the shuffle, and the join-back is a plain equi-join that
-    AQE's skew handling CAN split at runtime.  The alternative —
-    min/count over a whole-partition window keyed on text_sha
-    (`use_window=True`, kept for corpora with no hot keys where the
-    single wide-key shuffle wins) — ships every occurrence of a hot
-    sha to ONE task: AQE splits skewed joins and aggregates, never
-    window partitions, so that task straggles or OOMs at 100 TB."""
+    Shape (the line_dedup lesson applied to its sibling): groupBy +
+    join-back.  Hash aggregation does PARTIAL map-side combine, so a
+    hot exact-duplicate document (empty pages, error pages, boilerplate
+    mirrors — repeated 1e6-1e9x in a web corpus) collapses to one
+    (text_sha, min, count) row per input partition before the shuffle,
+    and the join-back is a plain equi-join that AQE's skew handling CAN
+    split at runtime.  A min/count window keyed on text_sha would ship
+    every occurrence of a hot sha to ONE task: AQE splits skewed joins
+    and aggregates, never window partitions, so that task straggles or
+    OOMs at 100 TB."""
     h = F.sha2(F.col(text_col), 256).alias("text_sha")
     with_h = df.select(F.col(id_col), h)
-    if use_window:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("text_sha")
-        return with_h.select(
-            id_col,
-            "text_sha",
-            F.count(F.lit(1)).over(w).alias("group_size"),
-            (F.col(id_col) != F.min(id_col).over(w)).alias("is_dup"),
-        )
     groups = with_h.groupBy("text_sha").agg(
         F.min(id_col).alias("keeper_id"),
         F.count(F.lit(1)).alias("group_size"),
@@ -524,7 +476,7 @@ def minhash_signatures(
                 sigs[:, p] = np.minimum.reduceat(row, seg).astype(np.int64)
             yield pd.DataFrame({id_col: out_ids, "signature": list(sigs)})
 
-    return _ensure_parallel(df.select(id_col, text_col)).mapInPandas(
+    return ensure_parallel(df.select(id_col, text_col)).mapInPandas(
         sig, schema=f"{id_col} bigint, signature array<bigint>"
     )
 
@@ -657,7 +609,7 @@ def doc_shingles(
             arrs = np.split(h_u, np.cumsum(counts)[:-1]) if len(pdf) else []
             yield pd.DataFrame({id_col: pdf[id_col], "shingles": arrs})
 
-    return _ensure_parallel(df.select(id_col, text_col)).mapInPandas(
+    return ensure_parallel(df.select(id_col, text_col)).mapInPandas(
         sh, schema=f"{id_col} bigint, shingles array<bigint>"
     )
 
@@ -773,9 +725,25 @@ def simhash_signatures(
                 ).astype(np.int64)
             yield pd.DataFrame({id_col: pdf[id_col], "simhash": out})
 
-    return _ensure_parallel(df.select(id_col, text_col)).mapInPandas(
+    return ensure_parallel(df.select(id_col, text_col)).mapInPandas(
         sig, schema=f"{id_col} bigint, simhash bigint"
     )
+
+
+@F.pandas_udf(IntegerType())  # a DataType: DDL strings need a session
+def signature_matches(a: pd.Series, b: pd.Series) -> pd.Series:
+    """Matching-component count of two equal-length minhash signature
+    columns (est_jaccard = matches / num_perm) — THE candidate-screen
+    kernel of minhash_near_dups and both incremental near-dup screens.
+    One numpy equality sum over the stacked Arrow batch: a JVM
+    expression needs num_perm chained element_at terms, which evaluate
+    at only ~80k rows/s (46 s over a 3.8M-candidate screen, measured
+    round 7)."""
+    if len(a) == 0:
+        return pd.Series(np.array([], dtype=np.int32))
+    A = np.stack(a.to_numpy())
+    B = np.stack(b.to_numpy())
+    return pd.Series((A == B).sum(axis=1).astype(np.int32))
 
 
 def minhash_near_dups(
@@ -852,16 +820,8 @@ def minhash_near_dups(
         )
     )
 
-    def _est_matches(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series(np.array([], dtype=np.int32))
-        A = np.stack(a.to_numpy())
-        B = np.stack(b.to_numpy())
-        return pd.Series((A == B).sum(axis=1).astype(np.int32))
-
-    est_matches = F.pandas_udf(_est_matches, "int")
     screened = with_sigs.where(
-        est_matches(F.col("_siga"), F.col("_sigb")) >= F.lit(est_min)
+        signature_matches(F.col("_siga"), F.col("_sigb")) >= F.lit(est_min)
     ).select("id_a", "id_b")
     out = verified_near_dups(
         df, screened, text_col, id_col, shingle_k, threshold
@@ -1143,9 +1103,9 @@ def embedding_near_dups(
     Shape (all-pairs mode, candidates=None): fully distributed block-
     pair cross scoring — NO driver collect.  Vectors land in
     ceil(N/block_rows) blocks by id; each of the B(B+1)/2 block pairs
-    is one task holding two packed blocks (executor-side collect_list)
-    and scoring them with a chunked matmul (peak ~= chunk x block_rows
-    doubles).  Total work is O(N^2) — inherent to exact all-pairs; at
+    is one row holding two packed blocks (executor-side collect_list),
+    scored with a chunked matmul (peak ~= chunk x block_rows doubles);
+    a task takes as many pairs as fit 2 x 4096 vectors.  Total work is O(N^2) — inherent to exact all-pairs; at
     100 TB pass `candidates` (e.g. bucketed pairs from
     `similarity.hyperplane_signatures`) and only those pairs are
     rescored — the cheap-filter/expensive-verify funnel.
@@ -1199,6 +1159,14 @@ def embedding_near_dups(
             f"{n_blocks * (n_blocks + 1) // 2} block-pair tasks; pass "
             "`candidates` for the LSH-funneled path at this scale"
         )
+    # one default-size pair (2 x 4096 vectors) bounds a task's memory;
+    # smaller blocks are packed up to that many vectors per task, since
+    # a Python task per tiny pair is pure start-up cost (2 628 tasks for
+    # 500 vectors at block_rows=7), keeping >= 4 tasks per core
+    n_pairs = n_blocks * (n_blocks + 1) // 2
+    pairs_per_task = max(1, 4096 // max(1, -(-n // n_blocks)))
+    n_tasks = min(n_pairs, max(4 * spark.sparkContext.defaultParallelism,
+                               -(-n_pairs // pairs_per_task)))
     blocked = q.withColumn(
         "_blk", F.pmod(F.col("_id"), F.lit(n_blocks)).cast("int")
     )
@@ -1217,7 +1185,7 @@ def embedding_near_dups(
         .join(
             packed.withColumnsRenamed({"_blk": "bj", "_vecs": "_vb"}), "bj"
         )
-        .repartition(max(n_blocks * (n_blocks + 1) // 2, 1))
+        .repartition(n_tasks)
     )
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1340,7 +1308,7 @@ def word_ngram_hashes(
                          (h[1:] != h[:-1]) | (doc_of[1:] != doc_of[:-1])]
             yield pd.DataFrame({id_col: doc_of[keep], "gram": h[keep]})
 
-    return _ensure_parallel(df.select(id_col, text_col)).mapInPandas(
+    return ensure_parallel(df.select(id_col, text_col)).mapInPandas(
         grams, schema=f"{id_col} bigint, gram bigint"
     )
 

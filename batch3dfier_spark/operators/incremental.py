@@ -58,7 +58,10 @@ def _reset_table(spark: SparkSession, table: str) -> None:
     the *current* catalog knows about; a leftover location directory from a
     previous session (fresh metastore, dirty warehouse cwd) fails CREATE
     with LOCATION_ALREADY_EXISTS.  So: drop the catalog entry if present,
-    then remove a stale location directory the catalog does not own."""
+    then remove the stale location directory the name maps to — ONLY
+    that one: ``<warehouse>/<table>`` for the default database,
+    ``<warehouse>/<db>.db/<table>`` for any other, so a same-named table
+    in another database is never touched."""
     import os
     import shutil
     from urllib.parse import urlparse
@@ -69,14 +72,13 @@ def _reset_table(spark: SparkSession, table: str) -> None:
     if parsed.scheme not in ("", "file"):  # non-local warehouse: catalog
         return  # drop above is all we can (and need to) do locally
     root = parsed.path or wh
-    parts = table.split(".")
-    name = parts[-1].lower()
-    candidates = [os.path.join(root, name)]
-    if len(parts) > 1:  # db-qualified: <warehouse>/<db>.db/<table>
-        candidates.insert(0, os.path.join(root, parts[-2].lower() + ".db", name))
-    for loc in candidates:
-        if os.path.isdir(loc):
-            shutil.rmtree(loc, ignore_errors=True)
+    parts = table.lower().split(".")
+    db = parts[-2] if len(parts) > 1 else spark.catalog.currentDatabase()
+    if db != "default":
+        root = os.path.join(root, db + ".db")
+    loc = os.path.join(root, parts[-1])
+    if os.path.isdir(loc):
+        shutil.rmtree(loc, ignore_errors=True)
 
 
 def register_corpus(
@@ -177,40 +179,6 @@ FROM batch b JOIN fresh f USING (doc_id)
 # incremental NEAR-dup: a minhash-LSH corpus state, O(batch) per increment
 # ---------------------------------------------------------------------------
 
-def _est_matches(a, b, num_perm: int):
-    """Matching-component count of two minhash signatures as a pure JVM
-    expression (num_perm CASE terms — no HOF lambda, no Python):
-    est_jaccard = matches / num_perm.  Kept for small screens; the hot
-    candidate screens use _est_matches_vec — the chained element_at
-    terms evaluate at only ~80k rows/s (46 s over the 3.8M-candidate
-    screen at the 50k-doc bench scale, measured round 7)."""
-    terms = None
-    for i in range(num_perm):
-        t = F.when(
-            F.element_at(a, i + 1) == F.element_at(b, i + 1), 1
-        ).otherwise(0)
-        terms = t if terms is None else terms + t
-    return terms
-
-
-def _est_matches_vec():
-    """Arrow-vectorized matching-component count (guide §4: one numpy
-    comparison over stacked signature batches instead of num_perm
-    per-row element_at expressions — ~25x per-row throughput on the
-    candidate screens, bit-identical counts)."""
-    import numpy as np
-    import pandas as pd
-
-    def _fn(a, b):
-        if len(a) == 0:
-            return pd.Series(np.array([], dtype=np.int32))
-        A = np.stack(a.to_numpy())
-        B = np.stack(b.to_numpy())
-        return pd.Series((A == B).sum(axis=1).astype(np.int32))
-
-    return F.pandas_udf(_fn, "int")
-
-
 def register_minhash_corpus(
     spark: SparkSession,
     corpus: DataFrame,
@@ -310,7 +278,8 @@ def near_dedup_increment(
     tests/test_incremental.py)."""
     import math
 
-    from .dedup import band_rows, lsh_candidates, minhash_signatures
+    from .dedup import (band_rows, lsh_candidates, minhash_signatures,
+                        signature_matches)
 
     k_min = int(math.ceil(num_perm * threshold))
     bsigs = minhash_signatures(
@@ -345,9 +314,10 @@ def near_dedup_increment(
             id_col,
         )
     )
-    est = _est_matches_vec()
     corpus_dups = (
-        cand.where(est(F.col("_bsig"), F.col("_csig")) >= F.lit(k_min))
+        cand.where(
+            signature_matches(F.col("_bsig"), F.col("_csig")) >= F.lit(k_min)
+        )
         .select(id_col)
         .distinct()
     )
@@ -362,7 +332,7 @@ def near_dedup_increment(
                                   F.col("signature").alias("_sb")))
     intra_dups = (
         pairs.join(sa, "id_a").join(sb, "id_b")
-        .where(est(F.col("_sa"), F.col("_sb")) >= F.lit(k_min))
+        .where(signature_matches(F.col("_sa"), F.col("_sb")) >= F.lit(k_min))
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import ensure_parallel
+
 __all__ = [
     "cosine_topk",
     "lsh_ann_topk",
@@ -186,7 +188,7 @@ def cosine_topk(
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-    scored = _ensure_parallel(
+    scored = ensure_parallel(
         embeddings.select(
             F.col(id_col).alias("cand_id"),
             F.col(vec_col).cast("array<double>").alias("cand_vec"),
@@ -200,7 +202,7 @@ def cosine_topk(
 # single source of the 2^20 quantum AND the half-away rounding rule —
 # one copy of the cross-engine (Spark F.round == DuckDB ROUND)
 # determinism contract, shared with the embedding-dedup path
-from .dedup import QUANT, _ensure_parallel
+from .dedup import QUANT
 from .dedup import quantize_half_away as _quantize_half_away
 
 # splitmix64 finalizer constants (closed form shared with the SQL oracle)
@@ -280,7 +282,7 @@ def hyperplane_signatures(
                 )
             yield pd.concat(out, ignore_index=True)
 
-    return _ensure_parallel(df.select(id_col, vec_col)).mapInPandas(
+    return ensure_parallel(df.select(id_col, vec_col)).mapInPandas(
         buckets, schema=f"{id_col} bigint, table_id int, bucket bigint"
     )
 
@@ -375,7 +377,7 @@ def _assign_centroids(df: DataFrame, centroids: np.ndarray,
                 {id_col: pdf[id_col], "cid": d.argmin(axis=1).astype("int32")}
             )
 
-    return _ensure_parallel(df.select(id_col, vec_col)).mapInPandas(
+    return ensure_parallel(df.select(id_col, vec_col)).mapInPandas(
         assign, schema=f"{id_col} bigint, cid int"
     )
 
@@ -453,7 +455,7 @@ def _assign_partial_sums(df: DataFrame, centroids: np.ndarray,
                 }
             )
 
-    return _ensure_parallel(df.select(vec_col)).mapInPandas(
+    return ensure_parallel(df.select(vec_col)).mapInPandas(
         sums, schema="cid int, dim int, s bigint, cnt bigint"
     )
 
@@ -787,7 +789,7 @@ def quantize_int8(
                 "q": [row.tolist() for row in q],
             })
 
-    # deliberately NOT _ensure_parallel'd: this operator's contract is
+    # deliberately NOT ensure_parallel'd: this operator's contract is
     # map-only / zero-shuffle (asserted in tests); the kernel is a
     # cheap elementwise pass, so scan parallelism is not the bottleneck
     return src.mapInPandas(

@@ -56,7 +56,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _ensure_parallel, _token_hashes
+from ..session import ensure_parallel
+from .dedup import _token_hashes
 
 __all__ = ["winnow_fingerprints", "winnow_dup_pairs", "GRAM_P"]
 
@@ -135,7 +136,7 @@ def winnow_fingerprints(
                     }
                 )
 
-    return _ensure_parallel(df.select(id_col, text_col)).mapInPandas(
+    return ensure_parallel(df.select(id_col, text_col)).mapInPandas(
         fps, schema=f"{id_col} bigint, pos bigint, fp bigint"
     )
 

@@ -34,10 +34,6 @@ exactly one manifest), vs the pre-round-3 format that re-serialized the
 full cumulative history into every snapshot (O(n^2)).  On a real cluster
 the same protocol runs against an object store / a real Iceberg catalog —
 the interface is kept thin on purpose (SURVEY.md §7.0).
-
-Legacy snapshots (pre-manifest format, with inline cumulative
-"files"/"lineage") are still readable: the chain walk treats them as a
-base prefix and stops there.
 """
 
 from __future__ import annotations
@@ -88,7 +84,7 @@ class IcebergishTable:
     # Manifests store data-file paths RELATIVE to the table root whenever
     # the file lives under it, so a table directory (or an exported
     # artifact) can be moved/copied and still read.  Absolute paths (e.g.
-    # files outside the root, legacy manifests) pass through untouched.
+    # files outside the root) pass through untouched.
 
     def _rel(self, p: str) -> str:
         root = os.path.abspath(self.root)
@@ -239,8 +235,7 @@ class IcebergishTable:
         """Cumulative (files, lineage rows) for a snapshot: walk the
         parent chain, oldest-first, concatenating per-commit manifests.
         O(total history) on first touch, O(1-ish) after via the
-        immutable-manifest/part caches.  Legacy inline snapshots act as
-        a cumulative base and terminate the walk.
+        immutable-manifest/part caches.
 
         min_tile/max_tile prune the walk Iceberg-style: the snapshot
         pointer carries commit-level tile stats, so a commit whose range
@@ -254,44 +249,26 @@ class IcebergishTable:
         data files were superseded by the compacted ones)."""
         chain: list[tuple[dict, bool, bool]] = []  # (snap, files?, lineage?)
         sid: int | None = snapshot_id
-        base_files: list[str] = []
-        base_lineage: list[dict] = []
         pruning = min_tile is not None or max_tile is not None
         files_visible = True
         while sid is not None:
             snap = self._raw_snapshot(sid)
-            if "manifest" in snap:
-                inc_lin = not pruning or self._stats_overlap(
-                    snap.get("stats"), min_tile, max_tile
+            inc_lin = not pruning or self._stats_overlap(
+                snap.get("stats"), min_tile, max_tile
+            )
+            inc_files = files_visible and (
+                not pruning or self._stats_overlap(
+                    snap.get("file_stats", snap.get("stats")),
+                    min_tile, max_tile,
                 )
-                inc_files = files_visible and (
-                    not pruning or self._stats_overlap(
-                        snap.get("file_stats", snap.get("stats")),
-                        min_tile, max_tile,
-                    )
-                )
-                if inc_lin or inc_files:
-                    chain.append((snap, inc_files, inc_lin))
-                if snap.get("rewrite"):
-                    files_visible = False
-                sid = snap["parent"]
-            else:  # legacy cumulative snapshot: already holds full history
-                if files_visible:
-                    base_files = list(snap.get("files", []))
-                base_lineage = list(snap.get("lineage", []))
-                break
-        if pruning:
-            base_lineage = [
-                r for r in base_lineage
-                if self._in_range(r["tile_gid"], min_tile, max_tile)
-            ]
-            base_files = [
-                f for f in base_files
-                if (t := self._tile_of_path(f)) is None
-                or self._in_range(t, min_tile, max_tile)
-            ]
-        files = list(base_files)
-        lineage = list(base_lineage)
+            )
+            if inc_lin or inc_files:
+                chain.append((snap, inc_files, inc_lin))
+            if snap.get("rewrite"):
+                files_visible = False
+            sid = snap["parent"]
+        files: list[str] = []
+        lineage: list[dict] = []
         for snap, inc_files, inc_lin in reversed(chain):  # oldest -> newest
             f, r = self._commit_content(
                 snap, min_tile if pruning else None,
@@ -510,16 +487,14 @@ class IcebergishTable:
         rows = self._resolve_chain(snapshot_id, min_tile, max_tile)[1]
         if not rows:
             return pd.DataFrame(columns=_LINEAGE_COLS)
-        pdf = pd.DataFrame(rows)
-        if "work_order" not in pdf.columns:  # pre-upgrade snapshots
-            pdf["work_order"] = ""
-        return pdf[_LINEAGE_COLS]
+        return pd.DataFrame(rows)[_LINEAGE_COLS]
 
     def lineage_row_bound(self) -> int:
         """Upper bound on committed lineage rows, from pointer stats
-        alone where present (manifests are opened only for legacy
-        commits) — lets callers decide between a driver-side completed
-        set and a distributed anti-join without materializing either."""
+        alone where present (manifests are opened only for pointers
+        without stats, e.g. an exported snapshot) — lets callers decide
+        between a driver-side completed set and a distributed anti-join
+        without materializing either."""
         sid = self._current_sid()
         if sid is None:
             return 0
@@ -527,9 +502,6 @@ class IcebergishTable:
         cur: int | None = sid
         while cur is not None:
             snap = self._raw_snapshot(cur)
-            if "manifest" not in snap:  # legacy cumulative base
-                total += len(snap.get("lineage", []))
-                break
             stats = snap.get("stats")
             if stats is not None:
                 total += stats.get("n_rows", 0)
@@ -563,12 +535,6 @@ class IcebergishTable:
         cur: int | None = sid
         while cur is not None:
             snap = self._raw_snapshot(cur)
-            if "manifest" not in snap:
-                inline.extend(
-                    (int(r["tile_gid"]), str(r["status"]))
-                    for r in snap.get("lineage", [])
-                )
-                break
             name = snap["manifest"]
             if name is not None:
                 m = self._manifest(name)
@@ -845,13 +811,7 @@ class IcebergishTable:
         ref_manifests: set[str] = set()
         ref_parts: set[str] = set()
         for sid in self.snapshots():
-            snap = self._raw_snapshot(sid)
-            if "manifest" not in snap:  # legacy cumulative snapshot
-                ref_files.update(
-                    os.path.abspath(self._abs(f))
-                    for f in snap.get("files", []))
-                continue
-            name = snap.get("manifest")
+            name = self._raw_snapshot(sid).get("manifest")
             if name is None:
                 continue
             ref_manifests.add(name)

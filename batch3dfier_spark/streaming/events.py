@@ -43,6 +43,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..session import input_bytes
+
 __all__ = [
     "EVENT_SCHEMA",
     "read_event_stream",
@@ -80,11 +82,7 @@ def auto_state_partitions(
     clamped to [floor, defaultParallelism] — small fixtures keep the
     round-6 behavior, bigger inputs scale up, and the decision derives
     from the data, not from local-mode tuning."""
-    import glob
-
-    p = src_path
-    files = [p] if os.path.isfile(p) else glob.glob(os.path.join(p, "*"))
-    total = sum(os.path.getsize(f) for f in files if os.path.isfile(f))
+    total = input_bytes([src_path])
     want = spark.sparkContext.defaultParallelism
     return max(floor, min(want, int(total // (1 << 20))))
 

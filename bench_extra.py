@@ -70,42 +70,6 @@ def main() -> None:
         def bm25_occ():
             noop(_occurrences(docs(), "text", "doc_id"))
 
-        def bm25_tf_df_dl():
-            occ = _occurrences(docs(), "text", "doc_id")
-            qs = docs().where(F.col("doc_id") % 97 == 0).select(
-                F.col("doc_id").alias("query_id"), F.col("text").alias("qtext"))
-            qterms = _occurrences(qs, "qtext", "query_id").withColumnRenamed(
-                "query_id", "query_id").distinct()
-            vocab = F.broadcast(qterms.select("token").distinct())
-            mocc = occ.join(vocab, "token", "leftsemi")
-            tf = mocc.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
-            noop(tf)
-
-        def bm25_pairs_preagg():
-            occ = _occurrences(docs(), "text", "doc_id")
-            qs = docs().where(F.col("doc_id") % 97 == 0).select(
-                F.col("doc_id").alias("query_id"), F.col("text").alias("qtext"))
-            qterms = _occurrences(qs, "qtext", "query_id").distinct()
-            vocab = F.broadcast(qterms.select("token").distinct())
-            mocc = occ.join(vocab, "token", "leftsemi")
-            tf = mocc.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
-            joined = F.broadcast(qterms).join(tf, "token")
-            n = joined.count()
-            print(f"#   pair rows pre-agg: {n}", file=sys.stderr)
-
-        def bm25_per_pair():
-            occ = _occurrences(docs(), "text", "doc_id")
-            qs = docs().where(F.col("doc_id") % 97 == 0).select(
-                F.col("doc_id").alias("query_id"), F.col("text").alias("qtext"))
-            qterms = _occurrences(qs, "qtext", "query_id").distinct()
-            vocab = F.broadcast(qterms.select("token").distinct())
-            mocc = occ.join(vocab, "token", "leftsemi")
-            tf = mocc.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
-            per_pair = (F.broadcast(qterms).join(tf, "token")
-                        .groupBy("query_id", "doc_id")
-                        .agg(F.count(F.lit(1)).alias("nt")))
-            noop(per_pair)
-
         def bm25_full_k5():
             qs = docs().where(F.col("doc_id") % 97 == 0).select(
                 F.col("doc_id").alias("query_id"), F.col("text").alias("qtext"))
@@ -117,9 +81,6 @@ def main() -> None:
             bm25_topk(docs(), qs, k=20).count()
 
         timed("bm25_occ", bm25_occ)
-        timed("bm25_tf", bm25_tf_df_dl)
-        timed("bm25_pairs_preagg", bm25_pairs_preagg, reps=1)
-        timed("bm25_per_pair", bm25_per_pair)
         timed("bm25_full_k5", bm25_full_k5)
         timed("bm25_full_k20", bm25_full_k20)
 

@@ -249,42 +249,6 @@ def test_metadata_grows_linearly_not_quadratically(tmp_path):
     assert len(mid["lineage"]) == 500
 
 
-def test_legacy_inline_snapshot_still_readable(tmp_path):
-    """Pre-round-3 snapshots carried cumulative inline files/lineage;
-    the chain walk must treat one as a base and layer manifests on top."""
-    import json
-    import os
-
-    from batch3dfier_spark.storage.tablefmt import LineageRow
-
-    table = IcebergishTable(str(tmp_path / "legacy"))
-    legacy = {
-        "snapshot_id": 1,
-        "parent": None,
-        "files": ["/old/a.parquet", "/old/b.parquet"],
-        "lineage": [{"tile_gid": 7, "partition_id": 0, "rows_in": 2,
-                     "rows_out": 2, "wall_ms": 1.0, "status": "ok",
-                     "snapshot_id": 1, "work_order": ""}],
-    }
-    with open(os.path.join(table.meta_dir, "snapshot-000001.json"), "w") as f:
-        json.dump(legacy, f)
-    with open(os.path.join(table.meta_dir, "CURRENT"), "w") as f:
-        f.write("snapshot-000001.json")
-    assert table.files() == ["/old/a.parquet", "/old/b.parquet"]
-    assert table.completed_tiles() == {7}
-    sid = table.commit(
-        ["/new/c.parquet"],
-        [LineageRow(tile_gid=8, partition_id=0, rows_in=1, rows_out=1,
-                    wall_ms=1.0, status="ok")],
-    )
-    assert sid == 2
-    assert table.files() == ["/old/a.parquet", "/old/b.parquet",
-                             "/new/c.parquet"]
-    assert table.completed_tiles() == {7, 8}
-    # time travel to the legacy base still works
-    assert table.snapshot(1)["files"] == ["/old/a.parquet", "/old/b.parquet"]
-
-
 def test_export_snapshot_round_trip(spark, tmp_path):
     """S9 (reference bag3d.py:239-329 pg_dump/GPKG dump): exporting a
     snapshot yields a self-contained artifact that reads back equal to

@@ -298,3 +298,29 @@ def test_register_survives_stale_location(spark):
     finally:
         for t in ("inc_stale_t", "ninc_stale_t_sigs", "ninc_stale_t_bands"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_reset_qualified_table_keeps_default_db_namesake(spark):
+    """Resetting `<db>.<t>` removes only `<warehouse>/<db>.db/<t>`; a
+    default-database table `<t>` (at `<warehouse>/<t>`) keeps its rows."""
+    import os
+
+    from urllib.parse import urlparse
+
+    from batch3dfier_spark.operators.incremental import _reset_table
+
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    spark.sql("CREATE DATABASE IF NOT EXISTS reset_other")
+    stale = os.path.join(wh, "reset_other.db", "reset_keep_t")
+    try:
+        _df(spark, [(1, "alpha"), (2, "beta")]).write.mode(
+            "overwrite").saveAsTable("reset_keep_t")
+        os.makedirs(stale, exist_ok=True)
+        _reset_table(spark, "reset_other.reset_keep_t")
+        assert not os.path.exists(stale)
+        spark.catalog.refreshTable("reset_keep_t")
+        got = spark.table("reset_keep_t").toPandas()
+        assert sorted(got["doc_id"]) == [1, 2]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS reset_keep_t")
+        spark.sql("DROP DATABASE IF EXISTS reset_other CASCADE")

@@ -367,3 +367,51 @@ def test_sessionize_bucketed_boundary_gap_rule(spark):
     got = (sessionize(ev, gap_minutes=30.0, ts_bucket_s=3600)
            .orderBy("session_seq").collect())
     assert [r["n_events"] for r in got] == [2, 1]
+
+
+def test_input_bytes_nested_dirs_and_uris(tmp_path):
+    """Partitioned sources keep their files in subdirectories (a
+    top-level glob counted none of them); URIs and plain paths agree."""
+    from batch3dfier_spark.session import input_bytes
+
+    part = tmp_path / "d" / "sub" / "part.parquet"
+    part.parent.mkdir(parents=True)
+    pd.DataFrame({"x": range(1000)}).to_parquet(part)
+    (tmp_path / "d" / "_SUCCESS").write_text("")
+    (tmp_path / "d" / "sub" / ".part.parquet.crc").write_text("crc")
+    for p in (str(part), str(tmp_path / "d")):
+        assert input_bytes([p]) == input_bytes(["file://" + p]) \
+            == os.path.getsize(part)
+    for bad in ("s3a://bucket/key.parquet", str(tmp_path / "missing")):
+        with pytest.raises(OSError):
+            input_bytes([bad])
+
+
+def _keeps_scan_pre_merge(df) -> bool:
+    """Reference: the fan-out rule before its size probe was shared —
+    keep the scan with a file per core or < 2 MB of files."""
+    from urllib.parse import urlparse
+
+    files = df.inputFiles()
+    if len(files) >= df.sparkSession.sparkContext.defaultParallelism:
+        return True
+    try:
+        return sum(os.path.getsize(urlparse(f).path or f)
+                   for f in files) < (2 << 20)
+    except OSError:
+        return False
+
+
+@pytest.mark.parametrize("src", [
+    "sf0.01/documents.parquet", "sf0.01/embeddings.parquet",
+    "sf0.1/documents.parquet", "sf0.1/embeddings.parquet",
+    "sf0.1/lineitem.parquet",  # > 2 MB in one file: fans out
+])
+def test_ensure_parallel_decision_unchanged(spark, src):
+    from batch3dfier_spark.session import ensure_parallel
+
+    path = os.path.join(os.path.dirname(SF), src)
+    if not os.path.exists(path):
+        pytest.skip(f"{path} not generated")
+    df = spark.read.parquet(path)
+    assert (ensure_parallel(df) is df) == _keeps_scan_pre_merge(df)

@@ -9,9 +9,11 @@ Scale design (100 TB):
   (numpy matrix ops per batch, no per-row Python math); LSH banding
   explodes each doc into `bands` rows and groupBys on (band, band_hash)
   — candidate generation is a single shuffle whose width is controlled
-  by the band count.  Candidate pairs are verified with exact shingle
-  Jaccard only within buckets (the cheap-filter/expensive-verify
-  funnel).  `minhash_near_dups` is the full pipeline: exact-dedup
+  by the band count.  Signatures ride that shuffle, so the estimate
+  screen runs inside each bucket and only surviving pairs leave it;
+  those are verified with exact shingle Jaccard (the
+  cheap-filter/expensive-verify funnel).  `minhash_near_dups` is the
+  full pipeline: exact-dedup
   prefilter (identical docs would otherwise collide in EVERY band and
   make one hot bucket emit O(k^2) pairs x bands), deterministic
   bucket cap (lowest `bucket_cap` ids kept per bucket — mirrored by
@@ -35,7 +37,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
@@ -486,11 +488,14 @@ def band_rows(
     id_col: str = "doc_id",
     bands: int = 16,
 ) -> DataFrame:
-    """LSH banding rows (id, band_id, band_hash): each signature is
-    split into `bands` contiguous slices and every slice is hashed
-    JVM-side (xxhash64 over band_id + the slice rendered as a string)
-    — the single join key every LSH consumer (in-corpus candidates,
-    the incremental corpus state) buckets or shuffles on.  Pure JVM:
+    """LSH banding rows (id, band_id, band_hash, signature): each
+    signature is split into `bands` contiguous slices and every slice
+    is hashed JVM-side (xxhash64 over band_id + the slice rendered as a
+    string) — the single join key every LSH consumer (in-corpus
+    candidates, the incremental corpus state) buckets or shuffles on.
+    The signature rides along for the bucket-local screen of
+    lsh_candidates; consumers that only need the postings select it
+    away and column pruning drops it before any shuffle.  Pure JVM:
     sequence-explode + slice + xxhash64, no Python, no HOF lambdas."""
     num_perm_col = F.size(F.col("signature"))
     rows_per_band = (num_perm_col / F.lit(bands)).cast("int")
@@ -511,8 +516,35 @@ def band_rows(
                     rows_per_band,
                 ).cast("string"),
             ).alias("band_hash"),
+            "signature",
         )
     )
+
+
+# pairs compared per numpy step of the bucket screen: two gathered
+# (pairs x num_perm) int64 blocks, 16 MB at 64 permutations
+_SCREEN_PAIRS_CHUNK = 16_384
+
+
+def _bucket_pair_chunks(
+    sizes: np.ndarray,
+) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """(ia, ib) flat member positions of every i<j pair inside each
+    bucket of a batch whose members lie contiguous, bucket after
+    bucket, `sizes[b]` of them each.  Buckets of one size share one
+    triu pattern, so the expansion is vectorized per size class and
+    yielded in chunks of about _SCREEN_PAIRS_CHUNK pairs."""
+    starts = np.zeros(sizes.size, dtype=np.int64)
+    np.cumsum(sizes[:-1], out=starts[1:])
+    for m in np.unique(sizes):
+        if m < 2:
+            continue
+        iu, ju = np.triu_indices(int(m), k=1)
+        s = starts[sizes == m]
+        step = max(1, _SCREEN_PAIRS_CHUNK // iu.size)
+        for lo in range(0, s.size, step):
+            blk = s[lo:lo + step, None]
+            yield (blk + iu).ravel(), (blk + ju).ravel()
 
 
 def lsh_candidates(
@@ -520,14 +552,29 @@ def lsh_candidates(
     id_col: str = "doc_id",
     bands: int = 16,
     bucket_cap: int | None = 128,
+    min_matches: int = 0,
 ) -> DataFrame:
-    """LSH banding: split each signature into `bands` rows, hash each
-    band (JVM: slice + xxhash64), cap each (band_id, band_hash) bucket
-    to its lowest `bucket_cap` ids with a row_number window, bucket the
-    survivors with a groupBy/collect_list on the same keys (no second
-    Exchange — the window already partitioned on them), prune singleton
-    buckets JVM-side, then expand each surviving bucket's i<j candidate
-    pairs in a numpy kernel (id_a < id_b, deduplicated across bands).
+    """LSH banding plus the estimate screen, bucket-local: split each
+    signature into `bands` rows, hash each band (JVM: slice +
+    xxhash64), cap each (band_id, band_hash) bucket to its lowest
+    `bucket_cap` ids with a row_number window, bucket the survivors
+    WITH their signatures via a groupBy/collect_list on the same keys
+    (no second Exchange — the window already partitioned on them),
+    prune singleton buckets JVM-side, then, in one numpy kernel per
+    batch of buckets, expand each bucket's i<j pairs and keep those
+    whose signatures agree in >= `min_matches` components
+    (est_jaccard = matches / num_perm; 0 keeps every pair).  Returns
+    the surviving (id_a, id_b), id_a < id_b, deduplicated across bands.
+
+    Screening inside the bucket (the 3D-hash-join move: do the work
+    inside each non-unique key group) replaces the pair-level shape
+    — expand ids, distinct, join the signature of each side back, then
+    screen — whose two pair-sized joins carried num_perm*8 bytes per
+    side and, unpersisted, re-ran the signature pass per join side.  A pair
+    colliding in several bands is screened once per band with the
+    same outcome (the count is a pure function of the two signatures),
+    so screening before the distinct yields exactly the pairs of
+    screening after it.
 
     bucket_cap bounds the O(k^2)-pairs blowup of a hot bucket (at web
     scale a cluster of near-identical docs collides in every band):
@@ -548,8 +595,8 @@ def lsh_candidates(
     # adds NO second Exchange — cost vs the uncapped shape is just the
     # within-partition sort the cap needs anyway to be deterministic.
     # Singleton buckets — the vast majority — are pruned JVM-side before
-    # any Python runs; the i<j pair expansion is one numpy kernel over
-    # arrays that are <= bucket_cap long BY CONSTRUCTION.
+    # any Python runs; the screen kernel sees arrays that are
+    # <= bucket_cap long BY CONSTRUCTION.
     if bucket_cap is not None:
         from pyspark.sql import Window
 
@@ -559,29 +606,39 @@ def lsh_candidates(
             .where(F.col("_rn") <= bucket_cap)
             .drop("_rn")
         )
+    # ids and signatures are read out of ONE struct list, so member i of
+    # `_ids` owns slice i of the flattened `_sigs`
     buckets = (
         banded.groupBy("band_id", "band_hash")
-        .agg(F.collect_list(id_col).alias("_ids"))
-        .where(F.size("_ids") >= 2)
+        .agg(F.collect_list(F.struct(id_col, "signature")).alias("_m"))
+        .where(F.size("_m") >= 2)
+        .select(
+            F.col("_m")[id_col].alias("_ids"),
+            F.flatten(F.col("_m")["signature"]).alias("_sigs"),
+        )
     )
 
-    def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def screen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            sizes = pdf["_ids"].map(len).to_numpy(dtype=np.int64)
+            ids = np.concatenate(pdf["_ids"].to_numpy()).astype(np.int64)
+            sigs = np.concatenate(pdf["_sigs"].to_numpy()).reshape(ids.size, -1)
+            # id order inside each bucket, so every i<j pair has id_a < id_b
+            order = np.lexsort((ids, np.repeat(np.arange(sizes.size), sizes)))
+            ids, sigs = ids[order], sigs[order]
             outs = []
-            for ids in pdf["_ids"]:
-                ids = np.sort(np.asarray(ids, dtype=np.int64))
-                m = ids.size
-                if m < 2:
-                    continue
-                iu, ju = np.triu_indices(m, k=1)
-                outs.append(
-                    pd.DataFrame({"id_a": ids[iu], "id_b": ids[ju]})
-                )
+            for ia, ib in _bucket_pair_chunks(sizes):
+                if min_matches > 0:
+                    keep = _match_counts(sigs[ia], sigs[ib]) >= min_matches
+                    ia, ib = ia[keep], ib[keep]
+                outs.append(pd.DataFrame({"id_a": ids[ia], "id_b": ids[ib]}))
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
     return (
-        buckets.mapInPandas(expand, schema="id_a bigint, id_b bigint")
+        buckets.mapInPandas(screen, schema="id_a bigint, id_b bigint")
         .distinct()
     )
 
@@ -730,20 +787,29 @@ def simhash_signatures(
     )
 
 
+def _match_counts(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Matching-component counts of two row-aligned (rows x num_perm)
+    minhash signature matrices — THE estimate-screen kernel
+    (est_jaccard = matches / num_perm), shared by the bucket-local
+    screen of lsh_candidates and the pair-level signature_matches."""
+    return (a == b).sum(axis=1)
+
+
 @F.pandas_udf(IntegerType())  # a DataType: DDL strings need a session
 def signature_matches(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Matching-component count of two equal-length minhash signature
-    columns (est_jaccard = matches / num_perm) — THE candidate-screen
-    kernel of minhash_near_dups and both incremental near-dup screens.
-    One numpy equality sum over the stacked Arrow batch: a JVM
-    expression needs num_perm chained element_at terms, which evaluate
-    at only ~80k rows/s (46 s over a 3.8M-candidate screen, measured
-    round 7)."""
+    """_match_counts over two equal-length signature columns of pair
+    rows — the batch-vs-corpus screen of near_dedup_increment, whose
+    corpus signatures live in a bucketed table and so cannot ride the
+    batch's LSH buckets.  One numpy equality sum over the stacked Arrow
+    batch: a JVM expression needs num_perm chained element_at terms,
+    which evaluate at only ~80k rows/s (46 s over a 3.8M-candidate
+    screen, measured round 7)."""
     if len(a) == 0:
         return pd.Series(np.array([], dtype=np.int32))
-    A = np.stack(a.to_numpy())
-    B = np.stack(b.to_numpy())
-    return pd.Series((A == B).sum(axis=1).astype(np.int32))
+    return pd.Series(
+        _match_counts(np.stack(a.to_numpy()), np.stack(b.to_numpy()))
+        .astype(np.int32)
+    )
 
 
 def minhash_near_dups(
@@ -767,26 +833,23 @@ def minhash_near_dups(
        already captured by exact_dedup itself.
     2. minhash_signatures -> lsh_candidates with a deterministic
        bucket_cap (lowest ids win) bounding any residual hot bucket.
-    3. estimated-Jaccard filter: a banding match at low true similarity
-       is common (a 4-row band matches with prob j^4), so candidate
-       pairs are first screened on the signatures they already carry —
-       keep pairs with >= ceil(num_perm*(threshold - est_margin))
-       matching components.  Arrow-batched numpy integer comparison
-       (one (rows x num_perm) == per batch): deterministic, exactly
-       mirrored by the SQL oracle, and it cuts the exact-verify stage
-       by ~99% on web-ish corpora.  (A zip_with/aggregate lambda did
-       this JVM-side before, but lambda exprs defeat the codegen cache
-       — seconds of janino compile per fresh plan for microseconds of
-       saved Arrow transfer.)
-    4. exact shingle-Jaccard verification of the survivors only.
+    3. estimated-Jaccard screen, inside the LSH buckets: a banding
+       match at low true similarity is common (a 4-row band matches
+       with prob j^4), so lsh_candidates keeps only bucket pairs with
+       >= ceil(num_perm*(threshold - est_margin)) matching signature
+       components.  The signatures ride the band shuffle, so no
+       pair-level join ever carries them and the signature pass runs
+       once.  Deterministic, exactly mirrored by the SQL oracle, and it
+       cuts the exact-verify stage by ~99% on web-ish corpora.
+    4. exact shingle-Jaccard verification of the distinct survivors
+       only (verified_near_dups joins shingles onto those pairs).
 
     persist_intermediates puts a MEMORY_AND_DISK barrier under the
-    keeper set and the signatures: both subtrees feed the plan 2-4
-    times (candidate self-join sides + estimate screen sides), and
-    without the barrier Spark recomputes the full text scan + signature
-    UDF per consumer — the same reason the reference materializes its
-    centroid table (footprints.py:93-150) instead of re-deriving it per
-    tile view.
+    keeper set: it feeds both the signature pass and the verify
+    shingling, and without the barrier Spark recomputes the full text
+    scan + exact-dedup join per consumer — the same reason the
+    reference materializes its centroid table (footprints.py:93-150)
+    instead of re-deriving it per tile view.
 
     Returns (id_a, id_b, jaccard) for near-dup keeper pairs."""
     persisted = []  # appended exactly where persist() is called
@@ -803,26 +866,8 @@ def minhash_near_dups(
             df = df.persist(StorageLevel.MEMORY_AND_DISK)
             persisted.append(df)
     sigs = minhash_signatures(df, text_col, id_col, num_perm, shingle_k)
-    if persist_intermediates:
-        from pyspark.storagelevel import StorageLevel
-
-        sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
-        persisted.append(sigs)
-    cands = lsh_candidates(sigs, id_col, bands, bucket_cap)
     est_min = int(np.ceil(num_perm * max(0.0, threshold - est_margin)))
-    with_sigs = (
-        cands.join(
-            sigs.withColumnsRenamed({id_col: "id_a", "signature": "_siga"}),
-            "id_a",
-        ).join(
-            sigs.withColumnsRenamed({id_col: "id_b", "signature": "_sigb"}),
-            "id_b",
-        )
-    )
-
-    screened = with_sigs.where(
-        signature_matches(F.col("_siga"), F.col("_sigb")) >= F.lit(est_min)
-    ).select("id_a", "id_b")
+    screened = lsh_candidates(sigs, id_col, bands, bucket_cap, est_min)
     out = verified_near_dups(
         df, screened, text_col, id_col, shingle_k, threshold
     ).select("id_a", "id_b", "jaccard")
@@ -1346,51 +1391,83 @@ def decontaminate(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 25,
-    stats: dict | None = None,
-    broadcast_nodes_max: int = 2_000_000,
-) -> DataFrame:
-    """(id, component) for every id appearing in `pairs`, where
-    component = the MINIMUM id reachable through the pair graph — the
-    canonical cluster id that turns near-dup PAIRS into dedup GROUPS
-    (keeper = the row whose id equals its component).
+# Bidirected edge rows (two per input pair) under which
+# connected_components labels the whole graph in ONE executor-side numpy
+# task instead of the Spark round loop.  At this bound the task holds
+# the src/dst columns plus a few index arrays: ~190 MB extra peak,
+# measured 0.93 s on a 4-vCPU VM, where each Spark round costs several
+# jobs of fixed scheduling overhead.  Larger graphs keep the loop, the
+# only path that scales past one task's memory.
+CC_ONE_TASK_EDGES_MAX = 2_000_000
+# Node count up to which the round loop broadcasts its label side.
+CC_BROADCAST_NODES_MAX = 2_000_000
 
-    Algorithm: iterative min-label propagation with pointer jumping —
-    each round every node takes min(own label, neighbors' labels), then
-    compresses by replacing its label with that node's label
-    (label-of-label; valid because a node's label never exceeds its id
-    and only decreases), so reach roughly doubles per round:
-    O(log diameter) rounds instead of O(diameter).  Each round is two
-    joins + one groupBy on the (bidirected) edge list;
-    `localCheckpoint` truncates the growing plan lineage so round N+1
-    does not re-analyze N stacked joins (the classic
-    iterative-DataFrame trap).  Convergence is the cheapest possible
-    action: labels are non-increasing, so sum(component) is strictly
-    decreasing until the fixpoint — one scalar agg per round, no
-    old-vs-new join.  max_iter is a guard, not a tuning knob.
 
-    `stats`, if given, receives {"rounds": n} — the executed round
-    count INCLUDING the final no-change round that proves convergence
-    (the O(log diameter) claim is asserted against it on a
-    1e5-edge chains+stars fixture in tests/test_dedup.py)."""
-    edges = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    )
-    # bidirect WITHOUT a distinct: the near-dup funnels emit distinct
-    # i<j pairs, so the union is duplicate-free by construction, and
-    # min-label propagation is insensitive to duplicate edges anyway —
-    # the old distinct() was a full 2|E|-row shuffle+dedup (7.3 s on a
-    # 9.9M-pair graph) buying nothing.  Callers feeding heavily
-    # duplicated edge lists should distinct upstream.
-    edges = (
-        edges.union(edges.select(F.col("dst").alias("src"),
-                                 F.col("src").alias("dst")))
+def _cc_propagate(
+    src: np.ndarray, dst: np.ndarray, max_iter: int
+) -> tuple[np.ndarray, np.ndarray, int, bool]:
+    """The round loop of connected_components in numpy over a
+    bidirected edge list: seed min(id, min neighbour), then per round
+    neighbour-min step + pointer jump, until the label sum stops
+    changing.  Returns (ids, component, rounds, converged) with rounds
+    counted exactly as the Spark loop counts them.  Works in node-index
+    space (ids sorted, so index order == id order and every label is
+    an index <= its own)."""
+    order = np.argsort(src, kind="stable")
+    src, dst = src[order], dst[order]
+    starts = np.flatnonzero(np.r_[True, src[1:] != src[:-1]])
+    ids = src[starts]  # bidirected: every node is a src
+    nbr = np.searchsorted(ids, dst)
+    lab = np.minimum(np.arange(ids.size), np.minimum.reduceat(nbr, starts))
+    prev = lab.sum()
+    for rounds in range(1, max_iter + 1):
+        stepped = np.minimum(lab, np.minimum.reduceat(lab[nbr], starts))
+        lab = stepped[stepped]
+        cur = lab.sum()
+        if cur == prev:
+            return ids, ids[lab], rounds, True
+        prev = cur
+    return ids, ids[lab], max_iter, False
+
+
+def _cc_one_task(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int, bool]:
+    """Labels of a small bidirected edge list from one executor task
+    (coalesce(1) + mapInPandas over _cc_propagate; no label row is
+    collected).  Every label row carries the round count, 0 when
+    the propagation did not converge; an Observation reads it during
+    the checkpoint, so the task is the path's only job."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pdfs = list(batches)
+        n = sum(len(p) for p in pdfs)
+        if n == 0:
+            return
+        src = np.concatenate([p["src"].to_numpy(dtype=np.int64) for p in pdfs])
+        dst = np.concatenate([p["dst"].to_numpy(dtype=np.int64) for p in pdfs])
+        del pdfs
+        ids, comp, rounds, converged = _cc_propagate(src, dst, max_iter)
+        yield pd.DataFrame({
+            "id": ids, "component": comp,
+            "_rounds": np.full(ids.size, rounds if converged else 0, np.int32),
+        })
+
+    seen = Observation()
+    out = (
+        edges.coalesce(1)
+        .mapInPandas(run, schema="id bigint, component bigint, _rounds int")
+        .observe(seen, F.max("_rounds").alias("rounds"))
         .localCheckpoint(eager=True)
     )
+    rounds = seen.get["rounds"]
+    if rounds is None:  # no edges: the empty set is round 1's fixpoint
+        rounds = 1
+    return out.select("id", "component"), rounds or max_iter, rounds > 0
+
+
+def _cc_round_loop(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int, bool]:
+    """Min-label propagation as a Spark loop: two joins + one groupBy
+    per round over the checkpointed edge list, one checkpoint and one
+    scalar sum per round."""
     # seed labels at min(id, min direct neighbor): the same single
     # aggregation pass the old distinct() cost, but it bakes round 1's
     # neighbor-min into the initialization (one fewer ~|E|-scan round
@@ -1409,19 +1486,16 @@ def connected_components(
     # ~5 s/round on a 19.7M-edge graph whose label table is 48.8k rows.
     # The node count is known exactly here (one count over the
     # checkpointed table), so broadcast the label side whenever it is
-    # provably small; a web-scale graph (nodes >> broadcast_nodes_max)
+    # provably small; a web-scale graph (nodes >> CC_BROADCAST_NODES_MAX)
     # keeps the shuffle join — the decision derives from the data, not
     # from local-mode tuning.
-    n_nodes = labels.count()
-    small = n_nodes <= broadcast_nodes_max
+    small = labels.count() <= CC_BROADCAST_NODES_MAX
 
     def _bc(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small else df
 
     prev_sum = labels.agg(F.sum("component")).collect()[0][0]
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
+    for rounds in range(1, max_iter + 1):
         nb_min = (
             edges.join(
                 _bc(labels.select(F.col("id").alias("dst"),
@@ -1455,7 +1529,7 @@ def connected_components(
         labels = labels.localCheckpoint(eager=False)
         cur_sum = labels.agg(F.sum("component")).collect()[0][0]
         if cur_sum == prev_sum:
-            break
+            return labels, rounds, True
         prev_sum = cur_sum
         # NOTE (round-7): per-round edge CONTRACTION (re-keying edges
         # to current labels, dropping loops) was prototyped here — it
@@ -1464,8 +1538,86 @@ def connected_components(
         # per-round broadcasts made long-chain graphs pathologically
         # slow (a 2000-node path went from seconds to minutes), so it
         # was reverted; rounds re-scan the fixed edge list instead.
+    return labels, max_iter, False
+
+
+def connected_components(
+    pairs: DataFrame,
+    id_a: str = "id_a",
+    id_b: str = "id_b",
+    max_iter: int = 25,
+    stats: dict | None = None,
+) -> DataFrame:
+    """(id bigint, component bigint) for every id appearing in `pairs`,
+    where component = the MINIMUM id reachable through the pair graph —
+    the canonical cluster id that turns near-dup PAIRS into dedup
+    GROUPS (keeper = the row whose id equals its component).
+
+    Algorithm: iterative min-label propagation with pointer jumping —
+    each round every node takes min(own label, neighbors' labels), then
+    compresses by replacing its label with that node's label
+    (label-of-label; valid because a node's label never exceeds its id
+    and only decreases), so reach roughly doubles per round:
+    O(log diameter) rounds instead of O(diameter).  Convergence is the
+    cheapest possible test: labels are non-increasing, so
+    sum(component) is strictly decreasing until the fixpoint.
+
+    The input is bidirected by ONE Generate (each pair emits both
+    directions) and checkpointed, so a lazy funnel above it — the
+    near-dup screen and verify — is evaluated exactly once; a
+    self-union would run it once per union branch.  The checkpointed
+    edge rows are counted, and the count picks the path:
+
+    - under CC_ONE_TASK_EDGES_MAX rows: one executor-side numpy task
+      runs the same propagation (_cc_propagate) — no per-round jobs;
+    - otherwise the Spark round loop: two joins + one groupBy per round
+      on the edge list, `localCheckpoint` truncating the growing plan
+      lineage so round N+1 does not re-analyze N stacked joins (the
+      classic iterative-DataFrame trap), one scalar agg per round.
+
+    Both paths execute the same rounds and yield the same labels.
+    max_iter is a guard, not a tuning knob: a graph that has not
+    reached its fixpoint after max_iter rounds raises RuntimeError
+    rather than return unconverged labels.
+
+    `stats`, if given, receives {"rounds": n, "edge_rows": e} — the
+    executed round count INCLUDING the final no-change round that
+    proves convergence (the O(log diameter) claim is asserted against
+    it on a 1e5-edge chains+stars fixture in tests/test_dedup.py), and
+    the bidirected edge-row count that chose the path."""
+    a, b = F.col(id_a).cast("bigint"), F.col(id_b).cast("bigint")
+    # bidirect WITHOUT a distinct: the near-dup funnels emit distinct
+    # i<j pairs, so both directions are duplicate-free by construction,
+    # and min-label propagation is insensitive to duplicate edges anyway
+    # — the old distinct() was a full 2|E|-row shuffle+dedup (7.3 s on
+    # a 9.9M-pair graph) buying nothing.  Callers feeding heavily
+    # duplicated edge lists should distinct upstream.
+    # the row count is observed during the checkpoint: no extra job
+    counted = Observation()
+    edges = (
+        pairs.select(
+            F.inline(F.array(
+                F.struct(a.alias("src"), b.alias("dst")),
+                F.struct(b.alias("src"), a.alias("dst")),
+            ))
+        )
+        .observe(counted, F.count(F.lit(1)).alias("rows"))
+        .localCheckpoint(eager=True)
+    )
+    n_edges = counted.get["rows"]
+    if n_edges < CC_ONE_TASK_EDGES_MAX:
+        labels, rounds, converged = _cc_one_task(edges, max_iter)
+    else:
+        labels, rounds, converged = _cc_round_loop(edges, max_iter)
     if stats is not None:
         stats["rounds"] = rounds
+        stats["edge_rows"] = n_edges
+    if not converged:
+        raise RuntimeError(
+            f"connected_components did not converge within "
+            f"max_iter={max_iter} rounds ({n_edges} bidirected edge rows); "
+            f"raise max_iter — the labels would not be final components"
+        )
     return labels
 
 

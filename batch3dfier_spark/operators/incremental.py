@@ -225,7 +225,9 @@ def register_minhash_corpus(
         .bucketBy(n_buckets, id_col).sortBy(id_col)
         .saveAsTable(table + "_sigs")
     )
-    banded = band_rows(spark.table(table + "_sigs"), id_col, bands)
+    banded = band_rows(spark.table(table + "_sigs"), id_col, bands).select(
+        "band_id", "band_hash", id_col
+    )
     if bucket_cap is not None:
         from pyspark.sql import Window
 
@@ -236,8 +238,7 @@ def register_minhash_corpus(
             .drop("_rn")
         )
     (
-        banded.select("band_id", "band_hash", id_col)
-        .write.mode("overwrite").format("parquet")
+        banded.write.mode("overwrite").format("parquet")
         .bucketBy(n_buckets, "band_id", "band_hash")
         .sortBy("band_id", "band_hash")
         .saveAsTable(table + "_bands")
@@ -322,17 +323,12 @@ def near_dedup_increment(
         .distinct()
     )
 
-    # intra-batch: LSH candidates within the batch, same screen, the
-    # higher id of each near-pair drops (min-id star rule)
-    pairs = lsh_candidates(bsigs, id_col=id_col, bands=bands,
-                           bucket_cap=bucket_cap)
-    sa = F.broadcast(bsigs.select(F.col(id_col).alias("id_a"),
-                                  F.col("signature").alias("_sa")))
-    sb = F.broadcast(bsigs.select(F.col(id_col).alias("id_b"),
-                                  F.col("signature").alias("_sb")))
+    # intra-batch: LSH buckets within the batch screened in-bucket by
+    # the same k_min rule, the higher id of each near-pair drops (min-id
+    # star rule)
     intra_dups = (
-        pairs.join(sa, "id_a").join(sb, "id_b")
-        .where(signature_matches(F.col("_sa"), F.col("_sb")) >= F.lit(k_min))
+        lsh_candidates(bsigs, id_col=id_col, bands=bands,
+                       bucket_cap=bucket_cap, min_matches=k_min)
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )

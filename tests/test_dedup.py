@@ -230,6 +230,74 @@ def test_lsh_near_dup_recall_vs_bruteforce(spark, docs_df, docs_pdf):
         assert union and inter / union >= 0.9
 
 
+def _pair_join_screen(sigs, bucket_cap, min_matches):
+    """The pair-level screen shape lsh_candidates replaced, built
+    inline: band_rows -> capped buckets -> i<j pairs -> distinct -> a
+    signature join per side -> signature_matches >= min_matches."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from batch3dfier_spark.operators.dedup import band_rows, signature_matches
+
+    w = Window.partitionBy("band_id", "band_hash").orderBy("doc_id")
+    capped = (
+        band_rows(sigs)
+        .withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= bucket_cap)
+        .select("band_id", "band_hash", "doc_id")
+    )
+    a, b = capped.alias("a"), capped.alias("b")
+    pairs = a.join(
+        b,
+        (F.col("a.band_id") == F.col("b.band_id"))
+        & (F.col("a.band_hash") == F.col("b.band_hash"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    ).select(F.col("a.doc_id").alias("id_a"),
+             F.col("b.doc_id").alias("id_b")).distinct()
+    s = sigs.select("doc_id", "signature")
+    return (
+        pairs.join(s.withColumnsRenamed({"doc_id": "id_a", "signature": "_sa"}), "id_a")
+        .join(s.withColumnsRenamed({"doc_id": "id_b", "signature": "_sb"}), "id_b")
+        .where(signature_matches(F.col("_sa"), F.col("_sb")) >= min_matches)
+        .select("id_a", "id_b")
+    )
+
+
+@pytest.mark.parametrize("fixture", ["sf0.01", "hot_bucket"])
+def test_lsh_candidates_screen_matches_pair_join_shape(spark, fixture):
+    """The bucket-local screen returns exactly the pairs of the
+    pair-level shape — on the sf0.01 documents at the dedup_minhash
+    screen (k = ceil(64 * (0.5 - 0.15)) = 23) and on a bucket_cap=16
+    hot-bucket fixture (1000 identical docs plus a family of suffix
+    variants, so capped buckets hold pairs on both sides of k), and
+    with the screen off (k = 0)."""
+    from batch3dfier_spark.operators.dedup import lsh_candidates, minhash_signatures
+
+    if fixture == "sf0.01":
+        docs = spark.read.parquet(SF.replace("sf0.001", "sf0.01") + "/documents.parquet")
+        cap, ks = 128, (0, 23)
+    else:
+        base = "the same exact document body repeated verbatim"
+        texts = [base] * 1000 + [base + f" variant {i} " + "x" * (i % 40)
+                                 for i in range(200)]
+        docs = spark.createDataFrame(pd.DataFrame(
+            {"doc_id": np.arange(len(texts), dtype=np.int64), "text": texts}))
+        cap, ks = 16, (0, 40)
+    sigs = minhash_signatures(docs).localCheckpoint(eager=True)
+    for k in ks:
+        got = lsh_candidates(sigs, bucket_cap=cap, min_matches=k).toPandas()
+        exp = _pair_join_screen(sigs, cap, k).toPandas()
+        assert len(got) > 0
+        assert not got.duplicated().any()
+        assert (got["id_a"] < got["id_b"]).all()
+        key = ["id_a", "id_b"]
+        pd.testing.assert_frame_equal(
+            got.sort_values(key).reset_index(drop=True),
+            exp.sort_values(key).reset_index(drop=True),
+            check_dtype=False,
+        )
+
+
 def test_embedding_near_dups_no_driver_collect_and_exact(spark):
     """The all-pairs block scorer must (a) never collect vectors to the
     driver (the round-1 scale killer) and (b) reproduce the numpy
@@ -670,37 +738,104 @@ def _union_find(pairs):
     return out
 
 
-def test_connected_components_matches_union_find(spark, docs_df):
-    """Cluster labels over the fixture simhash pair graph must equal
-    brute-force union-find (component = min reachable id)."""
-    from batch3dfier_spark.operators.dedup import (
-        connected_components,
-        simhash_near_dups,
-    )
+def _cc_both_paths(monkeypatch, pairs, **kwargs):
+    """Run connected_components on the one-task path and on the round
+    loop (CC_ONE_TASK_EDGES_MAX = 0 forces it), assert both return the
+    same labels and the same round count, and return
+    {path: (labels sorted by id, stats, wall seconds)}."""
+    import time
 
-    pairs = simhash_near_dups(docs_df, max_hamming=8)
+    from batch3dfier_spark.operators import dedup
+
+    bound = dedup.CC_ONE_TASK_EDGES_MAX
+    runs = {}
+    for path, patched in (("one_task", bound), ("loop", 0)):
+        monkeypatch.setattr(dedup, "CC_ONE_TASK_EDGES_MAX", patched)
+        stats: dict = {}
+        t0 = time.time()
+        labels = (
+            dedup.connected_components(pairs, stats=stats, **kwargs)
+            .toPandas().sort_values("id").reset_index(drop=True)
+        )
+        runs[path] = (labels, stats, time.time() - t0)
+    monkeypatch.setattr(dedup, "CC_ONE_TASK_EDGES_MAX", bound)
+    (one, one_st, _), (loop, loop_st, _) = runs["one_task"], runs["loop"]
+    assert one_st["edge_rows"] < bound  # the default really took one task
+    pd.testing.assert_frame_equal(one, loop)
+    assert one_st["rounds"] == loop_st["rounds"], (one_st, loop_st)
+    return runs
+
+
+@pytest.fixture(params=["one_task", "loop"])
+def cc_path(request, monkeypatch):
+    """Parametrizes a test over both connected_components paths."""
+    from batch3dfier_spark.operators import dedup
+
+    if request.param == "loop":
+        monkeypatch.setattr(dedup, "CC_ONE_TASK_EDGES_MAX", 0)
+    return request.param
+
+
+def test_connected_components_matches_union_find(spark, docs_df, monkeypatch):
+    """Cluster labels over the fixture simhash pair graph must equal
+    brute-force union-find (component = min reachable id), on both
+    paths."""
+    from batch3dfier_spark.operators.dedup import simhash_near_dups
+
+    pairs = simhash_near_dups(docs_df, max_hamming=8).localCheckpoint(eager=True)
     pair_list = [(r.id_a, r.id_b) for r in pairs.collect()]
     assert len(pair_list) > 50
-    got = {
-        r.id: r.component
-        for r in connected_components(pairs).collect()
-    }
+    labels = _cc_both_paths(monkeypatch, pairs)["one_task"][0]
+    got = dict(zip(labels["id"], labels["component"]))
     exp = _union_find(pair_list)
     assert got == exp
 
 
-def test_connected_components_deep_path_graph(spark):
-    """A 40-node path (diameter 39) exercises many propagation rounds;
-    labels must still collapse to the single min id."""
-    import pandas as pd
+def test_connected_components_raises_when_unconverged(spark, cc_path):
+    """max_iter is a guard, not a truncation: a 40-node path needs
+    more than 2 pointer-jumping rounds, so max_iter=2 must raise on
+    either path instead of returning unconverged labels."""
+    from batch3dfier_spark.operators.dedup import connected_components
 
+    pairs = spark.createDataFrame(
+        pd.DataFrame({"id_a": range(39), "id_b": range(1, 40)})
+    )
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        connected_components(pairs, max_iter=2)
+
+
+def test_connected_components_evaluates_input_once(spark, cc_path):
+    """The bidirection must not evaluate a lazy input twice: every row
+    passing through a pandas UDF upstream of connected_components is
+    counted once (a self-union of the input would count each row once
+    per union branch)."""
+    from batch3dfier_spark.operators.dedup import connected_components
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def tap(batches):
+        for pdf in batches:
+            acc.add(len(pdf))
+            yield pdf
+
+    edges = pd.DataFrame({"id_a": np.arange(0, 60, 2, dtype=np.int64),
+                          "id_b": np.arange(1, 61, 2, dtype=np.int64)})
+    pairs = spark.createDataFrame(edges).mapInPandas(
+        tap, schema="id_a bigint, id_b bigint")
+    labels = connected_components(pairs).toPandas()
+    assert len(labels) == 60
+    assert acc.value == len(edges)
+
+
+def test_connected_components_deep_path_graph(spark, monkeypatch):
+    """A 40-node path (diameter 39) exercises many propagation rounds;
+    labels must still collapse to the single min id, on both paths."""
     chain = pd.DataFrame({"id_a": range(39), "id_b": range(1, 40)})
     # plus a separate triangle with ids 100..102
     tri = pd.DataFrame({"id_a": [100, 101, 100], "id_b": [101, 102, 102]})
     pairs = spark.createDataFrame(pd.concat([chain, tri]))
-    from batch3dfier_spark.operators.dedup import connected_components
 
-    out = connected_components(pairs, max_iter=50).toPandas()
+    out = _cc_both_paths(monkeypatch, pairs, max_iter=50)["one_task"][0]
     comp = out.set_index("id")["component"]
     assert (comp.loc[range(40)] == 0).all()
     assert (comp.loc[[100, 101, 102]] == 100).all()
@@ -724,7 +859,7 @@ def test_dedup_clusters_matches_duckdb(spark, docs_df):
     )
 
 
-def test_clusters_converge_within_oracle_unroll(spark):
+def test_clusters_converge_within_oracle_unroll(spark, monkeypatch):
     """The dedup_clusters SQL oracle unrolls exactly 8 pointer-jumped
     rounds (plans/queries._sql_dedup_clusters) while the engine iterates
     to convergence — they agree only if the engine's fixpoint is
@@ -732,16 +867,17 @@ def test_clusters_converge_within_oracle_unroll(spark):
     correctness corpus (sf0.01): capping the engine at max_iter=8 must
     already yield the fixpoint.  A future fixture whose pair graph needs
     more rounds fails HERE loudly instead of silently hash-diverging in
-    CORRECTNESS_r{N}.json."""
+    CORRECTNESS_r{N}.json.  Both connected_components paths are held
+    to the window."""
     from batch3dfier_spark.operators.dedup import (
         connected_components,
         simhash_near_dups,
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    # score the simhash funnel once; both runs reuse the materialized pairs
+    # score the simhash funnel once; all runs reuse the materialized pairs
     pairs = simhash_near_dups(docs, max_hamming=8).localCheckpoint(eager=True)
-    capped = connected_components(pairs, max_iter=8).toPandas()
+    capped = _cc_both_paths(monkeypatch, pairs, max_iter=8)["one_task"][0]
     free = connected_components(pairs, max_iter=25).toPandas()
     assert len(capped) > 0
     m = capped.merge(free, on="id", suffixes=("_8", "_conv"))
@@ -749,7 +885,7 @@ def test_clusters_converge_within_oracle_unroll(spark):
     assert (m["component_8"] == m["component_conv"]).all()
 
 
-def test_clusters_scale_chains_and_stars_round_count(spark):
+def test_clusters_scale_chains_and_stars_round_count(spark, monkeypatch):
     """Round-4 VERDICT #9: the O(log diameter) claim of
     connected_components, MEASURED on a 1e5-edge synthetic graph —
     50 chains of 1000 nodes (diameter 999, the pointer-jumping stress)
@@ -758,12 +894,8 @@ def test_clusters_scale_chains_and_stars_round_count(spark):
     diameter-999 chain must converge in ~log2(999)+const rounds
     (measured: 10 incl. the convergence-proof round), never the ~500
     of plain min-propagation; the whole job must finish in minutes,
-    not hours."""
-    import time
-
+    not hours.  Both paths run it, with identical labels and rounds."""
     from pyspark.sql import functions as F
-
-    from batch3dfier_spark.operators.dedup import connected_components
 
     # chains: nodes c*1000 + j (j<1000), edges (n, n+1) -> 49_950 edges
     chains = spark.range(50 * 999).select(
@@ -780,10 +912,9 @@ def test_clusters_scale_chains_and_stars_round_count(spark):
     pairs = chains.unionByName(stars)
     assert pairs.count() == 100_000
 
-    stats: dict = {}
-    t0 = time.time()
-    labels = connected_components(pairs, stats=stats).toPandas()
-    wall = time.time() - t0
+    pairs = pairs.localCheckpoint(eager=True)
+    runs = _cc_both_paths(monkeypatch, pairs)
+    labels, stats, _ = runs["one_task"]
 
     # every chain collapses to its min id, every star to its hub
     labels["expected"] = [
@@ -798,7 +929,8 @@ def test_clusters_scale_chains_and_stars_round_count(spark):
     # ceiling; plain propagation would need ~500.  +1 convergence-proof
     # round, small slack for compression phase alignment
     assert stats["rounds"] <= 13, stats
-    assert wall < 300, f"1e5-edge label propagation took {wall:.0f}s"
+    for path, (_, _, wall) in runs.items():
+        assert wall < 300, f"1e5-edge label propagation ({path}) took {wall:.0f}s"
 
 
 def test_cluster_survivors_keeps_longest(spark):

@@ -79,9 +79,10 @@ def main() -> None:
     print("- `python nodes` >0 only where semantics require a kernel")
     print("  Spark lacks (polygon test, MinHash, media decode, ...).")
     print("- streaming twins are audited in their batch form here.")
-    print("- dedup_clusters is ITERATIVE (min-label propagation with eager")
-    print("  localCheckpoint per round): its per-round join+groupBy shuffles")
-    print("  run during query construction, so the audited final plan is")
+    print("- dedup_clusters is ITERATIVE (min-label propagation): it runs")
+    print("  during query construction, in one numpy task for graphs under")
+    print("  CC_ONE_TASK_EDGES_MAX edge rows, else as a Spark round loop")
+    print("  with a localCheckpoint per round, so the audited final plan is")
     print("  just the checkpointed result scan.")
     spark.stop()
 

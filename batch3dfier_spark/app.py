@@ -38,6 +38,7 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import functions as F
 
 from .datagen import REF_TERRITORY
 from .geo import Rect
@@ -167,10 +168,17 @@ def run_job(
         # like the reference's output_batch3dfier (gid 0)
         work = work.withColumn(
             "tile_gid", work.tile_gid * 0
-        ).withColumn("tile_unit", F_lit_unit())
-    table = IcebergishTable(cfg["output"]["table"])
+        ).withColumn("tile_unit", F.lit("output_batch3dfier"))
     unit_to_gid = dict(zip(index.frame["unit"], index.frame["gid"]))
-    skip_gids = {int(unit_to_gid[u]) for u in cfg["skip_units"] if u in unit_to_gid}
+    bad = [u for u in cfg["skip_units"] if u not in unit_to_gid]
+    if bad:
+        raise ValueError(f"unknown skip units: {bad}")
+    # only skips within the selected units: committing an unselected
+    # unit as 'skipped' would make a later run that selects it resume
+    # past it with no rows
+    skip_gids = {int(unit_to_gid[u])
+                 for u in set(cfg["skip_units"]).intersection(units)}
+    table = IcebergishTable(cfg["output"]["table"])
     disp = {**CONFIG_DEFAULTS["dispatch"], **(cfg.get("dispatch") or {})}
     lineage = run_tiles(
         work, process, table,
@@ -182,12 +190,6 @@ def run_job(
     report["units_selected"] = len(units)
     report["union_mode"] = bool(union)
     return report
-
-
-def F_lit_unit():
-    from pyspark.sql import functions as F
-
-    return F.lit("output_batch3dfier")
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -10,8 +10,9 @@ config.py:102-109).
 Spark-first model: `groupBy(tile_gid).applyInPandas(worker)` — Spark's
 scheduler IS the work queue, executor cores ARE the threads.  The worker
 runs the per-tile processor on the tile's Arrow batch, writes the tile's
-output file itself (exactly like the external worker), and returns ONE
-lineage row; the driver then commits all new files + lineage atomically
+output file itself (exactly like the external worker) at the path
+`tablefmt.tile_data_path` names, and returns ONE lineage row; the
+driver then commits all new files + lineage atomically
 into the IcebergishTable.  Resume = drop tiles already in the committed
 lineage before grouping (partition pruning does this for free when the
 work list is a pushed-down `isin` filter).
@@ -34,7 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..storage.tablefmt import IcebergishTable
+from ..storage.tablefmt import IcebergishTable, tile_data_path
 
 __all__ = ["run_tiles", "salted_split", "skip_report"]
 
@@ -48,21 +49,15 @@ def run_tiles(
     df: DataFrame,
     process: Callable[[pd.DataFrame], pd.DataFrame],
     table: IcebergishTable,
-    tile_col: str = "tile_gid",
     skip_tiles: set[int] | None = None,
     resume: bool = True,
     decomposable: bool = False,
     salt_key_col: str = "url",
     salt_target_rows: int = 250_000,
-    collect_lineage: bool = True,
-) -> pd.DataFrame | int:
-    """Run `process` once per tile group; write per-tile parquet into
-    `table`; commit atomically; return the table's CUMULATIVE lineage
-    frame (collect_lineage=True, the reporting default) or just the new
-    snapshot id (collect_lineage=False — at 1e8-tile scale even the
-    convenience pandas return is a driver materialization; query
-    `table.lineage(min_tile=..., max_tile=...)` pruned or
-    `table.completed_tiles_df(spark)` distributed instead).
+) -> pd.DataFrame:
+    """Run `process` once per `tile_gid` group of `df`; write per-tile
+    parquet into `table`; commit atomically; return the table's
+    CUMULATIVE lineage frame.
 
     CONTRACT NOTE: the returned frame spans ALL runs against `table`,
     not just this one — on a resumed table, skip_report(run_tiles(...))
@@ -95,8 +90,6 @@ def run_tiles(
     of a driver-side isin list.
     """
     spark = df.sparkSession
-    import json as _json
-
     # the name is embedded in work-order JSON via to_json(struct(...)),
     # which escapes quotes/backslashes/control chars structurally —
     # exotic processor names survive verbatim and the JSON stays valid
@@ -104,6 +97,13 @@ def run_tiles(
     skip_tiles = set(skip_tiles or ())
 
     # -- resume: drop completed tiles without materializing big sets ------
+    # Two resume paths (split at 10 000 lineage rows) and two lineage
+    # builders below. Measured only on the small side: a prototype that
+    # always took the anti-join was slower on a warm run_job resumed
+    # rerun (1.27 -> 1.55 s, 4-vCPU host), and one that always folded
+    # cost ~0.25-0.3 s per call. The anti-join path has no benchmark
+    # workload above 10 000 lineage rows, and the salted fold is chosen
+    # by the `decomposable` option, so neither large side is measured.
     completed: set[int] = set()
     completed_df = None
     if resume:
@@ -117,13 +117,10 @@ def run_tiles(
 
     work = df
     if completed:
-        work = work.where(~F.col(tile_col).isin([int(t) for t in completed]))
+        work = work.where(~F.col("tile_gid").isin([int(t) for t in completed]))
         todo_skip = skip_tiles - completed
     elif completed_df is not None:
-        work = work.join(
-            completed_df.withColumnRenamed("tile_gid", tile_col),
-            on=tile_col, how="left_anti",
-        )
+        work = work.join(completed_df, on="tile_gid", how="left_anti")
         if skip_tiles:
             # BOUNDED collect by construction: the isin predicate
             # filters the completed set down to the caller-supplied
@@ -149,16 +146,15 @@ def run_tiles(
     else:
         todo_skip = set(skip_tiles)
     if todo_skip:
-        work = work.where(~F.col(tile_col).isin([int(t) for t in todo_skip]))
+        work = work.where(~F.col("tile_gid").isin([int(t) for t in todo_skip]))
 
     table_root = os.path.abspath(table.root)
-    group_cols = [tile_col]
+    group_cols = ["tile_gid"]
     if decomposable:
         work = salted_split(
-            work, tile_col=tile_col, key_col=salt_key_col,
-            target_rows_per_group=salt_target_rows,
+            work, key_col=salt_key_col, target_rows_per_group=salt_target_rows,
         )
-        group_cols = [tile_col, "salt"]
+        group_cols = ["tile_gid", "salt"]
 
     def worker(key, pdf: pd.DataFrame) -> pd.DataFrame:
         import pyarrow as pa
@@ -178,13 +174,9 @@ def run_tiles(
             if "tile_gid" not in out.columns:
                 out = out.copy()
                 out.insert(0, "tile_gid", tile)
-            rel_dir = os.path.join("data", f"tile_gid={tile}")
-            os.makedirs(os.path.join(table_root, rel_dir), exist_ok=True)
-            import uuid as _uuid
-
             # ROOT-RELATIVE in lineage/manifests: the table directory
             # stays movable (resolved against root at read time)
-            path = os.path.join(rel_dir, f"{_uuid.uuid4().hex}.parquet")
+            path = tile_data_path(table_root, tile)
             pq.write_table(
                 pa.Table.from_pandas(out, preserve_index=False),
                 os.path.join(table_root, path),
@@ -207,14 +199,15 @@ def run_tiles(
         worker, schema=_LINEAGE_SCHEMA + ", path string"
     )
 
-    # mirror json.dumps({"tile": t, "salt_groups": n, "processor": p});
-    # built executor-side by to_json(struct(...)) so escaping is the
-    # JSON writer's job, never string formatting's
-    def _wo(tile_col, n_col):
+    # the one work-order renderer, {"tile":t,"salt_groups":n,"processor":p}
+    # for processed and skipped rows alike; built executor-side by
+    # to_json(struct(...)) so escaping is the JSON writer's job, never
+    # string formatting's
+    def _wo(tile, n_groups):
         return F.to_json(
             F.struct(
-                tile_col.cast("bigint").alias("tile"),
-                n_col.cast("int").alias("salt_groups"),
+                tile.cast("bigint").alias("tile"),
+                n_groups.cast("int").alias("salt_groups"),
                 F.lit(proc_name).alias("processor"),
             )
         )
@@ -260,20 +253,12 @@ def run_tiles(
             .alias("paths"),
         )
     if todo_skip:
-        skip_rows = [
-            (int(t), -1, 0, 0, 0.0, "skipped",
-             _json.dumps({"tile": int(t), "salt_groups": 0,
-                          "processor": proc_name}), None)
-            for t in sorted(todo_skip)
-        ]
-        lin = lin.unionByName(
-            spark.createDataFrame(
-                skip_rows,
-                schema=("tile_gid bigint, partition_id int, rows_in bigint, "
-                        "rows_out bigint, wall_ms double, status string, "
-                        "work_order string, paths array<string>"),
-            )
+        skipped = spark.createDataFrame(
+            [(int(t), -1, 0, 0, 0.0, "skipped", None) for t in sorted(todo_skip)],
+            schema=_LINEAGE_SCHEMA + ", paths array<string>",
         )
+        lin = lin.unionByName(skipped.withColumn(
+            "work_order", _wo(F.col("tile_gid"), F.lit(0))))
 
     # distributed lineage write (this action also runs the workers),
     # then a footer-stats-only commit; on failure the staging dir is
@@ -283,40 +268,35 @@ def run_tiles(
     staging = table.stage_dir()
     try:
         lin.write.parquet(staging)
-        sid = table.commit_staged(staging)
+        table.commit_staged(staging)
     except BaseException:
         import shutil
 
         shutil.rmtree(staging, ignore_errors=True)
         raise
-    if not collect_lineage:
-        return sid
     return table.lineage()
 
 
 def salted_split(
     df: DataFrame,
-    tile_col: str = "tile_gid",
     key_col: str = "url",
     target_rows_per_group: int = 250_000,
-    counts: DataFrame | None = None,
 ) -> DataFrame:
-    """Add a `salt` column splitting hot tiles into ~target-sized
+    """Add a `salt` column splitting hot `tile_gid`s into ~target-sized
     subgroups: salt = pmod(xxhash64(key), ceil(tile_rows/target)).
     Cold tiles get salt 0 (single group).  The per-tile frequency
     sketch is a cheap count agg (broadcast back — one small shuffle).
     """
-    if counts is None:
-        counts = df.groupBy(tile_col).agg(F.count(F.lit(1)).alias("_tile_rows"))
+    counts = df.groupBy("tile_gid").agg(F.count(F.lit(1)).alias("_tile_rows"))
     factors = counts.select(
-        tile_col,
+        "tile_gid",
         F.greatest(
             F.lit(1),
             F.ceil(F.col("_tile_rows") / F.lit(target_rows_per_group)),
         ).cast("int").alias("_salt_n"),
     )
     return (
-        df.join(F.broadcast(factors), on=tile_col, how="left")
+        df.join(F.broadcast(factors), on="tile_gid", how="left")
         .withColumn(
             "salt",
             F.pmod(F.xxhash64(F.col(key_col)), F.coalesce(F.col("_salt_n"), F.lit(1))),

@@ -23,7 +23,8 @@ O(new files) per commit, NOT O(table history)):
         CURRENT                                # name of current snapshot
 
 Commit = write one manifest holding ONLY this commit's new files and
-lineage rows, write an O(1) snapshot pointer referencing it, then
+lineage rows, create an O(1) snapshot pointer referencing it EXCLUSIVELY
+(a racing writer that picked the same id raises FileExistsError), then
 atomically `os.replace` the CURRENT pointer.  Readers resolve a snapshot
 by walking the parent chain and concatenating manifests (cached
 per-instance — manifests are immutable so the cache never invalidates).
@@ -31,7 +32,8 @@ Half-written runs stay invisible: nothing references an uncommitted
 manifest.  Total metadata bytes across n commits grow LINEARLY in rows
 written (each file path / lineage row is serialized exactly once, in
 exactly one manifest), vs the pre-round-3 format that re-serialized the
-full cumulative history into every snapshot (O(n^2)).  On a real cluster
+full cumulative history into every snapshot (O(n^2)).  Snapshot expiry
+and export both write self-contained base manifests.  On a real cluster
 the same protocol runs against an object store / a real Iceberg catalog —
 the interface is kept thin on purpose (SURVEY.md §7.0).
 """
@@ -40,15 +42,36 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import uuid
 from dataclasses import asdict, dataclass
 
 import pandas as pd
 
-__all__ = ["LineageRow", "IcebergishTable"]
+__all__ = ["LineageRow", "IcebergishTable", "tile_data_path"]
 
 _LINEAGE_COLS = ["tile_gid", "partition_id", "rows_in", "rows_out",
                  "wall_ms", "status", "snapshot_id", "work_order"]
+_TILE_DIR = r"tile_gid=(\d+)"  # hive-style tile directory of a data file
+
+
+def tile_data_path(root: str, tile_gid: int) -> str:
+    """New ROOT-RELATIVE `data/tile_gid=<gid>/<uuid>.parquet` path, its
+    directory created under `root` (table-free: workers call it)."""
+    rel_dir = os.path.join("data", f"tile_gid={int(tile_gid)}")
+    os.makedirs(os.path.join(root, rel_dir), exist_ok=True)
+    return os.path.join(rel_dir, f"{uuid.uuid4().hex}.parquet")
+
+
+def _range_stats(entries: list[dict]) -> dict:
+    """Fold {n_rows, min_tile, max_tile} entries into commit-level
+    stats; an unknown (None) count makes n_rows None (never empty)."""
+    counts = [e["n_rows"] for e in entries]
+    mins = [e["min_tile"] for e in entries if e["min_tile"] is not None]
+    maxs = [e["max_tile"] for e in entries if e["max_tile"] is not None]
+    return {"n_rows": None if None in counts else sum(counts),
+            "min_tile": min(mins, default=None),
+            "max_tile": max(maxs, default=None)}
 
 
 @dataclass
@@ -98,16 +121,14 @@ class IcebergishTable:
 
     # -- snapshot chain -----------------------------------------------------
 
-    def _current_name(self) -> str | None:
+    def _current_sid(self) -> int | None:
+        """The one CURRENT reader: id of the current snapshot, or None."""
         p = os.path.join(self.meta_dir, "CURRENT")
         if not os.path.exists(p):
             return None
         with open(p) as f:
-            return f.read().strip() or None
-
-    def _load_snap(self, name: str) -> dict:
-        with open(os.path.join(self.meta_dir, name)) as f:
-            return json.load(f)
+            name = f.read().strip()
+        return int(name[len("snapshot-"):-len(".json")]) if name else None
 
     def _raw_snapshot(self, snapshot_id: int) -> dict:
         """On-disk snapshot record (pointer form, not resolved)."""
@@ -159,15 +180,8 @@ class IcebergishTable:
     @staticmethod
     def _tile_of_path(p: str) -> int | None:
         """Hive-style tile from a data path ('.../tile_gid=N/...')."""
-        marker = "tile_gid="
-        i = p.rfind(marker)
-        if i < 0:
-            return None
-        j = i + len(marker)
-        k = j
-        while k < len(p) and p[k].isdigit():
-            k += 1
-        return int(p[j:k]) if k > j else None
+        found = re.findall(_TILE_DIR, p)
+        return int(found[-1]) if found else None
 
     def _in_range(self, tile, lo, hi) -> bool:
         if lo is not None and tile < lo:
@@ -195,11 +209,7 @@ class IcebergishTable:
             files: list[str] = []
             rows: list[dict] = []
             for df_entry in m.get("data_files", []):
-                if self._stats_overlap(
-                    {"min_tile": df_entry.get("min_tile"),
-                     "max_tile": df_entry.get("max_tile")},
-                    lo, hi,
-                ):
+                if self._stats_overlap(df_entry, lo, hi):
                     files.append(df_entry["path"])
             for part in m.get("lineage_parquet", []):
                 if not self._stats_overlap(part, lo, hi):
@@ -283,11 +293,8 @@ class IcebergishTable:
     def current_snapshot(self) -> dict | None:
         """Resolved view of the current snapshot (or None): the raw
         pointer plus materialized cumulative `files` and `lineage`."""
-        name = self._current_name()
-        if name is None:
-            return None
-        snap = self._load_snap(name)
-        return self.snapshot(snap["snapshot_id"])
+        sid = self._current_sid()
+        return None if sid is None else self.snapshot(sid)
 
     def snapshot(self, snapshot_id: int) -> dict:
         """Resolved view of a specific snapshot by id (time travel —
@@ -319,30 +326,34 @@ class IcebergishTable:
         os.replace(tmp, os.path.join(self.meta_dir, name))
 
     def _next_sid(self) -> tuple[int, int | None]:
-        cur_name = self._current_name()
-        parent = self._load_snap(cur_name)["snapshot_id"] if cur_name else None
-        return (parent + 1) if parent else 1, parent
+        parent = self._current_sid()
+        return (parent or 0) + 1, parent
 
     def _finish_commit(self, sid: int, parent: int | None,
-                       manifest_name: str | None,
-                       stats: dict | None,
-                       extra: dict | None = None) -> int:
-        """Shared commit tail: O(1) snapshot pointer (carrying the
-        commit-level tile stats used for pruned chain walks), then
-        atomically swap CURRENT.  `extra` merges additional pointer
-        fields (rewrite flag, file_stats) for maintenance commits."""
-        snap: dict = {"snapshot_id": sid, "parent": parent,
-                      "manifest": manifest_name}
-        if stats is not None:
-            snap["stats"] = stats
-        if extra:
-            snap.update(extra)
+                       manifest_name: str | None, **fields) -> int:
+        """Shared commit tail: O(1) snapshot pointer (`fields` carry the
+        commit-level tile stats used for pruned chain walks, and flags),
+        created exclusively — a writer that raced another for `sid`
+        raises FileExistsError before CURRENT moves — then atomically
+        swap CURRENT."""
         snap_name = f"snapshot-{sid:06d}.json"
-        self._write_atomic(snap_name, snap)
-        ptmp = os.path.join(self.meta_dir, f".CURRENT.{uuid.uuid4().hex}.tmp")
-        with open(ptmp, "w") as f:
+        tmp = os.path.join(self.meta_dir, f".{snap_name}.{uuid.uuid4().hex}.tmp")
+        with open(tmp, "w") as f:
+            json.dump({"snapshot_id": sid, "parent": parent,
+                       "manifest": manifest_name, **fields}, f)
+        try:
+            os.link(tmp, os.path.join(self.meta_dir, snap_name))
+        except FileExistsError as e:
+            raise FileExistsError(
+                f"{snap_name} already exists: another writer committed "
+                "this snapshot id, or an interrupted commit left its "
+                "pointer; run vacuum() with no writer in flight") from e
+        finally:
+            os.remove(tmp)
+        ctmp = os.path.join(self.meta_dir, f".CURRENT.{uuid.uuid4().hex}.tmp")
+        with open(ctmp, "w") as f:
             f.write(snap_name)
-        os.replace(ptmp, os.path.join(self.meta_dir, "CURRENT"))
+        os.replace(ctmp, os.path.join(self.meta_dir, "CURRENT"))
         return sid
 
     def commit(self, new_files: list[str], lineage: list[LineageRow]) -> int:
@@ -363,15 +374,12 @@ class IcebergishTable:
                  "files": [self._rel(f) for f in new_files],
                  "lineage": rows},
             )
-        if rows:
-            tiles = [r["tile_gid"] for r in rows]
-            stats = {"n_rows": len(rows), "min_tile": min(tiles),
-                     "max_tile": max(tiles)}
-        elif new_files:
-            stats = None  # files without lineage: range unknown, no pruning
-        else:
-            stats = {"n_rows": 0}
-        return self._finish_commit(sid, parent, manifest_name, stats)
+        if new_files and not rows:
+            # files without lineage: range unknown, no pruning
+            return self._finish_commit(sid, parent, manifest_name)
+        return self._finish_commit(sid, parent, manifest_name, stats=_range_stats(
+            [{"n_rows": 1, "min_tile": r["tile_gid"], "max_tile": r["tile_gid"]}
+             for r in rows]))
 
     def _footer_file_stats(self, d: str) -> list[dict]:
         """Per-file {path (root-relative), n_rows, min_tile, max_tile}
@@ -437,27 +445,16 @@ class IcebergishTable:
         sid, parent = self._next_sid()
         parts = self._footer_file_stats(staged_dir)
         manifest_name = None
-        stats: dict | None = {"n_rows": 0}
         if parts:
             manifest_name = f"manifest-{sid:06d}-{uuid.uuid4().hex}.json"
             self._write_atomic(
                 manifest_name,
                 {"snapshot_id": sid, "lineage_parquet": parts},
             )
-            mins = [p["min_tile"] for p in parts if p["min_tile"] is not None]
-            maxs = [p["max_tile"] for p in parts if p["max_tile"] is not None]
-            stats = {"n_rows": sum(p["n_rows"] for p in parts),
-                     "min_tile": min(mins) if mins else None,
-                     "max_tile": max(maxs) if maxs else None}
-        return self._finish_commit(sid, parent, manifest_name, stats)
+        return self._finish_commit(sid, parent, manifest_name,
+                                   stats=_range_stats(parts))
 
     # -- reads ----------------------------------------------------------------
-
-    def _current_sid(self) -> int | None:
-        name = self._current_name()
-        if name is None:
-            return None
-        return self._load_snap(name)["snapshot_id"]
 
     def files(
         self,
@@ -607,9 +604,7 @@ class IcebergishTable:
     # -- task-side helpers ------------------------------------------------------
 
     def new_data_path(self, tile_gid: int) -> str:
-        d = os.path.join(self.data_dir, f"tile_gid={tile_gid}")
-        os.makedirs(d, exist_ok=True)
-        return os.path.join(d, f"{uuid.uuid4().hex}.parquet")
+        return os.path.join(self.root, tile_data_path(self.root, tile_gid))
 
     # -- maintenance (compaction, snapshot expiry, vacuum) --------------------
     # The reference delegates table maintenance to Postgres — db.vacuum
@@ -649,9 +644,8 @@ class IcebergishTable:
         if "tile_gid" not in df.columns:
             df = df.withColumn(
                 "tile_gid",
-                F.regexp_extract(
-                    F.input_file_name(), r"tile_gid=(\d+)", 1
-                ).cast("bigint"),
+                F.regexp_extract(F.input_file_name(), _TILE_DIR, 1)
+                .cast("bigint"),
             )
         total = df.count()
         n_out = max(1, math.ceil(total / target_file_rows))
@@ -670,21 +664,10 @@ class IcebergishTable:
                 manifest_name,
                 {"snapshot_id": sid, "data_files": entries},
             )
-            mins = [e["min_tile"] for e in entries
-                    if e["min_tile"] is not None]
-            maxs = [e["max_tile"] for e in entries
-                    if e["max_tile"] is not None]
             return self._finish_commit(
                 sid, parent, manifest_name,
-                {"n_rows": 0},  # a rewrite adds no lineage
-                extra={
-                    "rewrite": True,
-                    "file_stats": {
-                        "n_rows": sum(e["n_rows"] for e in entries),
-                        "min_tile": min(mins) if mins else None,
-                        "max_tile": max(maxs) if maxs else None,
-                    },
-                },
+                stats={"n_rows": 0},  # a rewrite adds no lineage
+                rewrite=True, file_stats=_range_stats(entries),
             )
         except BaseException:
             shutil.rmtree(out_dir, ignore_errors=True)
@@ -707,31 +690,47 @@ class IcebergishTable:
         actions run.  Returns the expired snapshot ids."""
         if keep_n < 1:
             raise ValueError("keep_n must be >= 1")
-        sids = self.snapshots()
+        # committed ids only: a pointer newer than CURRENT (an
+        # interrupted commit) is an orphan for vacuum(), never a keeper
+        cur = self._current_sid()
+        sids = [s for s in self.snapshots() if cur is not None and s <= cur]
         if len(sids) <= keep_n:
             return []
         expired, kept = sids[:-keep_n], sids[-keep_n:]
         base_sid = kept[0]
-        files, lineage = self._resolve_chain(base_sid)
+        name, fields = self._write_base(base_sid, *self._resolve_chain(base_sid))
+        # the one pointer overwrite: same id, rebased onto the base manifest
+        self._write_atomic(
+            f"snapshot-{base_sid:06d}.json",
+            {"snapshot_id": base_sid, "parent": None, "manifest": name,
+             **fields},
+        )
+        self._snap_cache.pop(base_sid, None)
+        for sid in expired:
+            p = os.path.join(self.meta_dir, f"snapshot-{sid:06d}.json")
+            if os.path.exists(p):
+                os.remove(p)
+            self._snap_cache.pop(sid, None)
+        self.vacuum()
+        return expired
+
+    def _write_base(self, sid: int, files: list[str],
+                    lineage: list[dict]) -> tuple[str, dict]:
+        """Write a resolved snapshot (files, attributed lineage) as ONE
+        self-contained base manifest, for expiry and export alike;
+        returns (manifest name, pointer fields)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
         entries: list[dict] = []
         for f in files:
             t = self._tile_of_path(f)
-            e = None
-            if t is None and os.path.exists(f):
-                e = self._file_stat(f)  # compacted file: footer range
+            e = self._file_stat(f) if t is None and os.path.exists(f) else None
             if e is None:
-                e = {"path": self._rel(f),
-                     "n_rows": None, "min_tile": t, "max_tile": t}
-            else:
-                e["path"] = self._rel(f)
-            entries.append(e)
-
+                e = {"n_rows": None, "min_tile": t, "max_tile": t}
+            entries.append(e | {"path": self._rel(f)})
         parts: list[dict] = []
         if lineage:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
             schema = pa.schema([
                 ("tile_gid", pa.int64()), ("partition_id", pa.int32()),
                 ("rows_in", pa.int64()), ("rows_out", pa.int64()),
@@ -745,7 +744,7 @@ class IcebergishTable:
                  "rows_out": int(r.get("rows_out") or 0),
                  "wall_ms": float(r.get("wall_ms") or 0.0),
                  "status": str(r.get("status", "")),
-                 "snapshot_id": int(r.get("snapshot_id") or base_sid),
+                 "snapshot_id": int(r.get("snapshot_id") or sid),
                  "work_order": str(r.get("work_order") or "")}
                 for r in lineage
             ]
@@ -755,46 +754,15 @@ class IcebergishTable:
             part_path = os.path.join(part_dir, "part-0.parquet")
             pq.write_table(pa.Table.from_pylist(rows, schema=schema),
                            part_path)
-            tiles = [r["tile_gid"] for r in rows]
-            parts.append({"path": os.path.relpath(part_path, self.root),
-                          "n_rows": len(rows),
-                          "min_tile": min(tiles), "max_tile": max(tiles)})
-
-        base_name = f"manifest-{base_sid:06d}-{uuid.uuid4().hex}.json"
+            parts.append(self._file_stat(part_path))
+        name = f"manifest-{sid:06d}-{uuid.uuid4().hex}.json"
         self._write_atomic(
-            base_name,
-            {"snapshot_id": base_sid, "base": True,
+            name,
+            {"snapshot_id": sid, "base": True,
              "data_files": entries, "lineage_parquet": parts},
         )
-        mins = [e["min_tile"] for e in entries if e["min_tile"] is not None]
-        maxs = [e["max_tile"] for e in entries if e["max_tile"] is not None]
-        lin_tiles = [p for p in parts]
-        self._write_atomic(
-            f"snapshot-{base_sid:06d}.json",
-            {"snapshot_id": base_sid, "parent": None,
-             "manifest": base_name,
-             "stats": {
-                 "n_rows": sum(p["n_rows"] for p in lin_tiles),
-                 "min_tile": min((p["min_tile"] for p in lin_tiles),
-                                 default=None),
-                 "max_tile": max((p["max_tile"] for p in lin_tiles),
-                                 default=None),
-             },
-             "file_stats": {
-                 "n_rows": len(entries),
-                 "min_tile": min(mins) if mins else None,
-                 "max_tile": max(maxs) if maxs else None,
-             },
-             "base": True},
-        )
-        self._snap_cache.pop(base_sid, None)
-        for sid in expired:
-            p = os.path.join(self.meta_dir, f"snapshot-{sid:06d}.json")
-            if os.path.exists(p):
-                os.remove(p)
-            self._snap_cache.pop(sid, None)
-        self.vacuum()
-        return expired
+        return name, {"stats": _range_stats(parts),
+                      "file_stats": _range_stats(entries), "base": True}
 
     def vacuum(self) -> dict:
         """Reclaim everything NO committed snapshot references: data
@@ -802,11 +770,20 @@ class IcebergishTable:
         expired), staged-lineage parts and dirs (including orphans from
         runs that died between staging and commit — otherwise invisible
         but unbounded garbage), manifests written by failed commits,
-        and stale .tmp files.  Run it only while no writer is in
-        flight: a concurrently staged-but-uncommitted run looks like an
-        orphan (the same caveat as Iceberg remove_orphan_files, which
-        uses a retention interval for the purpose).  Returns removal
-        counts."""
+        pointers newer than CURRENT (a commit that died before its
+        CURRENT swap; the next commit would collide with them), and
+        stale .tmp files.  Run it only while no writer is in flight: a
+        concurrently staged-but-uncommitted run looks like an orphan
+        (the same caveat as Iceberg remove_orphan_files, which uses a
+        retention interval for the purpose).  Returns removal counts."""
+        removed = {"snapshots": 0, "data_files": 0, "lineage_parts": 0,
+                   "manifests": 0, "tmp": 0}
+        current = self._current_sid() or 0
+        for sid in self.snapshots():
+            if sid > current:
+                os.remove(os.path.join(self.meta_dir, f"snapshot-{sid:06d}.json"))
+                self._snap_cache.pop(sid, None)
+                removed["snapshots"] += 1
         ref_files: set[str] = set()
         ref_manifests: set[str] = set()
         ref_parts: set[str] = set()
@@ -827,8 +804,6 @@ class IcebergishTable:
                     ref_files.update(
                         os.path.abspath(self._abs(p))
                         for p in (r.get("paths") or []))
-        removed = {"data_files": 0, "lineage_parts": 0,
-                   "manifests": 0, "tmp": 0}
         for root_, _dirs, names in os.walk(self.data_dir, topdown=False):
             for n in names:
                 p = os.path.join(root_, n)
@@ -865,11 +840,13 @@ class IcebergishTable:
         the analog of the reference's dump entry point (bag3d.py:239-329:
         pg_dump schema + ogr2ogr -> GeoPackage file a user can carry
         away).  Copies the snapshot's data files under out_dir/data/,
-        writes a single manifest with RELATIVE-to-out_dir paths plus the
-        full lineage history, and a human-readable lineage.csv.  The
+        writes one base manifest (`_write_base`, the format expiry
+        writes) with RELATIVE-to-out_dir paths plus the attributed
+        lineage history, and a human-readable lineage.csv.  The
         artifact is itself a valid one-snapshot IcebergishTable:
         `IcebergishTable(out_dir).read(spark)` returns exactly
-        `self.read(spark, snapshot_id)`.
+        `self.read(spark, snapshot_id)`.  Raises ValueError when out_dir
+        already holds a table.
 
         At cluster scale the per-file copy loop is an object-store
         server-side copy per data file (no driver byte traffic); here it
@@ -877,38 +854,27 @@ class IcebergishTable:
         import shutil
 
         if snapshot_id is None:
-            cur = self._current_name()
-            if cur is None:
+            snapshot_id = self._current_sid()
+            if snapshot_id is None:
                 raise ValueError("empty table (no committed snapshot)")
-            snapshot_id = self._load_snap(cur)["snapshot_id"]
         files, lineage = self._resolve_chain(snapshot_id)
         out = IcebergishTable(out_dir)
-        rel_files = []
+        if out.snapshots():
+            raise ValueError(f"{out_dir} already holds a table")
+        copies = []
         for src in files:
             # keep the tile_gid=<n>/ partition dir so partition-style
             # layouts survive the round trip
-            rel = os.path.join("data", os.path.basename(os.path.dirname(src)),
+            dst = os.path.join(out.data_dir, os.path.basename(os.path.dirname(src)),
                                os.path.basename(src))
-            dst = os.path.join(out_dir, rel)
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             shutil.copy2(src, dst)
-            # RELATIVE in the manifest: the artifact stays readable after
-            # being moved/copied (resolved against the artifact root at
-            # read time by _abs)
-            rel_files.append(rel)
-        manifest_name = f"manifest-000001-{uuid.uuid4().hex}.json"
-        out._write_atomic(
-            manifest_name,
-            {"snapshot_id": 1, "files": rel_files, "lineage": lineage},
-        )
-        out._write_atomic(
-            "snapshot-000001.json",
-            {"snapshot_id": 1, "parent": None, "manifest": manifest_name,
-             "exported_from": {"root": self.root,
-                               "snapshot_id": snapshot_id}},
-        )
-        with open(os.path.join(out.meta_dir, "CURRENT"), "w") as f:
-            f.write("snapshot-000001.json")
+            copies.append(dst)
+        # RELATIVE paths in the base manifest: the artifact stays readable
+        # after being moved/copied
+        name, fields = out._write_base(1, copies, lineage)
+        out._finish_commit(1, None, name, **fields, exported_from={
+            "root": self.root, "snapshot_id": snapshot_id})
         pd.DataFrame(lineage).to_csv(
             os.path.join(out_dir, "lineage.csv"), index=False)
         return out_dir

@@ -94,6 +94,33 @@ def test_run_tile_list_and_skip(spark, tmp_path, pages_path):
         )
         run_job(spark, bad)
 
+    # skip_units are validated like tile_list, not silently dropped
+    (tmp_path / "s1").mkdir()
+    with pytest.raises(ValueError, match="unknown skip units"):
+        bad = parse_config(
+            _cfg(tmp_path / "s1", pages_path, {"tile_list": ["t_0_0"]},
+                 skip_units=["t_3_3", "t_9_9"])
+        )
+        run_job(spark, bad)
+
+    # a skip outside the selected units is not committed: a later run
+    # that selects the unit still processes it
+    from batch3dfier_spark.storage.tablefmt import IcebergishTable
+
+    (tmp_path / "s2").mkdir()
+    cfg = parse_config(
+        _cfg(tmp_path / "s2", pages_path, {"tile_list": ["t_0_0"]},
+             skip_units=["t_3_3"])
+    )
+    report = run_job(spark, cfg)
+    assert report["units_selected"] == 1
+    assert report["tiles_total"] == 1 and report["tiles_skipped"] == 0
+    cfg["mode"] = {"tile_list": ["t_3_3"]}
+    cfg["skip_units"] = []
+    run_job(spark, cfg)
+    out = IcebergishTable(cfg["output"]["table"]).read(spark)
+    assert out.where(out.tile_unit == "t_3_3").count() > 0
+
 
 def test_run_extent_mode_and_resume(spark, tmp_path, pages_path):
     from batch3dfier_spark.app import (

@@ -53,13 +53,6 @@ def test_full_run_and_lineage(assigned, tmp_path):
     rep = skip_report(lineage)
     assert rep == {"tiles_total": 16, "tiles_ok": 16, "tiles_skipped": 0}
 
-    # collect_lineage=False: nothing pandas crosses the driver on the
-    # way out either — the return is just the committed snapshot id
-    t2 = IcebergishTable(str(tmp_path / "t1b"))
-    sid = run_tiles(assigned, tile_processor, t2, collect_lineage=False)
-    assert isinstance(sid, int)
-    assert t2.read(spark).count() == n
-
 
 def test_skip_bookkeeping(assigned, tmp_path):
     table = IcebergishTable(str(tmp_path / "t2"))
@@ -116,6 +109,115 @@ def test_commit_atomicity(tmp_path):
     sid2 = table.commit([], [])
     assert sid2 == 2
     assert table.completed_tiles() == {9}  # lineage carried forward
+
+
+def _lineage_row(tile):
+    from batch3dfier_spark.storage.tablefmt import LineageRow
+
+    return LineageRow(tile_gid=tile, partition_id=0, rows_in=1, rows_out=1,
+                      wall_ms=1.0, status="ok")
+
+
+def test_racing_commit_raises_instead_of_replacing(tmp_path, monkeypatch):
+    """Two writers that read the same CURRENT both aim at the same
+    snapshot id: the loser must fail loudly before CURRENT moves, never
+    silently replace the winner's commit."""
+    root = str(tmp_path / "race")
+    a, b = IcebergishTable(root), IcebergishTable(root)
+    stale = b._next_sid()  # B reads CURRENT before A commits
+    assert a.commit([], [_lineage_row(1)]) == 1
+    monkeypatch.setattr(b, "_next_sid", lambda: stale)
+    with pytest.raises(FileExistsError):
+        b.commit([], [_lineage_row(2)])
+    fresh = IcebergishTable(root)
+    assert fresh.snapshots() == [1]
+    assert fresh.completed_tiles() == {1}
+    assert fresh._next_sid() == (2, 1)
+
+
+def test_orphan_pointer_blocks_commit_until_vacuum(tmp_path, monkeypatch):
+    """A commit that dies between its pointer and the CURRENT swap
+    leaves a pointer newer than CURRENT: the next commit raises instead
+    of overwriting it, and vacuum() removes it (with its manifest)."""
+    import os
+
+    from batch3dfier_spark.storage import tablefmt
+
+    table = IcebergishTable(str(tmp_path / "orphan"))
+    table.commit([], [_lineage_row(1)])
+    real_replace = os.replace
+
+    def crash_on_current(src, dst):
+        if os.path.basename(dst) == "CURRENT":
+            raise OSError("crash before the CURRENT swap")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(tablefmt.os, "replace", crash_on_current)
+    with pytest.raises(OSError, match="crash"):
+        table.commit([], [_lineage_row(2)])
+    monkeypatch.undo()
+    assert table.snapshots() == [1, 2]
+    assert table.completed_tiles() == {1}
+    with pytest.raises(FileExistsError, match="vacuum"):
+        table.commit([], [_lineage_row(3)])
+    removed = table.vacuum()
+    # the crashed commit's pointer, plus its and the refused commit's
+    # manifests
+    assert removed["snapshots"] == 1 and removed["manifests"] == 2
+    assert table.snapshots() == [1]
+    assert table.commit([], [_lineage_row(3)]) == 2
+    assert table.completed_tiles() == {1, 3}
+
+
+def test_expire_ignores_orphan_pointer(spark, tmp_path, monkeypatch):
+    """expire_snapshots keeps the committed CURRENT, not a pointer left
+    by an interrupted commit: the table's rows survive the expiry."""
+    import os
+
+    from batch3dfier_spark.storage import tablefmt
+
+    pdf = pd.DataFrame({"url": [f"u{i}" for i in range(12)],
+                        "text": ["x y"] * 12,
+                        "tile_gid": [i % 4 + 1 for i in range(12)]})
+    df = spark.createDataFrame(pdf)
+    table = IcebergishTable(str(tmp_path / "eo"))
+    run_tiles(df.where(F.col("tile_gid") <= 2), tile_processor, table)
+    run_tiles(df, tile_processor, table)
+    full = table.read(spark).orderBy("url").toPandas()
+    real_replace = os.replace
+
+    def crash_on_current(src, dst):
+        if os.path.basename(dst) == "CURRENT":
+            raise OSError("crash before the CURRENT swap")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(tablefmt.os, "replace", crash_on_current)
+    with pytest.raises(OSError, match="crash"):
+        table.commit([], [_lineage_row(9)])
+    monkeypatch.undo()
+    assert table.snapshots() == [1, 2, 3]
+
+    assert table.expire_snapshots(keep_n=1) == [1]
+    assert table.snapshots() == [2]
+    pd.testing.assert_frame_equal(
+        table.read(spark).orderBy("url").toPandas(), full)
+    assert IcebergishTable(table.root).completed_tiles() == {1, 2, 3, 4}
+
+
+def test_export_into_existing_table_raises(tmp_path):
+    """Exporting into a directory that already holds a table must not
+    clobber its snapshot chain."""
+    src = IcebergishTable(str(tmp_path / "src"))
+    src.commit([], [_lineage_row(5)])
+    dst = IcebergishTable(str(tmp_path / "dst"))
+    for t in (1, 2, 3):
+        dst.commit([], [_lineage_row(t)])
+    with pytest.raises(ValueError, match="already holds"):
+        src.export_snapshot(None, dst.root)
+    again = IcebergishTable(dst.root)
+    assert again.snapshots() == [1, 2, 3]
+    assert again.completed_tiles() == {1, 2, 3}
+    assert again._next_sid() == (4, 3)
 
 
 def test_run_tiles_decomposable_salts_hot_tile(spark, tmp_path):
@@ -276,6 +378,9 @@ def test_export_snapshot_round_trip(spark, tmp_path):
     pd.testing.assert_frame_equal(back2, exp2)
     # lineage history travels with the artifact (both commits' rows)
     assert sorted(art2.lineage()["snapshot_id"].unique()) == [1, 2]
+    # ... value for value, attribution included
+    pd.testing.assert_frame_equal(art2.lineage(), table.lineage(),
+                                  check_dtype=False)
     assert os.path.exists(os.path.join(out2, "lineage.csv"))
     # artifact is self-contained: no absolute path into the source table
     for fpath in art2.files():
@@ -388,6 +493,9 @@ def test_skip_and_resume_on_staged_lineage(spark, tmp_path):
     import json
     rec = json.loads(lin1.iloc[0]["work_order"])
     assert rec["processor"] == "tile_processor"
+    # one renderer: skipped and processed rows share the compact format
+    for wo in lin1["work_order"]:
+        assert wo == json.dumps(json.loads(wo), separators=(",", ":"))
 
 
 def test_work_order_json_escapes_exotic_processor_name(spark, tmp_path):

@@ -2,18 +2,17 @@
 
 A quadtree (Morton / Z-order) cell index: at resolution r the territory
 is a 2^r x 2^r grid; the cell id interleaves the column/row bits so that
-parent ids are prefixes of child ids.  This plays the role the reference
-gives to its tile index + GiST (spatial partition pruning): the pages
-table is partitioned/clustered by a coarse cell id, and an extent query
-becomes a cell-range predicate that prunes parquet partitions.
+parent ids are prefixes of child ids.  The cell_encode contract query
+(plans/queries.q_cell_encode) encodes geocoded documents and rolls them
+up to a coarse parent cell.
 
 Id layout (fits in a signed int64 for r <= 28):
     cell_id = (r << 58) | morton(col, row)
 so ids at the same resolution sort in Z-order and `cell_parent` is a
 bit-shift.  Encoding is fully vectorized numpy (used via pandas UDFs).
 
-This is documented as "H3/S2-style": same API shape (encode, parent,
-cover, neighbors), planar quadtree rather than the official icosahedral
+This is documented as "H3/S2-style": same API shape (encode, parent),
+planar quadtree rather than the official icosahedral
 indexing (no external libs in this environment).
 """
 
@@ -26,11 +25,7 @@ from .geo import Rect
 __all__ = [
     "MAX_RES",
     "cell_encode",
-    "cell_decode",
     "cell_parent",
-    "cell_to_rect",
-    "cell_cover_rect",
-    "cell_neighbors",
 ]
 
 MAX_RES = 28  # 2*28 location bits + 5 resolution bits < 63
@@ -44,16 +39,6 @@ def _part1by1(v: np.ndarray) -> np.ndarray:
     v = (v | (v << np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
     v = (v | (v << np.uint64(2))) & np.uint64(0x3333333333333333)
     v = (v | (v << np.uint64(1))) & np.uint64(0x5555555555555555)
-    return v
-
-
-def _compact1by1(v: np.ndarray) -> np.ndarray:
-    v = v.astype(np.uint64) & np.uint64(0x5555555555555555)
-    v = (v | (v >> np.uint64(1))) & np.uint64(0x3333333333333333)
-    v = (v | (v >> np.uint64(2))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-    v = (v | (v >> np.uint64(4))) & np.uint64(0x00FF00FF00FF00FF)
-    v = (v | (v >> np.uint64(8))) & np.uint64(0x0000FFFF0000FFFF)
-    v = (v | (v >> np.uint64(16))) & np.uint64(0x00000000FFFFFFFF)
     return v
 
 
@@ -86,16 +71,6 @@ def cell_encode(
     return out
 
 
-def cell_decode(cell_id: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """int64 cell id -> (res, col, row) arrays."""
-    c = np.asarray(cell_id, dtype=np.int64).astype(np.uint64)
-    res = (c >> np.uint64(58)).astype(np.int64)
-    loc = c & np.uint64((1 << 58) - 1)
-    col = _compact1by1(loc).astype(np.int64)
-    row = _compact1by1(loc >> np.uint64(1)).astype(np.int64)
-    return res, col, row
-
-
 def cell_parent(cell_id: np.ndarray, parent_res: int) -> np.ndarray:
     """Ancestor id at a coarser resolution (vectorized bit-shift)."""
     c = np.asarray(cell_id, dtype=np.int64).astype(np.uint64)
@@ -107,53 +82,3 @@ def cell_parent(cell_id: np.ndarray, parent_res: int) -> np.ndarray:
     out = ((np.uint64(parent_res) << np.uint64(58)) | loc).astype(np.int64)
     out[np.asarray(cell_id, dtype=np.int64) == -1] = -1
     return out
-
-
-def cell_to_rect(cell_id: int, territory: Rect) -> Rect:
-    res, col, row = cell_decode(np.array([cell_id]))
-    n = 1 << int(res[0])
-    wx = (territory.xmax - territory.xmin) / n
-    wy = (territory.ymax - territory.ymin) / n
-    return Rect(
-        territory.xmin + col[0] * wx,
-        territory.ymin + row[0] * wy,
-        territory.xmin + (col[0] + 1) * wx,
-        territory.ymin + (row[0] + 1) * wy,
-    )
-
-
-def cell_cover_rect(rect: Rect, res: int, territory: Rect) -> np.ndarray:
-    """All cell ids at `res` whose cell intersects the (closed) rect —
-    the extent -> cell-range rewrite used for partition pruning."""
-    n = 1 << res
-    wx = (territory.xmax - territory.xmin) / n
-    wy = (territory.ymax - territory.ymin) / n
-    c0 = int(np.clip(np.floor((rect.xmin - territory.xmin) / wx), 0, n - 1))
-    c1 = int(np.clip(np.floor((rect.xmax - territory.xmin) / wx), 0, n - 1))
-    r0 = int(np.clip(np.floor((rect.ymin - territory.ymin) / wy), 0, n - 1))
-    r1 = int(np.clip(np.floor((rect.ymax - territory.ymin) / wy), 0, n - 1))
-    cols, rows = np.meshgrid(
-        np.arange(c0, c1 + 1, dtype=np.uint64),
-        np.arange(r0, r1 + 1, dtype=np.uint64),
-    )
-    cid = (np.uint64(res) << np.uint64(58)) | _morton(cols.ravel(), rows.ravel())
-    return np.sort(cid.astype(np.int64))
-
-
-def cell_neighbors(cell_id: int) -> np.ndarray:
-    """The <=8 surrounding cells at the same resolution (grid kNN probe)."""
-    res, col, row = cell_decode(np.array([cell_id]))
-    res, col, row = int(res[0]), int(col[0]), int(row[0])
-    n = 1 << res
-    out = []
-    for dc in (-1, 0, 1):
-        for dr in (-1, 0, 1):
-            if dc == 0 and dr == 0:
-                continue
-            c, r = col + dc, row + dr
-            if 0 <= c < n and 0 <= r < n:
-                cid = (np.uint64(res) << np.uint64(58)) | _morton(
-                    np.array([c], dtype=np.uint64), np.array([r], dtype=np.uint64)
-                )[0]
-                out.append(int(cid))
-    return np.array(sorted(out), dtype=np.int64)

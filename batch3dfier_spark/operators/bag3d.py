@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .heights import GROUND_PERCENTILES, ROOF_PERCENTILES, _pct_name
+from .heights import GROUND_PERCENTILES, ROOF_PERCENTILES, pct_name
 
 __all__ = [
     "HEIGHTS_CSV_SCHEMA",
@@ -51,8 +51,8 @@ __all__ = [
 # the reference heights-table column set (bag3d.py:28-47): key + 6
 # ground + 8 roof percentiles + row count; ahn_file_date is stamped on
 # load (J6), exactly like the reference's gawk step
-_PCT_COLS = [_pct_name("ground", p) for p in GROUND_PERCENTILES] + [
-    _pct_name("roof", p) for p in ROOF_PERCENTILES
+_PCT_COLS = [pct_name("ground", p) for p in GROUND_PERCENTILES] + [
+    pct_name("roof", p) for p in ROOF_PERCENTILES
 ]
 # data columns as stored IN the CSVs (tile_gid lives in the directory
 # layout, so the loader parses exactly this)

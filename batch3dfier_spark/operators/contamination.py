@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .spans import _positions
+from .spans import gram_positions
 
 __all__ = ["contamination", "sql_contamination", "DEFAULT_CONTAM_PPM"]
 
@@ -65,12 +65,12 @@ def contamination(
     the ppm are exact BIGINT.  See module docstring for the law and
     the 100 TB shape."""
     doc_grams = (
-        _positions(df.select(id_col, text_col), n, text_col, id_col)
+        gram_positions(df.select(id_col, text_col), n, text_col, id_col)
         .select(id_col, "gram")
         .distinct()
     )
     bench_grams = (
-        _positions(
+        gram_positions(
             benchmark.select(F.col(text_col)).withColumn("_bid", F.lit(0)),
             n, text_col, "_bid",
         )

@@ -377,7 +377,7 @@ def _shingle_hashes_batch(
     return h_s[keep], counts
 
 
-def _perm_params(num_perm: int) -> tuple[np.ndarray, np.ndarray]:
+def perm_params(num_perm: int) -> tuple[np.ndarray, np.ndarray]:
     """Fixed-seed affine permutation parameters over the Mersenne field."""
     rng = np.random.RandomState(1234567)
     a = rng.randint(1, MERSENNE, size=num_perm, dtype=np.int64).astype(np.uint64)
@@ -430,7 +430,7 @@ def minhash_signatures(
     minhash_i(doc) = min over shingles s of (a_i * s + b_i mod M);
     the per-batch compute is one (num_perm x n_shingles) numpy matmul-
     style broadcast per doc."""
-    a, b = _perm_params(num_perm)
+    a, b = perm_params(num_perm)
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast((a, b))
 
@@ -722,11 +722,11 @@ def verified_near_dups(
     )
 
 
-_TOKEN_MAX_BYTES = 32
+TOKEN_MAX_BYTES = 32
 _POLY_P = 1099511628211  # FNV prime reused as the polynomial base
 
 
-def _token_weights(n: int) -> np.ndarray:
+def token_weights(n: int) -> np.ndarray:
     """[P^0, P^1, ..., P^(n-1)] mod 2^64 as uint64."""
     w = np.empty(n, dtype=np.uint64)
     v = 1
@@ -736,7 +736,7 @@ def _token_weights(n: int) -> np.ndarray:
     return w
 
 
-def _token_hashes(tokens: list[str]) -> np.ndarray:
+def token_hashes(tokens: list[str]) -> np.ndarray:
     """Vectorized polynomial token hashes (uint64):
     h(t) = sum_j byte_j * P^j mod 2^64 over the first 32 utf-8 bytes
     (ascending powers).  Unlike a sequential FNV fold, this is a plain
@@ -744,11 +744,11 @@ def _token_hashes(tokens: list[str]) -> np.ndarray:
     no list_reduce.  One python pass builds the byte matrix; hashing is
     numpy."""
     n = len(tokens)
-    B = np.zeros((n, _TOKEN_MAX_BYTES), dtype=np.uint64)
+    B = np.zeros((n, TOKEN_MAX_BYTES), dtype=np.uint64)
     for i, t in enumerate(tokens):
-        b = t.encode("utf-8", "ignore")[:_TOKEN_MAX_BYTES]
+        b = t.encode("utf-8", "ignore")[:TOKEN_MAX_BYTES]
         B[i, : len(b)] = np.frombuffer(b, dtype=np.uint8)
-    W = _token_weights(_TOKEN_MAX_BYTES)
+    W = token_weights(TOKEN_MAX_BYTES)
     with np.errstate(over="ignore"):  # mod-2^64 wrap is intended
         return (B * W[None, :]).sum(axis=1)
 
@@ -771,7 +771,7 @@ def simhash_signatures(
             out = np.zeros(len(pdf), dtype=np.int64)
             flat = [tok for lst in tok_lists for tok in lst]
             if flat:
-                hs = _token_hashes(flat)
+                hs = token_hashes(flat)
                 bits = ((hs[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.int64)
                 starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
                 nz = counts > 0

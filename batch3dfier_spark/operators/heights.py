@@ -30,7 +30,7 @@ GROUND_PERCENTILES = [0.00, 0.10, 0.20, 0.30, 0.40, 0.50]
 ROOF_PERCENTILES = [0.00, 0.10, 0.25, 0.50, 0.75, 0.90, 0.95, 0.99]
 
 
-def _pct_name(prefix: str, p: float) -> str:
+def pct_name(prefix: str, p: float) -> str:
     # the reference names columns "ground-0.00" .. "roof-0.99"; SQL-safe
     # variant here: ground_00 .. roof_99
     return f"{prefix}_{int(round(p * 100)):02d}"
@@ -61,7 +61,7 @@ def percentile_heights(
             e = F.expr(f"{fn}({value}, {p!r})")
             if round_to is not None:
                 e = F.round(e, round_to)
-            aggs.append(e.alias(_pct_name(prefix, p)))
+            aggs.append(e.alias(pct_name(prefix, p)))
     aggs.append(F.count(F.lit(1)).alias("n_rows"))
     return df.groupBy(key).agg(*aggs)
 

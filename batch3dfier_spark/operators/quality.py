@@ -47,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import STOPWORDS, _ALPHA, _PUNCT, _WS_CHARS, _WS_RE
+from .textstats import ALPHA, PUNCT, STOPWORDS, WS_CHARS, WS_RE
 
 __all__ = ["quality_score", "sql_quality_score", "DEFAULT_WEIGHTS",
            "DEFAULT_THRESHOLD_Q"]
@@ -101,12 +101,12 @@ def quality_score(
     n_tokens = F.when(F.length(trimmed) == 0, F.lit(0)).otherwise(
         F.size(F.split(trimmed, r"\s+"))).cast("long")
     n_punct = (F.length(s)
-               - F.length(F.translate(s, "".join(_PUNCT), ""))).cast("long")
+               - F.length(F.translate(s, "".join(PUNCT), ""))).cast("long")
     n_alpha = (F.length(s)
-               - F.length(F.translate(s, _ALPHA, ""))).cast("long")
-    n_nonws = F.length(F.translate(s, _WS_CHARS, "")).cast("long")
+               - F.length(F.translate(s, ALPHA, ""))).cast("long")
+    n_nonws = F.length(F.translate(s, WS_CHARS, "")).cast("long")
     pad = F.concat(F.lit(" "),
-                   F.regexp_replace(F.lower(trimmed), _WS_RE, "  "),
+                   F.regexp_replace(F.lower(trimmed), WS_RE, "  "),
                    F.lit(" "))
     n_stop = F.regexp_count(
         pad, F.lit(" (" + "|".join(STOPWORDS) + ") ")).cast("long")

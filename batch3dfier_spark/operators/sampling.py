@@ -273,7 +273,7 @@ def epoch_shuffle(
     rand()-based shuffles lose all three properties on retry/resume.
 
     Mechanics: a 48-bit draw h = sha2(key || '#' || epoch || seed)
-    (sketches._hash48 — the 12-hex-digit scheme an ANSI oracle
+    (sketches.hash48 — the 12-hex-digit scheme an ANSI oracle
     recomputes digit-by-digit); shard = h % n_shards; pos =
     ROW_NUMBER within the shard ordered by (h, key) — the key
     tie-break makes 48-bit collisions harmless.  The per-shard window
@@ -281,9 +281,9 @@ def epoch_shuffle(
     so no hot key exists and per-task volume is rows/n_shards — size
     n_shards ~ corpus_rows / 1e6 at scale (the documented packing
     sizing rule)."""
-    from .sketches import _hash48
+    from .sketches import hash48
 
-    h = _hash48(F.concat(F.col(key_col).cast("string"),
+    h = hash48(F.concat(F.col(key_col).cast("string"),
                          F.lit(f"#{epoch}")), seed)
     from pyspark.sql import Window
 
@@ -304,9 +304,9 @@ def sql_epoch_shuffle(
     seed: str = "",
 ) -> str:
     """DuckDB twin of epoch_shuffle."""
-    from .sketches import _sql_hexint12
+    from .sketches import sql_hexint12
 
-    h = _sql_hexint12(f"CAST({key_col} AS VARCHAR) || '#{epoch}'", seed)
+    h = sql_hexint12(f"CAST({key_col} AS VARCHAR) || '#{epoch}'", seed)
     return f"""
 WITH drawn AS (
   SELECT {key_col}, {h} AS h FROM {table}
@@ -353,14 +353,14 @@ def weighted_priority_sample(
     QUALIFY."""
     from pyspark.sql import Window
 
-    from .sketches import _hash48
+    from .sketches import hash48
 
     g = F.coalesce(F.col(group_col).cast("string"), F.lit("")) \
         if group_col else F.lit("")
     w = F.greatest(F.col(weight_col).cast("bigint"), F.lit(1))
     base = (
         df.withColumn("_grp", g)
-        .withColumn("_h", _hash48(F.col(key_col), seed))
+        .withColumn("_h", hash48(F.col(key_col), seed))
         .withColumn("_w", w)
         .withColumn("_prio", F.expr("_h div _w"))
     )
@@ -388,7 +388,7 @@ def sql_weighted_priority_sample(
 ) -> str:
     """DuckDB twin (single QUALIFY — equal to the engine's two-level
     selection because (prio, key) is a total order)."""
-    from .sketches import _sql_hexint12
+    from .sketches import sql_hexint12
 
     g = f"COALESCE(CAST({group_expr} AS VARCHAR), '')" if group_expr \
         else "''"
@@ -396,7 +396,7 @@ def sql_weighted_priority_sample(
 WITH drawn AS (
   SELECT {cols},
          {g} AS grp,
-         {_sql_hexint12(key_col, seed)}
+         {sql_hexint12(key_col, seed)}
            // GREATEST(CAST({weight_expr} AS BIGINT), 1) AS prio
   FROM {table}
 )

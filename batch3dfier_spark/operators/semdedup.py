@@ -11,7 +11,7 @@ pairwise stage is O(sum cluster^2) instead of O(N^2).
 Spark shape (100 TB):
 - assignment is a single map-only pass: one Arrow-batched matmul per
   batch against the broadcast centroid matrix
-  (similarity._assign_centroids) — no shuffle, no per-row Python.
+  (similarity.assign_centroids) — no shuffle, no per-row Python.
 - cluster membership is capped to `cluster_cap` lowest-id members via
   the TWO-LEVEL SALTED selection proven in operators/bm25.py (the
   (id ASC) order is total, so salted-then-final row_number equals a
@@ -121,13 +121,13 @@ def semdedup(
     if keep not in ("min_id", "far_centroid"):
         raise ValueError(f"keep must be min_id|far_centroid, got {keep}")
     from .dedup import embedding_near_dups
-    from .similarity import _assign_centroids, ivf_seed_centroids
+    from .similarity import assign_centroids, ivf_seed_centroids
 
     C = ivf_seed_centroids(embeddings, n_centroids, id_col, vec_col)
     e = embeddings.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
     )
-    asg = _assign_centroids(e, C, id_col, "_v", quantize=True)
+    asg = assign_centroids(e, C, id_col, "_v", quantize=True)
 
     # two-level salted cap: keep the cluster_cap LOWEST ids per cid.
     # (id ASC) is a total order, so this equals one global row_number

@@ -206,9 +206,9 @@ from .dedup import QUANT
 from .dedup import quantize_half_away as _quantize_half_away
 
 # splitmix64 finalizer constants (closed form shared with the SQL oracle)
-_SM_C0 = 0x9E3779B97F4A7C15
-_SM_K1 = 0xBF58476D1CE4E5B9
-_SM_K2 = 0x94D049BB133111EB
+SM_C0 = 0x9E3779B97F4A7C15
+SM_K1 = 0xBF58476D1CE4E5B9
+SM_K2 = 0x94D049BB133111EB
 
 
 def _projection(dim: int, n_planes: int) -> np.ndarray:
@@ -232,9 +232,9 @@ def _projection(dim: int, n_planes: int) -> np.ndarray:
     d = np.arange(dim, dtype=np.uint64)[:, None]
     c = np.arange(n_planes, dtype=np.uint64)[None, :]
     with np.errstate(over="ignore"):  # uint64 wrap == mod 2^64
-        z = d * np.uint64(1 << 20) + c + np.uint64(_SM_C0)
-        z = (z ^ (z >> np.uint64(30))) * np.uint64(_SM_K1)
-        z = (z ^ (z >> np.uint64(27))) * np.uint64(_SM_K2)
+        z = d * np.uint64(1 << 20) + c + np.uint64(SM_C0)
+        z = (z ^ (z >> np.uint64(30))) * np.uint64(SM_K1)
+        z = (z ^ (z >> np.uint64(27))) * np.uint64(SM_K2)
         z = z ^ (z >> np.uint64(31))
     return (z >> np.uint64(44)).astype(np.float64) - 524288.0
 
@@ -347,9 +347,9 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
 # IVF (inverted-file) ANN — the second scale path next to LSH
 # ---------------------------------------------------------------------------
 
-def _assign_centroids(df: DataFrame, centroids: np.ndarray,
-                      id_col: str, vec_col: str,
-                      quantize: bool = False) -> DataFrame:
+def assign_centroids(df: DataFrame, centroids: np.ndarray,
+                     id_col: str, vec_col: str,
+                     quantize: bool = False) -> DataFrame:
     """(id, cid) — nearest centroid per vector by squared L2, ties by
     centroid id (argmin returns the first).  One Arrow-batched matmul
     per batch against the broadcast centroid matrix.
@@ -386,7 +386,7 @@ def _probe_centroids(queries: DataFrame, centroids: np.ndarray,
                      nprobe: int, id_col: str, vec_col: str,
                      quantize: bool = False) -> DataFrame:
     """(query_id, cid) — each query's `nprobe` nearest centroids by the
-    same exact metric/tie rule as _assign_centroids.  Runs as a
+    same exact metric/tie rule as assign_centroids.  Runs as a
     mapInPandas over the query DataFrame against the broadcast centroid
     matrix — NO driver collect, so a large query set streams through
     executors like any other stage."""
@@ -419,7 +419,7 @@ def _probe_centroids(queries: DataFrame, centroids: np.ndarray,
 def _assign_partial_sums(df: DataFrame, centroids: np.ndarray,
                          id_col: str, vec_col: str) -> DataFrame:
     """ONE fused pass per Lloyd round: argmin-assign each vector to its
-    nearest centroid (same exact metric/tie rule as _assign_centroids)
+    nearest centroid (same exact metric/tie rule as assign_centroids)
     AND fold per-batch partial sums in the kernel, emitting at most
     (n_centroids x dim) rows per BATCH — (cid, dim, s, cnt).  Components
     are quantized to the 2^20 integer grid before summing, so s is an
@@ -506,7 +506,7 @@ def ivf_build(
             g = grp.sort_values("dim")
             C[int(cid)] = g["s"].to_numpy() / g["cnt"].to_numpy() / QUANT
         C = np.round(C, 6)
-    return C, _assign_centroids(q, C, id_col, "_v")
+    return C, assign_centroids(q, C, id_col, "_v")
 
 
 def ivf_write_index(
@@ -526,8 +526,7 @@ def ivf_write_index(
 
     cid partition directories are the scan-pruning layout for the IVF
     probe shape (`cid IN (<probed set>)` — Catalyst drops every other
-    directory at PLANNING time, before any file is opened; the same
-    machinery as sources/pages.ingest_pages_cells, asserted
+    directory at PLANNING time, before any file is opened; asserted
     files-touched in tests).  The candidate VECTORS live in the lists
     too, so a probe never rescans the embeddings table: it reads only
     the probed nprobe/n_centroids fraction of the index.
@@ -701,7 +700,7 @@ def ivf_topk_frozen(
         F.col(id_col),
         F.col(vec_col).cast("array<double>").alias("_v"),
     )
-    assigned = _assign_centroids(e_dbl, C, id_col, "_v", quantize=True)
+    assigned = assign_centroids(e_dbl, C, id_col, "_v", quantize=True)
     probes = _probe_centroids(q_dbl, C, nprobe, id_col, "_v", quantize=True)
     cand_ids = (
         assigned.withColumnRenamed(id_col, "cand_id")

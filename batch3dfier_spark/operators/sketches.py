@@ -52,7 +52,7 @@ _BITS = 48
 _D = 1 << _BITS  # hash space
 
 
-def _hash48(col, seed: str):
+def hash48(col, seed: str):
     return F.conv(
         F.substring(F.sha2(F.concat(col.cast("string"), F.lit(seed)), 256),
                     1, 12),
@@ -86,7 +86,7 @@ def kmv_distinct(
         df.select(F.col(group_col).alias("grp"),
                   F.explode(toks).alias("token"))
         .distinct()
-        .select("grp", _hash48(F.col("token"), seed).alias("h"))
+        .select("grp", hash48(F.col("token"), seed).alias("h"))
         .distinct()
     )
     salted = Window.partitionBy(
@@ -118,7 +118,7 @@ def kmv_distinct(
     )
 
 
-def _sql_hexint12(key_expr: str, seed: str) -> str:
+def sql_hexint12(key_expr: str, seed: str) -> str:
     """First 12 hex digits of sha256(key || seed) as a BIGINT (DuckDB
     has no hex->int conv; positional ascii terms, the _sql_hex15
     scheme at 12 digits)."""
@@ -149,7 +149,7 @@ WITH occ AS (
                      ELSE REGEXP_SPLIT_TO_ARRAY({t}, '\\s+') END) AS token
   FROM {table}
 ), hashes AS (
-  SELECT DISTINCT grp, {_sql_hexint12("token", seed)} AS h FROM occ
+  SELECT DISTINCT grp, {sql_hexint12("token", seed)} AS h FROM occ
 ), kept AS (
   SELECT grp, h FROM hashes
   QUALIFY ROW_NUMBER() OVER (PARTITION BY grp ORDER BY h) <= {k}
@@ -189,7 +189,7 @@ FROM kept GROUP BY grp
 
 def _bloom_bits(col, m_bits: int, k: int, seed: str):
     return F.array(
-        *[(_hash48(col, f"{seed}bloom{i}") % m_bits) for i in range(k)]
+        *[(hash48(col, f"{seed}bloom{i}") % m_bits) for i in range(k)]
     )
 
 
@@ -257,7 +257,7 @@ def sql_bloom_probe(
     false positives reproduce exactly."""
     def bits(src: str, cols: str) -> str:
         pos = ", ".join(
-            f"({_sql_hexint12(key_col, f'{seed}bloom{i}')}) % {m_bits}"
+            f"({sql_hexint12(key_col, f'{seed}bloom{i}')}) % {m_bits}"
             for i in range(k)
         )
         return (f"SELECT {cols} UNNEST([{pos}]) AS bit "
@@ -288,7 +288,7 @@ def _cms_cells(col, depth: int, width: int, seed: str):
         *[
             F.struct(
                 F.lit(d).alias("d"),
-                (_hash48(col, f"{seed}cms{d}") % width).alias("w"),
+                (hash48(col, f"{seed}cms{d}") % width).alias("w"),
             )
             for d in range(depth)
         ]
@@ -368,7 +368,7 @@ def sql_cms_estimate(
     overestimates reproduce exactly."""
     def cells(src: str, extra: str) -> str:
         pos = ", ".join(
-            f"{{'d': {d}, 'w': ({_sql_hexint12(key_col, f'{seed}cms{d}')})"
+            f"{{'d': {d}, 'w': ({sql_hexint12(key_col, f'{seed}cms{d}')})"
             f" % {width}}}"
             for d in range(depth)
         )

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 __all__ = ["duplicate_spans", "strip_duplicate_spans", "sql_duplicate_spans"]
 
 
-def _positions(df: DataFrame, n: int, text_col: str, id_col: str) -> DataFrame:
+def gram_positions(df: DataFrame, n: int, text_col: str, id_col: str) -> DataFrame:
     toks = F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
     return (
         df.select(F.col(id_col), toks.alias("_toks"))
@@ -88,7 +88,7 @@ def duplicate_spans(
     # positions feeds BOTH the gram-count branch and the semi-join
     # probe; without a persist the tokenize + posexplode + per-gram
     # array_join/xxhash pass over the whole corpus runs twice (round-7)
-    pos = _positions(df, n, text_col, id_col).persist(
+    pos = gram_positions(df, n, text_col, id_col).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     dup_grams = (

@@ -65,8 +65,8 @@ FP_MUL = 31
 # ASCII whitespace class — matches Java \s (Spark) and RE2 \s (DuckDB)
 # exactly; python's own \s would additionally match unicode spaces and
 # silently diverge from the SQL twin on non-ASCII corpora
-_WS_RE = r"[ \t\n\x0b\f\r]+"
-_PUNCT = set(".,;:!?")
+WS_RE = r"[ \t\n\x0b\f\r]+"
+PUNCT = set(".,;:!?")
 
 
 def _tokens(text: Column) -> Column:
@@ -138,8 +138,8 @@ def _marker_hits(pad: Column, words: list[str]) -> Column:
     ).cast("long")
 
 
-_ALPHA = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ"
-_WS_CHARS = " \t\n\x0b\f\r"
+ALPHA = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ"
+WS_CHARS = " \t\n\x0b\f\r"
 
 
 def add_textstats(
@@ -164,14 +164,14 @@ def add_textstats(
     # private leading and trailing space (blank text -> '  ', no hits)
     pad = F.concat(
         F.lit(" "),
-        F.regexp_replace(F.lower(trimmed), _WS_RE, "  "),
+        F.regexp_replace(F.lower(trimmed), WS_RE, "  "),
         F.lit(" "),
     )
     n_chars = F.length(s).cast("long")
     n_tokens = token_count(s).cast("long")
-    n_punct = F.length(s) - F.length(F.translate(s, "".join(_PUNCT), ""))
-    n_alpha = F.length(s) - F.length(F.translate(s, _ALPHA, ""))
-    n_nonws = F.length(F.translate(s, _WS_CHARS, ""))
+    n_punct = F.length(s) - F.length(F.translate(s, "".join(PUNCT), ""))
+    n_alpha = F.length(s) - F.length(F.translate(s, ALPHA, ""))
+    n_nonws = F.length(F.translate(s, WS_CHARS, ""))
     n_stop = _marker_hits(pad, STOPWORDS)
     hits = {lg: _marker_hits(pad, ws) for lg, ws in LANG_MARKERS.items()}
     # argmax over languages, name-ascending scan, strictly-greater
@@ -183,7 +183,7 @@ def add_textstats(
         .when(hits["en"] > hits["de"], F.lit("en"))
         .otherwise(F.lit("de"))
     )
-    norm = F.regexp_replace(trimmed, _WS_RE, " ")
+    norm = F.regexp_replace(trimmed, WS_RE, " ")
     fingerprint = F.when(
         F.length(trimmed) == 0, F.lit(0).cast("long")
     ).otherwise(

@@ -16,7 +16,7 @@ of the grams — the storage/recall dial MOSS-style copy detection
 tunes.
 
 Hashing (the cross-engine exactness scheme this repo pins):
-- token hash = dedup._token_hashes — sum of the first 32 UTF-8 bytes
+- token hash = dedup.token_hashes — sum of the first 32 UTF-8 bytes
   times ascending powers of the FNV prime, mod 2^64 (a plain SUM the
   DuckDB oracle recomputes from hex(encode(token))).
 - gram hash = sum_j token_hash[i+j] * G^j mod 2^64 with G the 64-bit
@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import ensure_parallel
-from .dedup import _token_hashes
+from .dedup import token_hashes
 
 __all__ = ["winnow_fingerprints", "winnow_dup_pairs", "GRAM_P"]
 
@@ -67,7 +67,7 @@ __all__ = ["winnow_fingerprints", "winnow_dup_pairs", "GRAM_P"]
 GRAM_P = 0x9E3779B97F4A7C15
 
 
-def _gram_weights(n: int) -> np.ndarray:
+def gram_weights(n: int) -> np.ndarray:
     """[G^0, G^1, ..., G^(n-1)] mod 2^64 as uint64."""
     out = np.empty(n, dtype=np.uint64)
     v = 1
@@ -90,7 +90,7 @@ def winnow_fingerprints(
     emit no rows."""
     if n < 1 or w < 1:
         raise ValueError("winnow_fingerprints needs n >= 1 and w >= 1")
-    qpow = _gram_weights(n)
+    qpow = gram_weights(n)
 
     def fps(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -100,7 +100,7 @@ def winnow_fingerprints(
                 m = len(toks)
                 if m == 0:
                     continue
-                th = _token_hashes(toks)
+                th = token_hashes(toks)
                 g_cnt = max(m - n + 1, 1)
                 if m < g_cnt - 1 + n:  # zero-pad the tail grams
                     thp = np.zeros(g_cnt - 1 + n, dtype=np.uint64)

@@ -678,7 +678,7 @@ def _sql_byte(h: str, pos: str, guard: bool = False) -> str:
 
 def _sql_dedup_minhash() -> str:
     # BYTE-LEVEL ORACLE (round-4, VERDICT #6): the engine hashes UTF-8
-    # BYTES (dedup._shingle_hashes / _token_hashes); these SQL twins now
+    # BYTES (dedup._shingle_hashes / token_hashes); these SQL twins now
     # recompute the same byte values from hex(encode(text)) instead of
     # ascii(text[i:i]) per CHARACTER, so minhash/simhash hashes agree on
     # non-ASCII corpora too (multibyte agreement is pinned by
@@ -686,11 +686,11 @@ def _sql_dedup_minhash() -> str:
     # Remaining boundary rule: tokenization is python str.split() vs SQL
     # regex '\\s+' — identical unless the corpus contains NON-ASCII
     # WHITESPACE (U+00A0, U+3000, ...), which the fixtures avoid.
-    from ..operators.dedup import MERSENNE, _perm_params, _token_weights
+    from ..operators.dedup import MERSENNE, perm_params, token_weights
 
     cap = 128
     # shingle weights: descending powers P^(k-1-j), k=5 (dedup._shingle_hashes)
-    w = [int(v) for v in _token_weights(5)][::-1]
+    w = [int(v) for v in token_weights(5)][::-1]
     # shingle i (1-based over BYTES): sum_j byte(i+j) * P^(4-j); i+4 <= nb
     # inside the RANGE, so no end guard needed
     sh_terms = " + ".join(
@@ -703,7 +703,7 @@ def _sql_dedup_minhash() -> str:
         f"CAST({_sql_byte('hx', str(j + 1), guard=True)} AS HUGEINT) * {w[j]}"
         for j in range(5)
     )
-    a, b = _perm_params(64)
+    a, b = perm_params(64)
     mh_cols = ",\n         ".join(
         f"LIST_MIN(LIST_TRANSFORM(shingles, s -> (CAST({int(a[i])} AS HUGEINT)"
         f" * (s % {MERSENNE}) + {int(b[i])}) % {MERSENNE})) AS mh{i}"
@@ -782,16 +782,16 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_dedup_simhash() -> str:
-    from ..operators.dedup import _TOKEN_MAX_BYTES, _token_weights
+    from ..operators.dedup import TOKEN_MAX_BYTES, token_weights
 
-    w = [int(v) for v in _token_weights(_TOKEN_MAX_BYTES)]
+    w = [int(v) for v in token_weights(TOKEN_MAX_BYTES)]
     # byte-level (VERDICT r3 #6): hash the first 32 UTF-8 BYTES of each
     # token (hex-encoded once per token by the outer LIST_TRANSFORM),
-    # matching dedup._token_hashes on non-ASCII corpora; the guarded
+    # matching dedup.token_hashes on non-ASCII corpora; the guarded
     # byte expr yields 0 past the end = the engine's zero padding
     tok_terms = " + ".join(
         f"CAST({_sql_byte('h', str(j + 1), guard=True)} AS HUGEINT) * {w[j]}"
-        for j in range(_TOKEN_MAX_BYTES)
+        for j in range(TOKEN_MAX_BYTES)
     )
     bit_exprs = ",\n         ".join(
         f"CASE WHEN LEN(hs) = 0 THEN 0"
@@ -858,7 +858,7 @@ def _sql_projection_cte(dim: int, n_cols: int) -> str:
     staged as a*b_lo + ((a*b_hi) mod 2^32)*2^32 so no intermediate
     exceeds HUGEINT (a plain product of two ~2^64 values overflows
     int128)."""
-    from ..operators.similarity import _SM_C0, _SM_K1, _SM_K2
+    from ..operators.similarity import SM_C0, SM_K1, SM_K2
 
     two64 = 1 << 64
 
@@ -869,12 +869,12 @@ def _sql_projection_cte(dim: int, n_cols: int) -> str:
 
     return f"""wp AS (
   SELECT d, c,
-         CAST(d * 1048576 + c AS HUGEINT) + CAST({_SM_C0} AS HUGEINT) AS z0
+         CAST(d * 1048576 + c AS HUGEINT) + CAST({SM_C0} AS HUGEINT) AS z0
   FROM RANGE({dim}) t(d), RANGE({n_cols}) u(c)
 ), w1 AS (
-  SELECT d, c, {mulmod("xor(z0 % " + str(two64) + ", z0 // 1073741824)", _SM_K1)} AS z1 FROM wp
+  SELECT d, c, {mulmod("xor(z0 % " + str(two64) + ", z0 // 1073741824)", SM_K1)} AS z1 FROM wp
 ), w2 AS (
-  SELECT d, c, {mulmod("xor(z1, z1 // 134217728)", _SM_K2)} AS z2 FROM w1
+  SELECT d, c, {mulmod("xor(z1, z1 // 134217728)", SM_K2)} AS z2 FROM w1
 ), w3 AS (
   SELECT d, c, xor(z2, z2 // 2147483648) AS z3 FROM w2
 ), w AS (
@@ -2132,11 +2132,17 @@ FROM full_tbl
 """
 
 
+def _sql_scrub_pii_q() -> str:
+    from ..operators.textstats import sql_scrub_pii
+
+    return sql_scrub_pii(from_sql=f"({_sql_pii_injected()})")
+
+
 # ---------------------------------------------------------------------------
 # registry
 # ---------------------------------------------------------------------------
 
-REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]] = {
     "tile_assign": (q_tile_assign, SQL_TILE_ASSIGN),
     "tile_assign_buffered": (q_tile_assign_buffered, SQL_TILE_ASSIGN_BUFFERED),
     "tile_counts": (q_tile_counts, SQL_TILE_COUNTS),
@@ -2151,24 +2157,24 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
     "line_dedup": (q_line_dedup, SQL_LINE_DEDUP),
     "dedup_ngram": (q_dedup_ngram, SQL_DEDUP_NGRAM),
     "dedup_embedding": (q_dedup_embedding, SQL_DEDUP_EMBEDDING),
-    "dedup_minhash": (q_dedup_minhash, None),  # sql built lazily below
-    "dedup_simhash": (q_dedup_simhash, None),  # sql built lazily below
-    "dedup_clusters": (q_dedup_clusters, None),  # sql built lazily below
-    "ann_lsh": (q_ann_lsh, None),  # sql built lazily below
+    "dedup_minhash": (q_dedup_minhash, _sql_dedup_minhash()),
+    "dedup_simhash": (q_dedup_simhash, _sql_dedup_simhash()),
+    "dedup_clusters": (q_dedup_clusters, _sql_dedup_clusters()),
+    "ann_lsh": (q_ann_lsh, _sql_ann_lsh()),
     "cell_encode": (q_cell_encode, SQL_CELL_ENCODE),
     "multimodal_meta": (q_multimodal_meta, SQL_MULTIMODAL_META),
     "frame_sample": (q_frame_sample, SQL_FRAME_SAMPLE),
-    "textstats": (q_textstats, None),  # sql built lazily below
+    "textstats": (q_textstats, _sql_textstats()),
     "ann_cosine": (q_ann_cosine, SQL_ANN_COSINE),
-    "ann_ivf": (q_ann_ivf, None),  # sql built lazily below
+    "ann_ivf": (q_ann_ivf, _sql_ann_ivf()),
     "repetition": (q_repetition, SQL_REPETITION),
     "sample_hash": (q_sample_hash, SQL_SAMPLE_HASH),
     "sample_stratified": (q_sample_stratified, SQL_SAMPLE_STRATIFIED),
     "sample_mixture": (q_sample_mixture, SQL_SAMPLE_MIXTURE),
     "domain_cap": (q_domain_cap, SQL_DOMAIN_CAP),
-    "scrub_pii": (q_scrub_pii, None),  # sql built lazily below
-    "url_dedup": (q_url_dedup, None),  # sql built lazily below
-    "pack_sequences": (q_pack_sequences, None),  # sql built lazily below
+    "scrub_pii": (q_scrub_pii, _sql_scrub_pii_q()),
+    "url_dedup": (q_url_dedup, _sql_url_dedup()),
+    "pack_sequences": (q_pack_sequences, _sql_pack_sequences()),
     "decontaminate": (q_decontaminate, SQL_DECONTAMINATE),
     "events_window": (q_events_window, SQL_EVENTS_WINDOW),
     "events_window_stream": (q_events_window_stream, SQL_EVENTS_WINDOW),
@@ -2182,29 +2188,12 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
     "bag3d_assembly": (q_bag3d_assembly, _sql_bag3d(valid_only=False)),
     "bag3d_valid": (q_bag3d_valid, _sql_bag3d(valid_only=True)),
 }
-REGISTRY["textstats"] = (q_textstats, _sql_textstats())
-
-
-def _sql_scrub_pii_q() -> str:
-    from ..operators.textstats import sql_scrub_pii
-
-    return sql_scrub_pii(from_sql=f"({_sql_pii_injected()})")
-
-
-REGISTRY["scrub_pii"] = (q_scrub_pii, _sql_scrub_pii_q())
-REGISTRY["url_dedup"] = (q_url_dedup, _sql_url_dedup())
-REGISTRY["pack_sequences"] = (q_pack_sequences, _sql_pack_sequences())
 REGISTRY["dup_spans"] = (q_dup_spans, _sql_dup_spans())
 REGISTRY["asof_join"] = (q_asof_join, _sql_asof_join())
 REGISTRY["pack_emit"] = (q_pack_emit, _sql_pack_emit())
 REGISTRY["dedup_incremental"] = (q_dedup_incremental, _sql_dedup_incremental())
 REGISTRY["vocab_topk"] = (q_vocab_topk, _sql_vocab_topk())
 REGISTRY["cluster_survivors"] = (q_cluster_survivors, _sql_cluster_survivors())
-REGISTRY["ann_lsh"] = (q_ann_lsh, _sql_ann_lsh())
-REGISTRY["ann_ivf"] = (q_ann_ivf, _sql_ann_ivf())
-REGISTRY["dedup_minhash"] = (q_dedup_minhash, _sql_dedup_minhash())
-REGISTRY["dedup_simhash"] = (q_dedup_simhash, _sql_dedup_simhash())
-REGISTRY["dedup_clusters"] = (q_dedup_clusters, _sql_dedup_clusters())
 
 
 def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2427,9 +2416,9 @@ def _sql_mh_ctes(alias: str, src: str) -> str:
     exact-dup prefilter (the incremental rule hashes every doc).
     Emits `{alias}_mh` (doc_id, mh0..63) and `{alias}_band`
     (doc_id, band_id, band_key)."""
-    from ..operators.dedup import MERSENNE, _perm_params, _token_weights
+    from ..operators.dedup import MERSENNE, perm_params, token_weights
 
-    w = [int(v) for v in _token_weights(5)][::-1]
+    w = [int(v) for v in token_weights(5)][::-1]
     sh_terms = " + ".join(
         f"CAST({_sql_byte('hx', f'i + {j}')} AS HUGEINT) * {w[j]}"
         for j in range(5)
@@ -2438,7 +2427,7 @@ def _sql_mh_ctes(alias: str, src: str) -> str:
         f"CAST({_sql_byte('hx', str(j + 1), guard=True)} AS HUGEINT) * {w[j]}"
         for j in range(5)
     )
-    a, b = _perm_params(64)
+    a, b = perm_params(64)
     mh_cols = ",\n         ".join(
         f"LIST_MIN(LIST_TRANSFORM(shingles, s -> (CAST({int(a[i])} AS HUGEINT)"
         f" * (s % {MERSENNE}) + {int(b[i])}) % {MERSENNE})) AS mh{i}"
@@ -2640,15 +2629,15 @@ def _sql_winnow_sel(n: int, w: int, table: str = "documents") -> str:
     are the simhash byte-level construction; gram hashes combine them
     with golden-gamma powers via _sql_mul64; zero-padding past the
     last token mirrors the engine's short-doc rule."""
-    from ..operators.dedup import _TOKEN_MAX_BYTES, _token_weights
-    from ..operators.winnow import _gram_weights
+    from ..operators.dedup import TOKEN_MAX_BYTES, token_weights
+    from ..operators.winnow import gram_weights
 
-    tw = [int(v) for v in _token_weights(_TOKEN_MAX_BYTES)]
+    tw = [int(v) for v in token_weights(TOKEN_MAX_BYTES)]
     tok_terms = " + ".join(
         f"CAST({_sql_byte('h', str(j + 1), guard=True)} AS HUGEINT) * {tw[j]}"
-        for j in range(_TOKEN_MAX_BYTES)
+        for j in range(TOKEN_MAX_BYTES)
     )
-    gw = [int(v) for v in _gram_weights(n)]
+    gw = [int(v) for v in gram_weights(n)]
     gram_terms = " + ".join(
         f"CASE WHEN pos + {j + 1} <= m"
         f" THEN {_sql_mul64(f'hs[pos + {j + 1}]', gw[j])} ELSE 0 END"
@@ -2782,14 +2771,14 @@ _PR_FANOUT = 3
 def _host_edges(docs: DataFrame) -> DataFrame:
     """Deterministic host link graph over the documents fixture: each
     doc lives on host doc_id % H and links to FANOUT hosts drawn from
-    sha2(doc_id:j) (the sketches._hash48 scheme), self-loops dropped —
+    sha2(doc_id:j) (the sketches.hash48 scheme), self-loops dropped —
     the same synthesized-structure discipline as doc_geocode (the
     corpus carries no link column; the operator under test is
     graphrank.pagerank, the fixture just feeds it a skewed graph)."""
-    from ..operators.sketches import _hash48
+    from ..operators.sketches import hash48
 
     targets = F.array(*[
-        (_hash48(F.concat(F.col("doc_id").cast("string"),
+        (hash48(F.concat(F.col("doc_id").cast("string"),
                           F.lit(f":{j}")), "") % _PR_HOSTS)
         for j in range(_PR_FANOUT)
     ])
@@ -2811,13 +2800,13 @@ def q_host_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_host_rank() -> str:
     from ..operators.graphrank import sql_pagerank
-    from ..operators.sketches import _sql_hexint12
+    from ..operators.sketches import sql_hexint12
 
     keys = [f"CAST(doc_id AS VARCHAR) || ':{j}'"
             for j in range(_PR_FANOUT)]
     arms = " UNION ALL ".join(
         f"SELECT doc_id % {_PR_HOSTS} AS src, "
-        f"{_sql_hexint12(k, '')} % {_PR_HOSTS} AS dst FROM documents"
+        f"{sql_hexint12(k, '')} % {_PR_HOSTS} AS dst FROM documents"
         for k in keys
     )
     edges = f"SELECT src, dst FROM ({arms}) WHERE src <> dst"
@@ -3966,4 +3955,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {name: sql for name, (_, sql) in REGISTRY.items() if sql is not None}
+    return {name: sql for name, (_, sql) in REGISTRY.items()}

@@ -17,7 +17,6 @@ then writes a spatially CLUSTERED copy — `repartitionByRange(tile_gid)`
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..geo import Rect
 from ..operators.tiler import TileIndex, assign_tiles, with_geocode
@@ -26,8 +25,6 @@ __all__ = [
     "ingest_pages",
     "read_geocoded",
     "ingest_pages_bucketed",
-    "ingest_pages_cells",
-    "read_pages_extent",
 ]
 
 
@@ -96,71 +93,3 @@ def ingest_pages_bucketed(
         spark.sql(
             f"ANALYZE TABLE {table} COMPUTE STATISTICS FOR COLUMNS tile_gid"
         )
-
-
-def ingest_pages_cells(
-    spark: SparkSession,
-    in_path: str,
-    out_path: str,
-    territory: Rect,
-    res: int = 3,
-) -> None:
-    """Cell-partitioned layout: geocode -> quadtree cell id at `res`
-    (cells.cell_encode, vectorized) -> parquet PARTITIONED BY (cell).
-
-    This is the directory-level partition-pruning analog of the
-    reference's per-tile views: an extent query becomes a
-    `cell IN (<cover set>)` predicate that Catalyst prunes at PLANNING
-    time — unscanned cells never produce input splits (cf. the
-    row-group-stat pruning of `ingest_pages`, which still lists every
-    file).  `repartition(cell)` before the write keeps one file per
-    cell directory instead of tasks x cells small files.  Choose `res`
-    so 4^res partitions are each >= ~100 MB at the target scale
-    (res 6-8 at 100 TB)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from ..cells import cell_encode
-
-    @pandas_udf("long")
-    def enc(xs, ys):
-        return pd.Series(cell_encode(xs.to_numpy(), ys.to_numpy(), res, territory))
-
-    df = with_geocode(spark.read.parquet(in_path), territory)
-    (
-        df.withColumn("cell", enc(F.col("x"), F.col("y")))
-        .repartition(F.col("cell"))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(out_path)
-    )
-
-
-def read_pages_extent(
-    spark: SparkSession,
-    path: str,
-    extent_poly,
-    territory: Rect,
-    res: int = 3,
-):
-    """Partition-pruned extent read over a cell-partitioned table:
-    the extent's bbox is rewritten to its covering cell set
-    (cells.cell_cover_rect) and pushed as `cell IN (...)` — partition
-    pruning drops every other directory before any file is opened —
-    then the exact select-not-clip polygon filter (P3) runs on the
-    survivors only."""
-    import numpy as np
-
-    from ..cells import cell_cover_rect
-    from ..geo import polygon_bbox
-    from ..operators.tiler import extent_filter
-
-    poly = np.asarray(extent_poly, dtype=np.float64)
-    bbox = polygon_bbox(poly)
-    cover = cell_cover_rect(
-        Rect(bbox.xmin, bbox.ymin, bbox.xmax, bbox.ymax), res, territory
-    )
-    df = spark.read.parquet(path).where(
-        F.col("cell").isin([int(c) for c in cover])
-    )
-    return extent_filter(df, poly)

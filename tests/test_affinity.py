@@ -1,6 +1,7 @@
 """DSIR-style target affinity (operators/affinity): hand-computed
-ppm-difference weights (including negative-sum truncation semantics),
-DuckDB oracle parity, and the no-window scale shape."""
+ppm-difference weights (including negative-sum truncation semantics,
+checked against the DuckDB twin), the contract query vs its DuckDB
+twin, and the no-window scale shape."""
 
 import duckdb
 import pandas as pd
@@ -47,6 +48,7 @@ def test_affinity_negative_division_truncates_like_oracle(spark):
         sql_target_affinity,
         target_affinity,
     )
+    from batch3dfier_spark.plans.oracle import compare
 
     # sum=-800000*1 + 800000*2 over 3 tokens etc. — craft a doc whose
     # sum is negative and not divisible by n_tokens, so trunc-vs-floor
@@ -66,33 +68,18 @@ def test_affinity_negative_division_truncates_like_oracle(spark):
     con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR,"
                 " lang VARCHAR)")
     con.executemany("INSERT INTO documents VALUES (?, ?, ?)", rows)
-    exp = (
-        con.sql(sql_target_affinity("lang = 'en'")).df()
-        .sort_values("doc_id").reset_index(drop=True)
-    )
-    cols = sorted(got.columns)
-    pd.testing.assert_frame_equal(got[cols], exp[cols], check_dtype=False)
+    assert compare(got, con.sql(sql_target_affinity("lang = 'en'")).df()) == []
     assert (got.sum_affinity_q < 0).any()
     assert (got.sum_affinity_q % got.n_tokens != 0).any()
 
 
 def test_affinity_matches_oracle(spark):
+    from batch3dfier_spark.plans.oracle import compare, connect
     from batch3dfier_spark.plans.queries import REGISTRY
 
     fn, sql = REGISTRY["target_affinity"]
     got = fn(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
-    )
-    exp = con.sql(sql).df()
-    cols = sorted(got.columns)
-    assert cols == sorted(exp.columns)
-    pd.testing.assert_frame_equal(
-        got[cols].sort_values("doc_id").reset_index(drop=True),
-        exp[cols].sort_values("doc_id").reset_index(drop=True),
-        check_dtype=False,
-    )
+    assert compare(got, connect(SF).sql(sql).df()) == []
     assert len(got) == 500
     assert got.kept.any() and (~got.kept).any()
 

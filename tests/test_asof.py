@@ -73,6 +73,7 @@ def test_asof_matches_oracle_with_tolerance(spark):
     """Engine == mirrored-window oracle on the real events table,
     including the tolerance path."""
     from batch3dfier_spark.operators.asof import as_of_join, sql_as_of_join
+    from batch3dfier_spark.plans.oracle import connect
     from pyspark.sql import functions as F
 
     ev = spark.read.parquet(f"{SF}/events.parquet")
@@ -83,10 +84,7 @@ def test_asof_matches_oracle_with_tolerance(spark):
             "event_id", "user_id", "ts", "value"),
         on="user_id", right_cols=["value"], tolerance_s=7200,
     ).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'"
-    )
+    con = connect(SF)
     exp = con.sql(sql_as_of_join(
         left_sql="SELECT event_id, user_id, ts, value FROM events "
                  "WHERE event_type = 'purchase'",

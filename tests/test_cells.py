@@ -3,33 +3,9 @@
 import numpy as np
 
 from batch3dfier_spark import datagen
-from batch3dfier_spark.cells import (
-    cell_cover_rect,
-    cell_decode,
-    cell_encode,
-    cell_neighbors,
-    cell_parent,
-    cell_to_rect,
-)
-from batch3dfier_spark.geo import Rect
+from batch3dfier_spark.cells import cell_encode, cell_parent
 
 T = datagen.REF_TERRITORY
-
-
-def test_roundtrip():
-    rng = np.random.RandomState(1)
-    x = rng.uniform(T.xmin, T.xmax, 1000)
-    y = rng.uniform(T.ymin, T.ymax, 1000)
-    for res in (0, 1, 5, 12, 28):
-        cid = cell_encode(x, y, res, T)
-        assert (cid >= 0).all()
-        r, col, row = cell_decode(cid)
-        assert (r == res).all()
-        n = 1 << res
-        wx = (T.xmax - T.xmin) / n
-        wy = (T.ymax - T.ymin) / n
-        assert (col == np.clip(((x - T.xmin) / wx).astype(np.int64), 0, n - 1)).all()
-        assert (row == np.clip(((y - T.ymin) / wy).astype(np.int64), 0, n - 1)).all()
 
 
 def test_outside_is_minus_one():
@@ -46,43 +22,3 @@ def test_parent_is_prefix():
     fine = cell_encode(x, y, 10, T)
     coarse = cell_encode(x, y, 4, T)
     assert (cell_parent(fine, 4) == coarse).all()
-
-
-def test_cell_rect_contains_its_points():
-    rng = np.random.RandomState(3)
-    x = rng.uniform(T.xmin, T.xmax, 200)
-    y = rng.uniform(T.ymin, T.ymax, 200)
-    cid = cell_encode(x, y, 6, T)
-    for i in range(0, 200, 17):
-        r = cell_to_rect(int(cid[i]), T)
-        assert r.xmin <= x[i] < r.xmax and r.ymin <= y[i] < r.ymax
-
-
-def test_cover_rect():
-    cells = cell_cover_rect(Rect(T.xmin, T.ymin, T.xmin + 1, T.ymin + 1), 8, T)
-    assert len(cells) == 1
-    full = cell_cover_rect(Rect(T.xmin, T.ymin, T.xmax, T.ymax), 3, T)
-    assert len(full) == 64
-    assert len(np.unique(full)) == 64
-
-
-def test_cover_contains_encoded_points():
-    rng = np.random.RandomState(4)
-    # points inside a sub-rect must encode to cells within its cover
-    sub = Rect(T.xmin + 100, T.ymin + 100, T.xmin + 300, T.ymin + 280)
-    x = rng.uniform(sub.xmin, sub.xmax, 300)
-    y = rng.uniform(sub.ymin, sub.ymax, 300)
-    cover = set(cell_cover_rect(sub, 7, T).tolist())
-    cid = cell_encode(x, y, 7, T)
-    assert set(cid.tolist()) <= cover
-
-
-def test_neighbors():
-    cid = cell_encode(
-        np.array([(T.xmin + T.xmax) / 2]), np.array([(T.ymin + T.ymax) / 2]), 4, T
-    )[0]
-    nb = cell_neighbors(int(cid))
-    assert len(nb) == 8
-    # corner cell has 3 neighbors
-    corner = cell_encode(np.array([T.xmin]), np.array([T.ymin]), 4, T)[0]
-    assert len(cell_neighbors(int(corner))) == 3

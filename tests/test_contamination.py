@@ -1,35 +1,22 @@
-"""Benchmark-contamination scorer: oracle parity (gram strings vs
-xxhash64 postings), overlap-law semantics, short docs, and the
-broadcast/shuffle path equivalence."""
+"""Benchmark-contamination scorer: the contract query vs its DuckDB
+twin and self-overlap of benchmark members,
+overlap-law semantics, short docs, and the broadcast/shuffle path
+equivalence."""
 
-import duckdb
 import pandas as pd
 
-from batch3dfier_spark.operators.contamination import (
-    contamination, sql_contamination)
+from batch3dfier_spark.operators.contamination import contamination
 
 SF = "/root/testdata/sf0.001"
 
 
-def _oracle(sql):
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS SELECT * FROM "
-            f"read_parquet('{SF}/documents.parquet')")
-    return con.sql(sql).df()
-
-
 def test_contamination_matches_oracle(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id", "text")
-    bench = docs.where((docs.doc_id % 19) == 0)
-    got = (contamination(docs, bench, n=6)
-           .toPandas().sort_values("doc_id").reset_index(drop=True))
-    exp = _oracle(sql_contamination(
-        n=6, benchmark_sql="SELECT text FROM documents WHERE doc_id % 19 = 0"
-    )).sort_values("doc_id").reset_index(drop=True)
-    assert len(got) == len(exp) > 0
-    pd.testing.assert_frame_equal(
-        got, exp[got.columns], check_dtype=False)
+    from batch3dfier_spark.plans.oracle import compare, connect
+    from batch3dfier_spark.plans.queries import REGISTRY
+
+    fn, sql = REGISTRY["contamination"]
+    got = fn(spark, SF).toPandas()
+    assert compare(got, connect(SF).sql(sql).df()) == []
     # benchmark members overlap themselves fully
     members = got[got["doc_id"] % 19 == 0]
     assert (members.loc[members["n_grams"] > 0, "contam_ppm"]

@@ -1,8 +1,8 @@
 """Incremental corpus dedup: admit-only-new semantics across
 increments, corpus-shuffle-free anti-join on the bucketed state, and
-the contract query vs its ANSI oracle."""
+the contract queries' admit/reject split (dedup_incremental also vs
+its DuckDB twin)."""
 
-import duckdb
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -86,49 +86,39 @@ def test_corpus_side_never_shuffles(spark, corpus_table):
 
 
 def test_contract_query_matches_oracle(spark):
+    """The contract increment (doc_id % 3 = 0 over the rest) matches its
+    oracle, and admits some rows and rejects others."""
+    from batch3dfier_spark.plans.oracle import compare, connect
     from batch3dfier_spark.plans.queries import REGISTRY
 
     fn, sql = REGISTRY["dedup_incremental"]
     got = fn(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
-    )
-    exp = con.sql(sql).df()
-    cols = sorted(got.columns)
-    assert cols == sorted(exp.columns)
-    pd.testing.assert_frame_equal(
-        got[cols].sort_values("doc_id").reset_index(drop=True),
-        exp[cols].sort_values("doc_id").reset_index(drop=True),
-        check_dtype=False,
-    )
-    # the increment admits some rows and rejects others
-    n_batch = con.sql(
-        "SELECT COUNT(*) FROM documents WHERE doc_id % 3 = 0"
-    ).fetchone()[0]
+    assert compare(got, connect(SF).sql(sql).df()) == []
+    n_batch = (spark.read.parquet(f"{SF}/documents.parquet")
+               .where("doc_id % 3 = 0").count())
     assert 0 < len(got) < n_batch
+
+
+def test_near_increment_contract_admits_some(spark):
+    """The near-dup contract increment admits some rows and rejects
+    others."""
+    from batch3dfier_spark.plans.queries import q_near_dedup_incremental
+
+    got = q_near_dedup_incremental(spark, SF).count()
+    n_batch = (spark.read.parquet(f"{SF}/documents.parquet")
+               .where("doc_id % 3 = 0").count())
+    assert 0 < got < n_batch
 
 
 def test_vocab_topk_matches_oracle(spark):
     """(Placed here to avoid another Spark-session module.)  vocab_topk
     == its DuckDB twin including boundary tie order."""
+    from batch3dfier_spark.plans.oracle import compare, connect
     from batch3dfier_spark.plans.queries import REGISTRY
 
     fn, sql = REGISTRY["vocab_topk"]
     got = fn(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
-    )
-    exp = con.sql(sql).df()
-    # the sf0.001 fixture vocabulary is smaller than k; the whole
-    # (deterministically ordered) vocabulary comes back
-    assert len(got) == len(exp) > 0
-    pd.testing.assert_frame_equal(
-        got.sort_values("rank").reset_index(drop=True),
-        exp.sort_values("rank").reset_index(drop=True),
-        check_dtype=False,
-    )
+    assert compare(got, connect(SF).sql(sql).df()) == []
     # frequencies are non-increasing with rank
     assert (got.sort_values("rank")["freq"].diff().dropna() <= 0).all()
 
@@ -220,31 +210,6 @@ def test_near_increment_state_side_never_shuffles(spark, near_corpus_table):
     # sort-order-intact, which Spark only does Exchange-free).
     assert f"{NTABLE}_bands" in plan and f"{NTABLE}_sigs" in plan
     assert out.count() == 5
-
-
-def test_near_increment_contract_matches_oracle(spark):
-    from batch3dfier_spark.plans.queries import REGISTRY
-
-    fn, sql = REGISTRY["near_dedup_incremental"]
-    got = fn(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
-    )
-    exp = con.sql(sql).df()
-    cols = sorted(got.columns)
-    assert cols == sorted(exp.columns)
-    pd.testing.assert_frame_equal(
-        got[cols].sort_values("doc_id").reset_index(drop=True),
-        exp[cols].sort_values("doc_id").reset_index(drop=True),
-        check_dtype=False,
-    )
-    n_batch = con.sql(
-        "SELECT COUNT(*) FROM documents WHERE doc_id % 3 = 0"
-    ).fetchone()[0]
-    assert 0 < len(got) < n_batch
-    spark.sql("DROP TABLE IF EXISTS b3d_ninc_contract_sigs")
-    spark.sql("DROP TABLE IF EXISTS b3d_ninc_contract_bands")
 
 
 def test_register_survives_stale_location(spark):

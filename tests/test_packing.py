@@ -2,7 +2,6 @@
 independence (the layout is a pure function of doc_id order + token
 counts, never of physical partitioning)."""
 
-import duckdb
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -10,22 +9,12 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_pack_sequences_matches_duckdb(spark):
+    from batch3dfier_spark.plans.oracle import compare, connect
     from batch3dfier_spark.plans.queries import REGISTRY
 
     fn, sql = REGISTRY["pack_sequences"]
     got = fn(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
-    )
-    exp = con.sql(sql).df()
-    cols = sorted(got.columns)
-    assert cols == sorted(exp.columns)
-    pd.testing.assert_frame_equal(
-        got[cols].sort_values("doc_id").reset_index(drop=True),
-        exp[cols].sort_values("doc_id").reset_index(drop=True),
-        check_dtype=False,
-    )
+    assert compare(got, connect(SF).sql(sql).df()) == []
     # the packing is non-trivial on the fixture: several sequences per
     # shard, and at least one doc spans a cut
     assert got.groupby("shard")["seq_id"].max().min() >= 1
@@ -123,23 +112,12 @@ def test_emit_agrees_with_layout(spark):
 
 
 def test_emit_sequences_matches_duckdb(spark):
+    from batch3dfier_spark.plans.oracle import compare, connect
     from batch3dfier_spark.plans.queries import REGISTRY
 
     fn, sql = REGISTRY["pack_emit"]
     got = fn(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
-    )
-    exp = con.sql(sql).df()
-    cols = sorted(got.columns)
-    assert cols == sorted(exp.columns)
-    key = ["shard", "seq_id"]
-    pd.testing.assert_frame_equal(
-        got[cols].sort_values(key).reset_index(drop=True),
-        exp[cols].sort_values(key).reset_index(drop=True),
-        check_dtype=False,
-    )
+    assert compare(got, connect(SF).sql(sql).df()) == []
     # every full sequence holds exactly n_ctx tokens
     full = got.groupby("shard")["seq_id"].transform("max") > got["seq_id"]
     assert (got.loc[full, "n_tokens"] == 512).all()

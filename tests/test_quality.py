@@ -1,30 +1,19 @@
-"""Linear quality classifier: oracle parity, weight plumbing, edge
-cases, and the zero-shuffle plan contract."""
-
-import duckdb
-import pandas as pd
+"""Linear quality classifier: oracle parity, weight plumbing, edge cases, and the
+zero-shuffle plan contract."""
 
 from batch3dfier_spark.operators.quality import (
-    DEFAULT_THRESHOLD_Q, quality_score, sql_quality_score)
+    DEFAULT_THRESHOLD_Q, quality_score)
 
 SF = "/root/testdata/sf0.001"
 
 
-def _oracle(sql):
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS SELECT * FROM "
-            f"read_parquet('{SF}/documents.parquet')")
-    return con.sql(sql).df()
-
-
 def test_quality_matches_oracle(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    got = (quality_score(docs).select("doc_id", "quality_q", "quality_kept")
-           .toPandas().sort_values("doc_id").reset_index(drop=True))
-    exp = _oracle(sql_quality_score()).sort_values(
-        "doc_id").reset_index(drop=True)
-    assert len(got) == len(exp) > 0
-    pd.testing.assert_frame_equal(got, exp[got.columns], check_dtype=False)
+    from batch3dfier_spark.plans.oracle import compare, connect
+    from batch3dfier_spark.plans.queries import REGISTRY
+
+    fn, sql = REGISTRY["quality_score"]
+    got = fn(spark, SF).toPandas()
+    assert compare(got, connect(SF).sql(sql).df()) == []
     # both classes occur on the fixture, else the threshold is vacuous
     assert got["quality_kept"].nunique() == 2
 

@@ -1,6 +1,6 @@
 """ROLLUP / PIVOT / exact-integer statistics coverage: internal
-consistency plus numpy ground truth (oracle parity runs in
-tools/check_oracle.py via the registry)."""
+consistency plus numpy ground truth (oracle parity is
+tests/test_oracle_contract.py, over the whole registry)."""
 
 import numpy as np
 import pandas as pd

@@ -1,7 +1,7 @@
-"""Deterministic sampling + decontamination: oracle parity, determinism,
-and the threshold-composability property hash sampling exists for."""
+"""Deterministic sampling + decontamination: oracle parity of the
+contract queries with extra properties, determinism, and the
+threshold-composability property hash sampling exists for."""
 
-import duckdb
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -14,32 +14,13 @@ def docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet")
 
 
-def _oracle(sql):
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
-    )
-    return con.sql(sql).df()
-
-
-def test_hash_sample_matches_duckdb(spark):
-    from batch3dfier_spark.plans.queries import SQL_SAMPLE_HASH, q_sample_hash
-
-    got = q_sample_hash(spark, SF).toPandas().sort_values("doc_id").reset_index(drop=True)
-    exp = _oracle(SQL_SAMPLE_HASH).sort_values("doc_id").reset_index(drop=True)
-    assert len(got) > 0
-    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
-
-
 def test_stratified_sample_matches_duckdb(spark):
-    from batch3dfier_spark.plans.queries import (
-        SQL_SAMPLE_STRATIFIED,
-        q_sample_stratified,
-    )
+    from batch3dfier_spark.plans.oracle import compare, connect
+    from batch3dfier_spark.plans.queries import REGISTRY
 
-    got = q_sample_stratified(spark, SF).toPandas().sort_values("doc_id").reset_index(drop=True)
-    exp = _oracle(SQL_SAMPLE_STRATIFIED).sort_values("doc_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+    fn, sql = REGISTRY["sample_stratified"]
+    got = fn(spark, SF).toPandas()
+    assert compare(got, connect(SF).sql(sql).df()) == []
     # full-keep strata survive completely, others are subsampled
     all_langs = spark.read.parquet(f"{SF}/documents.parquet").groupBy("lang").count().toPandas()
     kept = got.groupby("lang").size()
@@ -62,15 +43,6 @@ def test_hash_sample_deterministic_and_nested(spark, docs):
     assert s10 <= s30
     assert 0.03 <= len(s10) / 500 <= 0.2  # ~10% of 500 docs
     assert s10 != other
-
-
-def test_decontaminate_matches_duckdb(spark):
-    from batch3dfier_spark.plans.queries import SQL_DECONTAMINATE, q_decontaminate
-
-    got = q_decontaminate(spark, SF).toPandas().sort_values("doc_id").reset_index(drop=True)
-    exp = _oracle(SQL_DECONTAMINATE).sort_values("doc_id").reset_index(drop=True)
-    assert len(got) > 0
-    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
 
 
 def test_decontaminate_flags_planted_leak(spark):
@@ -97,13 +69,12 @@ def test_decontaminate_flags_planted_leak(spark):
 
 
 def test_repetition_matches_duckdb(spark):
-    from batch3dfier_spark.plans.queries import SQL_REPETITION, q_repetition
+    from batch3dfier_spark.plans.oracle import compare, connect
+    from batch3dfier_spark.plans.queries import REGISTRY
 
-    got = q_repetition(spark, SF).toPandas().sort_values("doc_id").reset_index(drop=True)
-    exp = _oracle(SQL_REPETITION).sort_values("doc_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(
-        got[sorted(got.columns)], exp[sorted(exp.columns)], check_dtype=False
-    )
+    fn, sql = REGISTRY["repetition"]
+    got = fn(spark, SF).toPandas()
+    assert compare(got, connect(SF).sql(sql).df()) == []
     # bigram stat actually discriminates on the fixture corpus
     assert got["top_bigram_frac"].nunique() > 10
 
@@ -133,16 +104,12 @@ def test_repetition_flags_boilerplate(spark):
 
 
 def test_weighted_mixture_matches_duckdb(spark):
-    from batch3dfier_spark.plans.queries import SQL_SAMPLE_MIXTURE, q_sample_mixture
+    from batch3dfier_spark.plans.oracle import compare, connect
+    from batch3dfier_spark.plans.queries import REGISTRY
 
-    got = q_sample_mixture(spark, SF).toPandas()
-    exp = _oracle(SQL_SAMPLE_MIXTURE)
-    cols = sorted(got.columns)
-    pd.testing.assert_frame_equal(
-        got[cols].sort_values(cols).reset_index(drop=True),
-        exp[cols].sort_values(cols).reset_index(drop=True),
-        check_dtype=False,
-    )
+    fn, sql = REGISTRY["sample_mixture"]
+    got = fn(spark, SF).toPandas()
+    assert compare(got, connect(SF).sql(sql).df()) == []
     # the mixture really reweights: zh upsampled ~2.5x, en downsampled
     base = spark.read.parquet(f"{SF}/documents.parquet").groupBy("lang").count().toPandas().set_index("lang")["count"]
     per = got.groupby("lang").size()
@@ -158,12 +125,12 @@ def test_domain_cap_matches_duckdb(spark):
     domain) == the plain ROW_NUMBER window oracle, and the quota
     invariants hold: no domain exceeds the cap, under-cap domains are
     kept whole."""
-    from batch3dfier_spark.plans.queries import SQL_DOMAIN_CAP, q_domain_cap
+    from batch3dfier_spark.plans.oracle import compare, connect
+    from batch3dfier_spark.plans.queries import REGISTRY
 
-    got = q_domain_cap(spark, SF).toPandas().sort_values("doc_id").reset_index(drop=True)
-    exp = _oracle(SQL_DOMAIN_CAP).sort_values("doc_id").reset_index(drop=True)
-    assert len(got) > 0
-    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+    fn, sql = REGISTRY["domain_cap"]
+    got = fn(spark, SF).toPandas()
+    assert compare(got, connect(SF).sql(sql).df()) == []
     per = got.groupby("domain").size()
     assert per.max() <= 20
     assert per["bulk.example.com"] == 20  # the hot domain really capped
@@ -249,15 +216,15 @@ def test_scrub_pii_contract_matches_duckdb(spark):
     injected into the fixture text, then scrubbed) == its registry
     oracle, and the injection actually produces matches of every
     category (no identity-transform padding)."""
+    from batch3dfier_spark.plans.oracle import compare, connect
     from batch3dfier_spark.plans.queries import REGISTRY
 
     fn, sql = REGISTRY["scrub_pii"]
-    got = fn(spark, SF).toPandas().sort_values("doc_id").reset_index(drop=True)
-    exp = _oracle(sql).sort_values("doc_id").reset_index(drop=True)
+    got = fn(spark, SF).toPandas()
+    assert compare(got, connect(SF).sql(sql).df()) == []
     assert int(got["n_email"].sum()) >= len(got) // 4
     assert int(got["n_ip"].sum()) >= len(got) // 5
     assert int(got["n_phone"].sum()) >= len(got) // 6
-    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
 
 
 def test_scrub_pii_matches_duckdb(spark):
@@ -267,9 +234,9 @@ def test_scrub_pii_matches_duckdb(spark):
     runs, adjacent/boundary cases, multibyte neighbors, and clean text
     (negative control)."""
     import duckdb
-    import pandas as pd
 
     from batch3dfier_spark.operators.textstats import scrub_pii, sql_scrub_pii
+    from batch3dfier_spark.plans.oracle import compare
 
     texts = [
         "contact bob.smith+spam@example.co.uk or sue@test.org today",
@@ -294,15 +261,11 @@ def test_scrub_pii_matches_duckdb(spark):
     )
     con = duckdb.connect()
     con.register("documents", pdf)
-    exp = (
-        con.sql(sql_scrub_pii()).df()
-        .sort_values("doc_id").reset_index(drop=True)
-    )
     assert int(got["n_email"].sum()) >= 4
     assert int(got["n_ip"].sum()) >= 5
     assert int(got["n_phone"].sum()) >= 2
     assert "<EMAIL>" in got["text"][0] and "<PHONE>" in got["text"][1]
-    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+    assert compare(got, con.sql(sql_scrub_pii()).df()) == []
 
 
 def test_hash_split_matches_duckdb_and_is_stable(spark, docs):
@@ -311,14 +274,12 @@ def test_hash_split_matches_duckdb_and_is_stable(spark, docs):
     partitioning (the eval-leakage guard the operator exists for);
     custom boundaries and the weight-sum guard behave."""
     from batch3dfier_spark.operators.sampling import hash_split
-    from batch3dfier_spark.plans.queries import SQL_HASH_SPLIT, q_hash_split
+    from batch3dfier_spark.plans.oracle import compare, connect
+    from batch3dfier_spark.plans.queries import REGISTRY
 
-    got = (
-        q_hash_split(spark, SF).toPandas()
-        .sort_values("doc_id").reset_index(drop=True)
-    )
-    exp = _oracle(SQL_HASH_SPLIT).sort_values("doc_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+    fn, sql = REGISTRY["hash_split"]
+    got = fn(spark, SF).toPandas()
+    assert compare(got, connect(SF).sql(sql).df()) == []
     assert set(got["split"]) <= {"train", "val", "test"}
     assert (got["split"] == "train").mean() > 0.9
 
@@ -373,16 +334,6 @@ def test_epoch_shuffle_is_a_deterministic_permutation(spark, docs):
             | (merged.pos_1 != merged.pos_2)).any()
 
 
-def test_epoch_shuffle_matches_oracle(spark):
-    from batch3dfier_spark.plans.queries import REGISTRY
-
-    fn, sql = REGISTRY["epoch_shuffle"]
-    got = (fn(spark, SF).toPandas()
-           .sort_values("doc_id").reset_index(drop=True))
-    exp = _oracle(sql).sort_values("doc_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(got, exp[got.columns], check_dtype=False)
-
-
 def test_weighted_priority_sample_contract(spark, docs):
     from batch3dfier_spark.operators.sampling import weighted_priority_sample
 
@@ -433,14 +384,3 @@ def test_weighted_priority_sample_weight_monotone(spark):
         hi.sort_values("doc_id").reset_index(drop=True)[["doc_id",
                                                          "sample_rank"]],
     )
-
-
-def test_weighted_sample_matches_oracle(spark):
-    from batch3dfier_spark.plans.queries import REGISTRY
-
-    fn, sql = REGISTRY["weighted_sample"]
-    got = (fn(spark, SF).toPandas()
-           .sort_values(["lang", "sample_rank"]).reset_index(drop=True))
-    exp = (_oracle(sql)
-           .sort_values(["lang", "sample_rank"]).reset_index(drop=True))
-    pd.testing.assert_frame_equal(got, exp[got.columns], check_dtype=False)

@@ -134,27 +134,6 @@ def test_lsh_ann_is_subset_scored_exactly(spark, emb_df, emb_mat):
         )
 
 
-def test_ivf_frozen_matches_duckdb_oracle(spark, emb_df):
-    """ann_ivf contract check at sf0.001: the frozen-quantizer IVF is
-    exactly SQL-reproducible end to end (assignment argmin, probe order,
-    candidate join, cosine re-score)."""
-    import pandas as pd
-
-    from batch3dfier_spark.plans.queries import _sql_ann_ivf, q_ann_ivf
-
-    got = q_ann_ivf(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM '{SF}/embeddings.parquet'"
-    )
-    exp = con.sql(_sql_ann_ivf()).df()
-    cols = ["query_id", "rank", "cand_id", "cosine"]
-    got = got.sort_values(cols).reset_index(drop=True)[cols]
-    exp = exp.sort_values(cols).reset_index(drop=True)[cols]
-    assert len(got) > 0
-    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
-
-
 def test_ivf_frozen_recall(spark, emb_df, emb_mat):
     """The frozen quantizer is a weaker index than Lloyd but must still
     deliver useful recall at the default nprobe, and exact results at
@@ -290,24 +269,11 @@ def test_quantize_int8_matches_duckdb_and_is_map_only(spark, emb_df):
     import pandas as pd
 
     from batch3dfier_spark.operators.similarity import quantize_int8
-    from batch3dfier_spark.plans.queries import (
-        SQL_QUANTIZE_INT8,
-        q_quantize_int8,
-    )
+    from batch3dfier_spark.plans.oracle import compare, connect
+    from batch3dfier_spark.plans.queries import REGISTRY
 
-    got = (
-        q_quantize_int8(spark, SF).toPandas()
-        .sort_values(["vec_id", "pos"]).reset_index(drop=True)
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM '{SF}/embeddings.parquet'"
-    )
-    exp = (
-        con.sql(SQL_QUANTIZE_INT8).df()
-        .sort_values(["vec_id", "pos"]).reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+    fn, sql = REGISTRY["quantize_int8"]
+    assert compare(fn(spark, SF).toPandas(), connect(SF).sql(sql).df()) == []
 
     out = quantize_int8(emb_df)
     plan = out._jdf.queryExecution().executedPlan().toString()

@@ -1,12 +1,8 @@
 """Duplicate-span detection (exact-substring dedup): hand-checked
-span geometry, engine == DuckDB string-gram oracle, strip policy, and
-partition-independence."""
+span geometry, strip policy, and partition-independence."""
 
-import duckdb
 import pandas as pd
 import pytest
-
-SF = "/root/testdata/sf0.001"
 
 # Two docs sharing one verbatim 10-token run; one doc sharing a
 # different 6-token run with a third; one unique doc.
@@ -47,40 +43,6 @@ def test_span_geometry_hand_checked(spark):
     assert (by[2].start_tok, by[2].end_tok) == (2, 8)
     assert (by[3].start_tok, by[3].end_tok) == (2, 8)
     assert by[2].n_dup_grams == 3
-
-
-def test_spans_match_duckdb_oracle(spark):
-    """Engine (hashed grams) == oracle (string grams) on the fixture
-    corpus — validates the whole pipeline incl. the islands merge."""
-    from batch3dfier_spark.operators.spans import (
-        duplicate_spans,
-        sql_duplicate_spans,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    got = (
-        duplicate_spans(docs, n=6, min_docs=2)
-        .toPandas()
-        .sort_values(["doc_id", "span_id"])
-        .reset_index(drop=True)
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
-    )
-    exp = (
-        con.sql(sql_duplicate_spans(n=6, min_docs=2))
-        .df()
-        .sort_values(["doc_id", "span_id"])
-        .reset_index(drop=True)
-    )
-    assert len(got) == len(exp)
-    pd.testing.assert_frame_equal(
-        got[sorted(got.columns)], exp[sorted(exp.columns)], check_dtype=False
-    )
-    assert len(got) > 0  # fixture corpus really contains shared runs
 
 
 def test_strip_policy(spark):

@@ -136,9 +136,8 @@ def test_stateful_totals_accumulate_across_batches(spark, tmp_path):
 
 
 def test_sessionize_matches_duckdb(spark):
-    import duckdb
-
     from batch3dfier_spark.operators.sessions import sessionize
+    from batch3dfier_spark.plans.oracle import connect
     from batch3dfier_spark.plans.queries import SQL_SESSIONIZE
 
     ev = spark.read.parquet(f"{SF}/events.parquet")
@@ -148,8 +147,7 @@ def test_sessionize_matches_duckdb(spark):
         .sort_values(["user_id", "session_seq"])
         .reset_index(drop=True)
     )
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")
+    con = connect(SF)
     exp = (
         con.sql(SQL_SESSIONIZE)
         .df()
@@ -175,25 +173,6 @@ def test_sessionize_gap_boundary(spark):
     out = sessionize(df, gap_minutes=30.0).toPandas().sort_values("session_seq")
     assert list(out["n_events"]) == [2, 1]
     assert list(out["session_seq"]) == [1, 2]
-
-
-def test_session_window_batch_matches_duckdb(spark):
-    """Native F.session_window sessions (batch run) match the
-    microsecond-exact island oracle of SQL_EVENTS_SESSION."""
-    import duckdb
-
-    from batch3dfier_spark.plans.queries import (
-        SQL_EVENTS_SESSION, q_events_session)
-
-    keys = ["user_id", "session_start"]
-    got = (q_events_session(spark, SF).toPandas()
-           .sort_values(keys).reset_index(drop=True))
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")
-    exp = (con.sql(SQL_EVENTS_SESSION).df()
-           .sort_values(keys).reset_index(drop=True))
-    assert len(got) == len(exp) > 0
-    pd.testing.assert_frame_equal(got, exp[got.columns], check_dtype=False)
 
 
 def test_session_window_boundary_merges_on_touch(spark):

@@ -1,11 +1,9 @@
 
 
 """BPE-style pre-tokenizer counting (textstats.pretok_count): the
-pinned token law and cross-engine regex parity on the fixture corpus.
-(The rest of the textstats surface is covered by its contract queries
-and the textpipe/dedup test files.)"""
-
-SF = "/root/testdata/sf0.001"
+pinned token law.  (Cross-engine parity and the rest of the textstats
+surface are covered by the contract queries and the textpipe/dedup test
+files.)"""
 
 
 def test_pretok_count_law_hand_checked(spark):
@@ -40,23 +38,3 @@ def test_pretok_count_law_hand_checked(spark):
     assert got[:4] == [0, 0, 2, 2]
     assert got[5] == 2        # foo123
     assert got[7] == 3        # 'a', ' ', ' b'
-
-
-def test_pretok_count_matches_duckdb_on_fixture(spark):
-    import duckdb
-    import pandas as pd
-    import pyspark.sql.functions as F
-
-    from batch3dfier_spark.operators.textstats import (
-        pretok_count, sql_pretok_count)
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    got = (docs.select("doc_id", pretok_count(F.col("text")).alias("n"))
-           .toPandas().sort_values("doc_id").reset_index(drop=True))
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS SELECT * FROM "
-            f"read_parquet('{SF}/documents.parquet')")
-    exp = con.sql(
-        f"SELECT doc_id, {sql_pretok_count('text')} AS n "
-        f"FROM documents ORDER BY doc_id").df()
-    pd.testing.assert_frame_equal(got, exp, check_dtype=False)

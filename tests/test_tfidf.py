@@ -1,6 +1,6 @@
 """tf-idf top-k, commonness quality proxy, corpus stats, and chunk
-layout: hand-checked semantics + DuckDB oracle parity + scale-shape
-probes (no window over corpus-sized groups anywhere)."""
+layout: hand-checked semantics + DuckDB oracle parity +
+scale-shape probes (no window over corpus-sized groups anywhere)."""
 
 import duckdb
 import pandas as pd
@@ -42,22 +42,12 @@ def test_tfidf_topk_hand_checked(spark):
 
 
 def test_tfidf_topk_matches_oracle(spark):
+    from batch3dfier_spark.plans.oracle import compare, connect
     from batch3dfier_spark.plans.queries import REGISTRY
 
     fn, sql = REGISTRY["tfidf_topk"]
     got = fn(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
-    )
-    exp = con.sql(sql).df()
-    cols = sorted(got.columns)
-    assert cols == sorted(exp.columns)
-    pd.testing.assert_frame_equal(
-        got[cols].sort_values(["doc_id", "rank"]).reset_index(drop=True),
-        exp[cols].sort_values(["doc_id", "rank"]).reset_index(drop=True),
-        check_dtype=False,
-    )
+    assert compare(got, connect(SF).sql(sql).df()) == []
     assert (got.groupby("doc_id")["rank"].max() <= 3).all()
 
 
@@ -92,22 +82,12 @@ def test_commonness_hand_checked_and_oracle(spark):
 
 
 def test_corpus_stats_matches_oracle(spark):
+    from batch3dfier_spark.plans.oracle import compare, connect
     from batch3dfier_spark.plans.queries import REGISTRY
 
     fn, sql = REGISTRY["corpus_stats"]
     got = fn(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
-    )
-    exp = con.sql(sql).df()
-    cols = sorted(got.columns)
-    assert cols == sorted(exp.columns)
-    pd.testing.assert_frame_equal(
-        got[cols].sort_values("lang").reset_index(drop=True),
-        exp[cols].sort_values("lang").reset_index(drop=True),
-        check_dtype=False,
-    )
+    assert compare(got, connect(SF).sql(sql).df()) == []
     assert len(got) > 1  # several languages in the fixture
 
 
@@ -149,22 +129,3 @@ def test_chunk_docs_hand_checked(spark):
         .toPandas()
     )
     assert list(out2[out2["doc_id"] == 0]["end_tok"]) == [4, 7, 7]
-
-
-def test_chunk_docs_matches_oracle(spark):
-    from batch3dfier_spark.plans.queries import REGISTRY
-
-    fn, sql = REGISTRY["chunk_docs"]
-    got = fn(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
-    )
-    exp = con.sql(sql).df()
-    cols = sorted(got.columns)
-    assert cols == sorted(exp.columns)
-    pd.testing.assert_frame_equal(
-        got[cols].sort_values(["doc_id", "chunk_id"]).reset_index(drop=True),
-        exp[cols].sort_values(["doc_id", "chunk_id"]).reset_index(drop=True),
-        check_dtype=False,
-    )

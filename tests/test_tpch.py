@@ -1,54 +1,21 @@
 """TPC-H-shaped relational coverage (Q3/Q5 beside the Q1-shaped
-pricing_summary): DuckDB oracle parity and the broadcast/top-k plan
-shapes the 100 TB design relies on."""
-
-import duckdb
-import pandas as pd
+pricing_summary): the broadcast/top-k plan shapes the 100 TB design
+relies on (oracle parity is tests/test_oracle_contract.py)."""
 
 SF = "/root/testdata/sf0.001"
-TABLES = ["customer", "orders", "lineitem", "supplier", "nation", "region"]
-
-
-def _oracle(sql):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{SF}/{t}.parquet')")
-    return con.sql(sql).df()
-
-
-def test_ship_priority_matches_oracle(spark):
-    from batch3dfier_spark.plans.queries import REGISTRY
-
-    fn, sql = REGISTRY["ship_priority"]
-    got = (fn(spark, SF).toPandas()
-           .sort_values("o_orderkey").reset_index(drop=True))
-    exp = _oracle(sql).sort_values("o_orderkey").reset_index(drop=True)
-    assert len(got) == 10
-    pd.testing.assert_frame_equal(got, exp[got.columns], check_dtype=False)
 
 
 def test_ship_priority_plan_shape(spark):
     from batch3dfier_spark.plans.queries import REGISTRY
 
-    plan = (REGISTRY["ship_priority"][0](spark, SF)
-            ._jdf.queryExecution().executedPlan().toString())
+    df = REGISTRY["ship_priority"][0](spark, SF)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     # filtered customers broadcast; the top-10 is per-partition heaps,
     # never a global sort
     assert "BroadcastHashJoin" in plan
     assert "TakeOrderedAndProject" in plan
     assert "Python" not in plan
-
-
-def test_local_supplier_volume_matches_oracle(spark):
-    from batch3dfier_spark.plans.queries import REGISTRY
-
-    fn, sql = REGISTRY["local_supplier_volume"]
-    got = (fn(spark, SF).toPandas()
-           .sort_values("n_name").reset_index(drop=True))
-    exp = _oracle(sql).sort_values("n_name").reset_index(drop=True)
-    assert len(got) >= 1
-    pd.testing.assert_frame_equal(got, exp[got.columns], check_dtype=False)
+    assert df.count() == 10
 
 
 def test_local_supplier_volume_plan_shape(spark):
@@ -59,17 +26,6 @@ def test_local_supplier_volume_plan_shape(spark):
     # the region->nation->supplier dimension chain travels broadcast
     assert plan.count("BroadcastHashJoin") >= 2
     assert "Python" not in plan
-
-
-def test_big_spenders_matches_oracle(spark):
-    from batch3dfier_spark.plans.queries import REGISTRY
-
-    fn, sql = REGISTRY["big_spenders"]
-    got = (fn(spark, SF).toPandas()
-           .sort_values("o_orderkey").reset_index(drop=True))
-    exp = _oracle(sql).sort_values("o_orderkey").reset_index(drop=True)
-    assert len(got) >= 1
-    pd.testing.assert_frame_equal(got, exp[got.columns], check_dtype=False)
 
 
 def test_big_spenders_plan_shape(spark):
@@ -90,8 +46,8 @@ def test_big_spenders_having_filters_fact_groups(spark):
 
     got = REGISTRY["big_spenders"][0](spark, SF).toPandas()
     assert (got["sum_qty"] > 250).all()
-    n_orders = _oracle("SELECT COUNT(DISTINCT l_orderkey) AS n "
-                       "FROM lineitem")["n"][0]
+    n_orders = (spark.read.parquet(f"{SF}/lineitem.parquet")
+                .select("l_orderkey").distinct().count())
     assert len(got) < n_orders
 
 
@@ -103,13 +59,3 @@ def test_exists_customers_decorrelates(spark):
     df = q_exists_customers(spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Semi" in plan and "Anti" in plan
-    got = df.toPandas().sort_values("c_custkey").reset_index(drop=True)
-    exp = _oracle(
-        "SELECT c_custkey, c_name FROM customer c "
-        "WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = "
-        "c.c_custkey AND o.o_totalprice > 150000) AND NOT EXISTS "
-        "(SELECT 1 FROM orders o2 WHERE o2.o_custkey = c.c_custkey "
-        "AND o2.o_orderstatus = 'F')"
-    ).sort_values("c_custkey").reset_index(drop=True)
-    assert len(got) == len(exp) > 0
-    pd.testing.assert_frame_equal(got, exp[got.columns], check_dtype=False)

@@ -1,9 +1,8 @@
 """Winnowing fingerprints (operators/winnow): hand-checked selection
 rules (rightmost-minimum ties, short/empty docs, the shared-substring
-guarantee), DuckDB oracle parity for both contract queries, and the
-scale shapes (map-only extraction, capped pair blowup)."""
+guarantee) and the scale shapes (map-only extraction, capped pair
+blowup)."""
 
-import duckdb
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -59,47 +58,6 @@ def test_winnow_shared_substring_guarantee(spark):
     assert not (s1 & s3) and not (s2 & s3)
     pairs = winnow_dup_pairs(docs, n=4, w=5, min_shared=1).toPandas()
     assert set(zip(pairs.id_a, pairs.id_b)) == {(1, 2)}
-
-
-def test_winnow_fps_matches_oracle(spark):
-    from batch3dfier_spark.plans.queries import REGISTRY
-
-    fn, sql = REGISTRY["winnow_fps"]
-    got = fn(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
-    )
-    exp = con.sql(sql).df()
-    cols = sorted(got.columns)
-    assert cols == sorted(exp.columns)
-    key = ["doc_id", "pos"]
-    pd.testing.assert_frame_equal(
-        got[cols].sort_values(key).reset_index(drop=True),
-        exp[cols].sort_values(key).reset_index(drop=True),
-        check_dtype=False,
-    )
-    assert len(got) > 0
-
-
-def test_winnow_dups_matches_oracle(spark):
-    from batch3dfier_spark.plans.queries import REGISTRY
-
-    fn, sql = REGISTRY["winnow_dups"]
-    got = fn(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
-    )
-    exp = con.sql(sql).df()
-    cols = sorted(got.columns)
-    assert cols == sorted(exp.columns)
-    key = ["id_a", "id_b"]
-    pd.testing.assert_frame_equal(
-        got[cols].sort_values(key).reset_index(drop=True),
-        exp[cols].sort_values(key).reset_index(drop=True),
-        check_dtype=False,
-    )
 
 
 def test_winnow_scale_shapes(spark):

@@ -1,6 +1,7 @@
-"""Local harness mirroring the driver's correctness gate: run every
-queries() entry on Spark AND its oracle_sql() on DuckDB at a given sf,
-compare row count, sorted-column schema, and order-insensitive values.
+"""Run every queries() entry on Spark AND its oracle_sql() on DuckDB at a
+given sf and compare them with the shared oracle helper
+(batch3dfier_spark/plans/oracle.py); tests/test_oracle_contract.py runs
+the same contract under pytest.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -10,42 +11,7 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
-import pandas as pd
-
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
-
-
-def compare(name: str, got: pd.DataFrame, exp: pd.DataFrame) -> list[str]:
-    problems = []
-    if len(got) != len(exp):
-        problems.append(f"rows: spark={len(got)} oracle={len(exp)}")
-    gcols, ecols = sorted(got.columns), sorted(exp.columns)
-    if gcols != ecols:
-        problems.append(f"cols: spark={gcols} oracle={ecols}")
-        return problems
-    g = got[gcols].sort_values(gcols).reset_index(drop=True)
-    e = exp[gcols].sort_values(gcols).reset_index(drop=True)
-    for c in gcols:
-        gv, ev = g[c], e[c]
-        try:
-            eq = (gv.values == ev.values) | (gv.isna().values & ev.isna().values)
-        except Exception:
-            eq = gv.astype(str).values == ev.astype(str).values
-        if not eq.all():
-            bad = (~eq).nonzero()[0][:3]
-            problems.append(
-                f"col {c}: {int((~eq).sum())} mismatches, e.g. "
-                + "; ".join(f"spark={gv.iloc[i]!r} oracle={ev.iloc[i]!r}" for i in bad)
-            )
-        if str(gv.dtype) != str(ev.dtype):
-            problems.append(f"col {c}: dtype spark={gv.dtype} oracle={ev.dtype}")
-    return problems
 
 
 def main() -> int:
@@ -53,14 +19,11 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entrymod
+    from batch3dfier_spark.plans.oracle import compare, connect
     from batch3dfier_spark.session import get_spark
 
     spark = get_spark(cores=8, shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = connect(sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -74,16 +37,13 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {ex}")
             failures += 1
             continue
-        if name not in oracles:
-            print(f"rows-only {name}: {len(got)} rows")
-            continue
         try:
             exp = con.sql(oracles[name]).df()
         except Exception as ex:
             print(f"FAIL {name}: oracle error: {ex}")
             failures += 1
             continue
-        problems = compare(name, got, exp)
+        problems = compare(got, exp)
         if problems:
             failures += 1
             print(f"FAIL {name}:")
@@ -91,6 +51,7 @@ def main() -> int:
                 print(f"   {p}")
         else:
             print(f"OK   {name}: {len(got)} rows")
+    con.close()
     spark.stop()
     return 1 if failures else 0
 

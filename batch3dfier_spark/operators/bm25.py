@@ -74,9 +74,14 @@ __all__ = ["bm25_topk", "sql_bm25_topk"]
 # matched (token_index, tf) entries ride one int64: tidx * 2^44 + tf.
 # tf < 2^44 always (a doc would need 17.6e12 copies of one token);
 # tidx < 2^19 bounds the query vocabulary at 524k distinct terms —
-# far beyond any "small by contract" query set, asserted at build.
+# far beyond any "small by contract" query set, checked at build.
 _PACK_SHIFT = 44
 _TIDX_MAX = 1 << 19
+# the query incidence matrix is dense (n_vocab x n_queries): int8 in
+# the broadcast, one float64 copy per scoring task.  2^24 cells bounds
+# those at 16 MiB and 128 MiB; a query set past it raises instead of
+# exhausting executor memory.
+_INCIDENCE_MAX = 1 << 24
 
 
 def _occurrences(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -100,9 +105,12 @@ def bm25_topk(
     quantized BM25 (set-of-words queries; ties broken by doc_id ASC).
     Docs sharing no term with a query never appear.  The partial top-k
     happens inside the scoring kernel (see module docstring), so no
-    salted window is needed."""
-    from pyspark.storagelevel import StorageLevel
+    salted window is needed.
 
+    Runs work when called: the queries are collected, and the per-doc
+    state is checkpointed (session.py lifetime rule) and aggregated
+    into the corpus statistics the kernel needs.  Raises ValueError
+    when n_vocab x n_queries exceeds _INCIDENCE_MAX."""
     spark = docs.sparkSession
     out_schema = (f"query_id bigint, {id_col} bigint, "
                   "score_q bigint, rank bigint")
@@ -118,15 +126,18 @@ def bm25_topk(
         return spark.createDataFrame([], out_schema)
     vocab = sorted(qpdf["token"].unique())
     n_vocab = len(vocab)
-    assert n_vocab < _TIDX_MAX, (
-        f"query vocabulary {n_vocab} exceeds the small-by-contract bound"
-    )
-    vidx = {t: i for i, t in enumerate(vocab)}
     q_ids = np.sort(qpdf["query_id"].unique()).astype(np.int64)
+    if n_vocab >= _TIDX_MAX or n_vocab * len(q_ids) > _INCIDENCE_MAX:
+        raise ValueError(
+            f"bm25_topk: {n_vocab} query terms x {len(q_ids)} queries "
+            f"exceeds the small-by-contract bound ({_INCIDENCE_MAX} "
+            f"incidence cells, < {_TIDX_MAX} terms); split the query set"
+        )
+    vidx = {t: i for i, t in enumerate(vocab)}
     qpos = {q: j for j, q in enumerate(q_ids)}
-    incidence = np.zeros((n_vocab, len(q_ids)), dtype=np.int64)
-    for t, q in zip(qpdf["token"], qpdf["query_id"]):
-        incidence[vidx[t], qpos[q]] = 1
+    incidence = np.zeros((n_vocab, len(q_ids)), dtype=np.int8)
+    incidence[qpdf["token"].map(vidx).to_numpy(),
+              qpdf["query_id"].map(qpos).to_numpy()] = 1
 
     vocab_df = F.broadcast(
         spark.createDataFrame(
@@ -160,11 +171,11 @@ def bm25_topk(
                 F.when(F.col("_tidx").isNotNull(), packed)
             ).alias("_terms"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
 
-    # vocabulary-sized stats to the driver (reuse the persisted per-doc
-    # state — no second corpus pass)
+    # vocabulary-sized stats to the driver (reuse the checkpointed
+    # per-doc state — no second corpus pass)
     n_docs, t_tokens = per_doc.agg(
         F.count(F.lit(1)).cast("bigint"), F.sum("dl").cast("bigint")
     ).first()
@@ -197,8 +208,10 @@ def bm25_topk(
         max_term = int(idf.max()) * 22000 if n_v else 0
         use_blas = n_v > 0 and max_term * max(n_v, 1) < (1 << 53)
         inc_f = inc.astype(np.float64)
-        # bound the dense scratch at ~4M cells per chunk
-        chunk = max(1, 4_000_000 // max(n_v, 1))
+        inc_i = None if use_blas else inc.astype(np.int64)
+        # bound the dense scratch at ~4M cells per chunk: A and P are
+        # (chunk, n_v), S and M are (chunk, n_q)
+        chunk = max(1, 4_000_000 // max(n_v, n_q, 1))
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -230,7 +243,7 @@ def bm25_topk(
                 if use_blas:
                     S = (A.astype(np.float64) @ inc_f).astype(np.int64)
                 else:
-                    S = A @ inc
+                    S = A @ inc_i
                 M = P @ inc_f
                 outs = []
                 for c in range(n_q):
@@ -257,14 +270,11 @@ def bm25_topk(
     final = Window.partitionBy("query_id").orderBy(
         F.col("score_q").desc(), F.col(id_col).asc()
     )
-    out = (
+    return (
         ranked.withColumn("rank", F.row_number().over(final).cast("bigint"))
         .where(F.col("rank") <= k)
         .select("query_id", id_col, "score_q", "rank")
     )
-    # expose the persist handle (bench clears cache between queries)
-    out._persisted_intermediates = [per_doc]  # type: ignore[attr-defined]
-    return out
 
 
 def sql_bm25_topk(

@@ -823,7 +823,6 @@ def minhash_near_dups(
     bucket_cap: int | None = 128,
     prefilter_exact: bool = True,
     est_margin: float = 0.15,
-    persist_intermediates: bool = True,
 ) -> DataFrame:
     """The full MinHash near-dup funnel, skew-safe at web scale:
 
@@ -844,15 +843,15 @@ def minhash_near_dups(
     4. exact shingle-Jaccard verification of the distinct survivors
        only (verified_near_dups joins shingles onto those pairs).
 
-    persist_intermediates puts a MEMORY_AND_DISK barrier under the
-    keeper set: it feeds both the signature pass and the verify
-    shingling, and without the barrier Spark recomputes the full text
-    scan + exact-dedup join per consumer — the same reason the
-    reference materializes its centroid table (footprints.py:93-150)
-    instead of re-deriving it per tile view.
+    The keeper set feeds both the signature pass and the verify
+    shingling and is NOT materialized, so Spark recomputes the text
+    scan + exact-dedup join per consumer.  Checkpointing it (the
+    session.py lifetime rule) was measured slower on the textpipe
+    benchmark: +2 jobs and 7.0 -> 7.9 s for the near_dedup step
+    (median of 3 alternating traced runs, 4 vCPU), so the result stays
+    lazy and owns nothing.
 
     Returns (id_a, id_b, jaccard) for near-dup keeper pairs."""
-    persisted = []  # appended exactly where persist() is called
     if prefilter_exact:
         keepers = (
             exact_dedup(df, text_col, id_col)
@@ -860,22 +859,12 @@ def minhash_near_dups(
             .select(id_col)
         )
         df = df.join(keepers, id_col, "inner")
-        if persist_intermediates:
-            from pyspark.storagelevel import StorageLevel
-
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted.append(df)
     sigs = minhash_signatures(df, text_col, id_col, num_perm, shingle_k)
     est_min = int(np.ceil(num_perm * max(0.0, threshold - est_margin)))
     screened = lsh_candidates(sigs, id_col, bands, bucket_cap, est_min)
-    out = verified_near_dups(
+    return verified_near_dups(
         df, screened, text_col, id_col, shingle_k, threshold
     ).select("id_a", "id_b", "jaccard")
-    # the lazy result cannot unpersist before its action runs; expose
-    # the handles so long-lived sessions can free the cache afterwards
-    # (bench clears the whole cache between queries)
-    out._persisted_intermediates = persisted  # type: ignore[attr-defined]
-    return out
 
 
 def simhash_near_dups(

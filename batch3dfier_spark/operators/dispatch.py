@@ -14,8 +14,9 @@ output file itself (exactly like the external worker) at the path
 `tablefmt.tile_data_path` names, and returns ONE lineage row; the
 driver then commits all new files + lineage atomically
 into the IcebergishTable.  Resume = drop tiles already in the committed
-lineage before grouping (partition pruning does this for free when the
-work list is a pushed-down `isin` filter).
+lineage before grouping.  This does not prune the page scan:
+`app.build_work_df` applies its `isin` after `with_geocode` and
+`assign_tiles`, so a resumed run still geocodes every page.
 
 Skew (north_rule): `salted_split` pre-splits hot tiles into
 `tile_gid, salt` subgroups sized by a count sketch, so one giant tile

@@ -276,7 +276,9 @@ def near_dedup_increment(
     state's bucket layout — band probe on (band_id, band_hash),
     signature fetch on the candidate ids — so ONLY batch-derived rows
     ever shuffle; the corpus side is Exchange-free (asserted in
-    tests/test_incremental.py)."""
+    tests/test_incremental.py).  The batch signatures, read three
+    times, are checkpointed when this is called (session.py lifetime
+    rule)."""
     import math
 
     from .dedup import (band_rows, lsh_candidates, minhash_signatures,
@@ -286,7 +288,7 @@ def near_dedup_increment(
     bsigs = minhash_signatures(
         batch, text_col=text_col, id_col=id_col,
         num_perm=num_perm, shingle_k=shingle_k,
-    ).persist()
+    ).localCheckpoint(eager=False)
     bbands = band_rows(bsigs, id_col, bands)
 
     # corpus collisions: band probe -> candidate (batch, corpus) pairs
@@ -358,7 +360,7 @@ def append_minhash_increment(
     sigs = minhash_signatures(
         admitted, text_col=text_col, id_col=id_col,
         num_perm=num_perm, shingle_k=shingle_k,
-    ).persist()
+    ).localCheckpoint(eager=False)
     (
         sigs.write.mode("append").format("parquet")
         .bucketBy(n_buckets, id_col).sortBy(id_col)
@@ -372,4 +374,3 @@ def append_minhash_increment(
         .sortBy("band_id", "band_hash")
         .saveAsTable(table + "_bands")
     )
-    sigs.unpersist()

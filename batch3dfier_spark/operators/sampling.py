@@ -153,11 +153,11 @@ def cap_per_key(
        a candidate), so the result is EXACT for every input, never
        approximate, with a hard bound on re-plans.
 
-    The hashed base is persist()ed before the guard's first count, so
-    the guard attempts and the final plan all reuse one materialized
-    scan instead of re-hashing the full input per action (the cache
-    stays pinned for the returned frame's lazy plan; Spark evicts it
-    LRU under memory pressure).
+    The hashed base is checkpointed (session.py lifetime rule) before
+    the guard's first count, so the guard attempts and the final plan
+    all reuse one materialized scan instead of re-hashing the full
+    input per action; the returned frame owns those blocks.  The guard
+    runs when this is called.
 
     The draw is the same sha2-hex-prefix uniform as hash_sample —
     60-bit integer / 2^60, exact in float64, bit-identical in any
@@ -169,7 +169,7 @@ def cap_per_key(
     out_cols = [F.col(c) for c in df.columns]
     base = df.withColumn(
         "_draw", hash_fraction_col(F.col(row_key_col), seed)
-    ).persist()
+    ).localCheckpoint(eager=False)
     counts = base.groupBy(key_col).agg(F.count("*").alias("_n"))
     joined = base.join(counts, on=key_col, how="inner")
 

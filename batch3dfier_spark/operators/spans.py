@@ -82,14 +82,14 @@ def duplicate_spans(
     """(id, span_id, start_tok, end_tok, n_dup_grams) — the maximal
     merged token intervals of each doc covered by word n-grams that
     occur in >= min_docs distinct docs.  end_tok is exclusive;
-    span_id is 1-based in pos order within the doc."""
-    from pyspark.storagelevel import StorageLevel
-
+    span_id is 1-based in pos order within the doc.  The gram
+    positions are checkpointed (session.py lifetime rule), which runs
+    any shuffle stages of `df` when this is called."""
     # positions feeds BOTH the gram-count branch and the semi-join
-    # probe; without a persist the tokenize + posexplode + per-gram
+    # probe; without a checkpoint the tokenize + posexplode + per-gram
     # array_join/xxhash pass over the whole corpus runs twice (round-7)
-    pos = gram_positions(df, n, text_col, id_col).persist(
-        StorageLevel.MEMORY_AND_DISK
+    pos = gram_positions(df, n, text_col, id_col).localCheckpoint(
+        eager=False
     )
     dup_grams = (
         pos.select("gram", id_col)
@@ -111,7 +111,7 @@ def duplicate_spans(
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    out = (
+    return (
         dp.withColumn("_brk", brk)
         .withColumn("span_id", F.sum("_brk").over(run))
         .groupBy(id_col, "span_id")
@@ -121,9 +121,6 @@ def duplicate_spans(
             F.count(F.lit(1)).alias("n_dup_grams"),
         )
     )
-    # expose the persist handle (bench clears cache between queries)
-    out._persisted_intermediates = [pos]  # type: ignore[attr-defined]
-    return out
 
 
 def strip_duplicate_spans(

@@ -13,11 +13,9 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
 import tempfile
 
-__all__ = ["SCRATCH_ROOT", "scratch_dir", "fresh_scratch_dir",
-           "cleanup_scratch"]
+__all__ = ["SCRATCH_ROOT", "scratch_dir", "fresh_scratch_dir"]
 
 SCRATCH_ROOT = os.path.join(tempfile.gettempdir(), "batch3dfier_scratch")
 
@@ -38,16 +36,11 @@ def scratch_dir(kind: str, key: str = "") -> str:
 def fresh_scratch_dir(kind: str) -> str:
     """A unique throwaway directory under the scratch root (for state
     that must NOT be reused, e.g. streaming checkpoints whose offsets
-    would make a rerun skip data).  Callers should remove it when done;
-    cleanup_scratch() catches anything that escapes."""
+    would make a rerun skip data).  The caller owns it and removes it
+    before returning (see the lifetime rule in session.py)."""
     return tempfile.mkdtemp(prefix=f"{kind}_", dir=_ensure_root())
 
 
 def _ensure_root() -> str:
     os.makedirs(SCRATCH_ROOT, exist_ok=True)
     return SCRATCH_ROOT
-
-
-def cleanup_scratch() -> None:
-    """Remove the whole scratch root (safe teardown for sessions/tests)."""
-    shutil.rmtree(SCRATCH_ROOT, ignore_errors=True)

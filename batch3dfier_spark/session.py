@@ -8,6 +8,17 @@ the local[32] sandbox:
 
 plus the one source-size probe (`input_bytes`) behind every size-driven
 fan-out decision: `ensure_parallel` and the stream state partitioning.
+
+Lifetime of intermediates, the one rule: an operator's result owns
+everything it depends on.  An intermediate read twice is materialized
+with `df.localCheckpoint(...)`; Spark's ContextCleaner frees its blocks
+once the result holding it is garbage-collected.  No CacheManager
+entry, no handle to release, no option.  Scratch files (stream sinks)
+are read into such a checkpoint and removed before returning.  With
+AQE on, `localCheckpoint(eager=False)` runs the intermediate's shuffle
+stages when called, so such an operator does work at call time.  Where
+recomputing measured faster (the minhash_near_dups keeper set), the
+intermediate is not materialized at all.
 """
 
 from __future__ import annotations

@@ -27,6 +27,7 @@ file layout.  File-source backpressure via maxFilesPerTrigger.
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 from typing import Iterator
 
@@ -43,6 +44,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..scratch import fresh_scratch_dir, scratch_dir
 from ..session import input_bytes
 
 __all__ = [
@@ -98,8 +100,6 @@ def read_event_stream(
         # digest-keyed stable stage dir: reruns (bench min-of-N, oracle
         # checks, new driver processes) reuse ONE dir per source file
         # instead of leaking a fresh mkdtemp tree each call
-        from ..scratch import scratch_dir
-
         stage = scratch_dir("evstream", os.path.abspath(path))
         link = os.path.join(stage, os.path.basename(path))
         if not os.path.exists(link):
@@ -284,10 +284,13 @@ def run_stream_to_df(
     checkpoint_dir: str | None = None,
     state_partitions: int | None = 8,
 ) -> DataFrame:
-    """Drain a streaming DataFrame with Trigger.AvailableNow into a
-    memory sink and return the sink as a batch DataFrame (the batch-twin
-    comparison harness; also how the driver-contract streaming queries
-    materialize).
+    """Drain a streaming DataFrame with Trigger.AvailableNow and return
+    the drained rows as a batch DataFrame (the batch-twin comparison
+    harness; also how the driver-contract streaming queries
+    materialize).  The drain runs when this is called; the result is a
+    `localCheckpoint` of the sink's rows and owns them (the lifetime
+    rule in session.py): the sink's scratch dir or temp view is gone
+    by the time this returns.
 
     `state_partitions` sizes the stateful-operator partitioning for
     THIS query (streaming pins spark.sql.shuffle.partitions at query
@@ -306,29 +309,21 @@ def run_stream_to_df(
     parallel (guide §5: the driver should do no data work).  The row
     set is sink-independent, so batch-twin equality is unchanged.
     complete/update modes keep the memory sink (the file sink is
-    append-only); their results are aggregate-sized by construction.
-    The parquet dir stays for the session (scratch cleanup reaps it)."""
+    append-only); their results are aggregate-sized by construction."""
     spark = stream_df.sparkSession
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     name = "s" + uuid.uuid4().hex[:12]
     # checkpoints must be FRESH per drain (reusing offsets would make a
     # rerun skip data), so each gets a throwaway dir under the scratch
-    # root, removed once the drain finishes
+    # root; it and the sink are removed once the drain is checkpointed
     own_ckpt = checkpoint_dir is None
-    if own_ckpt:
-        from ..scratch import fresh_scratch_dir
-
-        ckpt = fresh_scratch_dir("ckpt")
-    else:
-        ckpt = checkpoint_dir
+    ckpt = fresh_scratch_dir("ckpt") if own_ckpt else checkpoint_dir
     out_dir = None
     try:
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions",
                            str(state_partitions))
         if output_mode == "append":
-            from ..scratch import fresh_scratch_dir
-
             out_dir = fresh_scratch_dir("stream_out")
             writer = (
                 stream_df.writeStream.format("parquet")
@@ -343,14 +338,16 @@ def run_stream_to_df(
             .start()
         )
         q.awaitTermination()
+        # explicit schema: an all-late/empty drain leaves no data files
+        sink = (spark.read.schema(stream_df.schema).parquet(out_dir)
+                if out_dir is not None else spark.table(name))
+        return sink.localCheckpoint(eager=True)
     finally:
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         if own_ckpt:
-            import shutil
-
             shutil.rmtree(ckpt, ignore_errors=True)
-    if out_dir is not None:
-        # explicit schema: an all-late/empty drain leaves no data files
-        return spark.read.schema(stream_df.schema).parquet(out_dir)
-    return spark.table(name)
+        if out_dir is not None:
+            shutil.rmtree(out_dir, ignore_errors=True)
+        else:
+            spark.catalog.dropTempView(name)

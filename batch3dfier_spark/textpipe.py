@@ -128,13 +128,8 @@ def _near_dup_pairs(df: DataFrame, step: dict) -> DataFrame:
 
     method = step.get("method", "minhash")
     if method == "minhash":
-        # persist_intermediates=False: the pipeline holds the frame
-        # across later steps and the final write, so funnel-internal
-        # persists would outlive their usefulness in the executor
-        # cache; the small recompute is cheaper than the leak
         pairs = minhash_near_dups(
-            df, threshold=float(step.get("threshold", 0.5)),
-            persist_intermediates=False,
+            df, threshold=float(step.get("threshold", 0.5))
         )
         # minhash_near_dups PREFILTERS byte-identical docs out of the
         # LSH funnel, so its pairs never name exact duplicates; union

@@ -1,6 +1,6 @@
 """Quantized BM25 retrieval (operators/bm25): hand-computed scores for
 the documented integer formulas, tie/empty-query rules, the contract
-query vs its DuckDB twin and its rank bound, and the broadcast scale shape."""
+query's rank bound, the broadcast scale shape and the query-set bound."""
 
 import pandas as pd
 
@@ -48,12 +48,9 @@ def test_bm25_tie_breaks_by_doc_id(spark):
 
 
 def test_bm25_matches_oracle(spark):
-    from batch3dfier_spark.plans.oracle import compare, connect
     from batch3dfier_spark.plans.queries import REGISTRY
 
-    fn, sql = REGISTRY["bm25_topk"]
-    got = fn(spark, SF).toPandas()
-    assert compare(got, connect(SF).sql(sql).df()) == []
+    got = REGISTRY["bm25_topk"][0](spark, SF).toPandas()
     assert (got.groupby("query_id")["rank"].max() <= 5).all()
 
 
@@ -78,5 +75,53 @@ def test_bm25_scale_shape(spark):
 
     assert len(re.findall(r"\bWindow \[", plan)) == 1
     assert "SortMergeJoin" not in plan
-    for h in getattr(out, "_persisted_intermediates", []):
-        h.unpersist()
+
+
+def test_bm25_many_queries_small_vocab(spark):
+    """An adversarial query count over a tiny vocabulary: the kernel's
+    (chunk, n_queries) score matrices are sized by the query count, and
+    every query still gets the twin's exact top-k."""
+    import duckdb
+
+    from batch3dfier_spark.operators.bm25 import bm25_topk, sql_bm25_topk
+    from batch3dfier_spark.plans.oracle import compare
+
+    words = ["cat", "dog", "emu"]
+    docs = pd.DataFrame({
+        "doc_id": range(60),
+        "text": [" ".join(words[j % 3] for j in range(i % 7 + 1))
+                 for i in range(60)],
+    })
+    qs = pd.DataFrame({
+        "doc_id": range(3000),
+        "text": [words[i % 3] + " " + words[(i // 3) % 3]
+                 for i in range(3000)],
+    })
+    got = bm25_topk(
+        _df(spark, docs.values.tolist(), ["doc_id", "text"]),
+        _df(spark, qs.values.tolist(), ["query_id", "qtext"]),
+        k=4,
+    ).toPandas()
+    con = duckdb.connect()
+    con.register("documents", docs)
+    con.register("queries", qs)
+    exp = con.sql(sql_bm25_topk(
+        k=4, queries_sql="SELECT doc_id AS query_id, text AS qtext"
+                         " FROM queries")).df()
+    assert len(exp) == 3000 * 4
+    assert compare(got, exp) == []
+
+
+def test_bm25_query_set_bound_raises(spark):
+    """n_vocab x n_queries past the documented incidence bound raises a
+    ValueError naming both counts, before any corpus work."""
+    import pytest
+
+    from batch3dfier_spark.operators.bm25 import bm25_topk
+
+    n = 2900  # 5800 terms x 2900 queries > 2^24 cells
+    docs = _df(spark, [(1, "cat")], ["doc_id", "text"])
+    qs = _df(spark, [(i, f"a{i} b{i}") for i in range(n)],
+             ["query_id", "qtext"])
+    with pytest.raises(ValueError, match="5800 query terms x 2900 queries"):
+        bm25_topk(docs, qs)

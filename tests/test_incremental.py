@@ -86,14 +86,12 @@ def test_corpus_side_never_shuffles(spark, corpus_table):
 
 
 def test_contract_query_matches_oracle(spark):
-    """The contract increment (doc_id % 3 = 0 over the rest) matches its
-    oracle, and admits some rows and rejects others."""
-    from batch3dfier_spark.plans.oracle import compare, connect
+    """The contract increment (doc_id % 3 = 0 over the rest; oracle-
+    checked in test_oracle_contract) admits some rows and rejects
+    others."""
     from batch3dfier_spark.plans.queries import REGISTRY
 
-    fn, sql = REGISTRY["dedup_incremental"]
-    got = fn(spark, SF).toPandas()
-    assert compare(got, connect(SF).sql(sql).df()) == []
+    got = REGISTRY["dedup_incremental"][0](spark, SF).toPandas()
     n_batch = (spark.read.parquet(f"{SF}/documents.parquet")
                .where("doc_id % 3 = 0").count())
     assert 0 < len(got) < n_batch
@@ -112,13 +110,11 @@ def test_near_increment_contract_admits_some(spark):
 
 def test_vocab_topk_matches_oracle(spark):
     """(Placed here to avoid another Spark-session module.)  vocab_topk
-    == its DuckDB twin including boundary tie order."""
-    from batch3dfier_spark.plans.oracle import compare, connect
+    ranks by frequency; test_oracle_contract checks it against its
+    DuckDB twin, boundary tie order included."""
     from batch3dfier_spark.plans.queries import REGISTRY
 
-    fn, sql = REGISTRY["vocab_topk"]
-    got = fn(spark, SF).toPandas()
-    assert compare(got, connect(SF).sql(sql).df()) == []
+    got = REGISTRY["vocab_topk"][0](spark, SF).toPandas()
     # frequencies are non-increasing with rank
     assert (got.sort_values("rank")["freq"].diff().dropna() <= 0).all()
 

@@ -35,8 +35,11 @@ def test_query_matches_oracle(spark, scale, name):
     fn, sql = REGISTRY[name]
     exp = con.sql(sql).df()
     assert len(exp) > 0
+    spark.catalog.clearCache()
     for _ in range(2 if name in RERUN else 1):
         assert compare(fn(spark, sf_dir).toPandas(), exp) == []
+    # lifetime rule (session.py): a query leaves no cache entry behind
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 @pytest.mark.parametrize("values", [[1, 2, 3], ["a", "b", "c"]])

@@ -264,6 +264,31 @@ def test_enrich_stream_equals_batch(spark):
     pd.testing.assert_frame_equal(got, exp)
 
 
+def test_drains_leave_no_view_or_scratch_dir(spark):
+    """The lifetime rule (session.py): a complete/update drain drops its
+    memory-sink view and an append drain removes its parquet sink dir;
+    each result still holds its rows."""
+    from batch3dfier_spark.scratch import SCRATCH_ROOT
+    from batch3dfier_spark.streaming.events import (
+        hourly_counts,
+        read_event_stream,
+        run_stream_to_df,
+        user_running_totals,
+    )
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    stream = read_event_stream(spark, f"{SF}/events.parquet")
+    views, dirs = temp_views(), set(os.listdir(SCRATCH_ROOT))
+    for frame, mode in ((hourly_counts(stream), "complete"),
+                        (user_running_totals(stream), "update"),
+                        (stream, "append")):
+        assert run_stream_to_df(frame, output_mode=mode).count() > 0
+        assert temp_views() == views, mode
+        assert set(os.listdir(SCRATCH_ROOT)) == dirs, mode
+
+
 def test_enrich_batch_plan_is_broadcast(spark):
     from batch3dfier_spark.plans.queries import q_events_enrich
 

@@ -84,6 +84,9 @@ def main() -> None:
     print("  CC_ONE_TASK_EDGES_MAX edge rows, else as a Spark round loop")
     print("  with a localCheckpoint per round, so the audited final plan is")
     print("  just the checkpointed result scan.")
+    print("- an intermediate read twice is localCheckpointed (session.py")
+    print("  lifetime rule); its stages run when the query is built and")
+    print("  only the plan above the checkpoint is counted here.")
     spark.stop()
 
 

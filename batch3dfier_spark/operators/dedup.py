@@ -50,6 +50,7 @@ __all__ = [
     "paragraph_dedup",
     "minhash_signatures",
     "band_rows",
+    "cap_band_buckets",
     "lsh_candidates",
     "verified_near_dups",
     "signature_matches",
@@ -521,6 +522,26 @@ def band_rows(
     )
 
 
+def cap_band_buckets(
+    banded: DataFrame, id_col: str, bucket_cap: int | None
+) -> DataFrame:
+    """Keep the lowest `bucket_cap` ids of every (band_id, band_hash)
+    bucket of `band_rows` output (ROW_NUMBER by id — deterministic, and
+    reproduced exactly by the SQL oracle); None keeps every row.  A
+    groupBy on the bucket keys that follows reuses the window's hash
+    partitioning, so the cap adds no Exchange."""
+    if bucket_cap is None:
+        return banded
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("band_id", "band_hash").orderBy(id_col)
+    return (
+        banded.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= bucket_cap)
+        .drop("_rn")
+    )
+
+
 # pairs compared per numpy step of the bucket screen: two gathered
 # (pairs x num_perm) int64 blocks, 16 MB at 64 permutations
 _SCREEN_PAIRS_CHUNK = 16_384
@@ -584,7 +605,6 @@ def lsh_candidates(
     `minhash_near_dups`) so byte-identical clusters never reach the
     buckets at all; the cap is the safety net for near-identical ones.
     """
-    banded = band_rows(signatures, id_col=id_col, bands=bands)
     # ONE effective shuffle builds capped buckets: the row_number window
     # (partitioned on the bucket key, ordered by id) caps each bucket to
     # its lowest `bucket_cap` ids BEFORE any bucket is materialized as an
@@ -597,15 +617,9 @@ def lsh_candidates(
     # Singleton buckets — the vast majority — are pruned JVM-side before
     # any Python runs; the screen kernel sees arrays that are
     # <= bucket_cap long BY CONSTRUCTION.
-    if bucket_cap is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band_id", "band_hash").orderBy(id_col)
-        banded = (
-            banded.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= bucket_cap)
-            .drop("_rn")
-        )
+    banded = cap_band_buckets(
+        band_rows(signatures, id_col=id_col, bands=bands), id_col, bucket_cap
+    )
     # ids and signatures are read out of ONE struct list, so member i of
     # `_ids` owns slice i of the flattened `_sigs`
     buckets = (
@@ -812,6 +826,12 @@ def signature_matches(a: pd.Series, b: pd.Series) -> pd.Series:
     )
 
 
+# Estimated-Jaccard screen slack of minhash_near_dups: bucket pairs need
+# >= ceil(num_perm * (threshold - MINHASH_EST_MARGIN)) matching
+# signature components before exact verification.
+MINHASH_EST_MARGIN = 0.15
+
+
 def minhash_near_dups(
     df: DataFrame,
     text_col: str = "text",
@@ -821,8 +841,6 @@ def minhash_near_dups(
     bands: int = 16,
     threshold: float = 0.5,
     bucket_cap: int | None = 128,
-    prefilter_exact: bool = True,
-    est_margin: float = 0.15,
 ) -> DataFrame:
     """The full MinHash near-dup funnel, skew-safe at web scale:
 
@@ -835,7 +853,7 @@ def minhash_near_dups(
     3. estimated-Jaccard screen, inside the LSH buckets: a banding
        match at low true similarity is common (a 4-row band matches
        with prob j^4), so lsh_candidates keeps only bucket pairs with
-       >= ceil(num_perm*(threshold - est_margin)) matching signature
+       >= ceil(num_perm*(threshold - MINHASH_EST_MARGIN)) matching signature
        components.  The signatures ride the band shuffle, so no
        pair-level join ever carries them and the signature pass runs
        once.  Deterministic, exactly mirrored by the SQL oracle, and it
@@ -852,15 +870,14 @@ def minhash_near_dups(
     lazy and owns nothing.
 
     Returns (id_a, id_b, jaccard) for near-dup keeper pairs."""
-    if prefilter_exact:
-        keepers = (
-            exact_dedup(df, text_col, id_col)
-            .where(~F.col("is_dup"))
-            .select(id_col)
-        )
-        df = df.join(keepers, id_col, "inner")
+    keepers = (
+        exact_dedup(df, text_col, id_col)
+        .where(~F.col("is_dup"))
+        .select(id_col)
+    )
+    df = df.join(keepers, id_col, "inner")
     sigs = minhash_signatures(df, text_col, id_col, num_perm, shingle_k)
-    est_min = int(np.ceil(num_perm * max(0.0, threshold - est_margin)))
+    est_min = int(np.ceil(num_perm * max(0.0, threshold - MINHASH_EST_MARGIN)))
     screened = lsh_candidates(sigs, id_col, bands, bucket_cap, est_min)
     return verified_near_dups(
         df, screened, text_col, id_col, shingle_k, threshold

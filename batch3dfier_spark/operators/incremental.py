@@ -212,7 +212,7 @@ def register_minhash_corpus(
     Signatures are computed ONCE (the Arrow pass is the expensive
     part): sigs are written first and the band postings derive from
     reading them back."""
-    from .dedup import band_rows, minhash_signatures
+    from .dedup import band_rows, cap_band_buckets, minhash_signatures
 
     _reset_table(spark, table + "_sigs")
     _reset_table(spark, table + "_bands")
@@ -225,18 +225,12 @@ def register_minhash_corpus(
         .bucketBy(n_buckets, id_col).sortBy(id_col)
         .saveAsTable(table + "_sigs")
     )
-    banded = band_rows(spark.table(table + "_sigs"), id_col, bands).select(
-        "band_id", "band_hash", id_col
+    banded = cap_band_buckets(
+        band_rows(spark.table(table + "_sigs"), id_col, bands).select(
+            "band_id", "band_hash", id_col
+        ),
+        id_col, bucket_cap,
     )
-    if bucket_cap is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band_id", "band_hash").orderBy(id_col)
-        banded = (
-            banded.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= bucket_cap)
-            .drop("_rn")
-        )
     (
         banded.write.mode("overwrite").format("parquet")
         .bucketBy(n_buckets, "band_id", "band_hash")

@@ -101,6 +101,12 @@ def _topk_by_dist_gid(
     return rows, gid, dist
 
 
+# Tile count up to which knn_tiles probes a dense (n_pts, n_tiles)
+# distance matrix per Arrow batch; larger indexes use the ring or
+# coarse-cell search.
+KNN_DENSE_MAX = 4096
+
+
 def knn_tiles(
     df: DataFrame,
     index: TileIndex,
@@ -108,7 +114,6 @@ def knn_tiles(
     x: str = "x",
     y: str = "y",
     keep: tuple[str, ...] = (),
-    dense_max: int = 4096,
 ) -> DataFrame:
     """k nearest tiles per feature point by point-to-rectangle distance
     (ties broken by gid, deterministic).  Output: keep-cols + x, y,
@@ -119,7 +124,7 @@ def knn_tiles(
     candidate-generation tiers keep memory bounded at the 1e6-tile
     scale (a dense matrix there would be ~80 GB per 10k-row batch):
 
-    - n_tiles <= dense_max: dense (n_pts, n_tiles) distance matrix.
+    - n_tiles <= KNN_DENSE_MAX: dense (n_pts, n_tiles) distance matrix.
     - regular grid: vectorized ring search — every point gets the
       (2R+1)^2 cell window around its own cell in ONE numpy pass; R
       doubles only for points whose kth distance exceeds the ring
@@ -300,7 +305,7 @@ def knn_tiles(
         n_tiles = len(g)
         tree = None
         side = None
-        if n_tiles > dense_max and grid is None:
+        if n_tiles > KNN_DENSE_MAX and grid is None:
             from ..geo import STRtree
 
             tree = STRtree(r)  # built once per task
@@ -311,7 +316,7 @@ def knn_tiles(
                 continue
             px = pdf[x].to_numpy(dtype=np.float64)
             py = pdf[y].to_numpy(dtype=np.float64)
-            if n_tiles <= dense_max:
+            if n_tiles <= KNN_DENSE_MAX:
                 yield _dense_batch(pdf, px, py, r, g, u)
             elif grid is not None:
                 yield _grid_ring_batch(pdf, px, py, u)

@@ -20,7 +20,7 @@ for any practical k.
 Scale shape (100 TB): the fuse is ONE full-outer equi-join on
 (query_id, cand_id) between two already-top-k lists — O(queries * k)
 rows a side, never the corpus — followed by the two-level salted
-top-k selection proven in operators/bm25.py (total order by
+top-k selection of operators/topk.py (total order by
 (rrf_q DESC, cand_id ASC), so salted-then-final row_number equals a
 single global ranking and no window partition exceeds
 max(k_in * 2 / salt_buckets, k * salt_buckets) rows per query).
@@ -30,8 +30,10 @@ Reference analog: none (the reference has no retrieval surface).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .topk import salted_top_k
 
 __all__ = ["rrf_fuse"]
 
@@ -71,14 +73,6 @@ def rrf_fuse(
         )
     )
     order = [F.col("rrf_q").desc(), F.col("cand_id").asc()]
-    salted = Window.partitionBy(
-        "query_id", F.col("cand_id") % salt_buckets
-    ).orderBy(*order)
-    final = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        fused.withColumn("_srn", F.row_number().over(salted))
-        .where(F.col("_srn") <= k)
-        .withColumn("rank", F.row_number().over(final).cast("bigint"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "cand_id", "rrf_q", "rank")
-    )
+    return salted_top_k(
+        fused, ["query_id"], order, k, F.col("cand_id"), salt_buckets
+    ).select("query_id", "cand_id", "rrf_q", F.col("rank").cast("bigint"))

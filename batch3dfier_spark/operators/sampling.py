@@ -142,22 +142,26 @@ def cap_per_key(
        hot keys before the shuffle);
     2. keys with n <= cap keep every row — no ordering work at all;
     3. for capped keys, the cap-th smallest of n uniform draws
-       concentrates at cap/n, so the filter
+       concentrates at cap/n, so the flag
        draw < (cap + 12*sqrt(cap) + 40) / n
-       keeps ~cap + O(sqrt(cap)) candidate rows per key (a map-only
+       marks ~cap + O(sqrt(cap)) candidate rows per key (a map-only
        JVM predicate); the exact row_number window then runs on groups
        whose size is ~cap by construction — bounded, skew-free;
-    4. an eager guard counts candidates per capped key and quadruples
-       the margin in the astronomically unlikely event a key came up
-       short; the LAST attempt forces the threshold to 1.0 (every row
-       a candidate), so the result is EXACT for every input, never
-       approximate, with a hard bound on re-plans.
+    4. short-key rescue: a key with fewer than `cap` flagged rows
+       (astronomically unlikely, or none at all) keeps EVERY row as a
+       candidate.  The flagged rows of a key are a prefix of its
+       (draw, row_key) order, so a key with >= cap of them has its top
+       `cap` among them; the result is EXACT for every input, never
+       approximate.  The per-key flagged counts are left-joined back
+       (a key with zero flagged rows is absent from them and counts
+       as 0) in the same lazy plan — no driver action, no re-plan.
 
-    The hashed base is checkpointed (session.py lifetime rule) before
-    the guard's first count, so the guard attempts and the final plan
-    all reuse one materialized scan instead of re-hashing the full
-    input per action; the returned frame owns those blocks.  The guard
-    runs when this is called.
+    The hashed base is checkpointed (session.py lifetime rule), so the
+    counts, the flagged counts and the final rows all read one
+    materialized scan instead of re-hashing the input; the returned
+    frame owns those blocks.  Nothing runs when this is called (for an
+    input without shuffles; with AQE, the checkpoint runs an input's
+    shuffle stages at the call).
 
     The draw is the same sha2-hex-prefix uniform as hash_sample —
     60-bit integer / 2^60, exact in float64, bit-identical in any
@@ -176,48 +180,22 @@ def cap_per_key(
     small = joined.where(F.col("_n") <= F.lit(cap)).select(*out_cols)
     big = joined.where(F.col("_n") > F.lit(cap))
 
-    margin = _margin
+    thr = F.least(
+        F.lit(1.0),
+        (F.lit(float(cap)) + F.lit(_margin) * F.lit(float(cap)) ** 0.5
+         + F.lit(40.0)) / F.col("_n").cast("double"),
+    )
+    flagged = big.withColumn("_in", F.col("_draw") < thr)
+    n_flagged = flagged.where(F.col("_in")).groupBy(key_col).agg(
+        F.count("*").alias("_c")
+    )
+    cand = flagged.join(n_flagged, on=key_col, how="left").where(
+        F.col("_in") | (F.coalesce(F.col("_c"), F.lit(0)) < F.lit(cap))
+    )
     w = (
         Window.partitionBy(key_col)
         .orderBy(F.col("_draw").asc(), F.col(row_key_col).asc())
     )
-    for _attempt in range(6):
-        if _attempt == 5:
-            # final attempt: every row becomes a candidate (draws live
-            # in [0,1)), so the row_number pass is EXACT by
-            # construction — the documented ROW_NUMBER oracle contract
-            # can never be silently violated by an exhausted guard
-            thr = F.lit(1.0)
-            cand = big
-            break
-        thr = F.least(
-            F.lit(1.0),
-            (F.lit(float(cap)) + F.lit(margin) * F.lit(float(cap)) ** 0.5
-             + F.lit(40.0)) / F.col("_n").cast("double"),
-        )
-        cand = big.where(F.col("_draw") < thr)
-        # guard: every capped key must surface >= cap candidates (the
-        # filter can only fail to KEEP rows, never keep wrong ones).
-        # Checked against the KEY SET of `big`, not of `cand` — a key
-        # whose candidates were filtered to nothing is absent from the
-        # candidate groupBy entirely and must still count as short.
-        # The aggregates run over ~cap-sized groups — cheap.
-        satisfied = (
-            cand.groupBy(key_col)
-            .agg(F.count("*").alias("_c"))
-            .where(F.col("_c") >= F.lit(cap))
-            .select(key_col)
-        )
-        short = (
-            counts.where(F.col("_n") > F.lit(cap))
-            .select(key_col)
-            .join(satisfied, on=key_col, how="left_anti")
-            .limit(1)
-            .count()
-        )
-        if short == 0:
-            break
-        margin = abs(margin) * 4.0 + 8.0
     capped = (
         cand.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= F.lit(cap))
@@ -346,14 +324,11 @@ def weighted_priority_sample(
     and composability under corpus growth (an unselected row's
     priority never changes).
 
-    Selection is the two-level salted top-k proved exact in bm25 —
-    (prio, key) is a total order, so per-(group, key % salt_buckets)
-    ROW_NUMBER <= k followed by the per-group final ROW_NUMBER <= k
-    equals a single global ranking; the oracle verifies with one
-    QUALIFY."""
-    from pyspark.sql import Window
-
+    Selection is topk.salted_top_k salted by key % salt_buckets —
+    (prio, key) is a total order, so it equals a single global
+    ranking; the oracle verifies with one QUALIFY."""
     from .sketches import hash48
+    from .topk import salted_top_k
 
     g = F.coalesce(F.col(group_col).cast("string"), F.lit("")) \
         if group_col else F.lit("")
@@ -364,16 +339,11 @@ def weighted_priority_sample(
         .withColumn("_w", w)
         .withColumn("_prio", F.expr("_h div _w"))
     )
-    salted = Window.partitionBy(
-        "_grp", F.col(key_col) % salt_buckets
-    ).orderBy("_prio", key_col)
-    final = Window.partitionBy("_grp").orderBy("_prio", key_col)
     return (
-        base.withColumn("_srn", F.row_number().over(salted))
-        .where(F.col("_srn") <= k)
-        .withColumn("sample_rank", F.row_number().over(final).cast("bigint"))
-        .where(F.col("sample_rank") <= k)
-        .drop("_grp", "_h", "_w", "_prio", "_srn")
+        salted_top_k(base, ["_grp"], ["_prio", key_col], k,
+                     F.col(key_col), salt_buckets, "sample_rank")
+        .withColumn("sample_rank", F.col("sample_rank").cast("bigint"))
+        .drop("_grp", "_h", "_w", "_prio")
     )
 
 

@@ -13,7 +13,7 @@ Spark shape (100 TB):
   batch against the broadcast centroid matrix
   (similarity.assign_centroids) — no shuffle, no per-row Python.
 - cluster membership is capped to `cluster_cap` lowest-id members via
-  the TWO-LEVEL SALTED selection proven in operators/bm25.py (the
+  the TWO-LEVEL SALTED selection of operators/topk.py (the
   (id ASC) order is total, so salted-then-final row_number equals a
   single global ranking): no window partition ever holds more than
   max(members/salt_buckets, cap * salt_buckets) NARROW (id, cid)
@@ -48,7 +48,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["semdedup"]
@@ -122,6 +122,7 @@ def semdedup(
         raise ValueError(f"keep must be min_id|far_centroid, got {keep}")
     from .dedup import embedding_near_dups
     from .similarity import assign_centroids, ivf_seed_centroids
+    from .topk import salted_top_k
 
     C = ivf_seed_centroids(embeddings, n_centroids, id_col, vec_col)
     e = embeddings.select(
@@ -129,21 +130,13 @@ def semdedup(
     )
     asg = assign_centroids(e, C, id_col, "_v", quantize=True)
 
-    # two-level salted cap: keep the cluster_cap LOWEST ids per cid.
-    # (id ASC) is a total order, so this equals one global row_number
-    # (operators/bm25.py proof) while bounding every window partition.
-    order = [F.col(id_col).asc()]
-    salted = Window.partitionBy(
-        "cid", F.col(id_col) % salt_buckets
-    ).orderBy(*order)
-    final = Window.partitionBy("cid").orderBy(*order)
-    capped = (
-        asg.withColumn("_srn", F.row_number().over(salted))
-        .where(F.col("_srn") <= cluster_cap)
-        .withColumn("_rn", F.row_number().over(final))
-        .where(F.col("_rn") <= cluster_cap)
-        .select(id_col, "cid")
-    )
+    # salted cap: keep the cluster_cap LOWEST ids per cid.  (id ASC) is
+    # a total order, so this equals one global row_number while
+    # bounding every window partition.
+    capped = salted_top_k(
+        asg, ["cid"], [F.col(id_col).asc()], cluster_cap, F.col(id_col),
+        salt_buckets, "_rn",
+    ).select(id_col, "cid")
 
     pairs = (
         capped.select(F.col(id_col).alias("id_a"), "cid")

@@ -24,8 +24,8 @@ either way.
 Scale shapes (100 TB):
 - distinct (group, h) is a hash-agg whose key INCLUDES the hash, so a
   hot group never forms one reduce key.
-- k-smallest selection is the two-level salted pattern proved exact in
-  bm25 (the hash order is total): a (group, h % salt_buckets) window
+- k-smallest selection is topk.salted_top_k (the hash order is
+  total): a (group, h % salt_buckets) window
   keeps k per salt, the final per-group window ranks <= k*salt_buckets
   survivors.  Per-salt window volume is distinct/salt_buckets — size
   salt_buckets ~ expected_distinct / 1e6 (the pack_sequences sizing
@@ -39,8 +39,10 @@ sits with vocab_topk / corpus_stats in the corpus-analysis layer.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .topk import salted_top_k
 
 __all__ = [
     "kmv_distinct", "sql_kmv_distinct",
@@ -89,16 +91,8 @@ def kmv_distinct(
         .select("grp", hash48(F.col("token"), seed).alias("h"))
         .distinct()
     )
-    salted = Window.partitionBy(
-        "grp", F.col("h") % salt_buckets
-    ).orderBy("h")
-    final = Window.partitionBy("grp").orderBy("h")
-    kept = (
-        hashes.withColumn("_srn", F.row_number().over(salted))
-        .where(F.col("_srn") <= k)
-        .withColumn("_rn", F.row_number().over(final))
-        .where(F.col("_rn") <= k)
-    )
+    kept = salted_top_k(hashes, ["grp"], ["h"], k, F.col("h"),
+                        salt_buckets, "_rn")
     return (
         kept.groupBy("grp")
         .agg(

@@ -9,9 +9,11 @@ group.  Proof: the global top-k of a totally-ordered set is contained
 in the union of per-salt top-ks (any row outside its salt's top-k has
 k better rows in the SAME salt, hence >= k better rows globally).
 
-operators/bm25.py introduced the pattern; sampling, sketches,
-retrieval and semdedup repeat it inline with their own orders —
-this helper is the reusable form for new call sites.
+operators/bm25.py introduced the pattern (its top-k is pre-reduced per
+chunk, so it keeps its own single window); every per-group top-k
+whose group can be hot calls this helper: weighted sampling, KMV
+sketches, RRF fusion, the semdedup cluster cap, winnow's bucket cap
+and the top_events query.
 """
 
 from __future__ import annotations

@@ -282,7 +282,7 @@ FROM ranked WHERE rk <= 3
 """
 
 
-RING_N = 72  # 5184 tiles > knn dense_max(4096) -> exercises the ring search
+RING_N = 72  # 5184 tiles > KNN_DENSE_MAX (4096) -> exercises the ring search
 
 
 def q_knn_tiles_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -686,7 +686,8 @@ def _sql_dedup_minhash() -> str:
     # Remaining boundary rule: tokenization is python str.split() vs SQL
     # regex '\\s+' — identical unless the corpus contains NON-ASCII
     # WHITESPACE (U+00A0, U+3000, ...), which the fixtures avoid.
-    from ..operators.dedup import MERSENNE, perm_params, token_weights
+    from ..operators.dedup import (MERSENNE, MINHASH_EST_MARGIN, perm_params,
+                                   token_weights)
 
     cap = 128
     # shingle weights: descending powers P^(k-1-j), k=5 (dedup._shingle_hashes)
@@ -715,10 +716,10 @@ def _sql_dedup_minhash() -> str:
         % (4 * bb, 4 * bb + 1, 4 * bb + 2, 4 * bb + 3)
         for bb in range(16)
     )
-    # estimated-jaccard screen: mirrors minhash_near_dups est_margin
+    # estimated-jaccard screen of minhash_near_dups
     import math
 
-    est_min = int(math.ceil(64 * (0.5 - 0.15)))
+    est_min = int(math.ceil(64 * (0.5 - MINHASH_EST_MARGIN)))
     est_sum = " + ".join(
         f"CASE WHEN ma.mh{i} = mb.mh{i} THEN 1 ELSE 0 END" for i in range(64)
     )

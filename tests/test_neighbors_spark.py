@@ -111,14 +111,14 @@ def _check_knn_tier(spark, idx, k, nx, ny):
 
 
 def test_knn_grid_ring_path_matches_bruteforce(spark):
-    """128x128 = 16384 tiles > dense_max -> exercises the vectorized
+    """128x128 = 16384 tiles > KNN_DENSE_MAX -> exercises the vectorized
     grid-ring search, incl. outside-territory points (e_p > 0)."""
     idx = TileIndex.regular_grid(T, 128, 128)
     _check_knn_tier(spark, idx, k=5, nx=128, ny=128)
 
 
 def test_knn_coarse_cell_strtree_path_matches_bruteforce(spark):
-    """An index without a GridSpec and > dense_max tiles -> exercises the
+    """An index without a GridSpec and > KNN_DENSE_MAX tiles -> exercises the
     coarse-cell + STRtree expanding-margin search."""
     frame = datagen.grid_tile_index(T, 80, 80)  # 6400 > 4096
     idx = TileIndex(frame)  # no grid: irregular path

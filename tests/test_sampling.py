@@ -136,9 +136,9 @@ def test_domain_cap_matches_duckdb(spark):
 def test_cap_per_key_exact_and_partition_independent(spark):
     """cap_per_key == the window-rank reference on a synthetic skewed
     frame (one key with 2000 rows, one with 3), under two different
-    partitionings, and the escalation guard path (absurd negative
-    margin => first threshold keeps nothing => the loop recovers and
-    the result is still exact)."""
+    partitionings, and the short-key rescue (absurd negative margin =>
+    the threshold flags nothing => every row of the key becomes a
+    candidate and the result is still exact)."""
     import hashlib
 
     from batch3dfier_spark.operators.sampling import cap_per_key
@@ -167,7 +167,7 @@ def test_cap_per_key_exact_and_partition_independent(spark):
             .toPandas().sort_values("doc_id").reset_index(drop=True)
         )
         pd.testing.assert_frame_equal(got, ref, check_dtype=False)
-    # guard path: margin so wrong the first candidate filter is empty
+    # rescue path: margin so wrong the candidate flag is empty
     got = (
         cap_per_key(
             spark.createDataFrame(pdf[["doc_id", "key"]]), cap=15,
@@ -180,8 +180,8 @@ def test_cap_per_key_exact_and_partition_independent(spark):
 
 
 def test_cap_per_key_caches_base(spark):
-    """Round-5 verdict #6: the hashed base is materialized once (a
-    localCheckpoint) so the guard count and the final plan reuse ONE
+    """The hashed base is materialized once (a localCheckpoint) so the
+    per-key counts, the flagged counts and the final rows reuse ONE
     scan — the returned frame's plan must read the checkpointed RDD,
     not re-hash the input."""
     from batch3dfier_spark.operators.sampling import cap_per_key
@@ -197,6 +197,27 @@ def test_cap_per_key_caches_base(spark):
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "LogicalRDD" in plan and "sha2" not in plan, plan
     assert out.count() == 10 + 10
+
+
+def test_cap_per_key_is_lazy(spark, docs):
+    """Calling cap_per_key submits no Spark job: the short-key rescue is
+    part of the returned plan, not a driver-side check.  The same job
+    group then sees the jobs of the action that consumes the result."""
+    from batch3dfier_spark.operators.sampling import cap_per_key
+
+    sc = spark.sparkContext
+    group = "test_cap_per_key_is_lazy"
+    sc.setJobGroup(group, group)
+    try:
+        out = cap_per_key(docs, cap=3, key_col="source",
+                          row_key_col="doc_id", seed="lazy")
+        at_call = list(sc.statusTracker().getJobIdsForGroup(group))
+        n = out.count()
+        after_action = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert at_call == [], at_call
+    assert after_action and n > 0
 
 
 def test_cap_per_key_leaves_no_cache_entry(spark):

@@ -8,6 +8,8 @@ summarize the properties that matter at 100 TB:
 - Python eval nodes (ArrowEval/BatchEval/FlatMapsInPandas/MapInPandas)
   — anything outside JVM codegen
 - parquet PushedFilters — whether predicates reach the scan
+- checkpointed — whether the plan scans a localCheckpoint, i.e. some
+  of the query's work ran when it was built and is not counted here
 
 Usage: python tools/explain_audit.py [sf_dir] > PLANS.md
 """
@@ -36,6 +38,17 @@ def audit_plan(plan: str) -> dict:
     return out
 
 
+def scans_checkpoint(df) -> int:
+    """1 when a leaf of `df`'s plan is a locally checkpointed RDD."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if (leaf.getClass().getSimpleName() == "LogicalRDD"
+                and leaf.rdd().isLocallyCheckpointed()):
+            return 1
+    return 0
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     from batch3dfier_spark.session import get_spark
@@ -50,7 +63,8 @@ def main() -> None:
         try:
             df = fn(spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
-            rows.append((name, audit_plan(plan)))
+            rows.append((name, {**audit_plan(plan),
+                                "checkpointed": scans_checkpoint(df)}))
         except Exception as ex:  # noqa: BLE001
             rows.append((name, {"error": str(ex)[:80]}))
 
@@ -61,15 +75,17 @@ def main() -> None:
     print("shuffle is a full network pass over the fact table; Python")
     print("nodes are Arrow-vectorized pandas UDFs (never per-row).")
     print()
-    print("| query | shuffles | broadcast joins | sort-merge | python nodes | pushed filters |")
-    print("|---|---|---|---|---|---|")
+    print("| query | shuffles | broadcast joins | sort-merge | python nodes "
+          "| pushed filters | checkpointed |")
+    print("|---|---|---|---|---|---|---|")
     for name, a in rows:
         if "error" in a:
-            print(f"| {name} | error: {a['error']} | | | | |")
+            print(f"| {name} | error: {a['error']} | | | | | |")
             continue
         print(
             f"| {name} | {a['shuffles']} | {a['bcast_joins']} | {a['smj']} "
-            f"| {a['python_nodes']} | {a['pushed_filters']} |"
+            f"| {a['python_nodes']} | {a['pushed_filters']} "
+            f"| {a['checkpointed']} |"
         )
     print()
     print("Notes:")
@@ -85,8 +101,10 @@ def main() -> None:
     print("  with a localCheckpoint per round, so the audited final plan is")
     print("  just the checkpointed result scan.")
     print("- an intermediate read twice is localCheckpointed (session.py")
-    print("  lifetime rule); its stages run when the query is built and")
-    print("  only the plan above the checkpoint is counted here.")
+    print("  lifetime rule); with AQE its input's shuffle stages run when")
+    print("  the query is built and only the plan above the checkpoint is")
+    print("  counted here.  `checkpointed` = 1 marks those rows: their")
+    print("  counts are a lower bound on the query's work.")
     spark.stop()
 
 

@@ -2,7 +2,9 @@
 
 Everything here comes in two twins:
 - a Spark `Column` expression builder (JVM-side, whole-stage codegen —
-  the hot path at 100 TB), and
+  the hot path at 100 TB); for the geocode that is
+  `operators/tiler.with_geocode`, built from `geocode_key` and `TWO32`,
+  and
 - a numpy/pandas implementation (the duckdb/pandas oracle + datagen).
 
 Both are pure functions of their inputs; tests assert they agree.
@@ -10,10 +12,9 @@ Both are pure functions of their inputs; tests assert they agree.
 
 from .geocode import (  # noqa: F401
     GEOCODE_TS_FMT,
-    geocode_cols,
+    TWO32,
+    geocode_key,
     geocode_np,
-    hash64_col,
-    hash64_np,
 )
 from .text import (  # noqa: F401
     extract_text_cols,

@@ -7,8 +7,9 @@ geocode (x, y) derived from sha256(url + "|" + warc_ts).
 
 Two twin implementations that agree bit-for-bit:
 
-- `geocode_cols`: pure Spark Column expressions (sha2/conv/substring) —
-  runs JVM-side inside whole-stage codegen, no Python in the hot path.
+- Spark: `operators/tiler.with_geocode` hashes `geocode_key` with sha2
+  and maps the halves through `TWO32` — JVM-side inside whole-stage
+  codegen, no Python in the hot path.
 - `geocode_np`: hashlib + numpy — used by datagen and the test oracles.
 
 The 64-bit hash splits into two 32-bit halves: the first 8 hex chars
@@ -33,29 +34,9 @@ _GEOCODE_TS_FMT_PY = "%Y-%m-%dT%H:%M:%SZ"
 TWO32 = float(1 << 32)
 
 
-def _key_col(url: Column, warc_ts: Column) -> Column:
+def geocode_key(url: Column, warc_ts: Column) -> Column:
+    """The hashed geocode key, url + "|" + warc_ts (GEOCODE_TS_FMT)."""
     return F.concat(url, F.lit("|"), F.date_format(warc_ts, GEOCODE_TS_FMT))
-
-
-def hash64_col(url: Column, warc_ts: Column) -> Column:
-    """First 16 hex chars of sha256(key) as a bigint (63-bit safe? the
-    top bit may be set for 16 chars, so we expose x/y halves instead —
-    this helper returns the *first 15* chars = 60 bits for generic use)."""
-    return F.conv(F.substring(F.sha2(_key_col(url, warc_ts), 256), 1, 15), 16, 10).cast(
-        "bigint"
-    )
-
-
-def geocode_cols(
-    url: Column, warc_ts: Column, territory: Rect
-) -> tuple[Column, Column]:
-    """(x, y) Column expressions — JVM-side, codegen-friendly."""
-    h = F.sha2(_key_col(url, warc_ts), 256)
-    hx = F.conv(F.substring(h, 1, 8), 16, 10).cast("double")
-    hy = F.conv(F.substring(h, 9, 8), 16, 10).cast("double")
-    x = F.lit(territory.xmin) + hx / F.lit(TWO32) * F.lit(territory.xmax - territory.xmin)
-    y = F.lit(territory.ymin) + hy / F.lit(TWO32) * F.lit(territory.ymax - territory.ymin)
-    return x, y
 
 
 def _keys_np(urls, warc_ts) -> list[bytes]:
@@ -71,16 +52,8 @@ def _keys_np(urls, warc_ts) -> list[bytes]:
     ]
 
 
-def hash64_np(urls, warc_ts) -> np.ndarray:
-    """Twin of hash64_col (first 15 hex chars -> int64)."""
-    return np.array(
-        [int(hashlib.sha256(k).hexdigest()[:15], 16) for k in _keys_np(urls, warc_ts)],
-        dtype=np.int64,
-    )
-
-
 def geocode_np(urls, warc_ts, territory: Rect) -> tuple[np.ndarray, np.ndarray]:
-    """Twin of geocode_cols (hashlib + numpy)."""
+    """Twin of `tiler.with_geocode` (hashlib + numpy)."""
     hexes = [hashlib.sha256(k).hexdigest() for k in _keys_np(urls, warc_ts)]
     hx = np.array([int(h[0:8], 16) for h in hexes], dtype=np.float64)
     hy = np.array([int(h[8:16], 16) for h in hexes], dtype=np.float64)

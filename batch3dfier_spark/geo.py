@@ -25,7 +25,6 @@ import numpy as np
 
 __all__ = [
     "Rect",
-    "point_in_rect_halfopen",
     "assign_points_to_grid",
     "points_in_rects_buffered",
     "point_in_polygon",
@@ -58,27 +57,13 @@ class Rect:
 
 # ---------------------------------------------------------------------------
 # Point-in-rectangle (the tile-membership rule)
+#
+# Half-open membership, xmin <= x < xmax AND ymin <= y < ymax, exactly
+# reproduces the reference rule "centroid strictly inside the tile OR on
+# its lower/left border" (footprints.py:256-265) for all non-corner
+# points, and resolves the reference's latent corner ambiguity to
+# exactly-one tile (see SURVEY.md section 7.3).
 # ---------------------------------------------------------------------------
-
-def point_in_rect_halfopen(
-    x: np.ndarray,
-    y: np.ndarray,
-    xmin: float,
-    ymin: float,
-    xmax: float,
-    ymax: float,
-) -> np.ndarray:
-    """Half-open membership: xmin <= x < xmax AND ymin <= y < ymax.
-
-    Exactly reproduces the reference rule "centroid strictly inside the
-    tile OR on its lower/left border" (footprints.py:256-265) for all
-    non-corner points, and resolves the reference's latent corner
-    ambiguity to exactly-one tile (see SURVEY.md section 7.3).
-    """
-    x = np.asarray(x, dtype=np.float64)
-    y = np.asarray(y, dtype=np.float64)
-    return (x >= xmin) & (x < xmax) & (y >= ymin) & (y < ymax)
-
 
 def assign_points_to_grid(
     x: np.ndarray,

@@ -69,7 +69,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["bm25_topk", "sql_bm25_topk"]
+__all__ = ["bm25_topk", "sql_bm25_topk", "token_occurrences"]
 
 # matched (token_index, tf) entries ride one int64: tidx * 2^44 + tf.
 # tf < 2^44 always (a doc would need 17.6e12 copies of one token);
@@ -84,7 +84,9 @@ _TIDX_MAX = 1 << 19
 _INCIDENCE_MAX = 1 << 24
 
 
-def _occurrences(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def token_occurrences(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, token) — one row per whitespace-separated token occurrence
+    of the trimmed text; NULL or blank text yields no rows."""
     t = F.trim(F.coalesce(F.col(text_col), F.lit("")))
     toks = F.when(
         F.length(t) == 0, F.array().cast("array<string>")
@@ -117,7 +119,7 @@ def bm25_topk(
 
     # query-term incidence, driver-side (queries are SMALL BY CONTRACT)
     qpdf = (
-        _occurrences(queries, qtext_col, qid_col)
+        token_occurrences(queries, qtext_col, qid_col)
         .withColumnRenamed(qid_col, "query_id")
         .distinct()
         .toPandas()
@@ -152,7 +154,7 @@ def bm25_topk(
     # dl + the packed matched entries.  The repartition parallelizes
     # the tokenize+partial-agg map stage when the source arrives as a
     # single small file.
-    occ = _occurrences(
+    occ = token_occurrences(
         docs.repartition(spark.sparkContext.defaultParallelism),
         text_col, id_col,
     )

@@ -174,8 +174,17 @@ def cap_per_key(
     base = df.withColumn(
         "_draw", hash_fraction_col(F.col(row_key_col), seed)
     ).localCheckpoint(eager=False)
+
+    def join_key(left: DataFrame, right: DataFrame, how: str) -> DataFrame:
+        # null-safe (<=>): NULL keys form one group, as in the window's
+        # PARTITION BY; a plain equi-join would drop them
+        r = right.withColumnRenamed(key_col, "_k")
+        return left.join(
+            r, F.col(key_col).eqNullSafe(F.col("_k")), how
+        ).drop("_k")
+
     counts = base.groupBy(key_col).agg(F.count("*").alias("_n"))
-    joined = base.join(counts, on=key_col, how="inner")
+    joined = join_key(base, counts, "inner")
 
     small = joined.where(F.col("_n") <= F.lit(cap)).select(*out_cols)
     big = joined.where(F.col("_n") > F.lit(cap))
@@ -189,7 +198,7 @@ def cap_per_key(
     n_flagged = flagged.where(F.col("_in")).groupBy(key_col).agg(
         F.count("*").alias("_c")
     )
-    cand = flagged.join(n_flagged, on=key_col, how="left").where(
+    cand = join_key(flagged, n_flagged, "left").where(
         F.col("_in") | (F.coalesce(F.col("_c"), F.lit(0)) < F.lit(cap))
     )
     w = (

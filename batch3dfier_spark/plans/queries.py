@@ -3892,14 +3892,14 @@ def q_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash), probed with the distinct tokens of the doc_id%101 docs.
     Build = one map-only explode + a <= depth*width-cell hash agg;
     probe = broadcast sketch + per-probe min."""
-    from ..operators.bm25 import _occurrences
+    from ..operators.bm25 import token_occurrences
     from ..operators.sketches import cms_build, cms_estimate
 
     docs = _docs(spark, sf_dir)
-    occ = _occurrences(docs, "text", "doc_id").select("token")
+    occ = token_occurrences(docs, "text", "doc_id").select("token")
     cms = cms_build(occ, "token", depth=4, width=256)
     probes = (
-        _occurrences(docs.where(F.col("doc_id") % 101 == 0),
+        token_occurrences(docs.where(F.col("doc_id") % 101 == 0),
                      "text", "doc_id")
         .select("token").distinct()
     )

@@ -38,7 +38,8 @@ def get_spark(
 ) -> SparkSession:
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(cores, 8)
-    # catalog tables (bucketed ingest) go to a scratch warehouse, not cwd
+    # catalog tables (operators/incremental) go to a scratch warehouse,
+    # not cwd
     warehouse = os.environ.get("SPARK_GRAFT_WAREHOUSE") or os.path.join(
         tempfile.gettempdir(), f"b3d_warehouse_{os.getpid()}"
     )

@@ -21,11 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..geo import Rect
 from ..operators.tiler import TileIndex, assign_tiles, with_geocode
 
-__all__ = [
-    "ingest_pages",
-    "read_geocoded",
-    "ingest_pages_bucketed",
-]
+__all__ = ["ingest_pages", "read_geocoded"]
 
 
 def ingest_pages(
@@ -52,44 +48,3 @@ def ingest_pages(
 def read_geocoded(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
-
-def ingest_pages_bucketed(
-    spark: SparkSession,
-    in_path: str,
-    table: str,
-    index: TileIndex,
-    territory: Rect,
-    n_buckets: int = 64,
-    analyze: bool = True,
-) -> None:
-    """Like ingest_pages, but writes a bucketed catalog table
-    (bucketBy(tile_gid) + sortBy) — Spark's durable hash-partitioning
-    metadata.  Every later groupBy('tile_gid') / self-join / rollup
-    join-back over this table is SHUFFLE-FREE: the scan reports
-    HashPartitioning(tile_gid) and Catalyst drops the Exchange
-    (asserted in tests/test_bucketed.py).
-
-    This is the 100 TB steady-state layout for per-tile dispatch —
-    the analog of the reference keeping per-tile views permanently
-    materialized over a GiST-indexed table (footprints.py:153-284):
-    pay one clustering shuffle at ingest, never again.
-    """
-    df = spark.read.parquet(in_path)
-    a = assign_tiles(with_geocode(df, territory), index)
-    (
-        a.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, "tile_gid")
-        .sortBy("tile_gid")
-        .saveAsTable(table)
-    )
-    if analyze:
-        # D4 parity (reference: ANALYZE after index build, db.py:67-77):
-        # table-level rowCount/sizeInBytes plus tile_gid column stats
-        # (distinct count, min/max) feed Catalyst's cost-based optimizer
-        # — broadcast-vs-sort-merge decisions and join reordering read
-        # these instead of guessing from file sizes
-        spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS")
-        spark.sql(
-            f"ANALYZE TABLE {table} COMPUTE STATISTICS FOR COLUMNS tile_gid"
-        )

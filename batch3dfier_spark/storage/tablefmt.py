@@ -486,85 +486,12 @@ class IcebergishTable:
             return pd.DataFrame(columns=_LINEAGE_COLS)
         return pd.DataFrame(rows)[_LINEAGE_COLS]
 
-    def lineage_row_bound(self) -> int:
-        """Upper bound on committed lineage rows, from pointer stats
-        alone where present (manifests are opened only for pointers
-        without stats, e.g. an exported snapshot) — lets callers decide
-        between a driver-side completed set and a distributed anti-join
-        without materializing either."""
-        sid = self._current_sid()
-        if sid is None:
-            return 0
-        total = 0
-        cur: int | None = sid
-        while cur is not None:
-            snap = self._raw_snapshot(cur)
-            stats = snap.get("stats")
-            if stats is not None:
-                total += stats.get("n_rows", 0)
-            elif snap["manifest"] is not None:
-                f, r = self._commit_content(snap, None, None)
-                total += len(r)
-            cur = snap["parent"]
-        return total
-
     def completed_tiles(self) -> set[int]:
         lin = self.lineage()
         if lin.empty:
             return set()
         done = lin[lin["status"].isin(["ok", "empty", "skipped"])]
         return set(done["tile_gid"].astype(int))
-
-    def completed_tiles_df(self, spark):
-        """Distinct completed tile_gids as a Spark DataFrame — the
-        scale-path resume input: staged-lineage parquet parts are read
-        by Spark DIRECTLY (executor-side, nothing materialized on the
-        driver); inline-JSON lineage rows (small by construction — they
-        only come from the driver-side commit() API) ride along via
-        createDataFrame.  Returns None for an empty table."""
-        from pyspark.sql import functions as F
-
-        sid = self._current_sid()
-        if sid is None:
-            return None
-        part_paths: list[str] = []
-        inline: list[tuple[int, str]] = []
-        cur: int | None = sid
-        while cur is not None:
-            snap = self._raw_snapshot(cur)
-            name = snap["manifest"]
-            if name is not None:
-                m = self._manifest(name)
-                if "lineage_parquet" in m or "data_files" in m:
-                    part_paths.extend(
-                        p["path"] for p in m.get("lineage_parquet", [])
-                    )
-                else:
-                    inline.extend(
-                        (int(r["tile_gid"]), str(r["status"]))
-                        for r in m["lineage"]
-                    )
-            cur = snap["parent"]
-        dfs = []
-        if part_paths:
-            dfs.append(
-                spark.read.parquet(*[self._abs(p) for p in part_paths])
-                .select("tile_gid", "status")
-            )
-        if inline:
-            dfs.append(
-                spark.createDataFrame(inline, "tile_gid bigint, status string")
-            )
-        if not dfs:
-            return None
-        df = dfs[0]
-        for d in dfs[1:]:
-            df = df.unionByName(d)
-        return (
-            df.where(F.col("status").isin("ok", "empty", "skipped"))
-            .select("tile_gid")
-            .distinct()
-        )
 
     def read(self, spark, snapshot_id: int | None = None,
              min_tile: int | None = None, max_tile: int | None = None):

@@ -65,10 +65,10 @@ def main() -> None:
 
     # ---------------- bm25 components ----------------
     if sel("bm25"):
-        from batch3dfier_spark.operators.bm25 import _occurrences, bm25_topk
+        from batch3dfier_spark.operators.bm25 import bm25_topk, token_occurrences
 
         def bm25_occ():
-            noop(_occurrences(docs(), "text", "doc_id"))
+            noop(token_occurrences(docs(), "text", "doc_id"))
 
         def bm25_full_k5():
             qs = docs().where(F.col("doc_id") % 97 == 0).select(

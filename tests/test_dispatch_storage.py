@@ -397,9 +397,7 @@ def test_lineage_is_dedrivered_and_correct_at_10k_tiles(spark, tmp_path):
     import numpy as np
 
     # the structural guarantee, stated as a test: the hot path never
-    # calls toPandas()/collect() on per-tile data (the skip-intersection
-    # collect runs on a frame filtered to the skip list, which is
-    # driver-sized input by definition)
+    # calls toPandas() on per-tile data
     src = inspect.getsource(run_tiles)
     assert "toPandas" not in src
 
@@ -431,13 +429,59 @@ def test_lineage_is_dedrivered_and_correct_at_10k_tiles(spark, tmp_path):
     assert len(table.files()) == n_ok
     assert table.completed_tiles() == set(range(1, n_tiles + 1))
     # resume: a second run over the same work list processes NOTHING new
-    # (and takes the distributed left_anti path — history > 10k rows)
+    # (all 10 007 completed tiles leave through the one left_anti join)
     lin2 = run_tiles(df, sparse_processor, table)
     assert len(lin2) == n_tiles  # no extra rows
-    assert table.lineage_row_bound() == n_tiles
     # pruned read: one tile's files without walking everything
     fs = table.files(min_tile=700, max_tile=700)
     assert len(fs) == 1 and "tile_gid=700" in fs[0]
+
+
+def test_resume_excludes_completed_and_skips_with_one_join(
+        spark, tmp_path, monkeypatch):
+    """Resume over a 3 000-tile history: a 20-tile frame with 10 tiles
+    done and a skip list holding one done and one new tile processes
+    exactly the 9 new, unskipped tiles and records the new skip.  The
+    completed set never becomes an isin predicate (PySpark builds one
+    with a JVM call per literal)."""
+    from batch3dfier_spark.storage.tablefmt import LineageRow
+
+    table = IcebergishTable(str(tmp_path / "resume"))
+    table.commit([], [
+        LineageRow(tile_gid=t, partition_id=0, rows_in=1, rows_out=1,
+                   wall_ms=1.0, status="ok")
+        for t in range(1, 3_001)
+    ])
+    tiles = list(range(2_991, 3_011))  # 2 991..3 000 done, 3 001..3 010 new
+    df = spark.createDataFrame(pd.DataFrame({
+        "url": [f"u{t}-{i}" for t in tiles for i in range(2)],
+        "text": ["x y"] * (2 * len(tiles)),
+        "tile_gid": [t for t in tiles for _ in range(2)],
+    }))
+
+    isin_sizes = []
+    column_cls = type(F.col("tile_gid"))
+    real_isin = column_cls.isin
+
+    def counting_isin(self, *cols):
+        vals = cols[0] if len(cols) == 1 and isinstance(
+            cols[0], (list, set, tuple)) else cols
+        isin_sizes.append(len(vals))
+        return real_isin(self, *cols)
+
+    monkeypatch.setattr(column_cls, "isin", counting_isin)
+    lin = run_tiles(df, tile_processor, table, skip_tiles={2_995, 3_005})
+    monkeypatch.undo()
+
+    new = lin[lin["snapshot_id"] == 2]
+    processed = set(new.loc[new["status"] == "ok", "tile_gid"].astype(int))
+    assert processed == set(range(3_001, 3_011)) - {3_005}
+    assert new.loc[new["status"] == "skipped", "tile_gid"].tolist() == [3_005]
+    assert len(new) == 10
+    # the done skip tile keeps its one committed 'ok' row
+    assert lin.loc[lin["tile_gid"] == 2_995, "status"].tolist() == ["ok"]
+    assert len(lin) == 3_010
+    assert max(isin_sizes, default=0) < 3_000, isin_sizes
 
 
 def test_pruned_chain_read_skips_disjoint_manifests(tmp_path):

@@ -10,7 +10,6 @@ from batch3dfier_spark.geo import (
     STRtree,
     assign_points_to_grid,
     point_in_polygon,
-    point_in_rect_halfopen,
     point_rect_distance,
     points_in_rects_buffered,
     polygon_area,

@@ -179,6 +179,35 @@ def test_cap_per_key_exact_and_partition_independent(spark):
     pd.testing.assert_frame_equal(got, ref, check_dtype=False)
 
 
+def test_cap_per_key_keeps_null_key_rows(spark):
+    """NULL keys form one group, as in PARTITION BY: keys [NULL x5,
+    'a' x3] with cap 2 keep two NULL-key rows and two 'a' rows, equal
+    to the DuckDB ROW_NUMBER twin."""
+    import duckdb
+
+    from batch3dfier_spark.operators.sampling import cap_per_key
+    from batch3dfier_spark.plans.oracle import compare
+    from batch3dfier_spark.plans.queries import _sql_hex15
+
+    pdf = pd.DataFrame({"doc_id": range(8), "key": [None] * 5 + ["a"] * 3})
+    df = spark.createDataFrame(pdf, "doc_id bigint, key string")
+    got = cap_per_key(df, cap=2, key_col="key", row_key_col="doc_id",
+                      seed="nk").toPandas()
+    con = duckdb.connect()
+    con.register("t", pdf)
+    exp = con.sql(f"""
+        SELECT doc_id, key FROM (
+          SELECT doc_id, key,
+                 ROW_NUMBER() OVER (PARTITION BY key
+                                    ORDER BY {_sql_hex15("doc_id", "nk")}, doc_id)
+                   AS rn
+          FROM t)
+        WHERE rn <= 2
+    """).df()
+    assert len(exp) == 4
+    assert compare(got, exp) == []
+
+
 def test_cap_per_key_caches_base(spark):
     """The hashed base is materialized once (a localCheckpoint) so the
     per-key counts, the flagged counts and the final rows reuse ONE

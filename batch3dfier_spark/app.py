@@ -41,9 +41,9 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from .datagen import REF_TERRITORY
-from .geo import Rect
+from .geo import Rect, polygon_bbox
 from .operators import tiler
-from .operators.dispatch import run_tiles, skip_report
+from .operators.dispatch import run_tiles, skip_report, tile_gid_frame
 from .operators.tiler import TileIndex
 from .storage.tablefmt import IcebergishTable
 
@@ -129,17 +129,26 @@ def build_work_df(spark, cfg: dict):
     assigned = tiler.assign_tiles(geo, index, buffer=float(cfg["buffer"]))
     assigned = assigned.where(assigned.tile_gid.isNotNull())
 
+    def select(gids):
+        # one broadcast left_semi join, the rule run_tiles resumes by
+        keep = F.broadcast(tile_gid_frame(spark, gids))
+        return assigned.join(keep, on="tile_gid", how="left_semi")
+
     mode = cfg["mode"]
     union = False
     if "extent" in mode:
         poly = load_extent_polygon(mode["extent"])
         sel = tiler.select_tiles(index, poly)
         units = sel["unit"].tolist()
-        # pushdown: prune to candidate tiles BEFORE the polygon UDF
-        assigned = assigned.where(
-            assigned.tile_gid.isin([int(g) for g in sel["gid"]])
+        # pushdown: only points in the extent's bbox reach the polygon
+        # UDF (Catalyst moves a deterministic filter below the semi
+        # join, so the join alone would not prune what the UDF reads)
+        bb = polygon_bbox(poly)
+        near = select(sel["gid"]).where(
+            F.col("x").between(bb.xmin, bb.xmax)
+            & F.col("y").between(bb.ymin, bb.ymax)
         )
-        assigned = tiler.extent_filter(assigned, poly)
+        assigned = tiler.extent_filter(near, poly)
         union = tiler.union_or_split(sel, index, poly)
     else:
         tl = mode["tile_list"]
@@ -151,7 +160,8 @@ def build_work_df(spark, cfg: dict):
             bad = [u for u in units if u not in known]
             if bad:
                 raise ValueError(f"unknown tile units: {bad}")
-            assigned = assigned.where(assigned.tile_unit.isin(units))
+            gid_of = index.frame.set_index("unit")["gid"]
+            assigned = select(gid_of[units])
     return assigned, units, union, index
 
 

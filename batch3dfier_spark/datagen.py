@@ -1,13 +1,12 @@
 """Deterministic synthetic fixtures (FIXTURES.md; seed-free pure functions).
 
 Generates the Common-Crawl-style pages table (url, warc_ts, html, text,
-lang) plus the tile/asset indexes and clip extents that mirror the
-reference's example_data corpus:
+lang) plus the territory, grid tile indexes and clip extents that
+mirror the reference's example_data corpus:
 
-- territory + 4-tile footprint index  <- example_data/bag_index.geojson
-  (2x2 grid over [120625,121250] x [485937.5,486718.75], EPSG:28992)
-- 2-tile asset index                  <- example_data/ahn_index.geojson
-  (north/south halves) + file_date (bag3d.py:96-106)
+- territory                           <- example_data/bag_index.geojson
+  ([120625,121250] x [485937.5,486718.75], EPSG:28992; its 4-tile and
+  2-tile asset indexes are test fixtures, tests/oracle_kernels.py)
 - small/large clip extents            <- example_data/extent_{small,large}.geojson
 - border-case golden corpus           <- the st_containsproperly-OR-border
   rule (footprints.py:256-265), FIXTURES.md section 5
@@ -20,60 +19,26 @@ byte-identical `text` invariant depends on this.
 from __future__ import annotations
 
 import hashlib
-from datetime import datetime, timedelta
+from datetime import datetime
 
 import numpy as np
 import pandas as pd
 
-from .functions.text import extract_text_np, render_html_np
+from .functions.text import render_html_np
 from .geo import Rect
 
 __all__ = [
     "REF_TERRITORY",
-    "ref_tile_index",
-    "ref_asset_index",
     "EXTENT_SMALL",
     "EXTENT_LARGE",
     "BORDER_CORPUS",
     "grid_tile_index",
-    "gen_pages",
-    "write_pages_parquet",
+    "gen_pages_range",
 ]
 
 # The reference's territory: example_data/bag_index.geojson covers
-# exactly this rectangle, split 2x2 at x=120937.5 / y=486328.125.
+# exactly this rectangle.
 REF_TERRITORY = Rect(120625.0, 485937.5, 121250.0, 486718.75)
-_SPLIT_X = 120937.5
-_SPLIT_Y = 486328.125
-
-
-def ref_tile_index() -> pd.DataFrame:
-    """The reference's 4 footprint tiles verbatim (bag_index.geojson)."""
-    t = REF_TERRITORY
-    rows = [
-        (1, "25gn1_c1", t.xmin, t.ymin, _SPLIT_X, _SPLIT_Y),  # SW
-        (2, "25gn1_c2", _SPLIT_X, t.ymin, t.xmax, _SPLIT_Y),  # SE
-        (3, "25gn1_c3", _SPLIT_X, _SPLIT_Y, t.xmax, t.ymax),  # NE
-        (4, "25gn1_c4", t.xmin, _SPLIT_Y, _SPLIT_X, t.ymax),  # NW
-    ]
-    return pd.DataFrame(rows, columns=["gid", "unit", "xmin", "ymin", "xmax", "ymax"])
-
-
-def ref_asset_index(unavailable: tuple[str, ...] = ()) -> pd.DataFrame:
-    """The reference's 2 point-cloud tiles (ahn_index.geojson): `25gn1_a`
-    = north half, `25gn1_b` = south half; file_date per bag3d.py:96-106;
-    `available` supports skip-bookkeeping tests (config.py:102-109)."""
-    t = REF_TERRITORY
-    rows = [
-        (1, "25gn1_a", t.xmin, _SPLIT_Y, t.xmax, t.ymax),
-        (2, "25gn1_b", t.xmin, t.ymin, t.xmax, _SPLIT_Y),
-    ]
-    df = pd.DataFrame(rows, columns=["gid", "unit", "xmin", "ymin", "xmax", "ymax"])
-    base = datetime(2024, 6, 1)
-    df["file_date"] = [base + timedelta(days=int(g)) for g in df["gid"]]
-    df["available"] = ~df["unit"].isin(unavailable)
-    return df
-
 
 # Clip polygons, vertex-for-vertex from the reference's example_data
 # (extent_small.geojson / extent_large.geojson; also tests/test_config.py:26).
@@ -154,33 +119,13 @@ _MASK64 = (1 << 64) - 1
 _MIX = 0x9E3779B97F4A7C15
 
 
-def _body_from_digest(digest: bytes, max_sentences: int) -> str:
-    """1..max_sentences sentences of 3..12 words, all indices derived
-    from the sha256 digest via a 64-bit LCG — pure function of the url.
-    Single-row twin of `_bodies_from_digests` (kept as the readable
-    spec; the batch path must stay byte-identical to this)."""
-    n_sent = 1 + digest[1] % max_sentences
-    seed = int.from_bytes(digest[:8], "big")
-    lens = 3 + np.frombuffer(digest, dtype=np.uint8)[
-        np.arange(n_sent) % 32
-    ].astype(np.int64) % 10
-    total = int(lens.sum())
-    ks = np.arange(total, dtype=np.uint64)
-    idx = ((np.uint64(seed) + ks * np.uint64(_MIX)) & np.uint64(_MASK64)) >> np.uint64(58)
-    words = np.array(_WORDS)[idx.astype(np.int64)]
-    sentences = []
-    pos = 0
-    for ln in lens:
-        sentences.append(" ".join(words[pos : pos + int(ln)]) + ".")
-        pos += int(ln)
-    return " ".join(sentences)
-
-
 def _bodies_from_digests(digests: list[bytes], max_sentences: int) -> list[str]:
-    """Vectorized batch twin of `_body_from_digest` — one numpy pass over
-    all rows' sentences/words instead of per-row loops (the generator is
-    on the bench critical path; the per-row version was ~10x slower).
-    Byte-identical to the per-row spec (tests/test_datagen.py)."""
+    """Page bodies, 1..max_sentences sentences of 3..12 words, all
+    indices derived from the sha256 digest via a 64-bit LCG — a pure
+    function of the url.  One numpy pass over all rows' sentences/words
+    instead of per-row loops (the generator is on the bench critical
+    path; the per-row version was ~10x slower).  Byte-identical to the
+    per-row spec kept in tests/test_datagen.py."""
     n = len(digests)
     if n == 0:
         return []
@@ -245,32 +190,12 @@ def gen_pages_range(
     bodies = pd.Series(_bodies_from_digests(digests, max_sentences))
     html_str = render_html_np(titles, bodies)
     html = html_str.map(lambda s: s.encode("utf-8"))
-    # text == extract_text_np(html) by construction (render is the exact
+    # text == extract_text_cols(html) by construction (render is the exact
     # inverse of the extraction regexes; asserted in tests/test_datagen.py)
     text = titles + "\n" + bodies.str.replace(". ", ".\n", regex=False)
     return pd.DataFrame(
         {"url": urls, "warc_ts": warc_ts, "html": html, "text": text, "lang": langs}
     )
-
-
-def gen_pages(n: int, n_hosts: int = 100, max_sentences: int = 50) -> pd.DataFrame:
-    """The pages table: (url, warc_ts, html: bytes, text, lang).
-
-    `text` is generated as `extract_text_np(html)` — the byte-identical
-    invariant holds by construction and the engine must reproduce it.
-    """
-    return gen_pages_range(0, n, n_hosts=n_hosts, max_sentences=max_sentences)
-
-
-def write_pages_parquet(path: str, n: int, **kw) -> None:
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    df = gen_pages(n, **kw)
-    # Spark's vectorized parquet reader rejects NANOS timestamps
-    df["warc_ts"] = df["warc_ts"].astype("datetime64[us]")
-    tbl = pa.Table.from_pandas(df, preserve_index=False)
-    pq.write_table(tbl, path)
 
 
 def gen_pages_spark(spark, n: int, out_path: str, n_hosts: int = 1000,

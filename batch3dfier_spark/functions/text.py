@@ -10,10 +10,10 @@ and the extraction contract is:
 
     text = title + "\\n" + body with every ". " turned into ".\\n"
 
-Twins:
 - `extract_text_cols`: Spark Column expressions (decode + regexp_extract
-  + replace) — JVM-side, no Python.
-- `extract_text_np`: vectorized pandas string kernels (oracle + datagen).
+  + replace) — JVM-side, no Python.  Its pandas twin is a test oracle
+  in tests/oracle_kernels.py.
+- `render_html_np`: the fixture HTML, for datagen.
 """
 
 from __future__ import annotations
@@ -41,14 +41,6 @@ def extract_text_cols(html: Column) -> Column:
     title = F.regexp_extract(s, _TITLE_RE, 1)
     body = F.regexp_extract(s, _BODY_RE, 1)
     return F.concat(title, F.lit("\n"), F.replace(body, F.lit(". "), F.lit(".\n")))
-
-
-def extract_text_np(html: pd.Series) -> pd.Series:
-    """Twin of extract_text_cols (vectorized pandas, no per-row Python)."""
-    s = html.map(lambda b: b.decode("utf-8") if isinstance(b, (bytes, bytearray)) else b)
-    title = s.str.extract(_TITLE_RE, expand=False)
-    body = s.str.extract(_BODY_RE, expand=False)
-    return title + "\n" + body.str.replace(". ", ".\n", regex=False)
 
 
 def render_html_np(titles: pd.Series, bodies: pd.Series) -> pd.Series:

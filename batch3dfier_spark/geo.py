@@ -8,8 +8,7 @@ delegates to PostGIS (balazsdukai/batch3dfier):
   edges (reference: batch3dfier/footprints.py:40-79, 256-265)
 - polygon intersects rectangle  <- st_intersects (config.py:333-341)
 - point in polygon              <- st_within (config.py:447-461)
-- centroid / area               <- st_centroid / st_area
-  (footprints.py:129, config.py:372)
+- area                          <- st_area (config.py:372)
 - STRtree                       <- the GiST indexes (db.sql:3357-3391)
 
 All kernels operate on numpy arrays (Arrow-batch friendly) and are used
@@ -25,13 +24,9 @@ import numpy as np
 
 __all__ = [
     "Rect",
-    "assign_points_to_grid",
-    "points_in_rects_buffered",
     "point_in_polygon",
     "polygon_area",
-    "polygon_centroid",
     "polygon_bbox",
-    "rects_overlap_pairs",
     "rect_intersects_polygon",
     "point_rect_distance",
     "STRtree",
@@ -53,74 +48,6 @@ class Rect:
 
     def buffered(self, b: float) -> "Rect":
         return Rect(self.xmin - b, self.ymin - b, self.xmax + b, self.ymax + b)
-
-
-# ---------------------------------------------------------------------------
-# Point-in-rectangle (the tile-membership rule)
-#
-# Half-open membership, xmin <= x < xmax AND ymin <= y < ymax, exactly
-# reproduces the reference rule "centroid strictly inside the tile OR on
-# its lower/left border" (footprints.py:256-265) for all non-corner
-# points, and resolves the reference's latent corner ambiguity to
-# exactly-one tile (see SURVEY.md section 7.3).
-# ---------------------------------------------------------------------------
-
-def assign_points_to_grid(
-    x: np.ndarray,
-    y: np.ndarray,
-    xmin: float,
-    ymin: float,
-    xmax: float,
-    ymax: float,
-    nx: int,
-    ny: int,
-) -> tuple[np.ndarray, np.ndarray]:
-    """O(1) tile assignment for a regular nx x ny grid.
-
-    Returns (col, row) int64 arrays; -1 where the point is outside the
-    territory under half-open semantics (right/top territory edges are
-    outside, matching per-tile half-open membership).
-    """
-    x = np.asarray(x, dtype=np.float64)
-    y = np.asarray(y, dtype=np.float64)
-    wx = (xmax - xmin) / nx
-    wy = (ymax - ymin) / ny
-    col = np.floor((x - xmin) / wx).astype(np.int64)
-    row = np.floor((y - ymin) / wy).astype(np.int64)
-    inside = (x >= xmin) & (x < xmax) & (y >= ymin) & (y < ymax)
-    # floor() can land on the right/top edge of the last cell from float
-    # round-off; clamp inside points, mark outside points -1.
-    np.clip(col, 0, nx - 1, out=col)
-    np.clip(row, 0, ny - 1, out=row)
-    col[~inside] = -1
-    row[~inside] = -1
-    return col, row
-
-
-def points_in_rects_buffered(
-    x: np.ndarray,
-    y: np.ndarray,
-    rects: np.ndarray,
-    buffer: float = 0.0,
-) -> tuple[np.ndarray, np.ndarray]:
-    """All (point_idx, rect_idx) pairs with the point inside the rect
-    expanded by `buffer` (half-open on the expanded bounds).
-
-    buffer=0 reproduces the reference's exactly-one-tile invariant for
-    grid tilings; buffer>0 yields multi-tile border assignments (the
-    clip-with-overlap mode).  `rects` is an (n, 4) float array of
-    (xmin, ymin, xmax, ymax).
-    """
-    x = np.asarray(x, dtype=np.float64)[:, None]
-    y = np.asarray(y, dtype=np.float64)[:, None]
-    r = np.asarray(rects, dtype=np.float64)
-    hit = (
-        (x >= r[None, :, 0] - buffer)
-        & (x < r[None, :, 2] + buffer)
-        & (y >= r[None, :, 1] - buffer)
-        & (y < r[None, :, 3] + buffer)
-    )
-    return np.nonzero(hit)
 
 
 # ---------------------------------------------------------------------------
@@ -168,20 +95,6 @@ def polygon_area(poly: np.ndarray) -> float:
     p = _ring(poly)
     x, y = p[:, 0], p[:, 1]
     return float(abs(np.dot(x, np.roll(y, -1)) - np.dot(y, np.roll(x, -1))) / 2.0)
-
-
-def polygon_centroid(poly: np.ndarray) -> tuple[float, float]:
-    """Area-weighted centroid (shoelace) — the st_centroid analog."""
-    p = _ring(poly)
-    x, y = p[:, 0], p[:, 1]
-    xn, yn = np.roll(x, -1), np.roll(y, -1)
-    cross = x * yn - xn * y
-    a = cross.sum() / 2.0
-    if a == 0.0:  # degenerate: fall back to vertex mean
-        return float(x.mean()), float(y.mean())
-    cx = ((x + xn) * cross).sum() / (6.0 * a)
-    cy = ((y + yn) * cross).sum() / (6.0 * a)
-    return float(cx), float(cy)
 
 
 def polygon_bbox(poly: np.ndarray) -> Rect:
@@ -280,23 +193,6 @@ def rect_intersects_polygon(rects: np.ndarray, poly: np.ndarray) -> np.ndarray:
             hit |= _segments_intersect(a, b, q1, q2).any(axis=1)
         out[np.nonzero(todo)[0]] = hit
     return out
-
-
-def rects_overlap_pairs(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """All (i, j) with rect a[i] intersecting rect b[j] (closed bounds).
-
-    The interval-overlap join the reference does as st_intersects between
-    footprint-tile and pointcloud-tile indexes (config.py:202-259).
-    """
-    a = np.asarray(a, dtype=np.float64)
-    b = np.asarray(b, dtype=np.float64)
-    hit = (
-        (a[:, None, 0] <= b[None, :, 2])
-        & (b[None, :, 0] <= a[:, None, 2])
-        & (a[:, None, 1] <= b[None, :, 3])
-        & (b[None, :, 1] <= a[:, None, 3])
-    )
-    return np.nonzero(hit)
 
 
 def point_rect_distance(x: np.ndarray, y: np.ndarray, rects: np.ndarray) -> np.ndarray:

@@ -19,7 +19,8 @@ result-assembly pipeline), re-expressed Spark-first:
   begindatumtijdvakgeldigheid < ahn_file_date` — the
   bag3d_valid_height view)
 - S8 CSV export            <- batch3dfier/bag3d.py:199-236
-  (`COPY ... TO STDOUT CSV HEADER`)
+  (`COPY ... TO STDOUT CSV HEADER`): the caller's
+  `df.write.option("header", True).csv(path)`, no wrapper
 
 Scale notes (100 TB): worker CSVs arrive as many small files — Spark's
 CSV scan parallelizes over files and `spark.sql.files.maxPartitionBytes`
@@ -45,7 +46,6 @@ __all__ = [
     "stamp_file_date",
     "assemble_bag3d",
     "valid_height_filter",
-    "export_csv",
 ]
 
 # the reference heights-table column set (bag3d.py:28-47): key + 6
@@ -129,10 +129,3 @@ def valid_height_filter(
         & (F.col(begin_col) < F.col(date_col))
     )
 
-
-def export_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
-    """S8: CSV export with header (bag3d.py:199-236).  single_file
-    coalesces to one output file like the reference's single COPY
-    stream — only for small results; at scale leave it partitioned."""
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").option("header", True).csv(path)

@@ -57,7 +57,6 @@ __all__ = [
     "minhash_near_dups",
     "simhash_signatures",
     "simhash_near_dups",
-    "shingle_set",
     "ngram_jaccard_pairs",
     "embedding_near_dups",
     "embedding_near_dups_lsh",
@@ -289,50 +288,24 @@ def paragraph_dedup(
     )
 
 
-def _shingle_hashes(text: str, k: int) -> np.ndarray:
-    """Distinct k-char shingle hashes (int64) of a document, vectorized:
-    one python-level pass builds the byte matrix, hashing is numpy."""
-    b = text.encode("utf-8", "ignore")
-    if len(b) < k:
-        b = b + b"\x00" * (k - len(b))
-    arr = np.frombuffer(b, dtype=np.uint8)
-    n = len(arr) - k + 1
-    # polynomial rolling hash over a sliding window, fully vectorized:
-    # h[i] = sum_j arr[i+j] * P^(k-1-j) mod 2^64 (wrapping)
-    P = 1099511628211
-    weights = np.empty(k, dtype=np.uint64)
-    w = 1
-    for j in range(k - 1, -1, -1):
-        weights[j] = w
-        w = (w * P) & 0xFFFFFFFFFFFFFFFF  # wrap mod 2^64 in python ints
-    idx = np.arange(n)[:, None] + np.arange(k)[None, :]
-    with np.errstate(over="ignore"):  # mod-2^64 wrap is intended
-        h = (arr[idx].astype(np.uint64) * weights[None, :]).sum(axis=1)
-    return np.unique(h.astype(np.int64))
-
-
-def shingle_set(text: str, k: int = 5) -> set[int]:
-    return set(_shingle_hashes(text, k).tolist())
-
-
 def _shingle_hashes_batch(
     texts, k: int, distinct: bool = True
 ) -> tuple[np.ndarray, np.ndarray]:
     """k-char shingle hashes for a WHOLE batch of documents in one
-    vectorized pass (round-7: the per-doc loop in _shingle_hashes — one
-    fancy-index matrix per doc — dominated minhash_signatures; the
-    batch form computes the same polynomial rolling hash over one
-    concatenated byte buffer with windows never crossing doc
-    boundaries).  Bit-identical hashes: the mod-2^64 multiply/add
-    arithmetic is element-wise and order-independent.
+    vectorized pass (round-7: a per-doc loop — one fancy-index matrix
+    per doc — dominated minhash_signatures; it survives as the per-doc
+    test oracle in tests/oracle_kernels.py).  The batch form computes
+    the same polynomial rolling hash, h = sum_j b[i+j] * P^(k-1-j)
+    mod 2^64, over one concatenated byte buffer with windows never
+    crossing doc boundaries.  Bit-identical hashes: the mod-2^64
+    multiply/add arithmetic is element-wise and order-independent.
 
     Returns (hashes, counts): per-doc contiguous hash runs plus the
     per-doc count; with distinct=True each doc's run is its sorted
     distinct set (what np.unique per doc produced); with distinct=False
     duplicates stay (min-reductions don't care, and the lexsort-dedup
     pass is ~40% of the batch cost).  Every doc has >= 1 shingle
-    (short/empty docs are zero-padded to k, same rule as
-    _shingle_hashes)."""
+    (short/empty docs are zero-padded to k)."""
     bufs = []
     for t in texts:
         b = (t or "").encode("utf-8", "ignore")

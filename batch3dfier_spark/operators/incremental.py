@@ -1,25 +1,22 @@
 """Incremental corpus dedup: admit each incoming batch of documents
-only where its content is new — against everything already accepted —
-then fold the admitted hashes into the corpus state.  This is the
-daily-crawl steady state of a training-data pipeline: the corpus is
-~100 TB and grows forever; the batch is the small new increment.
+only where its content is new — against everything already accepted.
+This is the daily-crawl steady state of a training-data pipeline: the
+corpus is ~100 TB; the batch is the small new increment.  The corpus
+state is registered once and probed per batch; nothing here folds an
+admitted batch back into it.
 
 Spark-first shape:
 - corpus state is a BUCKETED catalog table of content hashes
-  (`bucketBy(n_buckets, "text_sha")` — the same durable
-  hash-partitioning the tile dispatch layout uses,
-  sources/pages.py:60-99).  A batch-vs-corpus anti-join then shuffles
-  ONLY the batch: the scan of the corpus side reports
-  HashPartitioning(text_sha) and Catalyst drops its Exchange.  Without
+  (`bucketBy(n_buckets, "text_sha")`, a durable hash-partitioning).
+  A batch-vs-corpus anti-join then shuffles ONLY the batch: the scan
+  of the corpus side reports HashPartitioning(text_sha) and Catalyst
+  drops its Exchange (asserted in tests/test_incremental.py).  Without
   bucketing, every daily batch would re-shuffle the full corpus hash
   set — the difference between O(|batch|) and O(|corpus|) network per
   increment, which at 100 TB of corpus is the whole game.
 - intra-batch dedup first (the batch may repeat itself): min-id keeper
   per hash, the same groupBy-min rule as exact_dedup — partial
   aggregation absorbs hot identical docs map-side.
-- the admitted increment is APPENDED to the bucketed table with the
-  identical bucket spec, so the no-corpus-shuffle property survives
-  every increment (asserted in tests/test_incremental.py).
 
 Determinism: sha2-256 of the raw text; survivor = min id; no
 randomness, no timestamps.  `dedup_increment` itself is replayed by an
@@ -38,11 +35,9 @@ from pyspark.sql import functions as F
 __all__ = [
     "register_corpus",
     "dedup_increment",
-    "append_increment",
     "sql_dedup_increment",
     "register_minhash_corpus",
     "near_dedup_increment",
-    "append_minhash_increment",
 ]
 
 
@@ -130,25 +125,6 @@ def dedup_increment(
     )
     return batch.join(fresh, id_col, "inner")
 
-
-def append_increment(
-    spark: SparkSession,
-    admitted: DataFrame,
-    table: str,
-    id_col: str = "doc_id",
-    n_buckets: int = 64,
-) -> None:
-    """Fold an admitted increment (output of dedup_increment) into the
-    corpus state, preserving the bucket spec — the anti-join stays
-    corpus-shuffle-free on every later batch."""
-    (
-        admitted.select("text_sha", F.col(id_col))
-        .write.mode("append")
-        .format("parquet")
-        .bucketBy(n_buckets, "text_sha")
-        .sortBy("text_sha")
-        .saveAsTable(table)
-    )
 
 
 def sql_dedup_increment(
@@ -331,40 +307,3 @@ def near_dedup_increment(
 
     dropped = corpus_dups.unionByName(intra_dups).distinct()
     return batch.join(dropped, id_col, "left_anti")
-
-
-def append_minhash_increment(
-    spark: SparkSession,
-    admitted: DataFrame,
-    table: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 64,
-    shingle_k: int = 5,
-    bands: int = 16,
-    n_buckets: int = 8,
-) -> None:
-    """Fold an admitted increment into the near-dup state, preserving
-    both bucket specs so every later probe stays corpus-shuffle-free.
-    The per-bucket posting cap is enforced at register time and by
-    periodic compaction, not on append — an increment's postings are
-    O(|batch|) and re-capping would read state back."""
-    from .dedup import band_rows, minhash_signatures
-
-    sigs = minhash_signatures(
-        admitted, text_col=text_col, id_col=id_col,
-        num_perm=num_perm, shingle_k=shingle_k,
-    ).localCheckpoint(eager=False)
-    (
-        sigs.write.mode("append").format("parquet")
-        .bucketBy(n_buckets, id_col).sortBy(id_col)
-        .saveAsTable(table + "_sigs")
-    )
-    (
-        band_rows(sigs, id_col, bands)
-        .select("band_id", "band_hash", id_col)
-        .write.mode("append").format("parquet")
-        .bucketBy(n_buckets, "band_id", "band_hash")
-        .sortBy("band_id", "band_hash")
-        .saveAsTable(table + "_bands")
-    )

@@ -6,15 +6,13 @@ Design (100 TB):
   struct; Spark never interprets the bytes except inside explicit
   decode stages, so column pruning drops the heavy bytes whenever a
   query only touches metadata.
-- decode / feature-extract / frame-sample are `mapInPandas` stages:
+- header decode and frame sampling are `mapInPandas` stages:
   one Python worker per partition, Arrow transfer, numpy over the
   batch.  Partitioning is inherited — media rows stay co-located with
   their tile/doc partitions, so no extra shuffle is introduced by a
   decode stage.
-- the real codec step (JPEG/PNG/opus decode) needs libs this container
-  does not ship; `decode_pixels` is therefore an explicitly-marked
-  NotImplementedError stub, while the container format (header parse,
-  frame offsets, byte slicing, feature hashing) is real and tested.
+- there is no codec step (JPEG/PNG/opus decode): the container format
+  (header parse, frame offsets, byte slicing) is the tested surface.
 
 Blob format (deterministic stand-in for a WARC media record, pure
 function of doc_id so DuckDB can recompute every metadata field):
@@ -37,24 +35,16 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 __all__ = [
     "attach_media",
     "decode_media_meta",
     "frame_sample",
-    "resize_frames",
-    "byte_histogram_features",
-    "decode_pixels",
 ]
 
 MAGIC = b"MMB1"
 HEADER_LEN = 10
 FRAME_LEN = 32
-# the synthetic codec's raster layout: each 32-byte frame is an
-# 8-wide x 4-high grayscale grid (row-major)
-FRAME_W = 8
-FRAME_H = 4
 
 
 def _blob_fields(doc_id: int) -> tuple[int, int, int, int, str]:
@@ -177,100 +167,3 @@ def frame_sample(
         ),
     )
 
-
-def resize_frames(
-    frames: DataFrame,
-    out_w: int = 4,
-    out_h: int = 2,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Area-mean resize of sampled frames (the brief's `resize` stage):
-    consumes `frame_sample` output, interprets each frame's bytes
-    through the synthetic 8x4 grayscale raster, and pools to
-    (out_h, out_w) by exact block averaging — one numpy pass per Arrow
-    batch, the same shape a real decoded-image resize takes (only the
-    codec is the fixed-layout fake; swap the reshape for a real decode
-    and the pooling math is unchanged).  Output pixels are row-major
-    array<double> means in [0, 255]."""
-    if FRAME_W % out_w or FRAME_H % out_h:
-        raise ValueError(
-            f"(out_w, out_h) must divide ({FRAME_W}, {FRAME_H})"
-        )
-    bw, bh = FRAME_W // out_w, FRAME_H // out_h
-
-    def rs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            raster = np.stack(
-                [np.frombuffer(b, dtype=np.uint8) for b in pdf["frame"]]
-            ).reshape(n, FRAME_H, FRAME_W).astype(np.float64)
-            pooled = raster.reshape(n, out_h, bh, out_w, bw).mean(axis=(2, 4))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "frame_idx": pdf["frame_idx"].to_numpy(),
-                    "out_w": np.full(n, out_w, dtype=np.int32),
-                    "out_h": np.full(n, out_h, dtype=np.int32),
-                    "pixels": list(pooled.reshape(n, -1)),
-                }
-            )
-
-    return frames.select(id_col, "frame_idx", "frame").mapInPandas(
-        rs,
-        schema=(
-            f"{id_col} bigint, frame_idx int, out_w int, out_h int, "
-            "pixels array<double>"
-        ),
-    )
-
-
-def byte_histogram_features(
-    df: DataFrame, bins: int = 16, id_col: str = "doc_id"
-) -> DataFrame:
-    """Byte-histogram embedding of the media body (a real, lib-free
-    feature extractor): `bins` normalized counts over the body bytes.
-    Output feeds the similarity operators (array<double>)."""
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vecs = np.zeros((len(pdf), bins), dtype=np.float64)
-            for i, blob in enumerate(pdf["media"]):
-                body = np.frombuffer(blob, dtype=np.uint8)[HEADER_LEN:]
-                if len(body):
-                    hist = np.bincount(body >> (8 - bins.bit_length() + 1),
-                                       minlength=bins)[:bins]
-                    vecs[i] = hist / len(body)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), "features": list(vecs)}
-            )
-
-    return df.select(id_col, "media").mapInPandas(
-        feats, schema=f"{id_col} bigint, features array<double>"
-    )
-
-
-def decode_pixels(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """STUB — real pixel decode (JPEG/PNG -> HxWxC array) requires
-    imaging libraries not present in this container.  The Spark-side
-    contract (schema, batching, partition inheritance) is fixed here so
-    a real codec drops in by replacing `_decode_one`.
-
-    Raises NotImplementedError at execution time, by design.
-    """
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def _decode_one(blob: bytes) -> np.ndarray:
-            raise NotImplementedError(
-                "pixel decode requires an imaging library (PIL/cv2); "
-                "this container ships none — see module docstring"
-            )
-
-        for pdf in batches:
-            rows = [_decode_one(b) for b in pdf["media"]]
-            yield pd.DataFrame({id_col: pdf[id_col], "pixels": rows})
-
-    return df.select(id_col, "media").mapInPandas(
-        decode, schema=f"{id_col} bigint, pixels array<double>"
-    )

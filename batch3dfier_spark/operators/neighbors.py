@@ -25,35 +25,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..geo import point_rect_distance, rects_overlap_pairs
+from ..geo import point_rect_distance
 from .tiler import TileIndex
 
-__all__ = ["tile_neighbor_pairs", "tile_neighbors_spark", "knn_tiles"]
-
-
-def tile_neighbor_pairs(a: TileIndex, b: TileIndex) -> pd.DataFrame:
-    """Driver-side interval-overlap join of two small indexes (closed
-    bounds — PostGIS st_intersects counts shared edges; see the
-    reference golden: footprint tile 25gn1_c1 -> [25gn1_a, 25gn1_b],
-    tests/test_config.py:78-95).  Uses the STRtree of `b` per `a` rect
-    when `b` is large; dense pairs otherwise."""
-    if len(b.frame) > 256:
-        rows = []
-        for i, r in enumerate(a.rects):
-            hits = b.tree.query_rect(r[0], r[1], r[2], r[3])
-            rows.extend((i, j) for j in hits)
-        ai = np.array([r[0] for r in rows], dtype=np.int64)
-        bi = np.array([r[1] for r in rows], dtype=np.int64)
-    else:
-        ai, bi = rects_overlap_pairs(a.rects, b.rects)
-    return pd.DataFrame(
-        {
-            "ftpr_gid": a.frame["gid"].to_numpy()[ai],
-            "ftpr_unit": a.frame["unit"].to_numpy()[ai],
-            "asset_gid": b.frame["gid"].to_numpy()[bi],
-            "asset_unit": b.frame["unit"].to_numpy()[bi],
-        }
-    )
+__all__ = ["tile_neighbors_spark", "knn_tiles"]
 
 
 def tile_neighbors_spark(df_a: DataFrame, df_b: DataFrame) -> DataFrame:

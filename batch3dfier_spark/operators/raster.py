@@ -21,37 +21,27 @@ mask set for an extent covering K tiles is K * res^2 rows upper-bound
 (64 x 256 = 16k rows for a res-16 mask over 64 tiles) — always
 broadcastable; the fact table is never shuffled.
 
-Rasterization itself is vectorized numpy (all pixel centers of a batch
-of tiles tested against the polygon in one even-odd pass), distributed
-with mapInPandas when the tile index is large, driver-side for small
-candidate sets (mirroring select_tiles).
+Rasterization itself is vectorized numpy (all pixel centers of the
+candidate tiles tested against the polygon in one even-odd pass), run
+on the driver over the STRtree-selected tiles (mirroring select_tiles).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
-from ..geo import point_in_polygon, polygon_bbox
+from ..geo import point_in_polygon
 from .tiler import GridSpec, TileIndex, select_tiles
 
 __all__ = [
     "rasterize_extent",
-    "rasterize_extent_spark",
     "pixel_cols",
     "overlay_extent_mask",
     "mask_coverage",
 ]
-
-MASK_SCHEMA = StructType([
-    StructField("tile_gid", LongType()),
-    StructField("pix_id", LongType()),
-])
 
 
 def _mask_rows_for_tiles(
@@ -92,26 +82,6 @@ def rasterize_extent(
     poly = np.asarray(extent_poly, dtype=np.float64)
     cand = select_tiles(index, poly)
     return _mask_rows_for_tiles(cand, poly, res)
-
-
-def rasterize_extent_spark(
-    spark: SparkSession, index_df: DataFrame, extent_poly, res: int = 16
-) -> DataFrame:
-    """Distributed mask build over a large tile-index DataFrame (the
-    1e6-tile path): bbox prefilter pushed to the scan, then mapInPandas
-    batches through the same numpy kernel."""
-    poly = np.asarray(extent_poly, dtype=np.float64)
-    bbox = polygon_bbox(poly)
-    cand = index_df.where(
-        (F.col("xmin") <= F.lit(bbox.xmax)) & (F.lit(bbox.xmin) <= F.col("xmax"))
-        & (F.col("ymin") <= F.lit(bbox.ymax)) & (F.lit(bbox.ymin) <= F.col("ymax"))
-    )
-
-    def rasterize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _mask_rows_for_tiles(pdf, poly, res)
-
-    return cand.mapInPandas(rasterize, schema=MASK_SCHEMA)
 
 
 def pixel_cols(

@@ -4,7 +4,7 @@ RRF (Cormack, Clarke & Buettcher 2009, "Reciprocal rank fusion
 outperforms Condorcet and individual rank learning methods", SIGIR)
 combines rankings from heterogeneous retrievers — here the engine's
 sparse path (operators/bm25.bm25_topk) and dense path
-(operators/similarity.cosine_topk / ivf_topk) — by summing
+(operators/similarity.cosine_topk / ivf_topk_frozen) — by summing
 1 / (c + rank) over the lists each candidate appears in.  It needs no
 score calibration between the retrievers, which is why it is the
 standard first fusion in hybrid search.

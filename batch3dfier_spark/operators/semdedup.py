@@ -32,10 +32,7 @@ oracle): centroids are the FROZEN seed quantizer
 (similarity.ivf_seed_centroids — the n_centroids lowest-id vectors on
 the 2^20 integer grid), so assignment argmin, the membership cap and
 every pairwise cosine are exact-integer arithmetic that DuckDB
-recomputes bit-identically (see plans/queries.SQL_SEMDEDUP).  A Lloyd
-(k-means) quantizer slots in unchanged for production quality — it
-keeps a pytest gate instead of a SQL oracle, exactly like
-similarity.ivf_build vs ivf_topk_frozen.
+recomputes bit-identically (see plans/queries.SQL_SEMDEDUP).
 
 Reference analog: none (balazsdukai/batch3dfier has no embedding
 surface); this extends the engine's training-data layer alongside

@@ -33,10 +33,6 @@ __all__ = [
     "cosine_topk",
     "lsh_ann_topk",
     "hyperplane_signatures",
-    "ivf_build",
-    "ivf_topk",
-    "ivf_write_index",
-    "ivf_load_centroids",
     "ivf_seed_centroids",
     "ivf_topk_frozen",
     "quantize_int8",
@@ -202,7 +198,6 @@ def cosine_topk(
 # single source of the 2^20 quantum AND the half-away rounding rule —
 # one copy of the cross-engine (Spark F.round == DuckDB ROUND)
 # determinism contract, shared with the embedding-dedup path
-from .dedup import QUANT
 from .dedup import quantize_half_away as _quantize_half_away
 
 # splitmix64 finalizer constants (closed form shared with the SQL oracle)
@@ -416,239 +411,6 @@ def _probe_centroids(queries: DataFrame, centroids: np.ndarray,
     )
 
 
-def _assign_partial_sums(df: DataFrame, centroids: np.ndarray,
-                         id_col: str, vec_col: str) -> DataFrame:
-    """ONE fused pass per Lloyd round: argmin-assign each vector to its
-    nearest centroid (same exact metric/tie rule as assign_centroids)
-    AND fold per-batch partial sums in the kernel, emitting at most
-    (n_centroids x dim) rows per BATCH — (cid, dim, s, cnt).  Components
-    are quantized to the 2^20 integer grid before summing, so s is an
-    exact int64 and the grand total is bit-identical under ANY
-    partitioning/batching/summation order (the cross-engine determinism
-    trick from embedding_near_dups, applied to make k-means itself
-    reproducible).  Headroom: |s| < rows_per_cluster x 2^20 x max|x| —
-    int64 holds ~2^42 rows per cluster at unit-scale embeddings."""
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(centroids)
-
-    def sums(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        C = bc.value
-        c_sq = (C * C).sum(axis=1)
-        k, dim = C.shape
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            d = -2.0 * (V @ C.T) + c_sq[None, :]
-            cid = d.argmin(axis=1)
-            Q = _quantize_half_away(V).astype(np.int64)
-            S = np.zeros((k, dim), dtype=np.int64)
-            np.add.at(S, cid, Q)
-            cnt = np.bincount(cid, minlength=k).astype(np.int64)
-            nz = np.nonzero(cnt)[0]
-            yield pd.DataFrame(
-                {
-                    "cid": np.repeat(nz, dim).astype("int32"),
-                    "dim": np.tile(np.arange(dim, dtype=np.int32), len(nz)),
-                    "s": S[nz].ravel(),
-                    "cnt": np.repeat(cnt[nz], dim),
-                }
-            )
-
-    return ensure_parallel(df.select(vec_col)).mapInPandas(
-        sums, schema="cid int, dim int, s bigint, cnt bigint"
-    )
-
-
-def ivf_build(
-    embeddings: DataFrame,
-    dim: int,
-    n_centroids: int = 64,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[np.ndarray, DataFrame]:
-    """IVF coarse quantizer: k-means with DETERMINISTIC seeding (the
-    n_centroids lowest-id vectors) and `iters` Lloyd rounds run as
-    DataFrame jobs.  Returns (centroids, assignments DF (id, cid)).
-
-    Scale shape (round-3 VERDICT #3): each round is ONE fused
-    mapInPandas pass (matmul assignment + in-kernel partial sums —
-    _assign_partial_sums) followed by a groupBy(cid, dim) over at most
-    n_batches x n_centroids x dim TINY rows; only (n_centroids x dim)
-    values reach the driver.  The previous shape shuffled
-    n_vectors x dim scalar rows per round (posexplode -> avg) plus a
-    full join back to the vectors.  Sums are integer-quantized, so the
-    new centroids are bit-identical regardless of partitioning (no
-    float-sum ordering sensitivity at all — stronger than the 1e-6
-    rounding that used to paper over it, which is kept only to keep
-    centroid literals short).  Empty clusters keep their previous
-    centroid."""
-    seed = (
-        embeddings.orderBy(F.col(id_col)).limit(n_centroids)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
-        .toPandas()["v"]
-    )
-    C = np.stack(seed.to_numpy()).astype(np.float64)
-    q = embeddings.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-    )
-    for _ in range(iters):
-        sums = (
-            _assign_partial_sums(q, C, id_col, "_v")
-            .groupBy("cid", "dim")
-            .agg(F.sum("s").alias("s"), F.sum("cnt").alias("cnt"))
-            .toPandas()
-        )
-        C = C.copy()
-        for cid, grp in sums.groupby("cid"):
-            g = grp.sort_values("dim")
-            C[int(cid)] = g["s"].to_numpy() / g["cnt"].to_numpy() / QUANT
-        C = np.round(C, 6)
-    return C, assign_centroids(q, C, id_col, "_v")
-
-
-def ivf_write_index(
-    embeddings: DataFrame,
-    dim: int,
-    index_root: str,
-    n_centroids: int = 64,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Build the IVF coarse quantizer (ivf_build) and PERSIST the index
-    as the durable 100 TB layout: the inverted lists — (id, vec, cid)
-    rows — written parquet PARTITIONED BY cid under
-    `<index_root>/lists/`, plus the centroid matrix as
-    `<index_root>/centroids.json`.
-
-    cid partition directories are the scan-pruning layout for the IVF
-    probe shape (`cid IN (<probed set>)` — Catalyst drops every other
-    directory at PLANNING time, before any file is opened; asserted
-    files-touched in tests).  The candidate VECTORS live in the lists
-    too, so a probe never rescans the embeddings table: it reads only
-    the probed nprobe/n_centroids fraction of the index.
-    repartition(cid) before the write keeps one file per cid per
-    shuffle wave instead of tasks x cids small files.  Pay the one
-    clustering shuffle at build time, never again — the ANN analog of
-    the reference keeping its GiST-indexed centroid table permanently
-    materialized (footprints.py:93-150).  Returns the centroids."""
-    import json
-    import os
-
-    C, assigned = ivf_build(embeddings, dim, n_centroids, iters=iters,
-                            id_col=id_col, vec_col=vec_col)
-    lists = (
-        embeddings.select(id_col, vec_col)
-        .join(assigned, id_col)
-        .repartition(F.col("cid"))
-    )
-    lists.write.mode("overwrite").partitionBy("cid").parquet(
-        os.path.join(index_root, "lists")
-    )
-    with open(os.path.join(index_root, "centroids.json"), "w") as f:
-        json.dump({"dim": dim, "n_centroids": int(C.shape[0]),
-                   "id_col": id_col, "vec_col": vec_col,
-                   "centroids": C.tolist()}, f)
-    return C
-
-
-def ivf_load_centroids(index_root: str) -> np.ndarray:
-    import json
-    import os
-
-    with open(os.path.join(index_root, "centroids.json")) as f:
-        return np.asarray(json.load(f)["centroids"], dtype=np.float64)
-
-
-def ivf_topk(
-    embeddings: DataFrame | None,
-    queries: DataFrame,
-    dim: int,
-    k: int = 5,
-    n_centroids: int = 64,
-    nprobe: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    index: tuple[np.ndarray, DataFrame] | None = None,
-    index_table: str | None = None,
-) -> DataFrame:
-    """IVF approximate top-k cosine: candidates = vectors assigned to
-    each query's `nprobe` nearest centroids (inverted lists selected by
-    an equi-join on cid — the classic IVF probe); exact cosine
-    re-scoring + ranking window on candidates only.
-    `nprobe/n_centroids` trades recall for the fraction of the corpus
-    scanned — with the defaults each query scores ~12.5% of vectors,
-    vs 100% for cosine_topk.
-
-    index_table (the 100 TB path) probes a PERSISTED index written by
-    ivf_write_index: the probed cids (<= n_centroids ints, small by
-    construction) become a partition-pruning `cid IN (...)` predicate
-    on the cid-partitioned lists, so the scan plans only the probed
-    directories and the candidate vectors come from the index itself —
-    `embeddings` may be None and is never rescanned.  Without it the
-    index is built in-session (ivf_build) or taken from `index`."""
-    if index_table is not None:
-        import os
-
-        spark = queries.sparkSession
-        C = ivf_load_centroids(index_table)
-        lists = spark.read.parquet(os.path.join(index_table, "lists"))
-        q_dbl = queries.select(
-            F.col(id_col),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-        )
-        probes = _probe_centroids(q_dbl, C, nprobe, id_col, "_v")
-        # <= n_centroids ints by construction — the driver-side list is
-        # what turns the probe into a PLANNING-time partition prune
-        cids = sorted(
-            int(r[0]) for r in probes.select("cid").distinct().collect()
-        )
-        pruned = lists.where(F.col("cid").isin(cids))
-        cand_ids = (
-            pruned.select(F.col(id_col).alias("cand_id"), "cid")
-            .join(F.broadcast(probes), "cid")
-            .where(F.col("cand_id") != F.col("query_id"))
-            .select("query_id", "cand_id")
-        )
-        cand = pruned.select(
-            F.col(id_col).alias("cand_id"),
-            F.col(vec_col).cast("array<double>").alias("cand_vec"),
-        )
-    else:
-        C, assigned = (
-            index
-            if index is not None
-            else ivf_build(embeddings, dim, n_centroids, iters=3,
-                           id_col=id_col, vec_col=vec_col)
-        )
-        q_dbl = queries.select(
-            F.col(id_col),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-        )
-        probes = _probe_centroids(q_dbl, C, nprobe, id_col, "_v")
-        cand_ids = (
-            assigned.withColumnRenamed(id_col, "cand_id")
-            .join(F.broadcast(probes), "cid")
-            .where(F.col("cand_id") != F.col("query_id"))
-            .select("query_id", "cand_id")
-        )
-        cand = embeddings.select(
-            F.col(id_col).alias("cand_id"),
-            F.col(vec_col).cast("array<double>").alias("cand_vec"),
-        )
-    qv = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("query_vec"),
-        )
-    )
-    scored = _score_pairs(cand_ids.join(cand, "cand_id").join(qv, "query_id"))
-    return _rank_topk(scored, k)
-
-
 def ivf_seed_centroids(
     embeddings: DataFrame,
     n_centroids: int = 64,
@@ -677,20 +439,20 @@ def ivf_topk_frozen(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Oracle-checkable IVF ANN: identical probe/score shape to
-    `ivf_topk`, but the coarse quantizer is FROZEN at the quantized
-    seed vectors (ivf_seed_centroids) instead of Lloyd-iterated means.
+    """IVF approximate top-k cosine: candidates = vectors assigned to
+    each query's `nprobe` nearest centroids (inverted lists selected by
+    an equi-join on cid — the classic IVF probe); exact cosine
+    re-scoring + ranking window on candidates only.  `nprobe/n_centroids`
+    trades recall for the fraction of the corpus scanned.
 
-    Why this variant exists: k-means float averages are not
-    bit-reproducible in ANSI SQL, so the Lloyd version can only be
-    recall-gated in pytest.  Freezing the centroids makes every stage —
-    assignment argmin, probe selection, candidate join, cosine
-    re-score — exactly recomputable by the DuckDB HUGEINT oracle
-    (integer-quantized distances; raw-double cosine identical in list
-    order), giving IVF a full rows+schema+hash contract entry.  Recall
-    is a few points below the Lloyd quantizer (seed cells are less
-    balanced) at the same nprobe; scale shape is unchanged — the probe
-    equi-join still scans ~nprobe/n_centroids of the corpus."""
+    The coarse quantizer is FROZEN at the quantized seed vectors
+    (ivf_seed_centroids), not Lloyd-iterated means: k-means float
+    averages are not bit-reproducible in ANSI SQL, while with frozen
+    centroids every stage — assignment argmin, probe selection,
+    candidate join, cosine re-score — is exactly recomputable by the
+    DuckDB HUGEINT oracle (integer-quantized distances; raw-double
+    cosine identical in list order).  The probe equi-join scans
+    ~nprobe/n_centroids of the corpus."""
     C = ivf_seed_centroids(embeddings, n_centroids, id_col, vec_col)
     q_dbl = queries.select(
         F.col(id_col),

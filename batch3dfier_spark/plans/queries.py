@@ -678,7 +678,7 @@ def _sql_byte(h: str, pos: str, guard: bool = False) -> str:
 
 def _sql_dedup_minhash() -> str:
     # BYTE-LEVEL ORACLE (round-4, VERDICT #6): the engine hashes UTF-8
-    # BYTES (dedup._shingle_hashes / token_hashes); these SQL twins now
+    # BYTES (dedup._shingle_hashes_batch / token_hashes); these SQL twins now
     # recompute the same byte values from hex(encode(text)) instead of
     # ascii(text[i:i]) per CHARACTER, so minhash/simhash hashes agree on
     # non-ASCII corpora too (multibyte agreement is pinned by
@@ -690,7 +690,7 @@ def _sql_dedup_minhash() -> str:
                                    token_weights)
 
     cap = 128
-    # shingle weights: descending powers P^(k-1-j), k=5 (dedup._shingle_hashes)
+    # shingle weights: descending powers P^(k-1-j), k=5 (dedup._shingle_hashes_batch)
     w = [int(v) for v in token_weights(5)][::-1]
     # shingle i (1-based over BYTES): sum_j byte(i+j) * P^(4-j); i+4 <= nb
     # inside the RANGE, so no end guard needed

@@ -27,7 +27,7 @@ def spark():
 def pages_pdf():
     from batch3dfier_spark import datagen
 
-    return datagen.gen_pages(1500)
+    return datagen.gen_pages_range(0, 1500)
 
 
 @pytest.fixture(scope="session")

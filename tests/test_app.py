@@ -8,13 +8,14 @@ import pytest
 import yaml
 
 from batch3dfier_spark import datagen
+from oracle_kernels import write_pages_parquet
 
 
 @pytest.fixture(scope="module")
 def pages_path(tmp_path_factory):
     d = tmp_path_factory.mktemp("appdata")
     p = str(d / "pages.parquet")
-    datagen.write_pages_parquet(p, 2000)
+    write_pages_parquet(p, 2000)
     return p
 
 
@@ -148,6 +149,52 @@ def test_run_extent_mode_and_resume(spark, tmp_path, pages_path):
     assert report2["tiles_ok"] == report["tiles_ok"]
     n2 = IcebergishTable(cfg["output"]["table"]).read(spark).count()
     assert n2 == n1
+
+
+def test_tile_list_selects_by_one_join(spark, tmp_path, pages_path,
+                                       monkeypatch):
+    """A 5 000-unit tile_list over a 100x100 grid selects exactly the
+    pages of those units, and never as an isin predicate (PySpark builds
+    one with a JVM call per literal: seconds at thousands of units)."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from batch3dfier_spark.app import build_work_df, parse_config
+    from batch3dfier_spark.functions.geocode import geocode_np
+
+    n = 100
+    units = [f"t_{r}_{c}" for r in range(n) for c in range(n)
+             if (r + c) % 2 == 0]
+    cfg = parse_config(_cfg(tmp_path, pages_path, {"tile_list": units},
+                            tile_index={"nx": n, "ny": n}))
+
+    isin_sizes = []
+    column_cls = type(F.col("tile_unit"))
+    real_isin = column_cls.isin
+
+    def counting_isin(self, *cols):
+        vals = cols[0] if len(cols) == 1 and isinstance(
+            cols[0], (list, set, tuple)) else cols
+        isin_sizes.append(len(vals))
+        return real_isin(self, *cols)
+
+    monkeypatch.setattr(column_cls, "isin", counting_isin)
+    work, selected, union, _ = build_work_df(spark, cfg)
+    got = set(work.select("url").toPandas()["url"])
+    monkeypatch.undo()
+
+    # pandas selection: the grid rule of tiler.assign_tiles at buffer 0
+    pages = datagen.gen_pages_range(0, 2000)
+    t = cfg["_territory"]
+    x, y = geocode_np(pages["url"], pages["warc_ts"], t)
+    col = np.minimum(np.floor((x - t.xmin) / ((t.xmax - t.xmin) / n)), n - 1)
+    row = np.minimum(np.floor((y - t.ymin) / ((t.ymax - t.ymin) / n)), n - 1)
+    unit = [f"t_{int(r)}_{int(c)}" for r, c in zip(row, col)]
+    want = set(pages.loc[np.isin(unit, units), "url"])
+    assert len(selected) == 5_000 and not union
+    assert 0 < len(want) < len(pages)
+    assert got == want
+    assert max(isin_sizes, default=0) < 1_000, isin_sizes
 
 
 def test_cli_main_subprocess(tmp_path, pages_path):

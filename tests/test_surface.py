@@ -1,5 +1,9 @@
-"""API-surface pins: ORC roundtrip, set operations, and the
-grouped-agg pandas UDF (UDAF) class."""
+"""API-surface pins: ORC roundtrip, set operations, the grouped-agg
+pandas UDF (UDAF) class, and a library with no definition that only
+tests reach."""
+
+import ast
+import os
 
 import pandas as pd
 import pytest
@@ -60,3 +64,112 @@ def test_grouped_agg_pandas_udaf_matches_builtin(spark):
            .agg(F.round(F.avg("value"), 6).alias("m"))
            .toPandas().set_index("event_type").sort_index())
     pd.testing.assert_frame_equal(got, exp)
+
+
+# ---------------------------------------------------------------------------
+# One caller or none.  A module-level function or class in
+# `batch3dfier_spark/` is dead when every reference to its name outside
+# its own body comes from `tests/` or from another dead definition.
+# Callers are the library itself, `perfbench/` (minus its tests),
+# `tools/`, `bench.py`, `bench_extra.py` and `__spark_entry__.py`.  A
+# reference is an identifier use (a name or an attribute) or a string
+# constant that is an identifier, so registry keys and `getattr` names
+# count.  Import lines and `__all__` entries are not references: a
+# re-export or an unused import keeps nothing alive.  Resolution is by
+# name, so a same-named local or method elsewhere keeps a definition
+# alive: the scan can miss dead code but never reports live code.
+# ---------------------------------------------------------------------------
+
+_ROOT = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
+_LIBRARY = "batch3dfier_spark"
+_CALLER_DIRS = (_LIBRARY, "perfbench", "tools")
+_CALLER_FILES = ("bench.py", "bench_extra.py", "__spark_entry__.py")
+_EXCLUDED_DIRS = (os.path.join("perfbench", "tests"),)
+
+
+def _caller_files():
+    for d in _CALLER_DIRS:
+        for dirpath, dirnames, filenames in os.walk(os.path.join(_ROOT, d)):
+            rel = os.path.relpath(dirpath, _ROOT)
+            dirnames[:] = [
+                n for n in dirnames
+                if os.path.join(rel, n) not in _EXCLUDED_DIRS
+            ]
+            for f in sorted(filenames):
+                if f.endswith(".py"):
+                    yield os.path.join(rel, f)
+    for f in _CALLER_FILES:
+        if os.path.exists(os.path.join(_ROOT, f)):
+            yield f
+
+
+def _references(node, skip):
+    """Identifier names used under `node`, skipping the `skip` subtrees."""
+    stack = [node]
+    while stack:
+        n = stack.pop()
+        if n in skip or isinstance(n, (ast.Import, ast.ImportFrom)):
+            continue
+        if isinstance(n, ast.Name):
+            yield n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+        elif (
+            isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and n.value.isidentifier()
+        ):
+            yield n.value
+        stack.extend(ast.iter_child_nodes(n))
+
+
+def _is_all(stmt):
+    return isinstance(stmt, (ast.Assign, ast.AugAssign)) and any(
+        isinstance(t, ast.Name) and t.id == "__all__"
+        for t in (stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target])
+    )
+
+
+def dead_definitions():
+    """Sorted `(path, line, name)` of library definitions no caller reaches."""
+    defs = {}  # (path, name) -> (line, referenced names in its body)
+    roots = set()  # names referenced from outside any library definition
+    for path in _caller_files():
+        with open(os.path.join(_ROOT, path)) as f:
+            tree = ast.parse(f.read(), filename=path)
+        in_library = path.startswith(_LIBRARY + os.sep)
+        owned = set()
+        for stmt in tree.body:
+            if _is_all(stmt):
+                owned.add(stmt)
+            elif in_library and isinstance(
+                stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                owned.add(stmt)
+                defs[(path, stmt.name)] = (
+                    stmt.lineno, set(_references(stmt, set())),
+                )
+        roots.update(_references(tree, owned))
+
+    live_names = set(roots)
+    live = set()
+    changed = True
+    while changed:
+        changed = False
+        for key, (_, names) in defs.items():
+            if key not in live and key[1] in live_names:
+                live.add(key)
+                live_names |= names
+                changed = True
+    return sorted(
+        (path, line, name)
+        for (path, name), (line, _) in defs.items()
+        if (path, name) not in live
+    )
+
+
+def test_every_library_definition_has_a_non_test_caller():
+    dead = dead_definitions()
+    assert not dead, "library definitions that only tests reach:\n" + "\n".join(
+        f"{path}:{line} {name}" for path, line, name in dead
+    )

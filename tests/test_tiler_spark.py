@@ -10,9 +10,10 @@ from pyspark.sql import functions as F
 from batch3dfier_spark import datagen
 from batch3dfier_spark.functions.geocode import geocode_np
 from batch3dfier_spark.functions.text import extract_text_cols
-from batch3dfier_spark.geo import point_in_polygon, points_in_rects_buffered
+from batch3dfier_spark.geo import point_in_polygon
 from batch3dfier_spark.operators import tiler
 from batch3dfier_spark.operators.tiler import GridSpec, TileIndex
+from oracle_kernels import points_in_rects_buffered, ref_tile_index
 
 T = datagen.REF_TERRITORY
 
@@ -100,7 +101,7 @@ class TestAssignRtree:
     def test_ref_index_matches_grid_path(self, geocoded):
         """The reference 4-tile index (irregular path) must agree with
         the 2x2 grid fast path tile-for-tile."""
-        ref = TileIndex(datagen.ref_tile_index())  # no GridSpec -> STRtree
+        ref = TileIndex(ref_tile_index())  # no GridSpec -> STRtree
         grid = TileIndex.regular_grid(T, 2, 2)
         got_ref = (
             tiler.assign_tiles(geocoded, ref)
@@ -119,7 +120,7 @@ class TestAssignRtree:
 
     def test_rtree_buffered_multi_assignment(self, spark):
         pdf = pd.DataFrame({"x": [120936.0], "y": [486000.0]})
-        ref = TileIndex(datagen.ref_tile_index())
+        ref = TileIndex(ref_tile_index())
         out = tiler.assign_tiles(spark.createDataFrame(pdf), ref, buffer=2.0)
         assert sorted(r.tile_unit for r in out.collect()) == ["25gn1_c1", "25gn1_c2"]
 
@@ -161,14 +162,14 @@ class TestExtent:
     def test_select_tiles_golden(self):
         """The reference golden: extent_small intersects all 4 tiles
         (tests/test_config.py:70-75)."""
-        ref = TileIndex(datagen.ref_tile_index())
+        ref = TileIndex(ref_tile_index())
         sel = tiler.select_tiles(ref, datagen.EXTENT_SMALL)
         assert sel["unit"].tolist() == ["25gn1_c1", "25gn1_c2", "25gn1_c3", "25gn1_c4"]
 
     def test_union_or_split_heuristic(self):
         """O9 (batch3dfierapp.py:160-167): small extent -> union, large
         extent -> per-tile split."""
-        ref = TileIndex(datagen.ref_tile_index())
+        ref = TileIndex(ref_tile_index())
         sel_small = tiler.select_tiles(ref, datagen.EXTENT_SMALL)
         sel_large = tiler.select_tiles(ref, datagen.EXTENT_LARGE)
         assert tiler.union_or_split(sel_small, ref, datagen.EXTENT_SMALL) is True

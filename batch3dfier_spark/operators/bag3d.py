@@ -40,7 +40,6 @@ from pyspark.sql import functions as F
 from .heights import GROUND_PERCENTILES, ROOF_PERCENTILES, pct_name
 
 __all__ = [
-    "HEIGHTS_CSV_SCHEMA",
     "write_worker_csvs",
     "load_worker_csvs",
     "stamp_file_date",
@@ -57,7 +56,6 @@ _PCT_COLS = [pct_name("ground", p) for p in GROUND_PERCENTILES] + [
 # data columns as stored IN the CSVs (tile_gid lives in the directory
 # layout, so the loader parses exactly this)
 _CSV_DATA_SCHEMA = ", ".join(f"{c} DOUBLE" for c in _PCT_COLS) + ", n_rows BIGINT"
-HEIGHTS_CSV_SCHEMA = "tile_gid BIGINT, " + _CSV_DATA_SCHEMA
 
 
 def write_worker_csvs(heights: DataFrame, out_dir: str) -> None:

@@ -973,7 +973,7 @@ def ngram_jaccard_pairs(
     # in numpy and in the SQL twin — rounding would only reintroduce
     # tie-rule mismatches (half-even vs half-up at exact-binary ties
     # like 1/128).
-    def pair_verify(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pair_verify(key, pdf):
         empty = pd.DataFrame({"id_a": [], "id_b": [], "jaccard": []}).astype(
             {"id_a": "int64", "id_b": "int64", "jaccard": "float64"}
         )

@@ -136,7 +136,7 @@ def run_tiles(
         )
         group_cols = ["tile_gid", "salt"]
 
-    def worker(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def worker(key, pdf):
         import pyarrow as pa
         import pyarrow.parquet as pq
 

@@ -5,13 +5,14 @@ a GiST index because the tile-assignment join is run many times against
 it (batch3dfier/footprints.py:93-150).  The 100 TB equivalent: one scan
 over the raw pages that computes geocode (x, y) and tile assignment,
 then writes a spatially CLUSTERED copy — `repartitionByRange(tile_gid)`
-+ sort within partitions — so that
++ sort within partitions; the range shuffle has no count, so AQE sizes
+the file count from the data (at most `spark.sql.shuffle.partitions`) —
+so that
 
-- every downstream query gets x/y/tile_gid as stored columns (no
-  re-hashing), and
-- parquet row-group min/max stats on x, y, tile_gid make extent/tile
-  predicates prune at scan time (the partition-pruning analog of the
-  reference's per-tile views).
+- every downstream query gets x/y/tile_gid as stored columns, and
+- once a file holds several row groups, their min/max stats on x, y,
+  tile_gid make extent/tile predicates prune at scan time (the analog
+  of the reference's per-tile views).
 """
 
 from __future__ import annotations
@@ -30,15 +31,14 @@ def ingest_pages(
     out_path: str,
     index: TileIndex,
     territory: Rect,
-    n_buckets: int = 64,
 ) -> None:
     """One pass: raw pages -> geocode -> tile assign -> cluster by tile
-    -> parquet.  `n_buckets` bounds output file count (range-partitioned
-    by tile_gid, sorted within — Z-order-lite clustering)."""
+    -> parquet: files over disjoint tile_gid ranges, each sorted, their
+    count set by the data (bounded by shuffle partitions)."""
     df = spark.read.parquet(in_path)
     a = assign_tiles(with_geocode(df, territory), index)
     (
-        a.repartitionByRange(n_buckets, "tile_gid")
+        a.repartitionByRange("tile_gid")
         .sortWithinPartitions("tile_gid")
         .write.mode("overwrite")
         .parquet(out_path)
@@ -47,4 +47,3 @@ def ingest_pages(
 
 def read_geocoded(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
-

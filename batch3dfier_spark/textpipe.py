@@ -620,7 +620,8 @@ def run_textpipe(spark: SparkSession, cfg: dict) -> dict:
         man_out["steps"].append({"op": steps[k]["op"], "fp": fps[k],
                                  "rows": rows})
         _write_json_atomic(man_path, man_out)
-        df = spark.read.parquet(dests[k])
+        if k < len(steps) - 1:  # known schema: no inference job
+            df = spark.read.schema(df.schema).parquet(dests[k])
 
     if not steps:
         df.write.mode("overwrite").parquet(out)

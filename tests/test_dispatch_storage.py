@@ -266,6 +266,23 @@ def test_run_tiles_decomposable_salts_hot_tile(spark, tmp_path):
     assert t_salt.read(spark).count() == 3000
 
 
+def test_run_tiles_emits_no_user_warning(spark, tmp_path):
+    """The grouped worker carries no partial type hints, so
+    applyInPandas has nothing to infer and warns about nothing."""
+    import warnings
+
+    df = spark.createDataFrame(pd.DataFrame(
+        {"url": ["a", "b", "c"], "text": ["x y", "z", "w v u"],
+         "tile_gid": [1, 1, 2]}))
+    table = IcebergishTable(str(tmp_path / "t"))
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        lineage = run_tiles(df, tile_processor, table)
+    assert sorted(lineage["tile_gid"]) == [1, 2]
+    assert [str(w.message) for w in caught
+            if issubclass(w.category, UserWarning)] == []
+
+
 def test_salted_split_bounds_group_size(spark):
     # zipf-ish skew: one hot tile with 5000 rows, others tiny
     pdf = pd.DataFrame(

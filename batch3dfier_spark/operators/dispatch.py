@@ -7,18 +7,23 @@ a queue of tile names drained by N threads, each shelling out to the
 missing point-cloud files -> tile skipped and reported (O15,
 config.py:102-109).
 
-Spark-first model: `groupBy(tile_gid).applyInPandas(worker)` — Spark's
-scheduler IS the work queue, executor cores ARE the threads.  The worker
-runs the per-tile processor on the tile's Arrow batch, writes the tile's
-output file itself (exactly like the external worker) at the path
-`tablefmt.tile_data_path` names, and returns ONE lineage row; the
-driver then commits all new files + lineage atomically
-into the IcebergishTable.  Resume = read the committed lineage once on
-the driver, then drop its completed tiles, and the newly skipped ones,
-with one broadcast left_anti join before grouping.  This does not prune
-the page scan: `app.build_work_df` selects its tiles (the same
-broadcast join on a `tile_gid_frame`, `left_semi`) after `with_geocode`
-and `assign_tiles`, so a resumed run still geocodes every page.
+Spark-first model: `repartition(tile_gid)` + `sortWithinPartitions` +
+one `mapInPandas` task worker — Spark's scheduler IS the work queue,
+executor cores ARE the threads.  The tile stays the unit of work and of
+lineage; the task is the unit of I/O.  The worker walks its sorted
+partition tile by tile, runs the per-tile processor once per tile,
+appends each tile's output as one row group to ONE parquet file per
+task (`tablefmt.task_data_path`), and yields ONE lineage row per tile
+naming that file.  Per-tile files (the reference's layout) would hand
+the read-back one path per tile, and past 32 paths Spark lists them in
+a job with one task per file.  The Spark driver then commits all new
+files + lineage atomically into the IcebergishTable.  Resume = read
+the committed lineage once on the driver, then drop its completed
+tiles, and the newly skipped ones, with one broadcast left_anti join
+before grouping.  This does not prune the page scan: `app.build_work_df`
+selects its tiles (the same broadcast join on a `tile_gid_frame`,
+`left_semi`) after `with_geocode` and `assign_tiles`, so a resumed run
+still geocodes every page.
 
 Skew (north_rule): `salted_split` pre-splits hot tiles into
 `tile_gid, salt` subgroups sized by a count sketch, so one giant tile
@@ -38,7 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..storage.tablefmt import IcebergishTable, tile_data_path
+from ..storage.tablefmt import IcebergishTable, task_data_path
 
 __all__ = ["run_tiles", "salted_split", "skip_report", "tile_gid_frame"]
 
@@ -72,9 +77,9 @@ def run_tiles(
     salt_key_col: str = "url",
     salt_target_rows: int = 250_000,
 ) -> pd.DataFrame:
-    """Run `process` once per `tile_gid` group of `df`; write per-tile
-    parquet into `table`; commit atomically; return the table's
-    CUMULATIVE lineage frame.
+    """Run `process` once per `tile_gid` group of `df`; write its output
+    into `table` as one parquet file per task (one row group per tile);
+    commit atomically; return the table's CUMULATIVE lineage frame.
 
     CONTRACT NOTE: the returned frame spans ALL runs against `table`,
     not just this one — on a resumed table, skip_report(run_tiles(...))
@@ -90,23 +95,23 @@ def run_tiles(
       `salted_split` into (tile, salt) subgroups of ~salt_target_rows
       each, `process` runs per subgroup (valid whenever its output rows
       are a row-wise function of input rows — map-style extraction,
-      per-row scoring), subgroup parquet files land in the same
-      tile_gid=<gid>/ directory (merge = union, free), and the partial
-      lineage rows are folded into ONE row per tile before commit —
+      per-row scoring), each subgroup's output is a row group in its
+      task's file (merge = union, free), and the partial lineage rows
+      are folded into ONE row per tile before commit —
       the reference's own stated bottleneck ("the size of a single
       tile", docs/batch3dfier.rst:32) stops serializing the stage.
 
     DE-DRIVERED LINEAGE WRITE (round-3 VERDICT #1): nothing per-tile
     crosses the driver on the write side.  The per-(tile, salt) partials
-    are folded to one row per tile by a JVM groupBy (reusing the
-    grouped-apply partitioning), the work-order JSON is rendered by
-    to_json(struct(...)), and the lineage rows — each carrying its
-    tile's data-file paths — are written as parquet parts straight into
-    the table's staging dir by the executors.  The driver's commit reads
-    only parquet FOOTERS (O(shuffle partitions) stats).  Resume and the
-    returned frame DO read the committed lineage on the driver (one
-    pandas row per tile, parts cached per table instance), so driver
-    memory grows with the table's tile count.
+    are folded to one row per tile by a JVM groupBy, the work-order
+    JSON is rendered by to_json(struct(...)), and the lineage rows —
+    each carrying its tile's data-file paths — are written as parquet
+    parts straight into the table's staging dir by the executors.  The
+    driver's commit reads only parquet FOOTERS (O(shuffle partitions)
+    stats).  Resume and the returned frame DO read the committed
+    lineage on the driver (one pandas row per tile, parts cached per
+    table instance), so driver memory grows with the table's tile
+    count.
     """
     spark = df.sparkSession
     # the name is embedded in work-order JSON via to_json(struct(...)),
@@ -136,47 +141,78 @@ def run_tiles(
         )
         group_cols = ["tile_gid", "salt"]
 
-    def worker(key, pdf):
+    # the task is the unit of I/O: AQE sizes the (unnumbered) shuffle,
+    # and each task's sorted partition holds whole groups back to back
+    work = work.repartition(*group_cols).sortWithinPartitions(*group_cols)
+
+    def task_worker(batches):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        tile = int(key[0])
-        t0 = time.time()
-        out = process(pdf.drop(columns=["salt"], errors="ignore"))
-        status = "ok" if len(out) else "empty"
-        path = ""
-        if len(out):
-            # every data file carries a row-level tile_gid column (the
-            # hive-style dir alone is path metadata): pruned reads stay
-            # tile-EXACT even after compaction merges tiles into
-            # range-sorted files (tablefmt.read applies the range as a
-            # row filter when the column exists)
-            if "tile_gid" not in out.columns:
-                out = out.copy()
-                out.insert(0, "tile_gid", tile)
-            # ROOT-RELATIVE in lineage/manifests: the table directory
-            # stays movable (resolved against root at read time)
-            path = tile_data_path(table_root, tile)
-            pq.write_table(
-                pa.Table.from_pandas(out, preserve_index=False),
-                os.path.join(table_root, path),
-            )
-        return pd.DataFrame(
-            [
-                {
-                    "tile_gid": tile,
-                    "partition_id": os.getpid(),
-                    "rows_in": len(pdf),
-                    "rows_out": len(out),
-                    "wall_ms": (time.time() - t0) * 1000.0,
-                    "status": status,
-                    "path": path,
-                }
-            ]
-        )
+        writer, path = None, ""
 
-    raw = work.groupBy(*group_cols).applyInPandas(
-        worker, schema=_LINEAGE_SCHEMA + ", path string"
+        def run(pieces):
+            # one group: its pieces concatenated ONCE (a group can span
+            # several Arrow batches; re-concatenating a carried tail per
+            # batch would be quadratic in the group size)
+            nonlocal writer, path
+            pdf = pd.concat(pieces, ignore_index=True)
+            tile = int(pdf["tile_gid"].iloc[0])
+            t0 = time.time()
+            out = process(pdf.drop(columns=["salt"], errors="ignore"))
+            if len(out):
+                # every data file carries a row-level tile_gid column:
+                # pruned reads stay tile-EXACT although a file holds
+                # several tiles (tablefmt.read applies the range as a
+                # row filter; one row group per tile keeps the
+                # column's min/max statistics exact)
+                if "tile_gid" not in out.columns:
+                    out = out.copy()
+                    out.insert(0, "tile_gid", tile)
+                tbl = pa.Table.from_pandas(out, preserve_index=False)
+                if writer is None:
+                    # ROOT-RELATIVE in lineage/manifests: the table
+                    # directory stays movable (resolved against root at
+                    # read time)
+                    path = task_data_path(table_root)
+                    writer = pq.ParquetWriter(
+                        os.path.join(table_root, path), tbl.schema)
+                elif not tbl.schema.equals(writer.schema):
+                    tbl = tbl.cast(writer.schema)
+                writer.write_table(tbl)
+            return {
+                "tile_gid": tile,
+                "partition_id": os.getpid(),
+                "rows_in": len(pdf),
+                "rows_out": len(out),
+                "wall_ms": (time.time() - t0) * 1000.0,
+                "status": "ok" if len(out) else "empty",
+                "path": path if len(out) else "",
+            }
+
+        key, pieces = None, []
+        try:
+            for batch in batches:
+                rows = []
+                # the partition is sorted: a batch's groups come in key
+                # order, and only its first may continue the last one
+                for k, piece in batch.groupby(group_cols, sort=False,
+                                              dropna=False):
+                    if k != key:
+                        if pieces:
+                            rows.append(run(pieces))
+                        key, pieces = k, []
+                    pieces.append(piece)
+                if rows:
+                    yield pd.DataFrame(rows)
+            if pieces:
+                yield pd.DataFrame([run(pieces)])
+        finally:
+            if writer is not None:
+                writer.close()
+
+    raw = work.mapInPandas(
+        task_worker, schema=_LINEAGE_SCHEMA + ", path string"
     )
 
     # the one work-order renderer, {"tile":t,"salt_groups":n,"processor":p}
@@ -206,19 +242,20 @@ def run_tiles(
                 F.max("wall_ms").alias("wall_ms"),
                 (F.max(F.when(F.col("status") == "ok", 1).otherwise(0)) == 1
                  ).alias("_ok"),
+                F.count(F.lit(1)).alias("_groups"),
                 # written parts only: empty (tile, salt) subgroups carry
                 # path == "" -> the when() yields null -> collect_list
-                # drops it
-                F.sort_array(
+                # drops it; subgroups written by one task share its file
+                F.sort_array(F.array_distinct(
                     F.collect_list(
                         F.when(F.col("path") != "", F.col("path"))
                     )
-                ).alias("paths"),
+                )).alias("paths"),
             )
             .select(
                 "tile_gid", "partition_id", "rows_in", "rows_out", "wall_ms",
                 F.when(F.col("_ok"), "ok").otherwise("empty").alias("status"),
-                _wo(F.col("tile_gid"), F.size("paths")).alias("work_order"),
+                _wo(F.col("tile_gid"), F.col("_groups")).alias("work_order"),
                 "paths",
             )
         )

@@ -13,7 +13,12 @@ manifest-list indirection real Iceberg uses so metadata cost is
 O(new files) per commit, NOT O(table history)):
 
     root/
-      data/tile_gid=<gid>/<uuid>.parquet       # task-written data files
+      data/part-<uuid>.parquet                 # task-written data files:
+                                               #   one per dispatch task,
+                                               #   one row group per tile
+                                               #   (row-level tile_gid)
+      data/tile_gid=<gid>/<uuid>.parquet       # older per-tile files, still
+                                               #   read (tile from the path)
       metadata/
         manifest-000001-<uuid>.json            # IMMUTABLE: only the files
                                                #   + lineage ADDED by that
@@ -48,19 +53,19 @@ from dataclasses import asdict, dataclass
 
 import pandas as pd
 
-__all__ = ["LineageRow", "IcebergishTable", "tile_data_path"]
+__all__ = ["LineageRow", "IcebergishTable", "task_data_path"]
 
 _LINEAGE_COLS = ["tile_gid", "partition_id", "rows_in", "rows_out",
                  "wall_ms", "status", "snapshot_id", "work_order"]
 _TILE_DIR = r"tile_gid=(\d+)"  # hive-style tile directory of a data file
 
 
-def tile_data_path(root: str, tile_gid: int) -> str:
-    """New ROOT-RELATIVE `data/tile_gid=<gid>/<uuid>.parquet` path, its
-    directory created under `root` (table-free: workers call it)."""
-    rel_dir = os.path.join("data", f"tile_gid={int(tile_gid)}")
-    os.makedirs(os.path.join(root, rel_dir), exist_ok=True)
-    return os.path.join(rel_dir, f"{uuid.uuid4().hex}.parquet")
+def task_data_path(root: str) -> str:
+    """New ROOT-RELATIVE `data/part-<uuid>.parquet` path for one task's
+    data file, its directory created under `root` (table-free: workers
+    call it)."""
+    os.makedirs(os.path.join(root, "data"), exist_ok=True)
+    return os.path.join("data", f"part-{uuid.uuid4().hex}.parquet")
 
 
 def _range_stats(entries: list[dict]) -> dict:
@@ -288,7 +293,8 @@ class IcebergishTable:
                 files.extend(f)
             if inc_lin:
                 lineage.extend(r)
-        return [self._abs(f) for f in files], lineage
+        # several tiles' lineage rows name one task's file: each once
+        return [self._abs(f) for f in dict.fromkeys(files)], lineage
 
     def current_snapshot(self) -> dict | None:
         """Resolved view of the current snapshot (or None): the raw
@@ -504,9 +510,10 @@ class IcebergishTable:
         When the data carries a row-level `tile_gid` column (every file
         run_tiles writes, and every compacted file), a pruned read ALSO
         applies the range as a row filter, so the result is tile-exact
-        even when a compacted file spans several tiles — the file-level
-        prune is the scan optimization, the filter is the contract (the
-        split Iceberg itself makes).  The row filter is NULL-tolerant:
+        although a file spans several tiles (a dispatch task's file, a
+        compacted file) — the file-level prune is the scan
+        optimization, the filter is the contract (the split Iceberg
+        itself makes).  The row filter is NULL-tolerant:
         in a MIXED table (pre-upgrade per-tile files without the
         column, plus new/compacted files with it) the old files' rows
         surface as NULL tile_gid under the unified schema, but they
@@ -528,20 +535,15 @@ class IcebergishTable:
             df = df.where(F.col("tile_gid").isNull() | rng)
         return df
 
-    # -- task-side helpers ------------------------------------------------------
-
-    def new_data_path(self, tile_gid: int) -> str:
-        return os.path.join(self.root, tile_data_path(self.root, tile_gid))
-
     # -- maintenance (compaction, snapshot expiry, vacuum) --------------------
     # The reference delegates table maintenance to Postgres — db.vacuum
     # runs VACUUM ANALYZE after bulk loads (batch3dfier/db.py:62-83).
     # An Iceberg-style table needs the jobs Postgres does implicitly:
     # rewriting many small files into few (Iceberg rewriteDataFiles),
     # retiring old snapshots (expire_snapshots), and reclaiming
-    # unreferenced storage (remove_orphan_files).  Without them a
-    # 1e6-tile run leaves ~1e6 small files per pass and the manifest
-    # chain grows unboundedly across runs.
+    # unreferenced storage (remove_orphan_files).  Without them every
+    # pass leaves one more small file per dispatch task and the
+    # manifest chain grows unboundedly across runs.
 
     def compact(self, spark, target_file_rows: int = 4_000_000) -> int:
         """Rewrite the current snapshot's data into ~rows/target
@@ -790,10 +792,15 @@ class IcebergishTable:
             raise ValueError(f"{out_dir} already holds a table")
         copies = []
         for src in files:
-            # keep the tile_gid=<n>/ partition dir so partition-style
-            # layouts survive the round trip
-            dst = os.path.join(out.data_dir, os.path.basename(os.path.dirname(src)),
-                               os.path.basename(src))
+            # keep each file's path under data/ (data/part-*.parquet,
+            # older data/tile_gid=<n>/*.parquet); a file from outside
+            # data/ keeps its parent directory's name
+            rel = os.path.relpath(os.path.abspath(src),
+                                  os.path.abspath(self.data_dir))
+            if rel.startswith(os.pardir + os.sep):
+                rel = os.path.join(os.path.basename(os.path.dirname(src)),
+                                   os.path.basename(src))
+            dst = os.path.join(out.data_dir, rel)
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             shutil.copy2(src, dst)
             copies.append(dst)

@@ -133,8 +133,8 @@ def flagship_queries(spark, pages_path: str):
 
     def bench_dispatch():
         # the reference's core job shape: per-tile dispatch (O10/O11) —
-        # groupBy(tile).applyInPandas worker -> per-tile parquet + one
-        # lineage row -> atomic snapshot commit.  Coarser 32x32 index so
+        # a task worker runs the processor per tile -> one parquet file
+        # per task + one lineage row per tile -> atomic snapshot commit.  Coarser 32x32 index so
         # groups carry real work (~2k rows each); the 1e6-tile index
         # stays the assignment/pruning layout.  Reported as
         # dispatched_tiles_per_sec (the reference's own throughput unit:
@@ -195,7 +195,7 @@ def flagship_queries(spark, pages_path: str):
         # the min-of-N warm-throughput protocol
         if not os.path.exists(os.path.join(geo_path, "_SUCCESS")):
             ingest_pages(spark, pages_path, geo_path, idx, REF_TERRITORY)
-        # warm the dispatch path too (grouped-map workers + storage
+        # warm the dispatch path too (task workers + storage
         # commit code): bench_dispatch measures WARM per-tile dispatch
         # throughput, so its first-run worker spawn must not leak into
         # the timing (round-3 VERDICT #7 — the driver's single cold run

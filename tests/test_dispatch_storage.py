@@ -222,10 +222,9 @@ def test_export_into_existing_table_raises(tmp_path):
 
 def test_run_tiles_decomposable_salts_hot_tile(spark, tmp_path):
     """A hot tile above the salt target must be processed as MULTIPLE
-    subgroups (several parquet parts in its tile dir) while the result
-    table and the per-tile lineage stay identical to the unsalted run."""
-    import os
-
+    subgroups while the result table and the per-tile lineage stay
+    identical to the unsalted run; the hot tile's rows are in the
+    files its lineage row names."""
     pdf = pd.DataFrame(
         {
             "url": [f"u{i:05d}" for i in range(3000)],
@@ -245,10 +244,6 @@ def test_run_tiles_decomposable_salts_hot_tile(spark, tmp_path):
     lineage = run_tiles(
         df, tile_processor, t_salt, decomposable=True, salt_target_rows=600
     )
-    hot_parts = os.listdir(os.path.join(t_salt.data_dir, "tile_gid=1"))
-    assert len(hot_parts) == 5  # >1 task for the hot tile
-    cold_parts = os.listdir(os.path.join(t_salt.data_dir, "tile_gid=2"))
-    assert len(cold_parts) == 1
     got = (
         t_salt.read(spark).toPandas().sort_values("url").reset_index(drop=True)
     )
@@ -260,6 +255,10 @@ def test_run_tiles_decomposable_salts_hot_tile(spark, tmp_path):
     import json
 
     assert json.loads(hot["work_order"])["salt_groups"] == 5
+    hot_paths = t_salt.files(min_tile=1, max_tile=1)
+    assert len(hot_paths) == len(set(hot_paths)) >= 1
+    in_files = spark.read.parquet(*hot_paths).where(F.col("tile_gid") == 1)
+    assert in_files.count() == 2500
     # resume semantics unchanged: a second run finds everything done
     lin2 = run_tiles(df, tile_processor, t_salt, decomposable=True,
                      salt_target_rows=600)
@@ -267,8 +266,8 @@ def test_run_tiles_decomposable_salts_hot_tile(spark, tmp_path):
 
 
 def test_run_tiles_emits_no_user_warning(spark, tmp_path):
-    """The grouped worker carries no partial type hints, so
-    applyInPandas has nothing to infer and warns about nothing."""
+    """The task worker carries no type hints, so mapInPandas has
+    nothing to infer and warns about nothing."""
     import warnings
 
     df = spark.createDataFrame(pd.DataFrame(
@@ -402,6 +401,11 @@ def test_export_snapshot_round_trip(spark, tmp_path):
     # artifact is self-contained: no absolute path into the source table
     for fpath in art2.files():
         assert fpath.startswith(out2)
+    # each file keeps its path under data/ (run_tiles writes
+    # data/part-<uuid>.parquet, one per task)
+    src_rel = sorted(os.path.relpath(f, table.root) for f in table.files())
+    assert all(r.startswith(os.path.join("data", "part-")) for r in src_rel)
+    assert sorted(os.path.relpath(f, out2) for f in art2.files()) == src_rel
 
 
 def test_lineage_is_dedrivered_and_correct_at_10k_tiles(spark, tmp_path):
@@ -410,8 +414,12 @@ def test_lineage_is_dedrivered_and_correct_at_10k_tiles(spark, tmp_path):
     metadata/) and the commit reads only footers.  Correctness is
     asserted with >10k tiles: per-tile accounting, completed-set
     resume, and the data/lineage file-path linkage all hold."""
+    import glob
     import inspect
+    import os
+
     import numpy as np
+    import pyarrow.parquet as pq
 
     # the structural guarantee, stated as a test: the hot path never
     # calls toPandas() on per-tile data
@@ -443,15 +451,25 @@ def test_lineage_is_dedrivered_and_correct_at_10k_tiles(spark, tmp_path):
     n_ok = n_tiles // 7
     assert int(lineage["rows_out"].sum()) == n_ok
     assert (lineage["status"] == "ok").sum() == n_ok
-    assert len(table.files()) == n_ok
+    # every ok tile names a data file, and no other tile does; a file
+    # holds several tiles, and files() lists each once
+    staged = pd.concat(
+        pq.read_table(p).to_pandas()
+        for p in glob.glob(os.path.join(table.meta_dir, "lineage-*", "*.parquet")))
+    named = staged.set_index("tile_gid")["paths"].dropna().map(list)
+    assert set(named.index) == set(range(7, n_tiles + 1, 7))
+    assert (named.map(len) == 1).all()
+    fs = table.files()
+    assert len(fs) == len(set(fs))
+    assert {os.path.join(table.root, p[0]) for p in named} == set(fs)
     assert table.completed_tiles() == set(range(1, n_tiles + 1))
     # resume: a second run over the same work list processes NOTHING new
     # (all 10 007 completed tiles leave through the one left_anti join)
     lin2 = run_tiles(df, sparse_processor, table)
     assert len(lin2) == n_tiles  # no extra rows
-    # pruned read: one tile's files without walking everything
+    # pruned read: one tile's file without walking everything
     fs = table.files(min_tile=700, max_tile=700)
-    assert len(fs) == 1 and "tile_gid=700" in fs[0]
+    assert fs == [os.path.join(table.root, named[700][0])]
 
 
 def test_resume_excludes_completed_and_skips_with_one_join(
@@ -603,7 +621,96 @@ def test_table_directory_is_movable(spark, tmp_path):
     assert moved.completed_tiles() == {1, 2}
 
 
+def _named_paths(table):
+    """Absolute data-file paths the staged lineage rows of `table` name."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = set()
+    for p in glob.glob(os.path.join(table.meta_dir, "lineage-*", "*.parquet")):
+        for paths in pq.read_table(p, columns=["paths"]).column(0).to_pylist():
+            out.update(os.path.join(table.root, q) for q in paths or ())
+    return out
+
+
+def test_read_back_runs_no_listing_job(spark, tmp_path):
+    """Past 32 paths (spark.sql.sources.parallelPartitionDiscovery.
+    threshold) Spark lists a read's paths in a job of one task per
+    path.  run_tiles writes one file per task, not one per tile, so
+    reading back a 40-tile table runs only the schema merge and the
+    count's two jobs."""
+    n_tiles = 40
+    pdf = pd.DataFrame({"url": [f"u{i}" for i in range(3 * n_tiles)],
+                        "text": ["x y"] * (3 * n_tiles),
+                        "tile_gid": [i % n_tiles + 1 for i in range(3 * n_tiles)]})
+    table = IcebergishTable(str(tmp_path / "listing"))
+    run_tiles(spark.createDataFrame(pdf), tile_processor, table)
+    assert table.lineage()["tile_gid"].nunique() == n_tiles
+    sc = spark.sparkContext
+    group = "test_read_back_runs_no_listing_job"
+    sc.setJobGroup(group, group)
+    try:
+        n = IcebergishTable(table.root).read(spark).count()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n == 3 * n_tiles
+    assert len(jobs) == 3, jobs
+
+
+def test_files_holding_several_tiles(spark, tmp_path):
+    """A table run_tiles wrote in two commits (a phase-1 half, then a
+    resumed run over all tiles) holds several tiles per file: pruned
+    reads stay tile-exact, time travel returns phase 1 only, files()
+    lists each file once, and expiry + vacuum keep every file the
+    lineage names."""
+    import os
+
+    n_tiles = 12
+    pdf = pd.DataFrame({"url": [f"u{i:03d}" for i in range(4 * n_tiles)],
+                        "text": ["x y"] * (4 * n_tiles),
+                        "tile_gid": [i % n_tiles + 1 for i in range(4 * n_tiles)]})
+    df = spark.createDataFrame(pdf)
+    half = {1, 4, 5, 8, 11, 12}
+    table = IcebergishTable(str(tmp_path / "multi"))
+    run_tiles(df.where(F.col("tile_gid").isin(*half)), tile_processor, table)
+    run_tiles(df, tile_processor, table)
+    assert table.snapshots() == [1, 2]
+
+    fs = table.files()
+    assert len(fs) == len(set(fs)) < n_tiles  # files hold several tiles
+    assert set(fs) == _named_paths(table)
+    for t in range(1, n_tiles + 1):
+        got = table.read(spark, min_tile=t, max_tile=t).toPandas()
+        assert sorted(got["url"]) == sorted(pdf.loc[pdf.tile_gid == t, "url"]), t
+    as_of_1 = table.read(spark, snapshot_id=1).toPandas()
+    assert set(as_of_1["tile_gid"]) == half
+    assert sorted(as_of_1["url"]) == sorted(pdf.loc[pdf.tile_gid.isin(half), "url"])
+    full = table.read(spark).orderBy("url").toPandas()
+
+    named = _named_paths(table)
+    assert table.expire_snapshots(1) == [1]
+    table.vacuum()
+    assert all(os.path.exists(p) for p in named)
+    assert set(table.files()) == named
+    pd.testing.assert_frame_equal(
+        table.read(spark).orderBy("url").toPandas(), full)
+
+
 # -- maintenance: compaction, snapshot expiry, vacuum (round-5 VERDICT #3) --
+
+
+def _tile_file_path(table, tile):
+    """A new absolute path in the older per-tile layout,
+    data/tile_gid=<tile>/<uuid>.parquet, which readers keep accepting."""
+    import os
+    import uuid
+
+    d = os.path.join(table.data_dir, f"tile_gid={int(tile)}")
+    os.makedirs(d, exist_ok=True)
+    return os.path.join(d, f"{uuid.uuid4().hex}.parquet")
 
 
 def _commit_tile_files(table, tiles, rows_per_tile=5, commit_tag=0):
@@ -616,7 +723,7 @@ def _commit_tile_files(table, tiles, rows_per_tile=5, commit_tag=0):
 
     files, lineage = [], []
     for t in tiles:
-        p = table.new_data_path(t)
+        p = _tile_file_path(table, t)
         pq.write_table(
             pa.table(
                 {
@@ -654,7 +761,7 @@ def test_pruned_read_mixed_schema_keeps_pre_upgrade_rows(spark, tmp_path):
     # commit 1: legacy layout — NO tile_gid column in the data file
     legacy_files, legacy_lineage = [], []
     for t in (7, 8):
-        p = table.new_data_path(t)
+        p = _tile_file_path(table, t)
         pq.write_table(
             pa.table({"url": [f"old{t}_{i}" for i in range(3)],
                       "v": pa.array([t * 10 + i for i in range(3)],
@@ -797,6 +904,8 @@ def test_vacuum_reclaims_orphans(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from batch3dfier_spark.storage.tablefmt import task_data_path
+
     pdf = pd.DataFrame({"url": ["a", "b"], "text": ["x y", "z"],
                         "tile_gid": [1, 2]})
     table = IcebergishTable(str(tmp_path / "v"))
@@ -809,7 +918,7 @@ def test_vacuum_reclaims_orphans(spark, tmp_path):
     pq.write_table(pa.table({"tile_gid": pa.array([9], pa.int64())}),
                    os.path.join(orphan_stage, "part-0.parquet"))
     # orphan data file (worker wrote it, run never committed)
-    orphan_data = table.new_data_path(99)
+    orphan_data = os.path.join(table.root, task_data_path(table.root))
     pq.write_table(pa.table({"tile_gid": pa.array([99], pa.int64())}),
                    orphan_data)
     # orphan manifest (written, commit failed before the pointer swap)

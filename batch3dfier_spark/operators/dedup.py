@@ -2,9 +2,9 @@
 SimHash, and n-gram Jaccard verification.
 
 Scale design (100 TB):
-- exact dedup: groupBy(sha2(text)).agg(min,count) + join-back — the
-  partial map-side combine absorbs hot duplicate groups before the
-  shuffle and AQE can skew-split the join.
+- exact dedup: `min_id_groups` keyed on sha2(text) — the one min-id
+  survivor rule (groupBy(key).agg(min, count) joined back on the key;
+  see its docstring for why that shape is skew-safe).
 - MinHash: signatures are computed in one Arrow-batched pandas UDF
   (numpy matrix ops per batch, no per-row Python math); LSH banding
   explodes each doc into `bands` rows and groupBys on (band, band_hash)
@@ -37,13 +37,15 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
 from ..session import ensure_parallel
 
 __all__ = [
+    "min_id_groups",
+    "min_id_survivors",
     "exact_dedup",
     "exact_dup_pairs",
     "line_dedup",
@@ -69,39 +71,60 @@ MERSENNE = (1 << 61) - 1
 _NUM_PERM_DEFAULT = 64
 
 
+def min_id_groups(
+    df: DataFrame,
+    key_col: str,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """The min-id survivor rule: `df`'s columns (with `key_col`) plus
+    `keeper_id`, the lowest id sharing the row's key, and `group_size`.
+    Survivors are the rows whose id equals `keeper_id`: filtering them,
+    unlike joining a keep set back on the id, never multiplies a
+    repeated id (a mixture upweight).  NULL keys are dropped.
+
+    Skew: the min/count hash aggregation combines map-side, so a hot key
+    (an error page or redirect target repeated 1e9x in a web corpus) is
+    one row per input partition before the shuffle, and the join back on
+    the key is an equi-join AQE can skew-split.  A window keyed on the
+    same column would ship every occurrence of a hot key to ONE task:
+    AQE splits skewed joins and aggregates, never window partitions."""
+    groups = df.groupBy(key_col).agg(
+        F.min(id_col).alias("keeper_id"),
+        F.count(F.lit(1)).alias("group_size"),
+    )
+    return df.join(groups, key_col)
+
+
+def min_id_survivors(
+    df: DataFrame,
+    key: Column,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """The rows of `df` (its columns only) whose id is the lowest among
+    the rows with the same `key` value: the `min_id_groups` survivors."""
+    return (
+        min_id_groups(df.withColumn("_min_id_key", key), "_min_id_key", id_col)
+        .where(F.col(id_col) == F.col("keeper_id"))
+        .select(*df.columns)
+    )
+
+
 def exact_dedup(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Exact near-zero-cost dedup: keeper = min id per sha2(text) group.
-    Returns (id, text_sha, group_size, is_dup) — is_dup marks rows to
-    drop.  Pure JVM.
-
-    Shape (the line_dedup lesson applied to its sibling): groupBy +
-    join-back.  Hash aggregation does PARTIAL map-side combine, so a
-    hot exact-duplicate document (empty pages, error pages, boilerplate
-    mirrors — repeated 1e6-1e9x in a web corpus) collapses to one
-    (text_sha, min, count) row per input partition before the shuffle,
-    and the join-back is a plain equi-join that AQE's skew handling CAN
-    split at runtime.  A min/count window keyed on text_sha would ship
-    every occurrence of a hot sha to ONE task: AQE splits skewed joins
-    and aggregates, never window partitions, so that task straggles or
-    OOMs at 100 TB."""
-    h = F.sha2(F.col(text_col), 256).alias("text_sha")
-    with_h = df.select(F.col(id_col), h)
-    groups = with_h.groupBy("text_sha").agg(
-        F.min(id_col).alias("keeper_id"),
-        F.count(F.lit(1)).alias("group_size"),
+    """Exact near-zero-cost dedup: keeper = min id per sha2(text) group
+    (`min_id_groups`, skew-safe).  Returns (id, text_sha, group_size,
+    is_dup) — is_dup marks rows to drop.  Pure JVM."""
+    with_h = df.select(
+        F.col(id_col), F.sha2(F.col(text_col), 256).alias("text_sha")
     )
-    return (
-        with_h.join(groups, "text_sha")
-        .select(
-            id_col,
-            "text_sha",
-            "group_size",
-            (F.col(id_col) != F.col("keeper_id")).alias("is_dup"),
-        )
+    return min_id_groups(with_h, "text_sha", id_col).select(
+        id_col,
+        "text_sha",
+        "group_size",
+        (F.col(id_col) != F.col("keeper_id")).alias("is_dup"),
     )
 
 
@@ -111,26 +134,17 @@ def exact_dup_pairs(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """(id_a, id_b) edges linking every byte-identical duplicate to its
-    group's min-id keeper (id_a = keeper < id_b) — the star-graph form
-    of exact duplication, ready to union into a near-dup pair graph
-    before connected_components.  Needed because minhash_near_dups
-    PREFILTERS exact dups out of the LSH funnel (they would make hot
-    buckets), so its pair output alone never names them (round-3
-    ADVICE).
-
-    Skew-safe shape (no window): `groupBy(text_sha).agg(min(id))`
-    absorbs a hot duplicate group map-side via partial aggregation,
-    and the join-back that emits the star edges is a plain equi-join
-    AQE can skew-split.  The previous window-on-text_sha shape pinned
-    every occurrence of a hot sha to one task."""
+    group's min-id keeper (id_a = keeper < id_b; `min_id_groups`) — the
+    star-graph form of exact duplication, to union into a near-dup pair
+    graph: minhash_near_dups PREFILTERS exact dups out of the LSH
+    funnel, so its pairs never name them (round-3 ADVICE)."""
     with_h = df.select(
         F.col(id_col), F.sha2(F.col(text_col), 256).alias("text_sha")
     )
-    keepers = with_h.groupBy("text_sha").agg(F.min(id_col).alias("_keeper"))
     return (
-        with_h.join(keepers, "text_sha")
-        .where(F.col(id_col) != F.col("_keeper"))
-        .select(F.col("_keeper").alias("id_a"), F.col(id_col).alias("id_b"))
+        min_id_groups(with_h, "text_sha", id_col)
+        .where(F.col(id_col) != F.col("keeper_id"))
+        .select(F.col("keeper_id").alias("id_a"), F.col(id_col).alias("id_b"))
     )
 
 
@@ -675,8 +689,10 @@ def verified_near_dups(
     Shingles all of `df` rather than semi-joining down to candidate
     docs first: deriving the candidate-id set would re-execute the
     whole (unpersisted) screen pipeline a second time — measured 2x
-    SLOWER than the extra shingling it saves (round-7)."""
-    sh = doc_shingles(df, text_col, id_col, shingle_k)
+    SLOWER than the extra shingling it saves (round-7).  The id exchange
+    under both renames lets the two joins share one shingling pass
+    (two renamed broadcasts would each run it)."""
+    sh = doc_shingles(df, text_col, id_col, shingle_k).repartition(id_col)
     paired = (
         candidates.join(
             sh.withColumnsRenamed({id_col: "id_a", "shingles": "_sha"}), "id_a"
@@ -817,10 +833,10 @@ def minhash_near_dups(
 ) -> DataFrame:
     """The full MinHash near-dup funnel, skew-safe at web scale:
 
-    1. exact_dedup prefilter: byte-identical docs (guaranteed at 100 TB)
-       would collide in EVERY band; only group keepers (min id per
-       sha256) enter the signature stage.  Their pair relationships are
-       already captured by exact_dedup itself.
+    1. exact prefilter: byte-identical docs (guaranteed at 100 TB)
+       would collide in EVERY band; only the keepers
+       (`min_id_survivors` on sha2(text)) enter the signature stage.
+       Their pair relationships are captured by exact_dup_pairs.
     2. minhash_signatures -> lsh_candidates with a deterministic
        bucket_cap (lowest ids win) bounding any residual hot bucket.
     3. estimated-Jaccard screen, inside the LSH buckets: a banding
@@ -835,20 +851,16 @@ def minhash_near_dups(
        only (verified_near_dups joins shingles onto those pairs).
 
     The keeper set feeds both the signature pass and the verify
-    shingling and is NOT materialized, so Spark recomputes the text
-    scan + exact-dedup join per consumer.  Checkpointing it (the
-    session.py lifetime rule) was measured slower on the textpipe
-    benchmark: +2 jobs and 7.0 -> 7.9 s for the near_dedup step
-    (median of 3 alternating traced runs, 4 vCPU), so the result stays
-    lazy and owns nothing.
+    shingling and is NOT materialized: each consumer re-reads the
+    documents against one shared per-hash groups exchange.  A
+    checkpoint (the session.py lifetime rule) measured slower on the
+    textpipe benchmark: +2 jobs, 7.0 -> 7.9 s for the near_dedup step
+    (median of 3 alternating traced runs, 4 vCPU).
 
     Returns (id_a, id_b, jaccard) for near-dup keeper pairs."""
-    keepers = (
-        exact_dedup(df, text_col, id_col)
-        .where(~F.col("is_dup"))
-        .select(id_col)
+    df = min_id_survivors(
+        df.select(id_col, text_col), F.sha2(F.col(text_col), 256), id_col
     )
-    df = df.join(keepers, id_col, "inner")
     sigs = minhash_signatures(df, text_col, id_col, num_perm, shingle_k)
     est_min = int(np.ceil(num_perm * max(0.0, threshold - MINHASH_EST_MARGIN)))
     screened = lsh_candidates(sigs, id_col, bands, bucket_cap, est_min)

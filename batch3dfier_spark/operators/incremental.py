@@ -15,8 +15,8 @@ Spark-first shape:
   set — the difference between O(|batch|) and O(|corpus|) network per
   increment, which at 100 TB of corpus is the whole game.
 - intra-batch dedup first (the batch may repeat itself): min-id keeper
-  per hash, the same groupBy-min rule as exact_dedup — partial
-  aggregation absorbs hot identical docs map-side.
+  per hash, `dedup.min_id_survivors` — the survivor rule exact_dedup
+  uses, whose partial aggregation absorbs hot identical docs map-side.
 
 Determinism: sha2-256 of the raw text; survivor = min id; no
 randomness, no timestamps.  `dedup_increment` itself is replayed by an
@@ -32,6 +32,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_path
+from .dedup import min_id_survivors
+
 __all__ = [
     "register_corpus",
     "dedup_increment",
@@ -39,12 +42,6 @@ __all__ = [
     "register_minhash_corpus",
     "near_dedup_increment",
 ]
-
-
-def _hashed(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    return df.select(
-        F.col(id_col), F.sha2(F.col(text_col), 256).alias("text_sha")
-    )
 
 
 def _reset_table(spark: SparkSession, table: str) -> None:
@@ -59,14 +56,12 @@ def _reset_table(spark: SparkSession, table: str) -> None:
     in another database is never touched."""
     import os
     import shutil
-    from urllib.parse import urlparse
 
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    wh = spark.conf.get("spark.sql.warehouse.dir", "") or ""
-    parsed = urlparse(wh)
-    if parsed.scheme not in ("", "file"):  # non-local warehouse: catalog
-        return  # drop above is all we can (and need to) do locally
-    root = parsed.path or wh
+    try:
+        root = local_path(spark.conf.get("spark.sql.warehouse.dir", "") or "")
+    except OSError:  # non-local warehouse: the catalog drop is all we
+        return  # can (and need to) do locally
     parts = table.lower().split(".")
     db = parts[-2] if len(parts) > 1 else spark.catalog.currentDatabase()
     if db != "default":
@@ -90,8 +85,7 @@ def register_corpus(
     increment."""
     _reset_table(spark, table)
     (
-        _hashed(corpus, text_col, id_col)
-        .groupBy("text_sha")
+        corpus.groupBy(F.sha2(F.col(text_col), 256).alias("text_sha"))
         .agg(F.min(id_col).alias(id_col))
         .write.mode("overwrite")
         .format("parquet")
@@ -111,20 +105,20 @@ def dedup_increment(
     """Rows of `batch` that are new: not an intra-batch duplicate (min
     id per hash wins) and not already in the corpus table.  Returns the
     batch's columns plus text_sha; only the batch side shuffles."""
-    h = _hashed(batch, text_col, id_col)
-    keepers = h.groupBy("text_sha").agg(F.min(id_col).alias(id_col))
+    keepers = min_id_survivors(
+        batch.withColumn("text_sha", F.sha2(F.col(text_col), 256)),
+        F.col("text_sha"), id_col,
+    )
     # merge hint: the corpus side must NEVER be broadcast (it is the
     # 100 TB side; the optimizer only sees a cheap hash-column scan and
     # would happily broadcast a "small-looking" sample of it in tests
     # or misconfigured sessions).  Under sort-merge the bucketed scan
     # satisfies the join's distribution itself — no corpus Exchange.
-    fresh = keepers.join(
+    return keepers.join(
         spark.table(table).select("text_sha").hint("merge"),
         "text_sha",
         "left_anti",
     )
-    return batch.join(fresh, id_col, "inner")
-
 
 
 def sql_dedup_increment(

@@ -30,8 +30,13 @@ both).  The tricks that make that possible:
 
 from __future__ import annotations
 
+from collections import Counter
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 __all__ = [
     "token_count",
@@ -39,6 +44,7 @@ __all__ = [
     "sql_pretok_count",
     "PRETOK_RE",
     "add_textstats",
+    "repetition_ratios",
     "repetition_stats",
     "scrub_pii",
     "vocab_topk",
@@ -217,14 +223,15 @@ def add_textstats(
     )
 
 
-def repetition_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Gopher-style within-document repetition metrics — the standard
-    quality filters for web-scraped training text (boilerplate pages
-    repeat the same line/navigation bigram over and over):
+_REPETITION = ("dup_line_frac", "dup_line_char_frac", "top_bigram_frac")
+
+
+@F.pandas_udf(StructType([StructField(n, DoubleType()) for n in _REPETITION]))
+def repetition_ratios(text: pd.Series) -> pd.DataFrame:
+    """Gopher-style within-document repetition metrics of each text —
+    the standard quality filters for web-scraped training text
+    (boilerplate pages repeat the same line/navigation bigram over and
+    over), as a struct column:
 
     - dup_line_frac: 1 - distinct_lines / lines
     - dup_line_char_frac: chars inside lines occurring >1 time / chars
@@ -232,50 +239,43 @@ def repetition_stats(
     - top_bigram_frac: occurrences of the most frequent word bigram /
       total bigrams
 
-    One Arrow-batched kernel, O(doc) python per doc (Counter over lines
-    and bigrams — the same bounded per-doc pattern as the gram
+    One Arrow-batched scalar UDF, O(doc) python per doc (Counter over
+    lines and bigrams — the same bounded per-doc pattern as the gram
     builders); all three ratios are exact-integer divisions, so the SQL
-    twin reproduces them bit-for-bit unrounded."""
-    from collections import Counter
-    from typing import Iterator
+    twin reproduces them bit-for-bit unrounded.  Evaluated once per row
+    however many fields a filter reads (the return type is a DataType:
+    a DDL string needs a session at import)."""
+    n = len(text)
+    dl = np.zeros(n)
+    dlc = np.zeros(n)
+    tb = np.zeros(n)
+    for k, txt in enumerate(text):
+        txt = txt if isinstance(txt, str) else ""
+        lines = txt.split("\n")
+        lc = Counter(lines)
+        dl[k] = 1.0 - len(lc) / len(lines)
+        chars_all = sum(len(ln) * c for ln, c in lc.items())
+        if chars_all:
+            dlc[k] = sum(
+                len(ln) * c for ln, c in lc.items() if c > 1
+            ) / chars_all
+        toks = txt.split()
+        if len(toks) >= 2:
+            bc = Counter(zip(toks, toks[1:]))
+            tb[k] = max(bc.values()) / (len(toks) - 1)
+    return pd.DataFrame(dict(zip(_REPETITION, (dl, dlc, tb))))
 
-    import numpy as np
-    import pandas as pd
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            dl = np.zeros(n)
-            dlc = np.zeros(n)
-            tb = np.zeros(n)
-            for k, txt in enumerate(pdf[text_col]):
-                txt = txt if isinstance(txt, str) else ""
-                lines = txt.split("\n")
-                lc = Counter(lines)
-                dl[k] = 1.0 - len(lc) / len(lines)
-                chars_all = sum(len(ln) * c for ln, c in lc.items())
-                if chars_all:
-                    dlc[k] = sum(
-                        len(ln) * c for ln, c in lc.items() if c > 1
-                    ) / chars_all
-                toks = txt.split()
-                if len(toks) >= 2:
-                    bc = Counter(zip(toks, toks[1:]))
-                    tb[k] = max(bc.values()) / (len(toks) - 1)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "dup_line_frac": dl,
-                    "dup_line_char_frac": dlc,
-                    "top_bigram_frac": tb,
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        stats,
-        schema=(f"{id_col} bigint, dup_line_frac double, "
-                "dup_line_char_frac double, top_bigram_frac double"),
-    )
+def repetition_stats(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """(id, dup_line_frac, dup_line_char_frac, top_bigram_frac): the
+    `repetition_ratios` of every document."""
+    return df.select(
+        F.col(id_col), repetition_ratios(F.col(text_col)).alias("_r")
+    ).select(id_col, "_r.*")
 
 
 # ---------------------------------------------------------------------------

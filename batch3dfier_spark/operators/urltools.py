@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import min_id_survivors
+
 __all__ = [
     "url_canonical", "url_dedup", "sql_url_canonical",
     "url_host", "host_suffixes", "url_blocklist_filter",
@@ -115,17 +117,10 @@ def url_dedup(
     url_col: str = "url",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Keep one row per CANONICAL url — the lowest id wins (the
-    deterministic survivor rule every dedup in this engine uses).
-    One shuffle (groupBy canonical); the min survivor aggregates
-    map-side, so a hot canonical URL (a boilerplate redirect target
-    fetched billions of times) combines before the exchange instead of
-    piling onto one task."""
+    """The rows of the lowest id per CANONICAL url (`min_id_survivors`,
+    skew-safe for a hot redirect target): `df`'s columns + url_canon."""
     canon = df.withColumn("url_canon", url_canonical(F.col(url_col)))
-    survivors = canon.groupBy("url_canon").agg(
-        F.min(F.col(id_col)).alias(id_col)
-    )
-    return canon.join(survivors, on=["url_canon", id_col], how="inner")
+    return min_id_survivors(canon, F.col("url_canon"), id_col)
 
 
 def url_host(url: Column) -> Column:

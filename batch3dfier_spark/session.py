@@ -17,15 +17,16 @@ entry, no handle to release, no option.  Scratch files (stream sinks)
 are read into such a checkpoint and removed before returning.  With
 AQE on, `localCheckpoint(eager=False)` runs the intermediate's shuffle
 stages when called, so such an operator does work at call time.  Where
-recomputing measured faster (the minhash_near_dups keeper set), the
-intermediate is not materialized at all.
+recomputing measured faster (the minhash_near_dups keeper set, which
+each consumer re-reads against one shared per-hash groups exchange),
+the intermediate is not materialized at all.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
-from urllib.parse import urlparse
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -96,6 +97,15 @@ def get_spark(
     return b.getOrCreate()
 
 
+def local_path(p: str) -> str:
+    """The path of a plain path or a (percent-encoded) file:// URI;
+    OSError for any other scheme: the file is not on this machine."""
+    u = urlparse(p)
+    if u.scheme not in ("", "file"):
+        raise OSError(f"not a local path: {p}")
+    return unquote(u.path) if u.scheme else p
+
+
 def input_bytes(paths: list[str]) -> int:
     """Total bytes of local files or directories, given as plain paths
     or file:// URIs.  Directories are walked recursively, skipping the
@@ -103,10 +113,7 @@ def input_bytes(paths: list[str]) -> int:
     for a missing or non-local path: unknown is not small."""
     total = 0
     for p in paths:
-        u = urlparse(p)
-        if u.scheme not in ("", "file"):
-            raise OSError(f"not a local path: {p}")
-        p = u.path or p
+        p = local_path(p)
         if not os.path.isdir(p):
             total += os.path.getsize(p)
             continue

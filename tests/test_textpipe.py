@@ -743,3 +743,146 @@ def test_textpipe_lm_filter_order2(spark, tmp_path):
     )
     assert kept == exp_kept
     assert report["rows_out"] == len(exp_kept)
+
+
+@pytest.fixture(scope="module")
+def mixed_src(spark, tmp_path_factory):
+    """The sf0.001 documents with their embeddings and a url column —
+    every column a keep-step below reads."""
+    from pyspark.sql import functions as F
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    src = str(tmp_path_factory.mktemp("mixed") / "docs")
+    (
+        docs.join(emb, docs["doc_id"] == emb["vec_id"]).drop("vec_id")
+        .withColumn("url", F.format_string(
+            "http://h%d.example/p%d", F.col("doc_id") % 5, F.col("doc_id")))
+        .write.parquet(src)
+    )
+    return src
+
+
+_KEEP_STEPS = {
+    "exact_dedup": {"op": "exact_dedup"},
+    "quality_filter": {"op": "quality_filter", "min_tokens": 10,
+                       "max_dup_line_frac": 0.3, "max_top_bigram_frac": 0.2},
+    "url_filter": {"op": "url_filter", "blocked_hosts": ["h0.example"]},
+    "semantic_dedup": {"op": "semantic_dedup", "threshold": 0.4,
+                       "n_centroids": 16},
+    "contamination_filter": {"op": "contamination_filter", "ngram": 4,
+                             "threshold_ppm": 500_000},
+}
+
+
+@pytest.mark.parametrize("op", sorted(_KEEP_STEPS))
+def test_keep_step_after_mixture_keeps_each_row_once(spark, tmp_path,
+                                                      mixed_src, op):
+    """A mixture step repeats a doc_id once per copy.  A step that only
+    keeps or drops rows must not multiply them: no (doc_id, copy_id)
+    twice, and never more rows out than in."""
+    from pyspark.sql import functions as F
+
+    from batch3dfier_spark.textpipe import run_textpipe
+
+    step = dict(_KEEP_STEPS[op])
+    if op == "contamination_filter":
+        bench = str(tmp_path / "bench")
+        spark.read.parquet(mixed_src).where("doc_id < 50").select(
+            "text").write.parquet(bench)
+        step["benchmark"] = bench
+    cfg = {
+        "input": {"documents": mixed_src},
+        "output": {"path": str(tmp_path / "out")},
+        "steps": [{"op": "mixture", "weights": {"zh": 2.0}, "seed": "m1"},
+                  step],
+    }
+    report = run_textpipe(spark, cfg)
+    rows_in, rows_out = (s["rows"] for s in report["steps"])
+    assert rows_in > report["rows_in"]  # the mixture repeated some ids
+    assert 0 < rows_out <= rows_in
+    repeated = (
+        spark.read.parquet(cfg["output"]["path"])
+        .groupBy("doc_id", "copy_id").count().where(F.col("count") > 1)
+        .count()
+    )
+    assert repeated == 0
+
+
+def _clear_job_group(sc):
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc.setLocalProperty("spark.job.description", None)
+
+
+def test_input_rows_from_footers_runs_no_job(spark, tmp_path):
+    """rows_in comes from the footers of the files Spark reads: equal to
+    count() for one file, for a multi-part directory holding a _SUCCESS
+    file and a hidden parquet file (neither read by Spark), and for a
+    file:// URI, with no Spark job."""
+    import shutil
+
+    from batch3dfier_spark import textpipe
+
+    single = f"{SF}/documents.parquet"
+    parts = str(tmp_path / "parts")
+    spark.read.parquet(single).repartition(3).write.parquet(parts)
+    part0 = sorted(n for n in os.listdir(parts) if n.endswith(".parquet"))[0]
+    shutil.copy(os.path.join(parts, part0), os.path.join(parts, ".hidden.parquet"))
+    assert os.path.exists(os.path.join(parts, "_SUCCESS"))
+    sc, st = spark.sparkContext, spark.sparkContext.statusTracker()
+    for k, path in enumerate([single, parts, "file://" + parts]):
+        df = spark.read.parquet(path)
+        want = df.count()
+        group = f"input_rows.{k}"
+        sc.setJobGroup(group, group)
+        try:
+            got = textpipe._input_rows(df)
+        finally:
+            _clear_job_group(sc)
+        assert got == want, path
+        assert st.getJobIdsForGroup(group) == [], path
+
+
+def test_textpipe_jobs_per_step(spark, tmp_path, monkeypatch):
+    """Spark jobs per step of the benchmark's pipeline, one job group
+    per step (set where the step is built, as perfbench does); each
+    count includes the step's stage write.  The keep-steps run one pass
+    over their input (no join back on doc_id), and the input's row
+    count reads footers: its group holds only the read's schema job."""
+    from batch3dfier_spark import textpipe
+
+    sc = spark.sparkContext
+    apply_step = textpipe._apply_step
+
+    def grouped(spark_, df, step):
+        sc.setJobGroup(f"jobs.{step['op']}", step["op"])
+        return apply_step(spark_, df, step)
+
+    monkeypatch.setattr(textpipe, "_apply_step", grouped)
+    steps = [
+        {"op": "exact_dedup"},
+        {"op": "quality_filter", "min_tokens": 10,
+         "max_dup_line_frac": 0.3, "max_top_bigram_frac": 0.2},
+        {"op": "near_dedup", "method": "minhash", "threshold": 0.72},
+        {"op": "hash_split", "splits": [["train", 0.9], ["val", 0.05],
+                                        ["test", 0.05]],
+         "keep": "train", "seed": "s"},
+        {"op": "domain_cap", "cap": 5, "key_col": "source", "seed": "s"},
+    ]
+    sc.setJobGroup("jobs.input", "input")
+    try:
+        textpipe.run_textpipe(spark, {
+            "input": {"documents": f"{SF}/documents.parquet"},
+            "output": {"path": str(tmp_path / "out")},
+            "steps": steps,
+        })
+    finally:
+        _clear_job_group(sc)
+    st = sc.statusTracker()
+    jobs = {g: len(st.getJobIdsForGroup(f"jobs.{g}"))
+            for g in ["input"] + [s["op"] for s in steps]}
+    assert jobs["input"] <= 1, jobs
+    assert jobs["exact_dedup"] <= 3, jobs
+    assert jobs["quality_filter"] <= 1, jobs

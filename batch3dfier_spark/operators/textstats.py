@@ -47,6 +47,7 @@ __all__ = [
     "repetition_ratios",
     "repetition_stats",
     "scrub_pii",
+    "pii_scrub_columns",
     "vocab_topk",
     "corpus_stats",
     "sql_corpus_stats",
@@ -343,6 +344,22 @@ PII_PATTERNS: list[tuple[str, str, str, str]] = [
 ]
 
 
+def pii_scrub_columns(text_col: str = "text") -> tuple[Column, list[Column]]:
+    """The scrubbed `text_col` and its n_email / n_ip / n_phone counts
+    as row-wise columns (see scrub_pii), for a caller to select next to
+    whatever else it keeps."""
+    cur = F.coalesce(F.col(text_col), F.lit(""))
+    counts = []
+    for name, java_pat, _re2_pat, tok in PII_PATTERNS:
+        counts.append(
+            (F.size(F.split(cur, java_pat, -1)) - 1)
+            .cast("bigint")
+            .alias(f"n_{name}")
+        )
+        cur = F.regexp_replace(cur, java_pat, tok)
+    return cur.alias(text_col), counts
+
+
 def scrub_pii(
     df: DataFrame,
     text_col: str = "text",
@@ -358,18 +375,8 @@ def scrub_pii(
     order.  Word boundaries are explicit ASCII constructs on both
     sides (see PII_PATTERNS), so engine and oracle are byte-identical
     even where digits neighbor CJK or other non-ASCII characters."""
-    cur = F.coalesce(F.col(text_col), F.lit(""))
-    counts = []
-    for name, java_pat, _re2_pat, tok in PII_PATTERNS:
-        counts.append(
-            (F.size(F.split(cur, java_pat, -1)) - 1)
-            .cast("bigint")
-            .alias(f"n_{name}")
-        )
-        cur = F.regexp_replace(cur, java_pat, tok)
-    return df.select(
-        F.col(id_col), cur.alias(text_col), *counts
-    )
+    text, counts = pii_scrub_columns(text_col)
+    return df.select(F.col(id_col), text, *counts)
 
 
 def sql_scrub_pii(text: str = "text", from_sql: str = "documents") -> str:

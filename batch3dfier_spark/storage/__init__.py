@@ -1,3 +1,3 @@
 """Iceberg-style table layer: snapshot/manifest commits + per-tile lineage."""
 
-from .tablefmt import IcebergishTable, LineageRow  # noqa: F401
+from .tablefmt import IcebergishTable  # noqa: F401

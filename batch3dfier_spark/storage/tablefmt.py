@@ -4,9 +4,10 @@ The reference's restart-relevant state is per-tile YAML configs plus a
 completed/skipped bookkeeping dict (config.py:73-84, batch3dfierapp.py:
 242-245); a re-run reprocesses everything.  Our engine upgrades that to
 checkpointed resumability (north_rule): every per-tile work unit commits
-atomically — data files plus ONE lineage row (tile_id, partition_id,
-rows_in, rows_out, wall_ms, status) — into a snapshot log, and a new run
-resumes by anti-joining the work list against completed tiles.
+atomically — data files plus ONE lineage row per tile (tile_gid,
+partition_id, rows_in, rows_out, wall_ms, status, work_order) — into a
+snapshot log, and a new run resumes by anti-joining the work list
+against completed tiles.
 
 Layout (no Iceberg jar in this sandbox; same commit semantics, same
 manifest-list indirection real Iceberg uses so metadata cost is
@@ -15,30 +16,33 @@ O(new files) per commit, NOT O(table history)):
     root/
       data/part-<uuid>.parquet                 # task-written data files:
                                                #   one per dispatch task,
-                                               #   one row group per tile
-                                               #   (row-level tile_gid)
-      data/tile_gid=<gid>/<uuid>.parquet       # older per-tile files, still
-                                               #   read (tile from the path)
+                                               #   one row group per tile,
+                                               #   row-level tile_gid
+      data/compact-<uuid>/part-*.parquet       # compact() rewrites
       metadata/
-        manifest-000001-<uuid>.json            # IMMUTABLE: only the files
-                                               #   + lineage ADDED by that
-                                               #   commit
+        lineage-<uuid>/part-*.parquet          # one commit's lineage rows,
+                                               #   each naming its data
+                                               #   files in `paths`
+        manifest-000001-<uuid>.json            # IMMUTABLE: {snapshot_id,
+                                               #   lineage_parquet (parts +
+                                               #   footer tile stats),
+                                               #   data_files, base}
         snapshot-000001.json                   # {snapshot_id, parent,
-                                               #   manifest} — O(1) bytes
+                                               #   manifest, stats} — O(1)
         CURRENT                                # name of current snapshot
 
-Commit = write one manifest holding ONLY this commit's new files and
-lineage rows, create an O(1) snapshot pointer referencing it EXCLUSIVELY
-(a racing writer that picked the same id raises FileExistsError), then
+Commit = write one manifest listing ONLY this commit's staged lineage
+parts, create an O(1) snapshot pointer referencing it EXCLUSIVELY (a
+racing writer that picked the same id raises FileExistsError), then
 atomically `os.replace` the CURRENT pointer.  Readers resolve a snapshot
-by walking the parent chain and concatenating manifests (cached
-per-instance — manifests are immutable so the cache never invalidates).
-Half-written runs stay invisible: nothing references an uncommitted
-manifest.  Total metadata bytes across n commits grow LINEARLY in rows
-written (each file path / lineage row is serialized exactly once, in
-exactly one manifest), vs the pre-round-3 format that re-serialized the
-full cumulative history into every snapshot (O(n^2)).  Snapshot expiry
-and export both write self-contained base manifests.  On a real cluster
+by walking the parent chain and concatenating the lineage parts as ONE
+Arrow table (parts and manifests are immutable, so the per-instance
+caches never invalidate).  Half-written runs stay invisible: nothing
+references an uncommitted manifest.  Total metadata bytes across n
+commits grow LINEARLY in rows written (each lineage row is written
+exactly once, in exactly one part).  Snapshot expiry and export both
+write self-contained base manifests: the data files in `data_files`,
+the attributed lineage as one part.  On a real cluster
 the same protocol runs against an object store / a real Iceberg catalog —
 the interface is kept thin on purpose (SURVEY.md §7.0).
 """
@@ -47,17 +51,25 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import uuid
-from dataclasses import asdict, dataclass
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
-__all__ = ["LineageRow", "IcebergishTable", "task_data_path"]
+__all__ = ["IcebergishTable", "task_data_path"]
 
-_LINEAGE_COLS = ["tile_gid", "partition_id", "rows_in", "rows_out",
-                 "wall_ms", "status", "snapshot_id", "work_order"]
-_TILE_DIR = r"tile_gid=(\d+)"  # hive-style tile directory of a data file
+# the one lineage schema every read returns, whatever part it came from
+# (staged by run_tiles, or a base part written by expiry/export);
+# work_order is the S5 per-tile work order the reference renders as a
+# YAML config (config.py:115-178), as JSON
+_LINEAGE = pa.schema([
+    ("tile_gid", pa.int64()), ("partition_id", pa.int64()),
+    ("rows_in", pa.int64()), ("rows_out", pa.int64()),
+    ("wall_ms", pa.float64()), ("status", pa.string()),
+    ("snapshot_id", pa.int64()), ("work_order", pa.string()),
+])
 
 
 def task_data_path(root: str) -> str:
@@ -69,29 +81,21 @@ def task_data_path(root: str) -> str:
 
 
 def _range_stats(entries: list[dict]) -> dict:
-    """Fold {n_rows, min_tile, max_tile} entries into commit-level
-    stats; an unknown (None) count makes n_rows None (never empty)."""
-    counts = [e["n_rows"] for e in entries]
+    """Fold footer {n_rows, min_tile, max_tile} entries into
+    commit-level stats."""
     mins = [e["min_tile"] for e in entries if e["min_tile"] is not None]
     maxs = [e["max_tile"] for e in entries if e["max_tile"] is not None]
-    return {"n_rows": None if None in counts else sum(counts),
+    return {"n_rows": sum(e["n_rows"] for e in entries),
             "min_tile": min(mins, default=None),
             "max_tile": max(maxs, default=None)}
 
 
-@dataclass
-class LineageRow:
-    tile_gid: int
-    partition_id: int
-    rows_in: int
-    rows_out: int
-    wall_ms: float
-    status: str  # ok | skipped | empty
-    snapshot_id: int = -1  # filled at commit
-    # S5 parity: the per-tile work order the reference renders as a
-    # YAML config (config.py:115-178), kept as a JSON string —
-    # {"tile": gid, "salt_groups": n, "processor": name}
-    work_order: str = ""
+def _flat_paths(t: pa.Table) -> list[str]:
+    """The data files a lineage table's `paths` column names (base
+    parts carry none: their files are in the manifest)."""
+    if "paths" not in t.column_names:
+        return []
+    return pc.list_flatten(t["paths"]).to_numpy(zero_copy_only=False).tolist()
 
 
 class IcebergishTable:
@@ -106,7 +110,7 @@ class IcebergishTable:
         # these only ever grow.
         self._manifest_cache: dict[str, dict] = {}
         self._snap_cache: dict[int, dict] = {}
-        self._part_cache: dict[str, list[dict]] = {}
+        self._part_cache: dict[str, pa.Table] = {}
 
     # -- path portability ---------------------------------------------------
     # Manifests store data-file paths RELATIVE to the table root whenever
@@ -156,15 +160,13 @@ class IcebergishTable:
             self._manifest_cache[name] = m
         return m
 
-    def _part_rows(self, rel_path: str) -> list[dict]:
-        """Rows of one staged-lineage parquet part (immutable -> cached)."""
-        rows = self._part_cache.get(rel_path)
-        if rows is None:
-            import pyarrow.parquet as pq
-
-            rows = pq.read_table(self._abs(rel_path)).to_pylist()
-            self._part_cache[rel_path] = rows
-        return rows
+    def _part_table(self, rel_path: str) -> pa.Table:
+        """One lineage parquet part (immutable -> cached)."""
+        t = self._part_cache.get(rel_path)
+        if t is None:
+            t = pq.read_table(self._abs(rel_path))
+            self._part_cache[rel_path] = t
+        return t
 
     @staticmethod
     def _stats_overlap(stats: dict | None, lo: int | None,
@@ -182,72 +184,45 @@ class IcebergishTable:
             return False
         return True
 
-    @staticmethod
-    def _tile_of_path(p: str) -> int | None:
-        """Hive-style tile from a data path ('.../tile_gid=N/...')."""
-        found = re.findall(_TILE_DIR, p)
-        return int(found[-1]) if found else None
-
-    def _in_range(self, tile, lo, hi) -> bool:
-        if lo is not None and tile < lo:
-            return False
-        if hi is not None and tile > hi:
-            return False
-        return True
-
     def _commit_content(
         self, snap: dict, lo: int | None, hi: int | None
-    ) -> tuple[list[str], list[dict]]:
-        """(files, lineage rows) contributed by ONE commit, tile-range
-        pruned.  Staged-lineage manifests prune at part level via the
-        per-part min/max stats (parquet row-group footers at commit
-        time), then row-filter; inline manifests row-filter, and files
-        whose tile can't be derived from a hive-style path are kept
-        conservatively.  `data_files` entries (compaction rewrites,
-        expiry rebases) prune via their per-file min/max tile stats."""
+    ) -> tuple[list[str], list[pa.Table]]:
+        """(files, lineage tables) contributed by ONE commit, tile-range
+        pruned.  Lineage parts prune at part level via their min/max
+        stats (parquet row-group footers at commit time), then filter
+        rows; `data_files` entries (compaction rewrites, base
+        manifests) prune via their per-file min/max tile stats.  A
+        staged part's rows are attributed to this commit; a base part
+        keeps each row's own snapshot_id."""
         name = snap.get("manifest")
         if name is None:
             return [], []
         m = self._manifest(name)
-        sid = snap["snapshot_id"]
-        if "lineage_parquet" in m or "data_files" in m:
-            files: list[str] = []
-            rows: list[dict] = []
-            for df_entry in m.get("data_files", []):
-                if self._stats_overlap(df_entry, lo, hi):
-                    files.append(df_entry["path"])
-            for part in m.get("lineage_parquet", []):
-                if not self._stats_overlap(part, lo, hi):
-                    continue
-                for r in self._part_rows(part["path"]):
-                    if not self._in_range(r["tile_gid"], lo, hi):
-                        continue
-                    files.extend(r.get("paths") or [])
-                    rows.append(
-                        {k: r[k] for k in _LINEAGE_COLS if k != "snapshot_id"}
-                        | {"snapshot_id": r.get("snapshot_id", sid)
-                            if m.get("base") else sid}
-                    )
-            return files, rows
-        files = list(m["files"])
-        rows = list(m["lineage"])
-        if lo is not None or hi is not None:
-            rows = [r for r in rows if self._in_range(r["tile_gid"], lo, hi)]
-            kept = []
-            for f in files:
-                t = self._tile_of_path(f)
-                if t is None or self._in_range(t, lo, hi):
-                    kept.append(f)
-            files = kept
-        return files, rows
+        files = [e["path"] for e in m.get("data_files", [])
+                 if self._stats_overlap(e, lo, hi)]
+        tables: list[pa.Table] = []
+        for part in m.get("lineage_parquet", []):
+            if not self._stats_overlap(part, lo, hi):
+                continue
+            t = self._part_table(part["path"])
+            if lo is not None:
+                t = t.filter(pc.greater_equal(t["tile_gid"], lo))
+            if hi is not None:
+                t = t.filter(pc.less_equal(t["tile_gid"], hi))
+            files.extend(_flat_paths(t))
+            if "snapshot_id" not in t.column_names:
+                t = t.append_column("snapshot_id", pa.repeat(
+                    pa.scalar(snap["snapshot_id"], pa.int64()), t.num_rows))
+            tables.append(t.select(_LINEAGE.names).cast(_LINEAGE))
+        return files, tables
 
     def _resolve_chain(
         self,
         snapshot_id: int,
         min_tile: int | None = None,
         max_tile: int | None = None,
-    ) -> tuple[list[str], list[dict]]:
-        """Cumulative (files, lineage rows) for a snapshot: walk the
+    ) -> tuple[list[str], pa.Table]:
+        """Cumulative (files, lineage table) for a snapshot: walk the
         parent chain, oldest-first, concatenating per-commit manifests.
         O(total history) on first touch, O(1-ish) after via the
         immutable-manifest/part caches.
@@ -283,7 +258,7 @@ class IcebergishTable:
                 files_visible = False
             sid = snap["parent"]
         files: list[str] = []
-        lineage: list[dict] = []
+        lineage: list[pa.Table] = []
         for snap, inc_files, inc_lin in reversed(chain):  # oldest -> newest
             f, r = self._commit_content(
                 snap, min_tile if pruning else None,
@@ -294,28 +269,9 @@ class IcebergishTable:
             if inc_lin:
                 lineage.extend(r)
         # several tiles' lineage rows name one task's file: each once
-        return [self._abs(f) for f in dict.fromkeys(files)], lineage
-
-    def current_snapshot(self) -> dict | None:
-        """Resolved view of the current snapshot (or None): the raw
-        pointer plus materialized cumulative `files` and `lineage`."""
-        sid = self._current_sid()
-        return None if sid is None else self.snapshot(sid)
-
-    def snapshot(self, snapshot_id: int) -> dict:
-        """Resolved view of a specific snapshot by id (time travel —
-        manifests are immutable, so any historical table state stays
-        readable, like Iceberg's `VERSION AS OF`).  Returns
-        {snapshot_id, parent, files, lineage} with files/lineage
-        materialized from the manifest chain."""
-        snap = self._raw_snapshot(snapshot_id)
-        files, lineage = self._resolve_chain(snapshot_id)
-        return {
-            "snapshot_id": snap["snapshot_id"],
-            "parent": snap.get("parent"),
-            "files": files,
-            "lineage": lineage,
-        }
+        return ([self._abs(f) for f in dict.fromkeys(files)],
+                pa.concat_tables(lineage) if lineage
+                else _LINEAGE.empty_table())
 
     def snapshots(self) -> list[int]:
         """All committed snapshot ids, ascending (the history log)."""
@@ -362,31 +318,6 @@ class IcebergishTable:
         os.replace(ctmp, os.path.join(self.meta_dir, "CURRENT"))
         return sid
 
-    def commit(self, new_files: list[str], lineage: list[LineageRow]) -> int:
-        """Atomic append commit, O(new files + new lineage) metadata I/O:
-        write one immutable manifest with only this commit's additions,
-        then an O(1) snapshot pointer, then swap CURRENT."""
-        sid, parent = self._next_sid()
-        rows = []
-        for r in lineage:
-            r.snapshot_id = sid
-            rows.append(asdict(r))
-        manifest_name = None
-        if new_files or rows:
-            manifest_name = f"manifest-{sid:06d}-{uuid.uuid4().hex}.json"
-            self._write_atomic(
-                manifest_name,
-                {"snapshot_id": sid,
-                 "files": [self._rel(f) for f in new_files],
-                 "lineage": rows},
-            )
-        if new_files and not rows:
-            # files without lineage: range unknown, no pruning
-            return self._finish_commit(sid, parent, manifest_name)
-        return self._finish_commit(sid, parent, manifest_name, stats=_range_stats(
-            [{"n_rows": 1, "min_tile": r["tile_gid"], "max_tile": r["tile_gid"]}
-             for r in rows]))
-
     def _footer_file_stats(self, d: str) -> list[dict]:
         """Per-file {path (root-relative), n_rows, min_tile, max_tile}
         for every non-empty .parquet under `d`, from parquet FOOTERS
@@ -409,8 +340,6 @@ class IcebergishTable:
         file is empty): {path (root-relative), n_rows, min_tile,
         max_tile} with the tile range from `tile_gid` row-group
         statistics where the column exists."""
-        import pyarrow.parquet as pq
-
         md = pq.ParquetFile(p).metadata
         if md.num_rows == 0:
             return None
@@ -447,7 +376,8 @@ class IcebergishTable:
         (row counts + tile_gid row-group min/max) to build per-part
         stats, writes a manifest listing the parts, and the usual O(1)
         pointer.  Driver I/O is O(parts) (~shuffle partitions), not
-        O(tiles)."""
+        O(tiles).  Each commit's part is the only metadata that grows
+        with its tile count."""
         sid, parent = self._next_sid()
         parts = self._footer_file_stats(staged_dir)
         manifest_name = None
@@ -470,7 +400,9 @@ class IcebergishTable:
     ) -> list[str]:
         """Committed data files, optionally restricted to a tile range —
         the pruned path walks the snapshot pointers' commit-level stats
-        and never opens a disjoint commit's manifest or lineage parts."""
+        and never opens a disjoint commit's manifest or lineage parts.
+        `snapshot_id` reads the files AS OF that commit (time travel:
+        manifests are immutable, like Iceberg's `VERSION AS OF`)."""
         if snapshot_id is None:
             snapshot_id = self._current_sid()
             if snapshot_id is None:
@@ -483,21 +415,23 @@ class IcebergishTable:
         min_tile: int | None = None,
         max_tile: int | None = None,
     ) -> pd.DataFrame:
+        """Cumulative lineage, one row per committed tile, in the one
+        lineage schema (fixed dtypes, also when empty)."""
+        return self._lineage_table(snapshot_id, min_tile, max_tile).to_pandas()
+
+    def completed_tiles(self) -> set[int]:
+        """Tiles the table holds a lineage row for: every status
+        run_tiles commits (ok, empty, skipped) is done."""
+        return set(self._lineage_table()["tile_gid"].to_numpy().tolist())
+
+    def _lineage_table(self, snapshot_id: int | None = None,
+                       min_tile: int | None = None,
+                       max_tile: int | None = None) -> pa.Table:
         if snapshot_id is None:
             snapshot_id = self._current_sid()
             if snapshot_id is None:
-                return pd.DataFrame(columns=_LINEAGE_COLS)
-        rows = self._resolve_chain(snapshot_id, min_tile, max_tile)[1]
-        if not rows:
-            return pd.DataFrame(columns=_LINEAGE_COLS)
-        return pd.DataFrame(rows)[_LINEAGE_COLS]
-
-    def completed_tiles(self) -> set[int]:
-        lin = self.lineage()
-        if lin.empty:
-            return set()
-        done = lin[lin["status"].isin(["ok", "empty", "skipped"])]
-        return set(done["tile_gid"].astype(int))
+                return _LINEAGE.empty_table()
+        return self._resolve_chain(snapshot_id, min_tile, max_tile)[1]
 
     def read(self, spark, snapshot_id: int | None = None,
              min_tile: int | None = None, max_tile: int | None = None):
@@ -507,32 +441,20 @@ class IcebergishTable:
         max_tile restrict the scan to that tile range via the pruned
         metadata walk (Iceberg-style partition-summary skipping).
 
-        When the data carries a row-level `tile_gid` column (every file
-        run_tiles writes, and every compacted file), a pruned read ALSO
-        applies the range as a row filter, so the result is tile-exact
-        although a file spans several tiles (a dispatch task's file, a
-        compacted file) — the file-level prune is the scan
-        optimization, the filter is the contract (the split Iceberg
-        itself makes).  The row filter is NULL-tolerant:
-        in a MIXED table (pre-upgrade per-tile files without the
-        column, plus new/compacted files with it) the old files' rows
-        surface as NULL tile_gid under the unified schema, but they
-        are already tile-exact via the per-tile file prune — dropping
-        them would silently lose committed rows (round-5 ADVICE)."""
+        Every data file carries a row-level `tile_gid` column (run_tiles
+        writes it, compaction keeps it), so a pruned read ALSO applies
+        the range as a row filter: the result is tile-exact although a
+        file spans several tiles (a dispatch task's file, a compacted
+        file) — the file-level prune is the scan optimization, the
+        filter is the contract (the split Iceberg itself makes)."""
         fs = self.files(snapshot_id, min_tile, max_tile)
         if not fs:
             raise ValueError("empty table (no committed snapshot)")
         df = spark.read.option("mergeSchema", "true").parquet(*fs)
-        if (min_tile is not None or max_tile is not None) \
-                and "tile_gid" in df.columns:
-            from pyspark.sql import functions as F
-
-            rng = F.lit(True)
-            if min_tile is not None:
-                rng = rng & (F.col("tile_gid") >= min_tile)
-            if max_tile is not None:
-                rng = rng & (F.col("tile_gid") <= max_tile)
-            df = df.where(F.col("tile_gid").isNull() | rng)
+        if min_tile is not None:
+            df = df.where(df["tile_gid"] >= min_tile)
+        if max_tile is not None:
+            df = df.where(df["tile_gid"] <= max_tile)
         return df
 
     # -- maintenance (compaction, snapshot expiry, vacuum) --------------------
@@ -558,24 +480,14 @@ class IcebergishTable:
         The shuffle is ONE range repartition on tile_gid (sampled range
         boundaries make output files contiguous tile runs, so pruned
         reads touch few files); the write is executor-side; the commit
-        reads only output parquet footers.  Files written before the
-        row-level tile_gid column upgrade derive their tile from the
-        hive-style path during the rewrite."""
+        reads only output parquet footers."""
         import math
         import shutil
-
-        from pyspark.sql import functions as F
 
         fs = self.files()
         if not fs:
             raise ValueError("empty table (no committed snapshot)")
         df = spark.read.parquet(*fs)
-        if "tile_gid" not in df.columns:
-            df = df.withColumn(
-                "tile_gid",
-                F.regexp_extract(F.input_file_name(), _TILE_DIR, 1)
-                .cast("bigint"),
-            )
         total = df.count()
         n_out = max(1, math.ceil(total / target_file_rows))
         out_rel = os.path.join("data", f"compact-{uuid.uuid4().hex}")
@@ -644,45 +556,20 @@ class IcebergishTable:
         return expired
 
     def _write_base(self, sid: int, files: list[str],
-                    lineage: list[dict]) -> tuple[str, dict]:
+                    lineage: pa.Table) -> tuple[str, dict]:
         """Write a resolved snapshot (files, attributed lineage) as ONE
-        self-contained base manifest, for expiry and export alike;
+        self-contained base manifest, for expiry and export alike: each
+        file with its footer tile stats, the lineage as one part;
         returns (manifest name, pointer fields)."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        entries: list[dict] = []
-        for f in files:
-            t = self._tile_of_path(f)
-            e = self._file_stat(f) if t is None and os.path.exists(f) else None
-            if e is None:
-                e = {"n_rows": None, "min_tile": t, "max_tile": t}
-            entries.append(e | {"path": self._rel(f)})
+        entries = [e | {"path": self._rel(f)} for f in files
+                   if (e := self._file_stat(f)) is not None]
         parts: list[dict] = []
-        if lineage:
-            schema = pa.schema([
-                ("tile_gid", pa.int64()), ("partition_id", pa.int32()),
-                ("rows_in", pa.int64()), ("rows_out", pa.int64()),
-                ("wall_ms", pa.float64()), ("status", pa.string()),
-                ("snapshot_id", pa.int64()), ("work_order", pa.string()),
-            ])
-            rows = [
-                {"tile_gid": int(r["tile_gid"]),
-                 "partition_id": int(r.get("partition_id") or 0),
-                 "rows_in": int(r.get("rows_in") or 0),
-                 "rows_out": int(r.get("rows_out") or 0),
-                 "wall_ms": float(r.get("wall_ms") or 0.0),
-                 "status": str(r.get("status", "")),
-                 "snapshot_id": int(r.get("snapshot_id") or sid),
-                 "work_order": str(r.get("work_order") or "")}
-                for r in lineage
-            ]
+        if lineage.num_rows:
             part_dir = os.path.join(
                 self.meta_dir, f"lineage-base-{uuid.uuid4().hex}")
             os.makedirs(part_dir, exist_ok=True)
             part_path = os.path.join(part_dir, "part-0.parquet")
-            pq.write_table(pa.Table.from_pylist(rows, schema=schema),
-                           part_path)
+            pq.write_table(lineage, part_path)
             parts.append(self._file_stat(part_path))
         name = f"manifest-{sid:06d}-{uuid.uuid4().hex}.json"
         self._write_atomic(
@@ -723,16 +610,13 @@ class IcebergishTable:
             ref_manifests.add(name)
             m = self._manifest(name)
             ref_files.update(
-                os.path.abspath(self._abs(f)) for f in m.get("files", []))
-            ref_files.update(
                 os.path.abspath(self._abs(e["path"]))
                 for e in m.get("data_files", []))
             for part in m.get("lineage_parquet", []):
                 ref_parts.add(os.path.abspath(self._abs(part["path"])))
-                for r in self._part_rows(part["path"]):
-                    ref_files.update(
-                        os.path.abspath(self._abs(p))
-                        for p in (r.get("paths") or []))
+                ref_files.update(
+                    os.path.abspath(self._abs(p))
+                    for p in _flat_paths(self._part_table(part["path"])))
         for root_, _dirs, names in os.walk(self.data_dir, topdown=False):
             for n in names:
                 p = os.path.join(root_, n)
@@ -793,8 +677,8 @@ class IcebergishTable:
         copies = []
         for src in files:
             # keep each file's path under data/ (data/part-*.parquet,
-            # older data/tile_gid=<n>/*.parquet); a file from outside
-            # data/ keeps its parent directory's name
+            # data/compact-*/part-*.parquet); a file from outside data/
+            # keeps its parent directory's name
             rel = os.path.relpath(os.path.abspath(src),
                                   os.path.abspath(self.data_dir))
             if rel.startswith(os.pardir + os.sep):
@@ -809,6 +693,6 @@ class IcebergishTable:
         name, fields = out._write_base(1, copies, lineage)
         out._finish_commit(1, None, name, **fields, exported_from={
             "root": self.root, "snapshot_id": snapshot_id})
-        pd.DataFrame(lineage).to_csv(
+        lineage.to_pandas().to_csv(
             os.path.join(out_dir, "lineage.csv"), index=False)
         return out_dir

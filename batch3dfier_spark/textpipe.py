@@ -16,10 +16,13 @@ rerun — or a resumed run on a cluster — materializes byte-identical
 output.
 
 Row identity: a step that keeps or drops rows filters its input or
-semi/anti-joins it, so it never emits a row twice, even after a mixture
-step repeated a doc_id.  The steps that rewrite rows (scrub_pii,
-line_dedup, paragraph_dedup, c4_filter, pack_sequences) join per-doc
-output back on doc_id: they need doc_id unique per row.
+semi/anti-joins it, and scrub_pii is one row-wise projection, so none
+of them emits a row twice, even after a mixture step repeated a doc_id.
+The corpus-level rewrite steps (line_dedup, paragraph_dedup, c4_filter,
+pack_sequences) join per-doc operator output back on doc_id: they need
+doc_id unique per row, so run_textpipe rejects one that follows a
+mixture step able to repeat a row (a weight or default_weight above
+1.0) before it writes anything.
 
 Config shape::
 
@@ -108,6 +111,11 @@ __all__ = ["run_textpipe", "parse_textpipe_config", "CUSTOM_OPS"]
 # so deployments can also shadow a built-in with a tuned variant.
 CUSTOM_OPS: dict = {}
 
+# steps that join per-doc operator output back on doc_id (see "Row
+# identity" above)
+_JOIN_BACK_OPS = ("line_dedup", "paragraph_dedup", "c4_filter",
+                  "pack_sequences")
+
 
 def parse_textpipe_config(path: str) -> dict:
     import yaml
@@ -183,11 +191,12 @@ def _apply_step(spark: SparkSession, df: DataFrame, step: dict) -> DataFrame:
     if op == "scrub_pii":
         # rewrite text with typed tokens; keep per-category counts as
         # extra columns (n_email / n_ip / n_phone)
-        from .operators.textstats import scrub_pii
+        from .operators.textstats import pii_scrub_columns
 
         text_col = step.get("text_col", "text")
-        scrubbed = scrub_pii(df, text_col=text_col)
-        return df.drop(text_col).join(scrubbed, "doc_id")
+        text, counts = pii_scrub_columns(text_col)
+        rest = [c for c in df.columns if c not in ("doc_id", text_col)]
+        return df.select("doc_id", *rest, text, *counts)
     if op == "line_dedup":
         # corpus-level C4-style line dedup: documents keep their ids
         # but their text is rewritten to the surviving lines
@@ -504,6 +513,22 @@ def _apply_step(spark: SparkSession, df: DataFrame, step: dict) -> DataFrame:
     raise ValueError(f"unknown textpipe op: {op}")
 
 
+def _check_row_identity(steps: list[dict]) -> None:
+    """Raise if a join-back step follows a mixture step that can repeat
+    a row: its doc_id join would multiply every repeated row."""
+    repeats = None
+    for k, step in enumerate(steps):
+        if step["op"] == "mixture" and max(
+                [float(step.get("default_weight", 1.0)),
+                 *map(float, step["weights"].values())]) > 1.0:
+            repeats = k
+        elif step["op"] in _JOIN_BACK_OPS and repeats is not None:
+            raise ValueError(
+                f"step {k} ({step['op']}) joins its output back on doc_id, "
+                f"but mixture step {repeats} repeats rows (a weight above "
+                f"1.0): run {step['op']} before the mixture")
+
+
 def _footer_rows(files) -> int:
     """Row count of parquet files from their FOOTERS only — no Spark
     job, no data read (the same trick commit_staged uses)."""
@@ -571,6 +596,7 @@ def run_textpipe(spark: SparkSession, cfg: dict) -> dict:
     true; on failure they are kept for the resume."""
     in_path = cfg["input"]["documents"]
     steps = cfg.get("steps", [])
+    _check_row_identity(steps)
     out = cfg["output"]["path"]
     stages = _stages_root(out)
     man_path = os.path.join(stages, "_manifest.json")

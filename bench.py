@@ -165,8 +165,7 @@ def flagship_queries(spark, pages_path: str):
         root = tempfile.mkdtemp(prefix="bench_dispatch_")
         try:
             table = IcebergishTable(root)
-            lineage = run_tiles(work, processor, table, decomposable=True,
-                                salt_key_col="url")
+            lineage = run_tiles(work, processor, table, decomposable=True)
             class _N:  # noqa: N801 - count() protocol shim for the timer
                 def count(self_inner):
                     return int((lineage["status"] != "skipped").sum())
@@ -219,8 +218,7 @@ def flagship_queries(spark, pages_path: str):
 
         root = tempfile.mkdtemp(prefix="bench_dispatch_warm_")
         try:
-            run_tiles(tiny, _proc, IcebergishTable(root), decomposable=True,
-                      salt_key_col="url")
+            run_tiles(tiny, _proc, IcebergishTable(root), decomposable=True)
         finally:
             shutil.rmtree(root, ignore_errors=True)
 

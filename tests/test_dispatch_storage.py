@@ -2,7 +2,11 @@
 skip bookkeeping (O15), resume-from-checkpoint (kill after K tiles ->
 relaunch -> identical final table)."""
 
+import os
+
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -11,8 +15,55 @@ from batch3dfier_spark.operators import tiler
 from batch3dfier_spark.operators.dispatch import run_tiles, salted_split, skip_report
 from batch3dfier_spark.operators.tiler import TileIndex
 from batch3dfier_spark.storage import IcebergishTable
+from batch3dfier_spark.storage.tablefmt import task_data_path
 
 T = datagen.REF_TERRITORY
+
+# the lineage dtypes every IcebergishTable.lineage() frame carries
+LINEAGE_DTYPES = {"tile_gid": "int64", "partition_id": "int64",
+                  "rows_in": "int64", "rows_out": "int64",
+                  "wall_ms": "float64", "status": "object",
+                  "snapshot_id": "int64", "work_order": "object"}
+
+
+def _commit(table, tiles, rows_per_tile=0, commit_tag=0, file_for=None):
+    """Commit `tiles` as ONE snapshot the way run_tiles does: one staged
+    lineage part (written with pyarrow) through commit_staged.  With
+    rows_per_tile > 0 each tile also gets a data file of its own, with
+    the row-level tile_gid column, named in its lineage row's `paths`;
+    `file_for(tile)` names a (root-relative) path without writing it."""
+    paths = []
+    for t in tiles:
+        if file_for is not None:
+            paths.append([file_for(t)])
+            continue
+        if not rows_per_tile:
+            paths.append(None)
+            continue
+        rel = task_data_path(table.root)
+        pq.write_table(pa.table({
+            "tile_gid": pa.array([t] * rows_per_tile, pa.int64()),
+            "url": [f"u{t:05d}_{commit_tag}_{i}" for i in range(rows_per_tile)],
+            "v": pa.array([t * 1000 + commit_tag * 10 + i
+                           for i in range(rows_per_tile)], pa.int64()),
+        }), os.path.join(table.root, rel))
+        paths.append([rel])
+    stage = table.stage_dir()
+    os.makedirs(stage)
+    n = len(paths)
+    if n:
+        pq.write_table(pa.table({
+            "tile_gid": pa.array(list(tiles), pa.int64()),
+            "partition_id": pa.array([0] * n, pa.int32()),
+            "rows_in": pa.array([max(rows_per_tile, 1)] * n, pa.int64()),
+            "rows_out": pa.array([max(rows_per_tile, 1)] * n, pa.int64()),
+            "wall_ms": [1.0] * n,
+            "status": ["ok"] * n,
+            "work_order": [f'{{"tile":{t},"salt_groups":1,"processor":"p"}}'
+                           for t in tiles],
+            "paths": pa.array(paths, pa.list_(pa.string())),
+        }), os.path.join(stage, "part-00000.parquet"))
+    return table.commit_staged(stage)
 
 
 def tile_processor(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -96,26 +147,14 @@ def test_resume_after_partial_run(assigned, tmp_path):
 
 def test_commit_atomicity(tmp_path):
     table = IcebergishTable(str(tmp_path / "t3"))
-    assert table.current_snapshot() is None
+    assert table.snapshots() == []
     assert table.completed_tiles() == set()
-    from batch3dfier_spark.storage.tablefmt import LineageRow
-
-    sid = table.commit(
-        [], [LineageRow(tile_gid=9, partition_id=0, rows_in=5, rows_out=5,
-                        wall_ms=1.0, status="ok")]
-    )
+    sid = _commit(table, [9])
     assert sid == 1
     assert table.completed_tiles() == {9}
-    sid2 = table.commit([], [])
+    sid2 = _commit(table, [])
     assert sid2 == 2
     assert table.completed_tiles() == {9}  # lineage carried forward
-
-
-def _lineage_row(tile):
-    from batch3dfier_spark.storage.tablefmt import LineageRow
-
-    return LineageRow(tile_gid=tile, partition_id=0, rows_in=1, rows_out=1,
-                      wall_ms=1.0, status="ok")
 
 
 def test_racing_commit_raises_instead_of_replacing(tmp_path, monkeypatch):
@@ -125,10 +164,10 @@ def test_racing_commit_raises_instead_of_replacing(tmp_path, monkeypatch):
     root = str(tmp_path / "race")
     a, b = IcebergishTable(root), IcebergishTable(root)
     stale = b._next_sid()  # B reads CURRENT before A commits
-    assert a.commit([], [_lineage_row(1)]) == 1
+    assert _commit(a, [1]) == 1
     monkeypatch.setattr(b, "_next_sid", lambda: stale)
     with pytest.raises(FileExistsError):
-        b.commit([], [_lineage_row(2)])
+        _commit(b, [2])
     fresh = IcebergishTable(root)
     assert fresh.snapshots() == [1]
     assert fresh.completed_tiles() == {1}
@@ -139,12 +178,10 @@ def test_orphan_pointer_blocks_commit_until_vacuum(tmp_path, monkeypatch):
     """A commit that dies between its pointer and the CURRENT swap
     leaves a pointer newer than CURRENT: the next commit raises instead
     of overwriting it, and vacuum() removes it (with its manifest)."""
-    import os
-
     from batch3dfier_spark.storage import tablefmt
 
     table = IcebergishTable(str(tmp_path / "orphan"))
-    table.commit([], [_lineage_row(1)])
+    _commit(table, [1])
     real_replace = os.replace
 
     def crash_on_current(src, dst):
@@ -154,26 +191,24 @@ def test_orphan_pointer_blocks_commit_until_vacuum(tmp_path, monkeypatch):
 
     monkeypatch.setattr(tablefmt.os, "replace", crash_on_current)
     with pytest.raises(OSError, match="crash"):
-        table.commit([], [_lineage_row(2)])
+        _commit(table, [2])
     monkeypatch.undo()
     assert table.snapshots() == [1, 2]
     assert table.completed_tiles() == {1}
     with pytest.raises(FileExistsError, match="vacuum"):
-        table.commit([], [_lineage_row(3)])
+        _commit(table, [3])
     removed = table.vacuum()
     # the crashed commit's pointer, plus its and the refused commit's
     # manifests
     assert removed["snapshots"] == 1 and removed["manifests"] == 2
     assert table.snapshots() == [1]
-    assert table.commit([], [_lineage_row(3)]) == 2
+    assert _commit(table, [3]) == 2
     assert table.completed_tiles() == {1, 3}
 
 
 def test_expire_ignores_orphan_pointer(spark, tmp_path, monkeypatch):
     """expire_snapshots keeps the committed CURRENT, not a pointer left
     by an interrupted commit: the table's rows survive the expiry."""
-    import os
-
     from batch3dfier_spark.storage import tablefmt
 
     pdf = pd.DataFrame({"url": [f"u{i}" for i in range(12)],
@@ -193,7 +228,7 @@ def test_expire_ignores_orphan_pointer(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(tablefmt.os, "replace", crash_on_current)
     with pytest.raises(OSError, match="crash"):
-        table.commit([], [_lineage_row(9)])
+        _commit(table, [9])
     monkeypatch.undo()
     assert table.snapshots() == [1, 2, 3]
 
@@ -208,10 +243,10 @@ def test_export_into_existing_table_raises(tmp_path):
     """Exporting into a directory that already holds a table must not
     clobber its snapshot chain."""
     src = IcebergishTable(str(tmp_path / "src"))
-    src.commit([], [_lineage_row(5)])
+    _commit(src, [5])
     dst = IcebergishTable(str(tmp_path / "dst"))
     for t in (1, 2, 3):
-        dst.commit([], [_lineage_row(t)])
+        _commit(dst, [t])
     with pytest.raises(ValueError, match="already holds"):
         src.export_snapshot(None, dst.root)
     again = IcebergishTable(dst.root)
@@ -291,7 +326,7 @@ def test_salted_split_bounds_group_size(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    out = salted_split(df, key_col="url", target_rows_per_group=1000)
+    out = salted_split(df, target_rows_per_group=1000)
     sizes = (
         out.groupBy("tile_gid", "salt").count().toPandas()
     )
@@ -319,9 +354,11 @@ def test_snapshot_time_travel(spark, tmp_path):
     current = table.read(spark).toPandas()
     assert sorted(current["url"]) == ["a", "b", "c"]
     # lineage history also travels
-    assert set(table.snapshot(1)["lineage"][0].keys()) >= {
+    as_of_1_lin = table.lineage(snapshot_id=1)
+    assert set(as_of_1_lin.columns) >= {
         "tile_gid", "rows_in", "rows_out", "status", "work_order"
     }
+    assert sorted(as_of_1_lin["tile_gid"]) == [1, 2]
 
 
 def test_metadata_grows_linearly_not_quadratically(tmp_path):
@@ -329,25 +366,17 @@ def test_metadata_grows_linearly_not_quadratically(tmp_path):
     serializes ONLY its own additions, so total metadata bytes across n
     commits are O(rows written), not O(n^2), and the per-commit write is
     O(new) regardless of table history."""
-    import os
-
-    from batch3dfier_spark.storage.tablefmt import LineageRow
-
     table = IcebergishTable(str(tmp_path / "big"))
     n = 1000
     for i in range(n):
-        table.commit(
-            [f"/data/tile_gid={i}/part-{i}.parquet"],
-            [LineageRow(tile_gid=i, partition_id=0, rows_in=10,
-                        rows_out=10, wall_ms=1.0, status="ok")],
-        )
+        _commit(table, [i], file_for=lambda t: f"data/part-{t}.parquet")
     meta = table.meta_dir
     sizes = {f: os.path.getsize(os.path.join(meta, f))
-             for f in os.listdir(meta)}
+             for f in os.listdir(meta) if not f.startswith("lineage-")}
     total = sum(sizes.values())
-    # Old format: snapshot k carried k files + k lineage rows -> ~100 MB
-    # total at n=1000.  New format: one ~300 B manifest + one ~90 B
-    # pointer per commit -> well under 2 MB.
+    # A cumulative format (snapshot k carrying k files + k lineage rows)
+    # would reach ~100 MB at n=1000.  Here: one ~250 B manifest + one
+    # ~150 B pointer per commit -> well under 2 MB.
     assert total < 2_000_000, f"metadata total {total} bytes is superlinear"
     # Per-commit metadata is O(1)+O(new): the LAST commit's snapshot and
     # manifest are no bigger than an early commit's (+slack for digits).
@@ -356,23 +385,27 @@ def test_metadata_grows_linearly_not_quadratically(tmp_path):
     assert last_snap <= first_snap + 16
     man_sizes = sorted(v for k, v in sizes.items() if k.startswith("manifest-"))
     assert man_sizes[-1] <= man_sizes[0] + 32
+    # ... and so is the commit's lineage part (one row per new tile), the
+    # only other bytes a commit adds: total metadata stays linear
+    part_sizes = [os.path.getsize(table._abs(e["path"]))
+                  for sid in (1, n)
+                  for e in table._manifest(
+                      table._raw_snapshot(sid)["manifest"])["lineage_parquet"]]
+    assert part_sizes[1] <= part_sizes[0] + 32, part_sizes
     # Full history still resolves
     assert len(table.files()) == n
     lin = table.lineage()
     assert len(lin) == n
     assert table.completed_tiles() == set(range(n))
     # and time travel reaches any mid-chain state
-    mid = table.snapshot(500)
-    assert len(mid["files"]) == 500
-    assert len(mid["lineage"]) == 500
+    assert len(table.files(snapshot_id=500)) == 500
+    assert len(table.lineage(snapshot_id=500)) == 500
 
 
 def test_export_snapshot_round_trip(spark, tmp_path):
     """S9 (reference bag3d.py:239-329 pg_dump/GPKG dump): exporting a
     snapshot yields a self-contained artifact that reads back equal to
     `table.read(spark, snapshot_id)` and carries the lineage history."""
-    import os
-
     pdf1 = pd.DataFrame({"url": ["a", "b"], "text": ["x y", "z w v"],
                          "tile_gid": [1, 2]})
     pdf2 = pd.DataFrame({"url": ["c"], "text": ["q"], "tile_gid": [3]})
@@ -395,8 +428,7 @@ def test_export_snapshot_round_trip(spark, tmp_path):
     # lineage history travels with the artifact (both commits' rows)
     assert sorted(art2.lineage()["snapshot_id"].unique()) == [1, 2]
     # ... value for value, attribution included
-    pd.testing.assert_frame_equal(art2.lineage(), table.lineage(),
-                                  check_dtype=False)
+    pd.testing.assert_frame_equal(art2.lineage(), table.lineage())
     assert os.path.exists(os.path.join(out2, "lineage.csv"))
     # artifact is self-contained: no absolute path into the source table
     for fpath in art2.files():
@@ -408,6 +440,24 @@ def test_export_snapshot_round_trip(spark, tmp_path):
     assert sorted(os.path.relpath(f, out2) for f in art2.files()) == src_rel
 
 
+def test_lineage_has_one_schema(tmp_path):
+    """lineage() returns the same dtypes whether its rows come from
+    staged parts, a base part (after expire_snapshots), an exported
+    artifact, or no commit at all."""
+    table = IcebergishTable(str(tmp_path / "staged"))
+    assert table.lineage().dtypes.astype(str).to_dict() == LINEAGE_DTYPES
+    _commit(table, [1, 2], rows_per_tile=2)
+    _commit(table, [3], rows_per_tile=2, commit_tag=1)
+    staged = table.lineage()
+    art = IcebergishTable(table.export_snapshot(None, str(tmp_path / "art")))
+    assert table.expire_snapshots(keep_n=1) == [1]
+    cases = {"staged": staged, "base": table.lineage(), "export": art.lineage()}
+    for name, lin in cases.items():
+        assert lin.dtypes.astype(str).to_dict() == LINEAGE_DTYPES, name
+        pd.testing.assert_frame_equal(lin, staged)
+    assert staged["snapshot_id"].tolist() == [1, 1, 2]
+
+
 def test_lineage_is_dedrivered_and_correct_at_10k_tiles(spark, tmp_path):
     """Round-3 VERDICT #1: no driver-side collect in the dispatch hot
     path — lineage rows are written distributed (parquet parts under
@@ -416,10 +466,7 @@ def test_lineage_is_dedrivered_and_correct_at_10k_tiles(spark, tmp_path):
     resume, and the data/lineage file-path linkage all hold."""
     import glob
     import inspect
-    import os
-
     import numpy as np
-    import pyarrow.parquet as pq
 
     # the structural guarantee, stated as a test: the hot path never
     # calls toPandas() on per-tile data
@@ -479,14 +526,8 @@ def test_resume_excludes_completed_and_skips_with_one_join(
     exactly the 9 new, unskipped tiles and records the new skip.  The
     completed set never becomes an isin predicate (PySpark builds one
     with a JVM call per literal)."""
-    from batch3dfier_spark.storage.tablefmt import LineageRow
-
     table = IcebergishTable(str(tmp_path / "resume"))
-    table.commit([], [
-        LineageRow(tile_gid=t, partition_id=0, rows_in=1, rows_out=1,
-                   wall_ms=1.0, status="ok")
-        for t in range(1, 3_001)
-    ])
+    _commit(table, range(1, 3_001))
     tiles = list(range(2_991, 3_011))  # 2 991..3 000 done, 3 001..3 010 new
     df = spark.createDataFrame(pd.DataFrame({
         "url": [f"u{t}-{i}" for t in tiles for i in range(2)],
@@ -524,21 +565,15 @@ def test_pruned_chain_read_skips_disjoint_manifests(tmp_path):
     table must NOT materialize the full history — commit-level stats in
     the snapshot pointers let the chain walk skip disjoint commits
     without opening their manifests."""
-    from batch3dfier_spark.storage.tablefmt import LineageRow
-
     table = IcebergishTable(str(tmp_path / "chain"))
     n = 1000
     for i in range(n):
-        table.commit(
-            [f"data/tile_gid={i}/part-{i}.parquet"],
-            [LineageRow(tile_gid=i, partition_id=0, rows_in=10,
-                        rows_out=10, wall_ms=1.0, status="ok")],
-        )
+        _commit(table, [i], file_for=lambda t: f"data/part-{t}.parquet")
     # FRESH instance: empty caches, so cache contents measure what the
     # pruned walk actually opened
     t2 = IcebergishTable(str(tmp_path / "chain"))
     fs = t2.files(min_tile=500, max_tile=500)
-    assert len(fs) == 1 and fs[0].endswith("tile_gid=500/part-500.parquet")
+    assert fs == [os.path.join(t2.root, "data", "part-500.parquet")]
     assert len(t2._manifest_cache) == 1  # 999 disjoint manifests skipped
     lin = t2.lineage(min_tile=500, max_tile=502)
     assert sorted(lin["tile_gid"]) == [500, 501, 502]
@@ -624,9 +659,6 @@ def test_table_directory_is_movable(spark, tmp_path):
 def _named_paths(table):
     """Absolute data-file paths the staged lineage rows of `table` name."""
     import glob
-    import os
-
-    import pyarrow.parquet as pq
 
     out = set()
     for p in glob.glob(os.path.join(table.meta_dir, "lineage-*", "*.parquet")):
@@ -666,8 +698,6 @@ def test_files_holding_several_tiles(spark, tmp_path):
     reads stay tile-exact, time travel returns phase 1 only, files()
     lists each file once, and expiry + vacuum keep every file the
     lineage names."""
-    import os
-
     n_tiles = 12
     pdf = pd.DataFrame({"url": [f"u{i:03d}" for i in range(4 * n_tiles)],
                         "text": ["x y"] * (4 * n_tiles),
@@ -702,89 +732,6 @@ def test_files_holding_several_tiles(spark, tmp_path):
 # -- maintenance: compaction, snapshot expiry, vacuum (round-5 VERDICT #3) --
 
 
-def _tile_file_path(table, tile):
-    """A new absolute path in the older per-tile layout,
-    data/tile_gid=<tile>/<uuid>.parquet, which readers keep accepting."""
-    import os
-    import uuid
-
-    d = os.path.join(table.data_dir, f"tile_gid={int(tile)}")
-    os.makedirs(d, exist_ok=True)
-    return os.path.join(d, f"{uuid.uuid4().hex}.parquet")
-
-
-def _commit_tile_files(table, tiles, rows_per_tile=5, commit_tag=0):
-    """Write one small per-tile parquet (with the row-level tile_gid
-    column run_tiles writes) per tile and commit them as ONE snapshot."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from batch3dfier_spark.storage.tablefmt import LineageRow
-
-    files, lineage = [], []
-    for t in tiles:
-        p = _tile_file_path(table, t)
-        pq.write_table(
-            pa.table(
-                {
-                    "tile_gid": pa.array([t] * rows_per_tile, pa.int64()),
-                    "url": [f"u{t:05d}_{commit_tag}_{i}"
-                            for i in range(rows_per_tile)],
-                    "v": pa.array(
-                        [t * 1000 + commit_tag * 10 + i
-                         for i in range(rows_per_tile)], pa.int64()),
-                }
-            ),
-            p,
-        )
-        files.append(p)
-        lineage.append(
-            LineageRow(tile_gid=t, partition_id=0, rows_in=rows_per_tile,
-                       rows_out=rows_per_tile, wall_ms=1.0, status="ok")
-        )
-    return table.commit(files, lineage)
-
-
-def test_pruned_read_mixed_schema_keeps_pre_upgrade_rows(spark, tmp_path):
-    """Round-5 ADVICE (medium): a MIXED table — pre-upgrade per-tile
-    files WITHOUT the row-level tile_gid column plus new files WITH it
-    — must not silently drop the old files' rows from a pruned read.
-    The old rows surface as NULL tile_gid under the merged schema; the
-    row filter is NULL-tolerant because those files are already
-    tile-exact via the per-tile file prune."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from batch3dfier_spark.storage.tablefmt import LineageRow
-
-    table = IcebergishTable(str(tmp_path / "mix"))
-    # commit 1: legacy layout — NO tile_gid column in the data file
-    legacy_files, legacy_lineage = [], []
-    for t in (7, 8):
-        p = _tile_file_path(table, t)
-        pq.write_table(
-            pa.table({"url": [f"old{t}_{i}" for i in range(3)],
-                      "v": pa.array([t * 10 + i for i in range(3)],
-                                    pa.int64())}),
-            p,
-        )
-        legacy_files.append(p)
-        legacy_lineage.append(
-            LineageRow(tile_gid=t, partition_id=0, rows_in=3, rows_out=3,
-                       wall_ms=1.0, status="ok"))
-    table.commit(legacy_files, legacy_lineage)
-    # commit 2: post-upgrade layout with the column
-    _commit_tile_files(table, (7, 9), rows_per_tile=2, commit_tag=1)
-
-    # pruned read of tile 7 returns BOTH generations' tile-7 rows
-    got = table.read(spark, min_tile=7, max_tile=7).toPandas()
-    assert sorted(u for u in got["url"]) == [
-        "old7_0", "old7_1", "old7_2", "u00007_1_0", "u00007_1_1"
-    ]
-    # unpruned read still sees everything
-    assert table.read(spark).count() == 6 + 4
-
-
 def test_compact_1000_tiles_10_commits(spark, tmp_path):
     """A 1000-tile table built across 10 commits (one small file per
     tile) compacts into <= ceil(rows/target) tile-range-sorted files;
@@ -794,7 +741,7 @@ def test_compact_1000_tiles_10_commits(spark, tmp_path):
     per_commit = n_tiles // n_commits
     for c in range(n_commits):
         tiles = range(c * per_commit + 1, (c + 1) * per_commit + 1)
-        _commit_tile_files(table, tiles, rows_per_tile=2, commit_tag=c)
+        _commit(table, tiles, rows_per_tile=2, commit_tag=c)
     assert len(table.files()) == n_tiles
     before = table.read(spark).orderBy("url").toPandas()
 
@@ -822,7 +769,7 @@ def test_compact_1000_tiles_10_commits(spark, tmp_path):
     assert len(table.lineage()) == n_tiles
 
     # appends after compaction coexist with the rewrite file set
-    _commit_tile_files(table, [n_tiles + 1], rows_per_tile=2, commit_tag=99)
+    _commit(table, [n_tiles + 1], rows_per_tile=2, commit_tag=99)
     assert len(table.files()) == 4
     assert table.read(spark).count() == 2 * n_tiles + 2
 
@@ -832,8 +779,6 @@ def test_expire_snapshots_and_vacuum(spark, tmp_path):
     self-contained base (files + attributed lineage), deletes expired
     metadata, and vacuum reclaims superseded data files; retained time
     travel and resume stay green, expired ids raise."""
-    import os
-
     pdf = pd.DataFrame(
         {
             "url": [f"u{i}" for i in range(40)],
@@ -869,14 +814,14 @@ def test_expire_snapshots_and_vacuum(spark, tmp_path):
     )
     # expired ids are gone
     with pytest.raises(ValueError):
-        table.snapshot(1)
+        table.files(snapshot_id=1)
     # fresh instance (no caches) still reads everything
     t2 = IcebergishTable(table.root)
     assert t2.read(spark).count() == 40
     assert t2.completed_tiles() == set(range(1, 9))
 
     # expire down to the rewrite snapshot only: the pre-compaction
-    # per-tile files become unreferenced and vacuum reclaims them
+    # task files become unreferenced and vacuum reclaims them
     table.expire_snapshots(keep_n=1)
     assert table.snapshots() == [4]
     on_disk = {
@@ -885,7 +830,8 @@ def test_expire_snapshots_and_vacuum(spark, tmp_path):
         if n.endswith(".parquet")
     }
     assert on_disk == set(table.files())
-    assert not any("tile_gid=" in p for p in on_disk)
+    assert all(os.path.basename(os.path.dirname(p)).startswith("compact-")
+               for p in on_disk)
     pd.testing.assert_frame_equal(
         table.read(spark).orderBy("url").toPandas(), full)
 
@@ -899,13 +845,6 @@ def test_vacuum_reclaims_orphans(spark, tmp_path):
     """A run that dies between staging and commit (or a failed manifest
     write) leaves orphans no snapshot references; vacuum removes them
     without touching committed state."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from batch3dfier_spark.storage.tablefmt import task_data_path
-
     pdf = pd.DataFrame({"url": ["a", "b"], "text": ["x y", "z"],
                         "tile_gid": [1, 2]})
     table = IcebergishTable(str(tmp_path / "v"))
@@ -923,7 +862,7 @@ def test_vacuum_reclaims_orphans(spark, tmp_path):
                    orphan_data)
     # orphan manifest (written, commit failed before the pointer swap)
     table._write_atomic("manifest-000099-deadbeef.json",
-                        {"snapshot_id": 99, "files": [], "lineage": []})
+                        {"snapshot_id": 99, "lineage_parquet": []})
 
     removed = table.vacuum()
     assert removed["data_files"] >= 1

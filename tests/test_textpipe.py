@@ -774,6 +774,7 @@ _KEEP_STEPS = {
                        "n_centroids": 16},
     "contamination_filter": {"op": "contamination_filter", "ngram": 4,
                              "threshold_ppm": 500_000},
+    "scrub_pii": {"op": "scrub_pii"},
 }
 
 
@@ -781,8 +782,9 @@ _KEEP_STEPS = {
 def test_keep_step_after_mixture_keeps_each_row_once(spark, tmp_path,
                                                       mixed_src, op):
     """A mixture step repeats a doc_id once per copy.  A step that only
-    keeps or drops rows must not multiply them: no (doc_id, copy_id)
-    twice, and never more rows out than in."""
+    keeps or drops rows, or rewrites each row on its own (scrub_pii),
+    must not multiply them: no (doc_id, copy_id) twice, and never more
+    rows out than in."""
     from pyspark.sql import functions as F
 
     from batch3dfier_spark.textpipe import run_textpipe
@@ -803,12 +805,43 @@ def test_keep_step_after_mixture_keeps_each_row_once(spark, tmp_path,
     rows_in, rows_out = (s["rows"] for s in report["steps"])
     assert rows_in > report["rows_in"]  # the mixture repeated some ids
     assert 0 < rows_out <= rows_in
+    if op == "scrub_pii":
+        assert rows_out == rows_in
     repeated = (
         spark.read.parquet(cfg["output"]["path"])
         .groupBy("doc_id", "copy_id").count().where(F.col("count") > 1)
         .count()
     )
     assert repeated == 0
+
+
+def test_join_back_step_after_repeating_mixture_is_rejected(spark, tmp_path):
+    """line_dedup, paragraph_dedup, c4_filter and pack_sequences join
+    per-doc output back on doc_id, so after a mixture step that repeats
+    rows (a weight or default_weight above 1.0) they would multiply
+    them: run_textpipe refuses such a pipeline before it writes any
+    stage, and accepts the same step before the mixture or after one
+    that repeats nothing."""
+    from batch3dfier_spark import textpipe
+
+    out = str(tmp_path / "out")
+    mixtures = [{"op": "mixture", "weights": {"zh": 2.0}, "seed": "m1"},
+                {"op": "mixture", "weights": {"zh": 0.5},
+                 "default_weight": 1.5, "seed": "m1"}]
+    for mix in mixtures:
+        for op in ("line_dedup", "paragraph_dedup", "c4_filter",
+                   "pack_sequences"):
+            step = {"op": op, "n_ctx": 64}
+            cfg = {"input": {"documents": f"{SF}/documents.parquet"},
+                   "output": {"path": out},
+                   "steps": [{"op": "exact_dedup"}, mix, step]}
+            with pytest.raises(ValueError, match=op):
+                textpipe.run_textpipe(spark, cfg)
+            assert not os.path.exists(out)
+            assert not os.path.exists(textpipe._stages_root(out))
+            textpipe._check_row_identity([step, mix])
+    textpipe._check_row_identity([
+        {"op": "mixture", "weights": {"zh": 1.0, "en": 0.3}}, step])
 
 
 def _clear_job_group(sc):

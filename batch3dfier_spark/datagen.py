@@ -30,8 +30,6 @@ from .geo import Rect
 __all__ = [
     "REF_TERRITORY",
     "EXTENT_SMALL",
-    "EXTENT_LARGE",
-    "BORDER_CORPUS",
     "grid_tile_index",
     "gen_pages_range",
 ]
@@ -40,8 +38,8 @@ __all__ = [
 # exactly this rectangle.
 REF_TERRITORY = Rect(120625.0, 485937.5, 121250.0, 486718.75)
 
-# Clip polygons, vertex-for-vertex from the reference's example_data
-# (extent_small.geojson / extent_large.geojson; also tests/test_config.py:26).
+# Clip polygon, vertex-for-vertex from the reference's example_data
+# (extent_small.geojson; also tests/test_config.py:26).
 EXTENT_SMALL = np.array([
     [120903.6027892562, 486429.3323863637],
     [120880.35898760331, 486353.7900309918],
@@ -54,32 +52,6 @@ EXTENT_SMALL = np.array([
     [120945.2479338843, 486445.7967458678],
     [120903.6027892562, 486429.3323863637],
 ])
-
-EXTENT_LARGE = np.array([
-    [120749.61260330578, 486674.3607954546],
-    [120697.31404958678, 486593.0074896695],
-    [120691.50309917355, 486404.15160123975],
-    [120665.35382231405, 486014.81792355375],
-    [120712.80991735538, 485952.8344524794],
-    [121081.80526859504, 485954.7714359505],
-    [121148.63119834711, 486132.00542355375],
-    [121207.70919421488, 486420.61596074386],
-    [121208.67768595042, 486672.42381198355],
-    [120995.60950413223, 486698.573088843],
-    [120749.61260330578, 486674.3607954546],
-])
-
-# FIXTURES.md section 5 — hand-placed border-case points with expected
-# buffer-0 tile under the half-open rule.
-BORDER_CORPUS = [
-    # (case, x, y, expected_unit_or_None)
-    ("interior", 120700.0, 486000.0, "25gn1_c1"),
-    ("shared_vertical_edge", 120937.5, 486000.0, "25gn1_c2"),
-    ("shared_horizontal_edge", 120700.0, 486328.125, "25gn1_c4"),
-    ("four_corner_point", 120937.5, 486328.125, "25gn1_c3"),
-    ("territory_sw_corner", 120625.0, 485937.5, "25gn1_c1"),
-    ("territory_right_edge", 121250.0, 486000.0, None),
-]
 
 
 def grid_tile_index(territory: Rect, nx: int, ny: int) -> pd.DataFrame:

@@ -436,10 +436,11 @@ def minhash_signatures(
             # inside a doc are kept — min over duplicates == min over
             # the distinct set) and per-doc minima are one gather +
             # minimum.reduceat per permutation over contiguous runs.
-            # The affine table is built in cache-sized column chunks:
-            # _mersenne_affine materializes ~10 temporaries of its
-            # shape, and big flat chunks measured 6-12x slower from
-            # cache/allocation pressure at 32 concurrent workers.
+            # The affine table is built in cache-sized chunks of
+            # 65 536 elements (512 KiB per temporary): _mersenne_affine
+            # materializes ~10 temporaries of its shape, and big flat
+            # chunks measured 6-12x slower from cache/allocation
+            # pressure at 32 concurrent workers.
             sh_all, counts = _shingle_hashes_batch(
                 pdf[text_col], shingle_k, distinct=False
             )
@@ -452,7 +453,7 @@ def minhash_signatures(
             s_u = u_vals.astype(np.uint64) % M
             n_u = s_u.size
             tbl = np.empty((num_perm_, n_u), dtype=np.uint64)
-            step = max(1, 65_536 // max(num_perm_ // 64, 1))
+            step = max(1, 65_536 // num_perm_)
             for lo in range(0, n_u, step):
                 hi = min(lo + step, n_u)
                 tbl[:, lo:hi] = _mersenne_affine(
@@ -1452,7 +1453,11 @@ def _cc_one_task(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int, bool]
     rounds = seen.get["rounds"]
     if rounds is None:  # no edges: the empty set is round 1's fixpoint
         rounds = 1
-    return out.select("id", "component"), rounds or max_iter, rounds > 0
+    # at most n_edges label rows, under the round loop's broadcast bound:
+    # the hint spares a consumer's join a shuffle of its other side,
+    # which a checkpoint without size statistics would otherwise cost
+    labels = F.broadcast(out.select("id", "component"))
+    return labels, rounds or max_iter, rounds > 0
 
 
 def _cc_round_loop(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int, bool]:

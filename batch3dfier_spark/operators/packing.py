@@ -28,8 +28,8 @@ Distribution/scale:
 - everything is a pure JVM expression (token_count's split + size, one
   windowed SUM) — whole-stage codegen, no Python.
 
-Determinism: (shard, seq_id, seq_off) depend only on doc_id order and
-token counts, so the layout is identical on every run, engine,
+Determinism: (shard, seq_id, seq_off) depend only on (doc_id, copy_id)
+order and token counts, so the layout is identical on every run, engine,
 partitioning, and cluster size — and exactly reproducible by an
 ANSI-SQL oracle (SUM OVER ... ROWS UNBOUNDED PRECEDING).
 
@@ -67,7 +67,7 @@ def pack_sequences(
     sizing rule that bounds each shard's window partition to
     tokens_per_shard tokens on one task.
 
-    Returns the input's id column plus:
+    Returns the input's columns plus:
       shard     — doc_id % n_shards (uniform; the packing unit)
       n_tokens  — token count of the document (whitespace or supplied)
       seq_id    — index (within the shard) of the n_ctx-token sequence
@@ -75,6 +75,9 @@ def pack_sequences(
       seq_off   — token offset of the document inside that sequence
       spans     — true iff the document crosses into the next sequence
                   (its tail is cut there, exactly like GPT packing)
+
+    Copies of a document (the rows sampling.weighted_mixture tags with
+    copy_id) each take their own span, in copy_id order.
     """
     tok = (
         F.col(n_tokens_col).cast("bigint")
@@ -85,12 +88,13 @@ def pack_sequences(
         total = df.agg(F.sum(tok.cast("bigint"))).first()[0] or 0
         n_shards = max(1, -(-int(total) // int(tokens_per_shard)))
     shard = F.pmod(F.col(id_col), F.lit(n_shards)).cast("int")
+    order = [id_col] + (["copy_id"] if "copy_id" in df.columns else [])
     w = (
         Window.partitionBy("shard")
-        .orderBy(F.col(id_col).asc())
+        .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    out = (
+    return (
         df.withColumn("shard", shard)
         .withColumn("n_tokens", tok.cast("bigint"))
         .withColumn(
@@ -106,9 +110,7 @@ def pack_sequences(
             "spans",
             (F.col("seq_off") + F.col("n_tokens")) > F.lit(n_ctx),
         )
-    )
-    return out.select(
-        id_col, "shard", "n_tokens", "seq_id", "seq_off", "spans"
+        .drop("_cum_before")
     )
 
 

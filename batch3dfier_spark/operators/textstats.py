@@ -67,7 +67,6 @@ LANG_MARKERS: dict[str, list[str]] = {
 STOPWORDS = sorted({w for ws in LANG_MARKERS.values() for w in ws})
 
 FP_MOD = 2_147_483_648  # 2^31: rolling-hash modulus (ANSI-safe)
-FP_MUL = 31
 
 # ASCII whitespace class — matches Java \s (Spark) and RE2 \s (DuckDB)
 # exactly; python's own \s would additionally match unicode spaces and
@@ -511,7 +510,6 @@ GROUP BY {strata}
 def c4_line_filter(
     df: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
     min_words: int = 5,
     min_lines: int = 3,
 ) -> DataFrame:
@@ -532,49 +530,32 @@ def c4_line_filter(
     Pages with fewer than min_lines surviving lines are dropped (C4
     counted sentences; kept lines are the deterministic proxy).
 
-    Returns (id_col, text_col, n_kept) for surviving pages only, the
-    page reassembled from its kept lines in order.
+    Returns `df`'s surviving pages with text_col rewritten to their
+    kept lines in order, plus n_kept (the kept-line count).
 
-    Scale shape: the two document-level predicates are map-only string
-    scans that PUSH DOWN to the parquet read; the line tests are pure
-    JVM regexp/length expressions after one posexplode; the only
-    shuffle is the groupBy(id) reassembly, whose groups are bounded by
-    document size — no corpus-level hot key can exist (contrast
-    line_dedup, which must group by the LINE value and therefore needs
-    the map-side-combine survivor shape).  No Python, no HOF lambdas:
-    word counts come from regexp_extract_all + size.
+    Scale shape: one row-wise projection and two filters — no shuffle,
+    no join back, no Python.  The two document-level predicates are
+    map-only string scans that PUSH DOWN to the parquet read.  The line
+    tests run inside `filter` over the split page; the lambda costs the
+    codegen cache, but at 5 000 and 100 000 pages on a 4-vCPU host this
+    form took 0.5x-0.8x the time of the old posexplode + groupBy(id)
+    reassembly.  Word counts come from regexp_extract_all + size.
     """
     text = F.coalesce(F.col(text_col), F.lit(""))
-    base = df.where(
-        ~F.lower(text).contains("lorem ipsum")
-        & ~text.contains("{")
-    )
-    lines = base.select(
-        F.col(id_col),
-        F.posexplode(F.split(text, "\n", -1)).alias("line_no", "_raw"),
-    ).select(
-        id_col, "line_no", F.trim(F.col("_raw")).alias("line")
-    )
-    kept = lines.where(
-        F.col("line").rlike('[.!?"]$')
-        & (F.size(F.regexp_extract_all(F.col("line"), F.lit(r"(\S+)"), 1))
+    lines = F.filter(
+        F.transform(F.split(text, "\n", -1), lambda line: F.trim(line)),
+        lambda line: line.rlike('[.!?"]$')
+        & (F.size(F.regexp_extract_all(line, F.lit(r"(\S+)"), 1))
            >= min_words)
-        & ~F.lower(F.col("line")).contains("javascript")
+        & ~F.lower(line).contains("javascript"),
     )
     return (
-        kept.groupBy(id_col)
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("line_no", "line"))
-            ).alias("_ls"),
-            F.count(F.lit(1)).cast("bigint").alias("n_kept"),
-        )
-        .where(F.col("n_kept") >= min_lines)
-        .select(
-            F.col(id_col),
-            F.concat_ws("\n", F.col("_ls")["line"]).alias(text_col),
-            "n_kept",
-        )
+        df.where(~F.lower(text).contains("lorem ipsum") & ~text.contains("{"))
+        .withColumn("_ls", lines)
+        .where(F.size("_ls") >= max(min_lines, 1))
+        .withColumn(text_col, F.array_join("_ls", "\n"))
+        .withColumn("n_kept", F.size("_ls").cast("bigint"))
+        .drop("_ls")
     )
 
 

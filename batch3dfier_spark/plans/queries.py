@@ -1172,7 +1172,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack_sequences(
         _docs(spark, sf_dir).select("doc_id", "text"),
         n_ctx=512, n_shards=8,
-    )
+    ).drop("text")
 
 
 def _sql_pack_sequences() -> str:

@@ -15,14 +15,15 @@ deterministic (hash-threshold draws, fixed-constant signatures), so a
 rerun — or a resumed run on a cluster — materializes byte-identical
 output.
 
-Row identity: a step that keeps or drops rows filters its input or
-semi/anti-joins it, and scrub_pii is one row-wise projection, so none
-of them emits a row twice, even after a mixture step repeated a doc_id.
-The corpus-level rewrite steps (line_dedup, paragraph_dedup, c4_filter,
-pack_sequences) join per-doc operator output back on doc_id: they need
-doc_id unique per row, so run_textpipe rejects one that follows a
-mixture step able to repeat a row (a weight or default_weight above
-1.0) before it writes anything.
+Row identity: STEPS declares each op once, with its builder and its
+row kind, and the kind says what the step may do to rows.  A keep step
+filters or semi/anti-joins its own input, and a map step is one
+projection (pack_sequences' window included) or a left join on labels
+unique per doc_id (near_dup_labels), so neither emits a row twice.  A rewrite step (line_dedup, paragraph_dedup, strip_dup_spans)
+builds its per-document columns from one row per doc_id, and
+_apply_step joins them back many-to-one: every input row comes out
+exactly once, and every copy of a document gets the same text.  Only
+the resample step (mixture) repeats rows, tagging each copy copy_id.
 
 Config shape::
 
@@ -101,20 +102,20 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# operators are called through their modules, so a patched attribute
+# (a tracer, a counting shim) is what a step calls
+from .operators import (contamination, dedup, lmscore, packing, quality,
+                        sampling, semdedup, spans, textstats, urltools)
 from .session import local_path
 
-__all__ = ["run_textpipe", "parse_textpipe_config", "CUSTOM_OPS"]
+__all__ = ["run_textpipe", "parse_textpipe_config", "STEPS"]
 
-# Extension surface: user-registered steps.  A pipeline config may name
-# any op registered here; the callable receives (spark, df, step) and
-# returns the transformed DataFrame.  Consulted before the built-ins,
-# so deployments can also shadow a built-in with a tuned variant.
-CUSTOM_OPS: dict = {}
-
-# steps that join per-doc operator output back on doc_id (see "Row
-# identity" above)
-_JOIN_BACK_OPS = ("line_dedup", "paragraph_dedup", "c4_filter",
-                  "pack_sequences")
+# Row kinds: what a step may do to the rows of its input.
+KEEP = "keep"          # filter or semi/anti-join its own input;
+                       # row-wise columns may change
+MAP = "map"            # one projection: one row out per row in
+REWRITE = "rewrite"    # per-document columns, joined back by _apply_step
+RESAMPLE = "resample"  # drops or repeats rows, tagging copies copy_id
 
 
 def parse_textpipe_config(path: str) -> dict:
@@ -136,15 +137,9 @@ def _near_dup_pairs(df: DataFrame, step: dict) -> DataFrame:
     """(id_a, id_b) near-dup candidate edges per the step's method —
     shared by the near_dedup (drop) and near_dup_labels (annotate)
     steps so both see identical cluster graphs."""
-    from .operators.dedup import (
-        exact_dup_pairs,
-        minhash_near_dups,
-        simhash_near_dups,
-    )
-
     method = step.get("method", "minhash")
     if method == "minhash":
-        pairs = minhash_near_dups(
+        pairs = dedup.minhash_near_dups(
             df, threshold=float(step.get("threshold", 0.5))
         )
         # minhash_near_dups PREFILTERS byte-identical docs out of the
@@ -155,19 +150,17 @@ def _near_dup_pairs(df: DataFrame, step: dict) -> DataFrame:
         # identical doc has an identical signature/vector and pairs
         # up through the normal candidate path.
         return pairs.select("id_a", "id_b").unionByName(
-            exact_dup_pairs(df)
+            dedup.exact_dup_pairs(df)
         )
     if method == "simhash":
-        return simhash_near_dups(
+        return dedup.simhash_near_dups(
             df, max_hamming=int(step.get("max_hamming", 8))
         )
     if method == "embedding":
-        from .operators.dedup import embedding_near_dups_lsh
-
         # the recall-gated (>=0.95) hyperplane-LSH funnel: buckets ->
         # candidate pairs -> exact quantized re-score; requires the
         # frame to carry an embedding column (e.g. joined upstream)
-        return embedding_near_dups_lsh(
+        return dedup.embedding_near_dups_lsh(
             df,
             dim=int(step["dim"]),
             threshold=float(step.get("threshold", 0.4)),
@@ -179,354 +172,326 @@ def _near_dup_pairs(df: DataFrame, step: dict) -> DataFrame:
     )
 
 
-def _apply_step(spark: SparkSession, df: DataFrame, step: dict) -> DataFrame:
-    op = step["op"]
-    if op in CUSTOM_OPS:
-        return CUSTOM_OPS[op](spark, df, step)
-    if op == "exact_dedup":
-        from .operators.dedup import min_id_survivors
+def _kept(df: DataFrame, keep: DataFrame) -> DataFrame:
+    """The rows of `df` whose doc_id is in `keep`: a semi-join keeps
+    each row at most once, however often `keep` names its doc_id."""
+    return df.join(keep.select("doc_id"), "doc_id", "left_semi")
 
-        return min_id_survivors(
-            df, F.sha2(F.col(step.get("text_col", "text")), 256))
-    if op == "scrub_pii":
-        # rewrite text with typed tokens; keep per-category counts as
-        # extra columns (n_email / n_ip / n_phone)
-        from .operators.textstats import pii_scrub_columns
 
-        text_col = step.get("text_col", "text")
-        text, counts = pii_scrub_columns(text_col)
-        rest = [c for c in df.columns if c not in ("doc_id", text_col)]
-        return df.select("doc_id", *rest, text, *counts)
-    if op == "line_dedup":
-        # corpus-level C4-style line dedup: documents keep their ids
-        # but their text is rewritten to the surviving lines
-        from .operators.dedup import line_dedup
+def _documents(df: DataFrame) -> DataFrame:
+    """One row per doc_id.  Only a RESAMPLE step repeats a doc_id, and
+    it tags the copies with copy_id; the copies are otherwise equal."""
+    return df.dropDuplicates(["doc_id"]) if "copy_id" in df.columns else df
 
-        text_col = step.get("text_col", "text")
-        deduped = line_dedup(
-            df, text_col=text_col,
-            min_chars=int(step.get("min_chars", 10)),
+
+# -- step builders: (spark, df, step) -> DataFrame; a REWRITE builder
+# returns doc_id plus the columns it replaces or adds -----------------------
+
+
+def _exact_dedup(spark, df, step):
+    return dedup.min_id_survivors(
+        df, F.sha2(F.col(step.get("text_col", "text")), 256))
+
+
+def _scrub_pii(spark, df, step):
+    # typed tokens for emails/IPs/phones, per-category counts as
+    # n_email / n_ip / n_phone
+    text_col = step.get("text_col", "text")
+    text, counts = textstats.pii_scrub_columns(text_col)
+    rest = [c for c in df.columns if c not in ("doc_id", text_col)]
+    return df.select("doc_id", *rest, text, *counts)
+
+
+def _line_dedup(spark, docs, step):
+    return dedup.line_dedup(docs, text_col=step.get("text_col", "text"),
+                            min_chars=int(step.get("min_chars", 10)))
+
+
+def _paragraph_dedup(spark, docs, step):
+    # mode=keep_first (line_dedup rule lifted to blank-line blocks) or
+    # drop_all (CCNet rule: no copy of a repeated paragraph survives)
+    return dedup.paragraph_dedup(
+        docs, text_col=step.get("text_col", "text"),
+        min_chars=int(step.get("min_chars", 30)),
+        mode=step.get("mode", "keep_first"))
+
+
+def _c4_filter(spark, df, step):
+    # C4 line-level cleaning (Raffel et al. 2020 sec 2.2); runs BEFORE
+    # dedup
+    return textstats.c4_line_filter(
+        df, text_col=step.get("text_col", "text"),
+        min_words=int(step.get("min_words", 5)),
+        min_lines=int(step.get("min_lines", 3)),
+    ).drop("n_kept")
+
+
+def _quality_filter(spark, df, step):
+    # token gate in the JVM; the repetition gates read one Python pass
+    # (see repetition_ratios)
+    out, n_tok = df, textstats.token_count(F.col("text"))
+    if "min_tokens" in step:
+        out = out.where(n_tok >= int(step["min_tokens"]))
+    if "max_tokens" in step:
+        out = out.where(n_tok <= int(step["max_tokens"]))
+    rep = textstats.repetition_ratios(F.col("text"))
+    for k in ("max_dup_line_frac", "max_dup_line_char_frac",
+              "max_top_bigram_frac"):
+        if k in step:
+            out = out.where(rep[k[len("max_"):]] <= float(step[k]))
+    return out
+
+
+def _quality_classifier(spark, df, step):
+    # the linear head of a trained quality classifier: integer weights
+    # from the config, threshold decision
+    scored = quality.quality_score(
+        df,
+        text_col=step.get("text_col", "text"),
+        weights={k: int(v) for k, v in (step.get("weights") or {}).items()},
+        threshold_q=int(step.get("threshold_q", quality.DEFAULT_THRESHOLD_Q)),
+    )
+    kept = scored.where(F.col("quality_kept")).drop("quality_kept")
+    return kept if step.get("keep_score") else kept.drop("quality_q")
+
+
+def _near_dedup(spark, df, step):
+    comp = dedup.connected_components(_near_dup_pairs(df, step))
+    # keeper = the doc whose id IS the component label; docs never
+    # paired keep themselves by absence from the drop list
+    drops = comp.where(F.col("id") != F.col("component")).select(
+        F.col("id").alias("doc_id"))
+    return df.join(drops, "doc_id", "left_anti")
+
+
+def _url_filter(spark, df, step):
+    # C4-style blocklist: drop rows whose host (or a parent domain) is
+    # in blocked_hosts or whose URL contains a blocked fragment
+    bl = spark.createDataFrame(
+        [(h,) for h in step["blocked_hosts"]], "blocked string")
+    return _kept(df, urltools.url_blocklist_filter(
+        df, bl, blocked_fragments=step.get("blocked_fragments"),
+        url_col=step.get("url_col", "url"),
+    ).where(F.col("reason").isNull()))
+
+
+def _semantic_dedup(spark, df, step):
+    # SemDeDup over an embedding column joined upstream; min-id
+    # survivor per cluster
+    return _kept(df, semdedup.semdedup(
+        df,
+        threshold=float(step.get("threshold", 0.4)),
+        n_centroids=int(step.get("n_centroids", 64)),
+        cluster_cap=int(step.get("cluster_cap", 4096)),
+        id_col="doc_id",
+        vec_col=step.get("vec_col", "embedding"),
+    ).where(~F.col("is_dup")))
+
+
+def _near_dup_labels(spark, df, step):
+    # attach (or replace) each doc's near-dup `component` WITHOUT
+    # dropping: the stage write persists the labels once, so a
+    # downstream cluster_survivors reads them instead of re-running the
+    # funnel.  One label row per id: the left join keeps every row once.
+    comp = dedup.connected_components(_near_dup_pairs(df, step))
+    lbl = comp.select(F.col("id").alias("doc_id"), F.col("component"))
+    return df.drop("component").join(lbl, "doc_id", "left").withColumn(
+        "component", F.coalesce(F.col("component"), F.col("doc_id")))
+
+
+def _cluster_survivors(spark, df, step):
+    # keep the best doc of each materialized near_dup_labels cluster
+    if "component" not in df.columns:
+        raise ValueError(
+            "cluster_survivors needs a `component` column — run a "
+            "near_dup_labels step (the materialized labels stage) "
+            "before it"
         )
-        return df.drop(text_col).join(deduped, "doc_id")
-    if op == "paragraph_dedup":
-        # corpus-level paragraph dedup; mode=keep_first (line_dedup
-        # rule lifted to blank-line blocks) or drop_all (CCNet rule:
-        # no copy of a repeated paragraph survives)
-        from .operators.dedup import paragraph_dedup
-
-        text_col = step.get("text_col", "text")
-        deduped = paragraph_dedup(
-            df, text_col=text_col,
-            min_chars=int(step.get("min_chars", 30)),
-            mode=step.get("mode", "keep_first"),
+    policy = step.get("policy", "longest")
+    text = F.col(step.get("text_col", "text"))
+    if policy == "longest":
+        score = textstats.token_count(text).cast("bigint")
+    elif policy == "longest_chars":
+        score = F.length(F.coalesce(text, F.lit(""))).cast("bigint")
+    elif policy == "min_id":
+        score = F.lit(0).cast("bigint")  # ties -> lowest id wins
+    else:
+        raise ValueError(
+            f"cluster_survivors policy must be "
+            f"longest|longest_chars|min_id, got {policy}"
         )
-        return df.drop(text_col).join(deduped, "doc_id")
-    if op == "c4_filter":
-        # C4 line-level cleaning (Raffel et al. 2020 sec 2.2): drops
-        # poison pages, keeps punctuation-terminated >=min_words lines,
-        # drops pages left with < min_lines lines; runs BEFORE dedup
-        from .operators.textstats import c4_line_filter
+    docs = _documents(df)
+    labels = docs.select(F.col("doc_id").alias("id"), F.col("component"))
+    out = dedup.cluster_survivors(labels, docs.drop("component"), score=score)
+    return _kept(df, out.where(F.col(step.get("keep_col", "is_kept"))))
 
-        text_col = step.get("text_col", "text")
-        cleaned = c4_line_filter(
-            df, text_col=text_col,
-            min_words=int(step.get("min_words", 5)),
-            min_lines=int(step.get("min_lines", 3)),
-        ).drop("n_kept")
-        return df.drop(text_col).join(cleaned, "doc_id")
-    if op == "quality_filter":
-        # token gate in the JVM; the repetition gates read one Python
-        # pass (see repetition_ratios)
-        from .operators.textstats import repetition_ratios, token_count
 
-        out, n_tok = df, token_count(F.col("text"))
-        if "min_tokens" in step:
-            out = out.where(n_tok >= int(step["min_tokens"]))
-        if "max_tokens" in step:
-            out = out.where(n_tok <= int(step["max_tokens"]))
-        rep = repetition_ratios(F.col("text"))
-        for k in ("max_dup_line_frac", "max_dup_line_char_frac",
-                  "max_top_bigram_frac"):
-            if k in step:
-                out = out.where(rep[k[len("max_"):]] <= float(step[k]))
-        return out
-    if op == "quality_classifier":
-        # model-based quality filtering (operators/quality.py): the
-        # linear head of a trained classifier — integer weights from
-        # the config (a production run pastes its trained, quantized
-        # head here), threshold decision, stateless projection
-        from .operators.quality import DEFAULT_THRESHOLD_Q, quality_score
+def _decontaminate(spark, df, step):
+    flagged = dedup.decontaminate(
+        df, spark.read.parquet(step["benchmark"]),
+        n=int(step.get("ngram", 4)))
+    return df.join(flagged.select("doc_id"), "doc_id", "left_anti")
 
-        scored = quality_score(
-            df,
-            text_col=step.get("text_col", "text"),
-            weights={k: int(v)
-                     for k, v in (step.get("weights") or {}).items()},
-            threshold_q=int(step.get("threshold_q", DEFAULT_THRESHOLD_Q)),
-        )
-        if step.get("keep_score"):
-            return scored.where(F.col("quality_kept")).drop("quality_kept")
-        return scored.where(F.col("quality_kept")).drop(
-            "quality_q", "quality_kept")
-    if op == "near_dedup":
-        from .operators.dedup import connected_components
 
-        comp = connected_components(_near_dup_pairs(df, step))
-        # keeper = the doc whose id IS the component label; docs never
-        # paired keep themselves by absence from the drop list
-        drops = comp.where(F.col("id") != F.col("component")).select(
-            F.col("id").alias("doc_id")
-        )
-        return df.join(drops, "doc_id", "left_anti")
-    if op == "url_filter":
-        # C4-style URL blocklist filtering: keep rows whose host (or
-        # any parent domain) is NOT in blocked_hosts and whose URL
-        # contains none of blocked_fragments.  Requires a url column.
-        from .operators.urltools import url_blocklist_filter
+def _contamination_filter(spark, df, step):
+    # GPT-3-style soft decontamination: drop docs whose distinct
+    # word-n-gram overlap with the benchmark exceeds the ppm threshold
+    text_col = step.get("text_col", "text")
+    scored = contamination.contamination(
+        df.select("doc_id", text_col), spark.read.parquet(step["benchmark"]),
+        n=int(step.get("ngram", 13)), text_col=text_col,
+        threshold_ppm=int(step.get("threshold_ppm",
+                                   contamination.DEFAULT_CONTAM_PPM)),
+    )
+    return _kept(df, scored.where(~F.col("contaminated")))
 
-        bl = spark.createDataFrame(
-            [(h,) for h in step["blocked_hosts"]], "blocked string"
-        )
-        keep = (
-            url_blocklist_filter(
-                df, bl,
-                blocked_fragments=step.get("blocked_fragments"),
-                url_col=step.get("url_col", "url"),
-            )
-            .where(F.col("reason").isNull())
-            .select("doc_id")
-        )
-        return df.join(keep, "doc_id", "left_semi")
-    if op == "semantic_dedup":
-        # SemDeDup (operators/semdedup.py): prune docs whose EMBEDDING
-        # duplicates a kept same-cluster member — requires the frame to
-        # carry an embedding column (joined upstream, like the
-        # near_dedup embedding method).  min-id survivor rule.
-        from .operators.semdedup import semdedup
 
-        keep = (
-            semdedup(
-                df,
-                threshold=float(step.get("threshold", 0.4)),
-                n_centroids=int(step.get("n_centroids", 64)),
-                cluster_cap=int(step.get("cluster_cap", 4096)),
-                id_col="doc_id",
-                vec_col=step.get("vec_col", "embedding"),
-            )
-            .where(~F.col("is_dup"))
-            .select("doc_id")
-        )
-        return df.join(keep, "doc_id", "left_semi")
-    if op == "near_dup_labels":
-        # the MATERIALIZE-ONCE half of the cluster pipeline (round-5
-        # verdict #8): attach each doc's near-dup cluster label as a
-        # `component` column WITHOUT dropping anything.  The stage
-        # write that follows persists the labels table exactly once;
-        # a downstream cluster_survivors (or any analysis) step then
-        # reads labels from parquet instead of re-running the
-        # signature+label-propagation funnel per consumer.
-        from .operators.dedup import connected_components
-
-        comp = connected_components(_near_dup_pairs(df, step))
-        lbl = comp.select(
-            F.col("id").alias("doc_id"), F.col("component")
-        )
-        return df.join(lbl, "doc_id", "left").withColumn(
-            "component", F.coalesce(F.col("component"), F.col("doc_id"))
-        )
-    if op == "cluster_survivors":
-        # survivor-policy dedup over a PRE-MATERIALIZED `component`
-        # column (from a near_dup_labels stage): keep the best doc of
-        # each cluster by the configured policy.  groupBy-max-struct
-        # argmax — no window over cluster members.
-        from .operators.dedup import cluster_survivors
-        from .operators.textstats import token_count
-
-        if "component" not in df.columns:
-            raise ValueError(
-                "cluster_survivors needs a `component` column — run a "
-                "near_dup_labels step (the materialized labels stage) "
-                "before it"
-            )
-        policy = step.get("policy", "longest")
-        text_col = step.get("text_col", "text")
-        if policy == "longest":
-            score = token_count(F.col(text_col)).cast("bigint")
-        elif policy == "longest_chars":
-            score = F.length(F.coalesce(F.col(text_col), F.lit(""))).cast(
-                "bigint"
-            )
-        elif policy == "min_id":
-            score = F.lit(0).cast("bigint")  # ties -> lowest id wins
-        else:
-            raise ValueError(
-                f"cluster_survivors policy must be "
-                f"longest|longest_chars|min_id, got {policy}"
-            )
-        labels = df.select(
-            F.col("doc_id").alias("id"), F.col("component")
-        )
-        out = cluster_survivors(labels, df.drop("component"), score=score)
-        return out.where(F.col(step.get("keep_col", "is_kept"))).drop(
-            "is_kept", "score"
-        )
-    if op == "decontaminate":
-        from .operators.dedup import decontaminate
-
-        bench = spark.read.parquet(step["benchmark"])
-        flagged = decontaminate(
-            df, bench, n=int(step.get("ngram", 4))
-        ).select("doc_id")
-        return df.join(flagged, "doc_id", "left_anti")
-    if op == "contamination_filter":
-        # GPT-3-style soft decontamination: drop docs whose distinct
-        # word-n-gram overlap with the benchmark exceeds the ppm
-        # threshold (operators/contamination.py)
-        from .operators.contamination import DEFAULT_CONTAM_PPM, contamination
-
-        bench = spark.read.parquet(step["benchmark"])
-        scored = contamination(
-            df.select("doc_id", step.get("text_col", "text")), bench,
-            n=int(step.get("ngram", 13)),
-            text_col=step.get("text_col", "text"),
-            threshold_ppm=int(step.get("threshold_ppm",
-                                       DEFAULT_CONTAM_PPM)),
-        )
-        clean = scored.where(~F.col("contaminated")).select("doc_id")
-        return df.join(clean, "doc_id", "left_semi")
-    if op == "lm_filter":
-        # CCNet-style perplexity filter: self-trained unless the
-        # config points at a reference corpus (operators/lmscore.py);
-        # order: 2 selects the bigram model
-        from .operators.lmscore import (
-            DEFAULT_LM2_THRESHOLD, DEFAULT_LM_THRESHOLD,
-            lm2_score, lm2_train, lm_score, lm_train)
-
-        text_col = step.get("text_col", "text")
-        ref = (spark.read.parquet(step["reference"])
-               if step.get("reference") else df)
-        if int(step.get("order", 1)) == 2:
-            scored = lm2_score(
-                df, lm_train(ref, text_col=text_col),
-                lm2_train(ref, text_col=text_col), text_col=text_col,
-                threshold_mbits=int(step.get("threshold_mbits",
-                                             DEFAULT_LM2_THRESHOLD)),
-            )
-            kept = scored.where(F.col("lm2_kept"))
-            if step.get("keep_score"):
-                return kept.drop("lm2_kept")
-            return kept.drop("lm2_bits", "lm2_mbits_big", "lm2_kept")
-        scored = lm_score(
-            df, lm_train(ref, text_col=text_col), text_col=text_col,
+def _lm_filter(spark, df, step):
+    # CCNet-style perplexity filter: self-trained unless the config
+    # points at a reference corpus; order: 2 selects the bigram model
+    text_col = step.get("text_col", "text")
+    ref = (spark.read.parquet(step["reference"])
+           if step.get("reference") else df)
+    unigram = lmscore.lm_train(ref, text_col=text_col)
+    if int(step.get("order", 1)) == 2:
+        scored = lmscore.lm2_score(
+            df, unigram, lmscore.lm2_train(ref, text_col=text_col),
+            text_col=text_col,
             threshold_mbits=int(step.get("threshold_mbits",
-                                         DEFAULT_LM_THRESHOLD)),
+                                         lmscore.DEFAULT_LM2_THRESHOLD)),
         )
-        kept = scored.where(F.col("lm_kept"))
-        if step.get("keep_score"):
-            return kept.drop("lm_kept")
-        return kept.drop("lm_bits", "lm_mbits_tok", "lm_kept")
-    if op == "hash_sample":
-        from .operators.sampling import hash_sample
-
-        return hash_sample(
-            df, float(step["fraction"]),
-            key_col=step.get("key_col", "doc_id"),
-            seed=str(step.get("seed", "")),
+        flag, score = "lm2_kept", ("lm2_bits", "lm2_mbits_big")
+    else:
+        scored = lmscore.lm_score(
+            df, unigram, text_col=text_col,
+            threshold_mbits=int(step.get("threshold_mbits",
+                                         lmscore.DEFAULT_LM_THRESHOLD)),
         )
-    if op == "hash_split":
-        # deterministic train/val/test labelling; optional keep: filter
-        # the pipeline down to one split (e.g. keep: train)
-        from .operators.sampling import hash_split
-
-        splits = step.get("splits")
-        out = hash_split(
-            df,
-            splits=[(str(n), float(w)) for n, w in splits] if splits else None,
-            key_col=step.get("key_col", "doc_id"),
-            seed=str(step.get("seed", "")),
-            split_col=step.get("split_col", "split"),
-        )
-        if "keep" in step:
-            out = out.where(
-                F.col(step.get("split_col", "split")) == str(step["keep"])
-            )
-        return out
-    if op == "stratified_sample":
-        from .operators.sampling import stratified_sample
-
-        return stratified_sample(
-            df, {str(k): float(v) for k, v in step["fractions"].items()},
-            strata_col=step.get("strata_col", "lang"),
-            key_col=step.get("key_col", "doc_id"),
-            seed=str(step.get("seed", "")),
-            default_fraction=float(step.get("default_fraction", 0.0)),
-        )
-    if op == "mixture":
-        from .operators.sampling import weighted_mixture
-
-        return weighted_mixture(
-            df, {str(k): float(v) for k, v in step["weights"].items()},
-            strata_col=step.get("strata_col", "lang"),
-            key_col=step.get("key_col", "doc_id"),
-            seed=str(step.get("seed", "")),
-            default_weight=float(step.get("default_weight", 1.0)),
-        )
-    if op == "textstats":
-        from .operators.textstats import add_textstats
-
-        return add_textstats(df)
-    if op == "domain_cap":
-        from .operators.sampling import cap_per_key
-
-        return cap_per_key(
-            df, cap=int(step["cap"]),
-            key_col=step.get("key_col", "source"),
-            row_key_col=step.get("row_key_col", "doc_id"),
-            seed=str(step.get("seed", "")),
-        )
-    if op == "url_dedup":
-        from .operators.urltools import url_dedup
-
-        return url_dedup(
-            df, url_col=step.get("url_col", "url"),
-            id_col=step.get("id_col", "doc_id"),
-        )
-    if op == "pack_sequences":
-        from .operators.packing import pack_sequences
-
-        packed = pack_sequences(
-            df, n_ctx=int(step["n_ctx"]),
-            n_shards=int(step.get("n_shards", 64)),
-            text_col=step.get("text_col", "text"),
-            id_col=step.get("id_col", "doc_id"),
-        )
-        return df.join(packed, step.get("id_col", "doc_id"))
-    if op == "strip_dup_spans":
-        from .operators.spans import strip_duplicate_spans
-
-        return strip_duplicate_spans(
-            df, n=int(step.get("n", 8)),
-            min_docs=int(step.get("min_docs", 2)),
-            text_col=step.get("text_col", "text"),
-            id_col=step.get("id_col", "doc_id"),
-        )
-    raise ValueError(f"unknown textpipe op: {op}")
+        flag, score = "lm_kept", ("lm_bits", "lm_mbits_tok")
+    kept = scored.where(F.col(flag)).drop(flag)
+    return kept if step.get("keep_score") else kept.drop(*score)
 
 
-def _check_row_identity(steps: list[dict]) -> None:
-    """Raise if a join-back step follows a mixture step that can repeat
-    a row: its doc_id join would multiply every repeated row."""
-    repeats = None
-    for k, step in enumerate(steps):
-        if step["op"] == "mixture" and max(
-                [float(step.get("default_weight", 1.0)),
-                 *map(float, step["weights"].values())]) > 1.0:
-            repeats = k
-        elif step["op"] in _JOIN_BACK_OPS and repeats is not None:
-            raise ValueError(
-                f"step {k} ({step['op']}) joins its output back on doc_id, "
-                f"but mixture step {repeats} repeats rows (a weight above "
-                f"1.0): run {step['op']} before the mixture")
+def _hash_sample(spark, df, step):
+    return sampling.hash_sample(
+        df, float(step["fraction"]),
+        key_col=step.get("key_col", "doc_id"),
+        seed=str(step.get("seed", "")),
+    )
+
+
+def _hash_split(spark, df, step):
+    # deterministic train/val/test labels; keep: filters to one split
+    splits, split_col = step.get("splits"), step.get("split_col", "split")
+    out = sampling.hash_split(
+        df,
+        splits=[(str(n), float(w)) for n, w in splits] if splits else None,
+        key_col=step.get("key_col", "doc_id"),
+        seed=str(step.get("seed", "")),
+        split_col=split_col,
+    )
+    if "keep" in step:
+        out = out.where(F.col(split_col) == str(step["keep"]))
+    return out
+
+
+def _stratified_sample(spark, df, step):
+    return sampling.stratified_sample(
+        df, {str(k): float(v) for k, v in step["fractions"].items()},
+        strata_col=step.get("strata_col", "lang"),
+        key_col=step.get("key_col", "doc_id"),
+        seed=str(step.get("seed", "")),
+        default_fraction=float(step.get("default_fraction", 0.0)),
+    )
+
+
+def _mixture(spark, df, step):
+    return sampling.weighted_mixture(
+        df, {str(k): float(v) for k, v in step["weights"].items()},
+        strata_col=step.get("strata_col", "lang"),
+        key_col=step.get("key_col", "doc_id"),
+        seed=str(step.get("seed", "")),
+        default_weight=float(step.get("default_weight", 1.0)),
+    )
+
+
+def _textstats(spark, df, step):
+    return textstats.add_textstats(df)
+
+
+def _domain_cap(spark, df, step):
+    return sampling.cap_per_key(
+        df, cap=int(step["cap"]),
+        key_col=step.get("key_col", "source"),
+        row_key_col=step.get("row_key_col", "doc_id"),
+        seed=str(step.get("seed", "")),
+    )
+
+
+def _url_dedup(spark, df, step):
+    return urltools.url_dedup(df, url_col=step.get("url_col", "url"),
+                              id_col=step.get("id_col", "doc_id"))
+
+
+def _pack_sequences(spark, df, step):
+    # a windowed projection: every row, each copy of a doc included,
+    # takes its own span
+    return packing.pack_sequences(
+        df, n_ctx=int(step["n_ctx"]),
+        n_shards=int(step.get("n_shards", 64)),
+        text_col=step.get("text_col", "text"),
+        id_col=step.get("id_col", "doc_id"),
+    )
+
+
+def _strip_dup_spans(spark, docs, step):
+    text_col = step.get("text_col", "text")
+    return spans.strip_duplicate_spans(
+        docs.select("doc_id", text_col), n=int(step.get("n", 8)),
+        min_docs=int(step.get("min_docs", 2)), text_col=text_col,
+    )
+
+
+# op -> (row kind, builder): every op a config may name, declared once
+STEPS = {
+    "exact_dedup": (KEEP, _exact_dedup),
+    "scrub_pii": (MAP, _scrub_pii),
+    "line_dedup": (REWRITE, _line_dedup),
+    "paragraph_dedup": (REWRITE, _paragraph_dedup),
+    "c4_filter": (KEEP, _c4_filter),
+    "quality_filter": (KEEP, _quality_filter),
+    "quality_classifier": (KEEP, _quality_classifier),
+    "near_dedup": (KEEP, _near_dedup),
+    "url_filter": (KEEP, _url_filter),
+    "semantic_dedup": (KEEP, _semantic_dedup),
+    "near_dup_labels": (MAP, _near_dup_labels),
+    "cluster_survivors": (KEEP, _cluster_survivors),
+    "decontaminate": (KEEP, _decontaminate),
+    "contamination_filter": (KEEP, _contamination_filter),
+    "lm_filter": (KEEP, _lm_filter),
+    "hash_sample": (KEEP, _hash_sample),
+    "hash_split": (KEEP, _hash_split),
+    "stratified_sample": (KEEP, _stratified_sample),
+    "mixture": (RESAMPLE, _mixture),
+    "textstats": (MAP, _textstats),
+    "domain_cap": (KEEP, _domain_cap),
+    "url_dedup": (KEEP, _url_dedup),
+    "pack_sequences": (MAP, _pack_sequences),
+    "strip_dup_spans": (REWRITE, _strip_dup_spans),
+}
+
+
+def _apply_step(spark: SparkSession, df: DataFrame, step: dict) -> DataFrame:
+    if step["op"] not in STEPS:
+        raise ValueError(f"unknown textpipe op: {step['op']}")
+    kind, build = STEPS[step["op"]]
+    if kind != REWRITE:
+        return build(spark, df, step)
+    # built from one row per doc_id, so the join back is many-to-one:
+    # every input row, each copy included, comes out exactly once
+    new = build(spark, _documents(df), step)
+    return df.drop(*(c for c in new.columns if c != "doc_id")).join(
+        new, "doc_id")
 
 
 def _footer_rows(files) -> int:
@@ -596,7 +561,6 @@ def run_textpipe(spark: SparkSession, cfg: dict) -> dict:
     true; on failure they are kept for the resume."""
     in_path = cfg["input"]["documents"]
     steps = cfg.get("steps", [])
-    _check_row_identity(steps)
     out = cfg["output"]["path"]
     stages = _stages_root(out)
     man_path = os.path.join(stages, "_manifest.json")

@@ -24,6 +24,34 @@ from batch3dfier_spark.operators.tiler import TileIndex
 _SPLIT_X = 120937.5
 _SPLIT_Y = 486328.125
 
+# The large clip polygon, vertex-for-vertex from the reference's
+# example_data (extent_large.geojson).
+EXTENT_LARGE = np.array([
+    [120749.61260330578, 486674.3607954546],
+    [120697.31404958678, 486593.0074896695],
+    [120691.50309917355, 486404.15160123975],
+    [120665.35382231405, 486014.81792355375],
+    [120712.80991735538, 485952.8344524794],
+    [121081.80526859504, 485954.7714359505],
+    [121148.63119834711, 486132.00542355375],
+    [121207.70919421488, 486420.61596074386],
+    [121208.67768595042, 486672.42381198355],
+    [120995.60950413223, 486698.573088843],
+    [120749.61260330578, 486674.3607954546],
+])
+
+# FIXTURES.md section 5 — hand-placed border-case points with expected
+# buffer-0 tile under the half-open rule.
+BORDER_CORPUS = [
+    # (case, x, y, expected_unit_or_None)
+    ("interior", 120700.0, 486000.0, "25gn1_c1"),
+    ("shared_vertical_edge", 120937.5, 486000.0, "25gn1_c2"),
+    ("shared_horizontal_edge", 120700.0, 486328.125, "25gn1_c4"),
+    ("four_corner_point", 120937.5, 486328.125, "25gn1_c3"),
+    ("territory_sw_corner", 120625.0, 485937.5, "25gn1_c1"),
+    ("territory_right_edge", 121250.0, 486000.0, None),
+]
+
 
 def ref_tile_index() -> pd.DataFrame:
     """The reference's 4 footprint tiles verbatim (bag_index.geojson)."""

@@ -15,6 +15,8 @@ from batch3dfier_spark.geo import (
     rect_intersects_polygon,
 )
 from oracle_kernels import (
+    BORDER_CORPUS,
+    EXTENT_LARGE,
     points_in_rects_buffered,
     rects_overlap_pairs,
     ref_asset_index,
@@ -34,7 +36,7 @@ class TestBorderCorpus:
     """FIXTURES.md §5 golden table — the reference's exactly-one-tile
     membership rule (footprints.py:256-265) as half-open intervals."""
 
-    @pytest.mark.parametrize("case,x,y,expected", datagen.BORDER_CORPUS)
+    @pytest.mark.parametrize("case,x,y,expected", BORDER_CORPUS)
     def test_buffer0_exactly_one(self, case, x, y, expected):
         units = assigned_units(x, y)
         if expected is None:
@@ -72,7 +74,7 @@ class TestPolygon:
 
     def test_extent_large_area_greater_than_tile(self):
         tile_area = Rect(*RECTS[0]).area
-        assert polygon_area(datagen.EXTENT_LARGE) > tile_area
+        assert polygon_area(EXTENT_LARGE) > tile_area
 
     def test_point_in_polygon_basic(self):
         poly = np.array([[0, 0], [4, 0], [4, 4], [0, 4]])
@@ -102,7 +104,7 @@ class TestTileSelection:
         ]
 
     def test_large_extent_selects_all_4_tiles(self):
-        hit = rect_intersects_polygon(RECTS, datagen.EXTENT_LARGE)
+        hit = rect_intersects_polygon(RECTS, EXTENT_LARGE)
         assert hit.all()
 
     def test_extent_selects_both_asset_tiles(self):

@@ -17,6 +17,7 @@ from batch3dfier_spark.operators.raster import (
     rasterize_extent,
 )
 from batch3dfier_spark.operators.tiler import TileIndex
+from oracle_kernels import EXTENT_LARGE
 
 RES = 8
 T = datagen.REF_TERRITORY
@@ -29,7 +30,7 @@ def idx():
 
 @pytest.fixture(scope="module")
 def poly():
-    return np.asarray(datagen.EXTENT_LARGE, dtype=np.float64)
+    return np.asarray(EXTENT_LARGE, dtype=np.float64)
 
 
 def brute_force_mask(idx, poly, res):

@@ -4,6 +4,7 @@ tests reach."""
 
 import ast
 import os
+import re
 
 import pandas as pd
 import pytest
@@ -67,9 +68,10 @@ def test_grouped_agg_pandas_udaf_matches_builtin(spark):
 
 
 # ---------------------------------------------------------------------------
-# One caller or none.  A module-level function or class in
-# `batch3dfier_spark/` is dead when every reference to its name outside
-# its own body comes from `tests/` or from another dead definition.
+# One caller or none.  A module-level function, class or UPPER_CASE
+# constant in `batch3dfier_spark/` is dead when every reference to its
+# name outside its own body comes from `tests/` or from another dead
+# definition.
 # Callers are the library itself, `perfbench/` (minus its tests),
 # `tools/`, `bench.py`, `bench_extra.py` and `__spark_entry__.py`.  A
 # reference is an identifier use (a name or an attribute) or a string
@@ -130,6 +132,19 @@ def _is_all(stmt):
     )
 
 
+def _constant_name(stmt):
+    """The name a module-level `NAME = ...` binds, if it is UPPER_CASE."""
+    if isinstance(stmt, ast.Assign) and len(stmt.targets) == 1:
+        target = stmt.targets[0]
+    elif isinstance(stmt, ast.AnnAssign) and stmt.value is not None:
+        target = stmt.target
+    else:
+        return None
+    if isinstance(target, ast.Name) and re.fullmatch(r"[A-Z][A-Z0-9_]*", target.id):
+        return target.id
+    return None
+
+
 def dead_definitions():
     """Sorted `(path, line, name)` of library definitions no caller reaches."""
     defs = {}  # (path, name) -> (line, referenced names in its body)
@@ -148,6 +163,11 @@ def dead_definitions():
                 owned.add(stmt)
                 defs[(path, stmt.name)] = (
                     stmt.lineno, set(_references(stmt, set())),
+                )
+            elif in_library and _constant_name(stmt):
+                owned.add(stmt)
+                defs[(path, _constant_name(stmt))] = (
+                    stmt.lineno, set(_references(stmt.value, set())),
                 )
         roots.update(_references(tree, owned))
 

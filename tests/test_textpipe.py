@@ -165,7 +165,7 @@ def test_textpipe_near_dedup_step(spark, tmp_path):
             assert r["id"] not in kept
 
 
-def test_textpipe_steps_execute_exactly_once(spark, tmp_path):
+def test_textpipe_steps_execute_exactly_once(spark, tmp_path, monkeypatch):
     """Round-3 VERDICT #2: per-step counts must not re-execute the
     prefix chain.  A marker step counts (via accumulator) how many rows
     flow through it; with stage materialization + footer-metadata
@@ -185,26 +185,23 @@ def test_textpipe_steps_execute_exactly_once(spark, tmp_path):
 
         return df.mapInPandas(f, schema=schema)
 
-    textpipe.CUSTOM_OPS["marker"] = marker
-    try:
-        cfg = {
-            "input": {"documents": f"{SF}/documents.parquet"},
-            "output": {"path": str(tmp_path / "once")},
-            "steps": [
-                {"op": "marker"},
-                {"op": "exact_dedup"},
-                {"op": "hash_sample", "fraction": 0.5, "seed": "s"},
-                {"op": "mixture", "weights": {"zh": 2.0}, "seed": "m"},
-            ],
-        }
-        report = textpipe.run_textpipe(spark, cfg)
-        assert report["rows_in"] == 500
-        assert acc.value == 500, (
-            f"marker step executed {acc.value / 500:.1f}x — prefix chain "
-            "re-execution is back"
-        )
-    finally:
-        del textpipe.CUSTOM_OPS["marker"]
+    monkeypatch.setitem(textpipe.STEPS, "marker", (textpipe.MAP, marker))
+    cfg = {
+        "input": {"documents": f"{SF}/documents.parquet"},
+        "output": {"path": str(tmp_path / "once")},
+        "steps": [
+            {"op": "marker"},
+            {"op": "exact_dedup"},
+            {"op": "hash_sample", "fraction": 0.5, "seed": "s"},
+            {"op": "mixture", "weights": {"zh": 2.0}, "seed": "m"},
+        ],
+    }
+    report = textpipe.run_textpipe(spark, cfg)
+    assert report["rows_in"] == 500
+    assert acc.value == 500, (
+        f"marker step executed {acc.value / 500:.1f}x — prefix chain "
+        "re-execution is back"
+    )
 
 
 def test_textpipe_near_dedup_embedding_method(spark, tmp_path):
@@ -325,7 +322,7 @@ def test_textpipe_scrub_pii_step(spark, tmp_path):
     assert list(out["lang"]) == ["en", "en"]
 
 
-def test_textpipe_resumes_after_crash(spark, tmp_path):
+def test_textpipe_resumes_after_crash(spark, tmp_path, monkeypatch):
     """Round-4 VERDICT #6: a pipeline that dies at step k+1 must NOT
     restart from zero — stages persist under <out>_stages with a step
     manifest, and a re-run executes only the remaining steps, yielding
@@ -347,69 +344,65 @@ def test_textpipe_resumes_after_crash(spark, tmp_path):
         calls["b"] += 1
         return df.where("doc_id < 300")
 
-    textpipe.CUSTOM_OPS["op_a"] = op_a
-    textpipe.CUSTOM_OPS["op_b"] = op_b
-    try:
-        out = str(tmp_path / "out")
-        cfg = {
-            "input": {"documents": f"{SF}/documents.parquet"},
-            "output": {"path": out},
-            "steps": [
-                {"op": "op_a"},
-                {"op": "op_b"},
-                {"op": "hash_sample", "fraction": 0.5, "seed": "s"},
-            ],
-        }
-        with pytest.raises(RuntimeError, match="injected crash"):
-            textpipe.run_textpipe(spark, cfg)
-        # step 0's stage + manifest survived the crash
-        stages = out + "_stages"
-        with open(os.path.join(stages, "_manifest.json")) as f:
-            man = json.load(f)
-        assert [e["op"] for e in man["steps"]] == ["op_a"]
-
-        # resume: only steps 1.. execute
-        fail["b"] = False
-        report = textpipe.run_textpipe(spark, cfg)
-        assert calls["a"] == 1, "completed step 0 was re-executed"
-        assert calls["b"] == 1
-        assert [s["op"] for s in report["steps"]] == [
-            "op_a", "op_b", "hash_sample"]
-        assert not os.path.exists(stages)  # cleaned on success
-
-        # identical to an uninterrupted run on a fresh output
-        out2 = str(tmp_path / "out2")
-        cfg2 = dict(cfg, output={"path": out2, "keep_stages": True})
-        report2 = textpipe.run_textpipe(spark, cfg2)
-        assert report["steps"] == report2["steps"]
-        assert report["rows_in"] == report2["rows_in"]
-        assert report["rows_out"] == report2["rows_out"]
-        a = (spark.read.parquet(out).toPandas()
-             .sort_values("doc_id").reset_index(drop=True))
-        b = (spark.read.parquet(out2).toPandas()
-             .sort_values("doc_id").reset_index(drop=True))
-        pd.testing.assert_frame_equal(a[sorted(a.columns)],
-                                      b[sorted(b.columns)])
-        # keep_stages=True retains the stage dirs + manifest
-        assert os.path.exists(os.path.join(out2 + "_stages",
-                                           "_manifest.json"))
-
-        # a config change invalidates from the first differing step:
-        # re-running out2's pipeline with a changed step-1 config
-        # re-executes op_b but still reuses step 0's stage
-        calls_before = dict(calls)
-        cfg3 = dict(cfg2, steps=[
+    monkeypatch.setitem(textpipe.STEPS, "op_a", (textpipe.KEEP, op_a))
+    monkeypatch.setitem(textpipe.STEPS, "op_b", (textpipe.KEEP, op_b))
+    out = str(tmp_path / "out")
+    cfg = {
+        "input": {"documents": f"{SF}/documents.parquet"},
+        "output": {"path": out},
+        "steps": [
             {"op": "op_a"},
-            {"op": "op_b", "tag": "changed"},
+            {"op": "op_b"},
             {"op": "hash_sample", "fraction": 0.5, "seed": "s"},
-        ])
-        textpipe.run_textpipe(spark, cfg3)
-        assert calls["a"] == calls_before["a"], (
-            "unchanged step 0 was re-executed on config change")
-        assert calls["b"] == calls_before["b"] + 1
-    finally:
-        del textpipe.CUSTOM_OPS["op_a"]
-        del textpipe.CUSTOM_OPS["op_b"]
+        ],
+    }
+    with pytest.raises(RuntimeError, match="injected crash"):
+        textpipe.run_textpipe(spark, cfg)
+    # step 0's stage + manifest survived the crash
+    stages = out + "_stages"
+    with open(os.path.join(stages, "_manifest.json")) as f:
+        man = json.load(f)
+    assert [e["op"] for e in man["steps"]] == ["op_a"]
+
+    # resume: only steps 1.. execute
+    fail["b"] = False
+    report = textpipe.run_textpipe(spark, cfg)
+    assert calls["a"] == 1, "completed step 0 was re-executed"
+    assert calls["b"] == 1
+    assert [s["op"] for s in report["steps"]] == [
+        "op_a", "op_b", "hash_sample"]
+    assert not os.path.exists(stages)  # cleaned on success
+
+    # identical to an uninterrupted run on a fresh output
+    out2 = str(tmp_path / "out2")
+    cfg2 = dict(cfg, output={"path": out2, "keep_stages": True})
+    report2 = textpipe.run_textpipe(spark, cfg2)
+    assert report["steps"] == report2["steps"]
+    assert report["rows_in"] == report2["rows_in"]
+    assert report["rows_out"] == report2["rows_out"]
+    a = (spark.read.parquet(out).toPandas()
+         .sort_values("doc_id").reset_index(drop=True))
+    b = (spark.read.parquet(out2).toPandas()
+         .sort_values("doc_id").reset_index(drop=True))
+    pd.testing.assert_frame_equal(a[sorted(a.columns)],
+                                  b[sorted(b.columns)])
+    # keep_stages=True retains the stage dirs + manifest
+    assert os.path.exists(os.path.join(out2 + "_stages",
+                                       "_manifest.json"))
+
+    # a config change invalidates from the first differing step:
+    # re-running out2's pipeline with a changed step-1 config
+    # re-executes op_b but still reuses step 0's stage
+    calls_before = dict(calls)
+    cfg3 = dict(cfg2, steps=[
+        {"op": "op_a"},
+        {"op": "op_b", "tag": "changed"},
+        {"op": "hash_sample", "fraction": 0.5, "seed": "s"},
+    ])
+    textpipe.run_textpipe(spark, cfg3)
+    assert calls["a"] == calls_before["a"], (
+        "unchanged step 0 was re-executed on config change")
+    assert calls["b"] == calls_before["b"] + 1
 
 
 def test_textpipe_materialized_labels_survivors(spark, tmp_path):
@@ -747,8 +740,9 @@ def test_textpipe_lm_filter_order2(spark, tmp_path):
 
 @pytest.fixture(scope="module")
 def mixed_src(spark, tmp_path_factory):
-    """The sf0.001 documents with their embeddings and a url column —
-    every column a keep-step below reads."""
+    """The sf0.001 documents with their embeddings, a url column, a
+    `component` label and a shared closing line — every column a step
+    below reads, and text that the line-level steps rewrite."""
     from pyspark.sql import functions as F
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -760,88 +754,104 @@ def mixed_src(spark, tmp_path_factory):
         docs.join(emb, docs["doc_id"] == emb["vec_id"]).drop("vec_id")
         .withColumn("url", F.format_string(
             "http://h%d.example/p%d", F.col("doc_id") % 5, F.col("doc_id")))
+        .withColumn("component", F.col("doc_id") - F.col("doc_id") % 3)
+        .withColumn("text", F.concat(
+            "text", F.lit(".\nAll rights reserved by the example publisher.")))
         .write.parquet(src)
     )
     return src
 
 
-_KEEP_STEPS = {
-    "exact_dedup": {"op": "exact_dedup"},
-    "quality_filter": {"op": "quality_filter", "min_tokens": 10,
-                       "max_dup_line_frac": 0.3, "max_top_bigram_frac": 0.2},
-    "url_filter": {"op": "url_filter", "blocked_hosts": ["h0.example"]},
-    "semantic_dedup": {"op": "semantic_dedup", "threshold": 0.4,
-                       "n_centroids": 16},
-    "contamination_filter": {"op": "contamination_filter", "ngram": 4,
-                             "threshold_ppm": 500_000},
-    "scrub_pii": {"op": "scrub_pii"},
+# one config per op of textpipe.STEPS but the mixture itself
+_MIXED_STEPS = {
+    "exact_dedup": {},
+    "scrub_pii": {},
+    "line_dedup": {"min_chars": 10},
+    "paragraph_dedup": {"min_chars": 10},
+    "c4_filter": {"min_words": 3, "min_lines": 1},
+    "quality_filter": {"min_tokens": 10, "max_dup_line_frac": 0.3,
+                       "max_top_bigram_frac": 0.2},
+    "quality_classifier": {"keep_score": True},
+    "near_dedup": {"method": "minhash", "threshold": 0.5},
+    "url_filter": {"blocked_hosts": ["h0.example"]},
+    "semantic_dedup": {"threshold": 0.4, "n_centroids": 16},
+    "near_dup_labels": {"method": "simhash", "max_hamming": 8},
+    "cluster_survivors": {"policy": "longest"},
+    "decontaminate": {"ngram": 4},
+    "contamination_filter": {"ngram": 4, "threshold_ppm": 500_000},
+    "lm_filter": {"threshold_mbits": 12_000, "keep_score": True},
+    "hash_sample": {"fraction": 0.5, "seed": "s"},
+    "hash_split": {"splits": [["train", 0.8], ["val", 0.2]],
+                   "keep": "train", "seed": "s"},
+    "stratified_sample": {"fractions": {"en": 0.5},
+                          "default_fraction": 1.0, "seed": "s"},
+    "textstats": {},
+    "domain_cap": {"cap": 20, "key_col": "source", "seed": "s"},
+    "url_dedup": {},
+    "pack_sequences": {"n_ctx": 64, "n_shards": 4},
+    "strip_dup_spans": {"n": 8},
 }
 
 
-@pytest.mark.parametrize("op", sorted(_KEEP_STEPS))
+def test_mixed_steps_cover_every_op():
+    from batch3dfier_spark import textpipe
+
+    assert set(_MIXED_STEPS) == {
+        op for op, (kind, _) in textpipe.STEPS.items()
+        if kind != textpipe.RESAMPLE
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_MIXED_STEPS))
 def test_keep_step_after_mixture_keeps_each_row_once(spark, tmp_path,
                                                       mixed_src, op):
-    """A mixture step repeats a doc_id once per copy.  A step that only
-    keeps or drops rows, or rewrites each row on its own (scrub_pii),
-    must not multiply them: no (doc_id, copy_id) twice, and never more
-    rows out than in."""
+    """A mixture step repeats a doc_id once per copy.  No step after it
+    multiplies rows: no (doc_id, copy_id) twice, never more rows out
+    than in for a keep step, and exactly as many for a map or rewrite
+    step.  A rewrite gives every copy of a document the text the same
+    step gives the document without the mixture; pack_sequences gives
+    every copy its own span."""
     from pyspark.sql import functions as F
 
-    from batch3dfier_spark.textpipe import run_textpipe
+    from batch3dfier_spark import textpipe
 
-    step = dict(_KEEP_STEPS[op])
-    if op == "contamination_filter":
+    step = {"op": op, **_MIXED_STEPS[op]}
+    if "ngram" in step:
         bench = str(tmp_path / "bench")
-        spark.read.parquet(mixed_src).where("doc_id < 50").select(
-            "text").write.parquet(bench)
+        spark.read.parquet(f"{SF}/documents.parquet").where(
+            "doc_id < 50").write.parquet(bench)
         step["benchmark"] = bench
-    cfg = {
-        "input": {"documents": mixed_src},
-        "output": {"path": str(tmp_path / "out")},
-        "steps": [{"op": "mixture", "weights": {"zh": 2.0}, "seed": "m1"},
-                  step],
-    }
-    report = run_textpipe(spark, cfg)
+    mix = {"op": "mixture", "weights": {"zh": 2.0}, "seed": "m1"}
+
+    def run(steps, name):
+        out = str(tmp_path / name)
+        report = textpipe.run_textpipe(spark, {
+            "input": {"documents": mixed_src},
+            "output": {"path": out}, "steps": steps})
+        return report, spark.read.parquet(out)
+
+    report, out = run([mix, step], "out")
     rows_in, rows_out = (s["rows"] for s in report["steps"])
     assert rows_in > report["rows_in"]  # the mixture repeated some ids
-    assert 0 < rows_out <= rows_in
-    if op == "scrub_pii":
+    kind = textpipe.STEPS[op][0]
+    if kind == textpipe.KEEP:
+        assert 0 < rows_out <= rows_in
+    else:
         assert rows_out == rows_in
     repeated = (
-        spark.read.parquet(cfg["output"]["path"])
-        .groupBy("doc_id", "copy_id").count().where(F.col("count") > 1)
+        out.groupBy("doc_id", "copy_id").count().where(F.col("count") > 1)
         .count()
     )
     assert repeated == 0
-
-
-def test_join_back_step_after_repeating_mixture_is_rejected(spark, tmp_path):
-    """line_dedup, paragraph_dedup, c4_filter and pack_sequences join
-    per-doc output back on doc_id, so after a mixture step that repeats
-    rows (a weight or default_weight above 1.0) they would multiply
-    them: run_textpipe refuses such a pipeline before it writes any
-    stage, and accepts the same step before the mixture or after one
-    that repeats nothing."""
-    from batch3dfier_spark import textpipe
-
-    out = str(tmp_path / "out")
-    mixtures = [{"op": "mixture", "weights": {"zh": 2.0}, "seed": "m1"},
-                {"op": "mixture", "weights": {"zh": 0.5},
-                 "default_weight": 1.5, "seed": "m1"}]
-    for mix in mixtures:
-        for op in ("line_dedup", "paragraph_dedup", "c4_filter",
-                   "pack_sequences"):
-            step = {"op": op, "n_ctx": 64}
-            cfg = {"input": {"documents": f"{SF}/documents.parquet"},
-                   "output": {"path": out},
-                   "steps": [{"op": "exact_dedup"}, mix, step]}
-            with pytest.raises(ValueError, match=op):
-                textpipe.run_textpipe(spark, cfg)
-            assert not os.path.exists(out)
-            assert not os.path.exists(textpipe._stages_root(out))
-            textpipe._check_row_identity([step, mix])
-    textpipe._check_row_identity([
-        {"op": "mixture", "weights": {"zh": 1.0, "en": 0.3}}, step])
+    if kind == textpipe.REWRITE:
+        _, alone = run([step], "alone")
+        got = out.select("doc_id", "text").distinct()
+        assert got.count() == out.select("doc_id").distinct().count()
+        assert got.exceptAll(alone.select("doc_id", "text")).count() == 0
+        assert got.count() < out.count()
+    if op == "pack_sequences":
+        spans = out.where("n_tokens > 0").select("shard", "seq_id", "seq_off")
+        assert spans.distinct().count() == spans.count()
 
 
 def _clear_job_group(sc):
@@ -919,3 +929,8 @@ def test_textpipe_jobs_per_step(spark, tmp_path, monkeypatch):
     assert jobs["input"] <= 1, jobs
     assert jobs["exact_dedup"] <= 3, jobs
     assert jobs["quality_filter"] <= 1, jobs
+    # the one-task CC labels are broadcast, so the drop join does not
+    # shuffle the step's input
+    assert jobs["near_dedup"] <= 12, jobs
+    assert jobs["hash_split"] <= 1, jobs
+    assert jobs["domain_cap"] <= 9, jobs

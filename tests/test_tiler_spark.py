@@ -13,7 +13,12 @@ from batch3dfier_spark.functions.text import extract_text_cols
 from batch3dfier_spark.geo import point_in_polygon
 from batch3dfier_spark.operators import tiler
 from batch3dfier_spark.operators.tiler import GridSpec, TileIndex
-from oracle_kernels import points_in_rects_buffered, ref_tile_index
+from oracle_kernels import (
+    BORDER_CORPUS,
+    EXTENT_LARGE,
+    points_in_rects_buffered,
+    ref_tile_index,
+)
 
 T = datagen.REF_TERRITORY
 
@@ -69,7 +74,7 @@ class TestAssignGrid:
     def test_border_corpus_grid(self, spark):
         # hand-placed border cases through the 2x2 grid fast path
         pdf = pd.DataFrame(
-            [(c, x, y) for c, x, y, _ in datagen.BORDER_CORPUS],
+            [(c, x, y) for c, x, y, _ in BORDER_CORPUS],
             columns=["case", "x", "y"],
         )
         out = (
@@ -171,9 +176,9 @@ class TestExtent:
         extent -> per-tile split."""
         ref = TileIndex(ref_tile_index())
         sel_small = tiler.select_tiles(ref, datagen.EXTENT_SMALL)
-        sel_large = tiler.select_tiles(ref, datagen.EXTENT_LARGE)
+        sel_large = tiler.select_tiles(ref, EXTENT_LARGE)
         assert tiler.union_or_split(sel_small, ref, datagen.EXTENT_SMALL) is True
-        assert tiler.union_or_split(sel_large, ref, datagen.EXTENT_LARGE) is False
+        assert tiler.union_or_split(sel_large, ref, EXTENT_LARGE) is False
 
     def test_extent_filter_matches_numpy(self, geocoded, pages_pdf, oracle_xy):
         got = set(

@@ -41,6 +41,7 @@ import time
 from typing import Callable
 
 import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -148,6 +149,7 @@ def run_tiles(
         import pyarrow.parquet as pq
 
         writer, path = None, ""
+        part = TaskContext.get().partitionId()
 
         def run(pieces):
             # one group: its pieces concatenated ONCE (a group can span
@@ -160,9 +162,8 @@ def run_tiles(
             out = process(pdf.drop(columns=["salt"], errors="ignore"))
             if len(out):
                 # every data file carries a row-level tile_gid column:
-                # pruned reads stay tile-EXACT although a file holds
-                # several tiles (tablefmt.read applies the range as a
-                # row filter; one row group per tile keeps the
+                # a file holds several tiles, and a read-back row still
+                # names its own (one row group per tile keeps the
                 # column's min/max statistics exact)
                 if "tile_gid" not in out.columns:
                     out = out.copy()
@@ -180,7 +181,7 @@ def run_tiles(
                 writer.write_table(tbl)
             return {
                 "tile_gid": tile,
-                "partition_id": os.getpid(),
+                "partition_id": part,
                 "rows_in": len(pdf),
                 "rows_out": len(out),
                 "wall_ms": (time.time() - t0) * 1000.0,
@@ -258,6 +259,10 @@ def run_tiles(
             )
         )
     else:
+        # no fold: one group is one tile.  Folding here too would add a
+        # job and 3 stages to every commit: resuming half of an 8x8 grid
+        # over 5 000 pages went from 2 to 3 jobs and from 0.42-0.54 s
+        # to 0.56-0.64 s warm (local[4])
         lin = raw.select(
             "tile_gid",
             F.col("partition_id").cast("int").alias("partition_id"),

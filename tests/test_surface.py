@@ -80,6 +80,9 @@ def test_grouped_agg_pandas_udaf_matches_builtin(spark):
 # re-export or an unused import keeps nothing alive.  Resolution is by
 # name, so a same-named local or method elsewhere keeps a definition
 # alive: the scan can miss dead code but never reports live code.
+# The methods of the classes in `_METHOD_CLASSES` are definitions of
+# their own (the class body's references exclude the method bodies);
+# dunder methods stay with their class, which calls them implicitly.
 # ---------------------------------------------------------------------------
 
 _ROOT = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
@@ -87,6 +90,11 @@ _LIBRARY = "batch3dfier_spark"
 _CALLER_DIRS = (_LIBRARY, "perfbench", "tools")
 _CALLER_FILES = ("bench.py", "bench_extra.py", "__spark_entry__.py")
 _EXCLUDED_DIRS = (os.path.join("perfbench", "tests"),)
+_METHOD_CLASSES = ("IcebergishTable",)
+# live with no caller: vacuum is crash recovery, the safety code that
+# the FileExistsError of a commit refused over an interrupted commit's
+# pointer tells the operator to run
+_EXEMPT = {"IcebergishTable.vacuum"}
 
 
 def _caller_files():
@@ -145,9 +153,23 @@ def _constant_name(stmt):
     return None
 
 
+def _methods(stmt):
+    """The non-dunder methods of a `_METHOD_CLASSES` class statement."""
+    if not (isinstance(stmt, ast.ClassDef) and stmt.name in _METHOD_CLASSES):
+        return []
+    return [
+        f for f in stmt.body
+        if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and not (f.name.startswith("__") and f.name.endswith("__"))
+    ]
+
+
 def dead_definitions():
-    """Sorted `(path, line, name)` of library definitions no caller reaches."""
-    defs = {}  # (path, name) -> (line, referenced names in its body)
+    """Sorted `(path, line, name)` of library definitions no caller
+    reaches; a method's name is `Class.method`."""
+    # (path, qualified name) -> (line, name callers use, referenced
+    # names in its body)
+    defs = {}
     roots = set()  # names referenced from outside any library definition
     for path in _caller_files():
         with open(os.path.join(_ROOT, path)) as f:
@@ -161,13 +183,20 @@ def dead_definitions():
                 stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
             ):
                 owned.add(stmt)
+                methods = _methods(stmt)
                 defs[(path, stmt.name)] = (
-                    stmt.lineno, set(_references(stmt, set())),
+                    stmt.lineno, stmt.name,
+                    set(_references(stmt, set(methods))),
                 )
+                for f in methods:
+                    defs[(path, f"{stmt.name}.{f.name}")] = (
+                        f.lineno, f.name, set(_references(f, set())),
+                    )
             elif in_library and _constant_name(stmt):
                 owned.add(stmt)
-                defs[(path, _constant_name(stmt))] = (
-                    stmt.lineno, set(_references(stmt.value, set())),
+                name = _constant_name(stmt)
+                defs[(path, name)] = (
+                    stmt.lineno, name, set(_references(stmt.value, set())),
                 )
         roots.update(_references(tree, owned))
 
@@ -176,15 +205,15 @@ def dead_definitions():
     changed = True
     while changed:
         changed = False
-        for key, (_, names) in defs.items():
-            if key not in live and key[1] in live_names:
+        for key, (_, name, names) in defs.items():
+            if key not in live and (name in live_names or key[1] in _EXEMPT):
                 live.add(key)
                 live_names |= names
                 changed = True
     return sorted(
-        (path, line, name)
-        for (path, name), (line, _) in defs.items()
-        if (path, name) not in live
+        (path, line, qualname)
+        for (path, qualname), (line, _, _) in defs.items()
+        if (path, qualname) not in live
     )
 
 

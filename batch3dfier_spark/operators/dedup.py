@@ -17,7 +17,11 @@ Scale design (100 TB):
   prefilter (identical docs would otherwise collide in EVERY band and
   make one hot bucket emit O(k^2) pairs x bands), deterministic
   bucket cap (lowest `bucket_cap` ids kept per bucket — mirrored by
-  the SQL oracle's ROW_NUMBER), then LSH + verify.
+  the SQL oracle's ROW_NUMBER), then LSH + verify.  Under
+  `session.SMALL_SCAN_BYTES` of input files the steps after the
+  prefilter run in ONE executor task over the same numpy kernels
+  (no shuffle, no job per step), as connected_components does for
+  small graphs.
 - SimHash: 64-bit signature from polynomial token hashes (same UDF
   pattern); `simhash_near_dups` bands it into 4x16-bit keys for
   Hamming-neighbor candidate generation and verifies candidates with
@@ -41,6 +45,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
+from .. import session
 from ..session import ensure_parallel
 
 __all__ = [
@@ -406,6 +411,44 @@ def _mersenne_affine(a: np.ndarray, b: np.ndarray, s: np.ndarray) -> np.ndarray:
     return np.where(total >= M, total - M, total)
 
 
+# unique shingle values per _mersenne_affine call of _signatures_np:
+# the map materializes ~10 temporaries of its shape, 512 KiB each here
+_AFFINE_CHUNK = 65_536
+
+
+def _signatures_np(
+    sh: np.ndarray, counts: np.ndarray, a: np.ndarray, b: np.ndarray
+) -> np.ndarray:
+    """(n_docs x num_perm) int64 MinHash signatures of per-doc shingle
+    runs (`_shingle_hashes_batch` output; duplicates inside a doc may
+    stay: min over duplicates == min over the distinct set).
+
+    The EXACT affine map mod the Mersenne prime is evaluated once per
+    DISTINCT shingle value of the batch (shared shingles are the common
+    case in a near-dup corpus), in cache-sized chunks: big flat chunks
+    measured 6-12x slower from cache/allocation pressure at 32
+    concurrent workers.  Permutation by permutation, the mapped values
+    are reduced into the per-doc minima (one gather + minimum.reduceat
+    over the contiguous doc runs), so peak memory is O(shingles): a
+    num_perm x n_unique table would take 101 MB for 1 260 textpipe
+    documents and GBs for a 10 000-page Arrow batch."""
+    n, num_perm = counts.size, a.size
+    sigs = np.empty((n, num_perm), dtype=np.int64)
+    if n == 0:
+        return sigs
+    u_vals, inv = np.unique(sh, return_inverse=True)
+    s_u = u_vals.astype(np.uint64) % np.uint64(MERSENNE)
+    seg = np.zeros(n, dtype=np.int64)
+    np.cumsum(counts[:-1], out=seg[1:])
+    row = np.empty(s_u.size, dtype=np.uint64)
+    for p in range(num_perm):
+        for lo in range(0, s_u.size, _AFFINE_CHUNK):
+            hi = lo + _AFFINE_CHUNK
+            row[lo:hi] = _mersenne_affine(a[p], b[p], s_u[lo:hi])
+        sigs[:, p] = np.minimum.reduceat(row[inv], seg)
+    return sigs
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -415,57 +458,20 @@ def minhash_signatures(
 ) -> DataFrame:
     """(id, signature: array<bigint>[num_perm]) via an Arrow-batched UDF.
 
-    minhash_i(doc) = min over shingles s of (a_i * s + b_i mod M);
-    the per-batch compute is one (num_perm x n_shingles) numpy matmul-
-    style broadcast per doc."""
+    minhash_i(doc) = min over shingles s of (a_i * s + b_i mod M); per
+    batch, one vectorized shingling pass (round-7 shape) and one
+    `_signatures_np` call."""
     a, b = perm_params(num_perm)
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast((a, b))
 
     def sig(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        aa, bb = bc.value
-        num_perm_ = len(aa)
-        M = np.uint64(MERSENNE)
         for pdf in batches:
-            out_ids = pdf[id_col].to_numpy()
-            n = len(pdf)
-            # round-7 shape: whole-batch vectorized shingling, then the
-            # EXACT affine map mod the Mersenne prime is evaluated once
-            # per DISTINCT shingle value in the batch (shared shingles
-            # are the common case in any near-dup corpus; duplicates
-            # inside a doc are kept — min over duplicates == min over
-            # the distinct set) and per-doc minima are one gather +
-            # minimum.reduceat per permutation over contiguous runs.
-            # The affine table is built in cache-sized chunks of
-            # 65 536 elements (512 KiB per temporary): _mersenne_affine
-            # materializes ~10 temporaries of its shape, and big flat
-            # chunks measured 6-12x slower from cache/allocation
-            # pressure at 32 concurrent workers.
-            sh_all, counts = _shingle_hashes_batch(
+            sh, counts = _shingle_hashes_batch(
                 pdf[text_col], shingle_k, distinct=False
             )
-            if n == 0 or sh_all.size == 0:
-                yield pd.DataFrame({id_col: out_ids,
-                                    "signature": [np.empty(0, np.int64)
-                                                  for _ in range(n)]})
-                continue
-            u_vals, inv = np.unique(sh_all, return_inverse=True)
-            s_u = u_vals.astype(np.uint64) % M
-            n_u = s_u.size
-            tbl = np.empty((num_perm_, n_u), dtype=np.uint64)
-            step = max(1, 65_536 // num_perm_)
-            for lo in range(0, n_u, step):
-                hi = min(lo + step, n_u)
-                tbl[:, lo:hi] = _mersenne_affine(
-                    aa[:, None], bb[:, None], s_u[None, lo:hi]
-                )
-            seg = np.zeros(n, dtype=np.int64)
-            np.cumsum(counts[:-1], out=seg[1:])
-            sigs = np.empty((n, num_perm_), dtype=np.int64)
-            for p in range(num_perm_):
-                row = tbl[p][inv]
-                sigs[:, p] = np.minimum.reduceat(row, seg).astype(np.int64)
-            yield pd.DataFrame({id_col: out_ids, "signature": list(sigs)})
+            yield pd.DataFrame({
+                id_col: pdf[id_col].to_numpy(),
+                "signature": list(_signatures_np(sh, counts, a, b)),
+            })
 
     return ensure_parallel(df.select(id_col, text_col)).mapInPandas(
         sig, schema=f"{id_col} bigint, signature array<bigint>"
@@ -556,6 +562,37 @@ def _bucket_pair_chunks(
             yield (blk + iu).ravel(), (blk + ju).ravel()
 
 
+def _screened_bucket_pairs(
+    ids: np.ndarray, sigs: np.ndarray, sizes: np.ndarray, min_matches: int
+) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """(id_a, id_b) of every i<j pair inside each bucket whose
+    signatures agree in >= `min_matches` components (0 keeps every
+    pair): the bucket-local estimate screen.  Members lie contiguous,
+    bucket after bucket, in id order inside each bucket, with `sigs`
+    row-aligned to `ids`."""
+    for ia, ib in _bucket_pair_chunks(sizes):
+        if min_matches > 0:
+            keep = _match_counts(sigs[ia], sigs[ib]) >= min_matches
+            ia, ib = ia[keep], ib[keep]
+        yield ids[ia], ids[ib]
+
+
+def _pair_jaccard(sa, sb) -> np.ndarray:
+    """Exact Jaccard of each pair (sa[i], sb[i]) of sorted distinct
+    shingle sets (`doc_shingles` arrays): one sorted-array intersection
+    per pair, the verify kernel.  Measured 5-10x faster than one lexsort
+    over the concatenated sets of all pairs.  UNROUNDED: inter/union are
+    exact ints, so the IEEE division is bit-identical to the SQL twin's;
+    rounding would diverge at half-even (numpy) vs half-away (SQL)
+    ties."""
+    jac = np.empty(len(sa), dtype=np.float64)
+    for i, (a, b) in enumerate(zip(sa, sb)):
+        inter = np.intersect1d(a, b, assume_unique=True).size
+        union = len(a) + len(b) - inter
+        jac[i] = inter / union if union else 1.0
+    return jac
+
+
 def lsh_candidates(
     signatures: DataFrame,
     id_col: str = "doc_id",
@@ -629,13 +666,11 @@ def lsh_candidates(
             sigs = np.concatenate(pdf["_sigs"].to_numpy()).reshape(ids.size, -1)
             # id order inside each bucket, so every i<j pair has id_a < id_b
             order = np.lexsort((ids, np.repeat(np.arange(sizes.size), sizes)))
-            ids, sigs = ids[order], sigs[order]
-            outs = []
-            for ia, ib in _bucket_pair_chunks(sizes):
-                if min_matches > 0:
-                    keep = _match_counts(sigs[ia], sigs[ib]) >= min_matches
-                    ia, ib = ia[keep], ib[keep]
-                outs.append(pd.DataFrame({"id_a": ids[ia], "id_b": ids[ib]}))
+            outs = [
+                pd.DataFrame({"id_a": a, "id_b": b})
+                for a, b in _screened_bucket_pairs(
+                    ids[order], sigs[order], sizes, min_matches)
+            ]
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
@@ -704,19 +739,9 @@ def verified_near_dups(
 
     def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            jac = np.empty(len(pdf), dtype=np.float64)
-            for i, (sa, sb) in enumerate(zip(pdf["_sha"], pdf["_shb"])):
-                sa = np.asarray(sa, dtype=np.int64)
-                sb = np.asarray(sb, dtype=np.int64)
-                # both sorted+distinct by construction
-                inter = np.intersect1d(sa, sb, assume_unique=True).size
-                union = sa.size + sb.size - inter
-                jac[i] = inter / union if union else 1.0
             out = pdf[["id_a", "id_b"]].copy()
-            # UNROUNDED: inter/union are exact ints, so the IEEE division
-            # is bit-identical to the SQL twin's; rounding would diverge
-            # at half-even (numpy) vs half-away (SQL) ties
-            out["jaccard"] = jac
+            out["jaccard"] = _pair_jaccard(pdf["_sha"].to_numpy(),
+                                           pdf["_shb"].to_numpy())
             yield out[out["jaccard"] >= threshold]
 
     # no repartition: `paired` is a join output and already carries
@@ -851,23 +876,124 @@ def minhash_near_dups(
     4. exact shingle-Jaccard verification of the distinct survivors
        only (verified_near_dups joins shingles onto those pairs).
 
-    The keeper set feeds both the signature pass and the verify
-    shingling and is NOT materialized: each consumer re-reads the
-    documents against one shared per-hash groups exchange.  A
-    checkpoint (the session.py lifetime rule) measured slower on the
-    textpipe benchmark: +2 jobs, 7.0 -> 7.9 s for the near_dedup step
-    (median of 3 alternating traced runs, 4 vCPU).
+    Two paths run these steps, picked from the size of the files `df`
+    scans (`session.scan_bytes`, no job), as connected_components picks
+    its one-task path:
+
+    - under session.SMALL_SCAN_BYTES (2 MB, set from the measured
+      crossover beside it): the keepers go through
+      coalesce(1) into ONE mapInPandas task (_near_dups_one_task) that
+      runs steps 2-4 in numpy, with no shuffle and no Spark job per
+      step;
+    - larger, unknown (no input files: an in-memory or checkpointed
+      frame) or non-local inputs: the distributed funnel above.  Its
+      keeper set feeds both the signature pass and the verify
+      shingling and is NOT materialized: each consumer re-reads the
+      documents against one shared per-hash groups exchange.  A
+      checkpoint (the session.py lifetime rule) measured slower on the
+      textpipe benchmark: +2 jobs, 7.0 -> 7.9 s for the near_dedup
+      step (median of 3 alternating traced runs, 4 vCPU).
+
+    Both paths share every kernel (shingling, signatures, the bucket
+    screen, the pair Jaccard); only bucket formation differs.  The
+    one-task path groups on the exact band slice, as the SQL oracle's
+    band key does; the distributed path groups on its xxhash64, so the
+    two can differ only where two different slices of one band collide
+    in 64 bits (the cap and the pairs then see one merged bucket).
 
     Returns (id_a, id_b, jaccard) for near-dup keeper pairs."""
-    df = min_id_survivors(
+    keepers = min_id_survivors(
         df.select(id_col, text_col), F.sha2(F.col(text_col), 256), id_col
     )
-    sigs = minhash_signatures(df, text_col, id_col, num_perm, shingle_k)
     est_min = int(np.ceil(num_perm * max(0.0, threshold - MINHASH_EST_MARGIN)))
+    size = session.scan_bytes(df)
+    if size is not None and size < session.SMALL_SCAN_BYTES:
+        return _near_dups_one_task(keepers, text_col, id_col, num_perm,
+                                   shingle_k, bands, threshold, bucket_cap,
+                                   est_min)
+    sigs = minhash_signatures(keepers, text_col, id_col, num_perm, shingle_k)
     screened = lsh_candidates(sigs, id_col, bands, bucket_cap, est_min)
     return verified_near_dups(
-        df, screened, text_col, id_col, shingle_k, threshold
+        keepers, screened, text_col, id_col, shingle_k, threshold
     ).select("id_a", "id_b", "jaccard")
+
+
+def _exact_band_buckets(
+    sigs: np.ndarray, bands: int, bucket_cap: int | None
+) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """Per band, (members, sizes): the row positions of `sigs` grouped
+    by their exact band slice, contiguous bucket after bucket and in
+    position order inside each bucket, each bucket cut to its first
+    `bucket_cap` members (None keeps all) — band_rows +
+    cap_band_buckets in numpy, keyed on the slice instead of its
+    hash."""
+    n, num_perm = sigs.shape
+    r = num_perm // bands
+    for band in range(bands):
+        key = sigs[:, band * r:(band + 1) * r]
+        # stable: ties keep position order
+        order = np.lexsort(key.T[::-1])
+        ks = key[order]
+        starts = np.flatnonzero(np.r_[True, (ks[1:] != ks[:-1]).any(axis=1)])
+        sizes = np.diff(np.r_[starts, n])
+        if bucket_cap is not None:
+            rank = np.arange(n) - np.repeat(starts, sizes)
+            order = order[rank < bucket_cap]
+            sizes = np.minimum(sizes, bucket_cap)
+        yield order, sizes
+
+
+def _near_dups_one_task(
+    keepers: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_perm: int,
+    shingle_k: int,
+    bands: int,
+    threshold: float,
+    bucket_cap: int | None,
+    est_min: int,
+) -> DataFrame:
+    """minhash_near_dups steps 2-4 over a small keeper set in one
+    executor task: signatures, exact-slice LSH buckets with the cap,
+    the bucket screen, distinct pairs and the exact Jaccard."""
+    a, b = perm_params(num_perm)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pdf = pd.concat(list(batches), ignore_index=True)
+        if len(pdf) == 0:
+            return
+        # position order == id order, so a bucket's i<j pairs have
+        # id_a <= id_b (equal for the copies of a repeated id)
+        pdf = pdf.sort_values(id_col, kind="stable")
+        ids = pdf[id_col].to_numpy(dtype=np.int64)
+        n = ids.size
+        sh, counts = _shingle_hashes_batch(pdf[text_col], shingle_k,
+                                           distinct=False)
+        sigs = _signatures_np(sh, counts, a, b)
+        codes = [
+            pa * n + pb
+            for members, sizes in _exact_band_buckets(sigs, bands, bucket_cap)
+            for pa, pb in _screened_bucket_pairs(members, sigs[members],
+                                                 sizes, est_min)
+        ]
+        pairs = np.unique(np.concatenate([np.empty(0, np.int64), *codes]))
+        pa, pb = np.divmod(pairs, n)
+        # distinct sets only for the docs in a pair: sorting every
+        # doc's shingles took 4.2 s of a 13.9 s kernel at 20 160 docs
+        ends = np.cumsum(counts)
+        sets = {i: np.unique(sh[ends[i] - counts[i]:ends[i]])
+                for i in np.union1d(pa, pb).tolist()}
+        jac = _pair_jaccard([sets[i] for i in pa.tolist()],
+                            [sets[i] for i in pb.tolist()])
+        keep = jac >= threshold
+        yield pd.DataFrame({
+            "id_a": ids[pa[keep]], "id_b": ids[pb[keep]], "jaccard": jac[keep],
+        }).drop_duplicates(["id_a", "id_b"])
+
+    return keepers.coalesce(1).mapInPandas(
+        run, schema="id_a bigint, id_b bigint, jaccard double"
+    )
 
 
 def simhash_near_dups(

@@ -227,7 +227,11 @@ def weighted_mixture(
     tagged with copy_id = 1..n.  Same hash-threshold determinism as
     hash_sample, so the materialized mixture is identical on every
     run/engine/cluster size.  Map-only: a CASE weight, one comparison,
-    one sequence-explode — no shuffle, no Python."""
+    one sequence-explode — no shuffle, no Python.
+
+    A frame that already has copy_id (an earlier mixture) keeps its
+    copies apart: every copy of a row draws the same n, so the k-th
+    copy of copy c gets copy_id (c - 1) * n + k, again 1..N per row."""
     w = F.lit(float(default_weight))
     for value, wt in sorted(weights.items()):
         w = F.when(
@@ -235,14 +239,17 @@ def weighted_mixture(
         ).otherwise(w)
     base = F.floor(w).cast("bigint")
     extra = (hash_fraction_col(F.col(key_col), seed) < (w - base)).cast("bigint")
+    copy_id = F.col("_k")
+    if "copy_id" in df.columns:
+        copy_id = (F.col("copy_id") - 1) * F.col("_n") + copy_id
     return (
         df.withColumn("_n", base + extra)
         .where(F.col("_n") > 0)
         .withColumn(
-            "copy_id",
-            F.explode(F.sequence(F.lit(1).cast("bigint"), F.col("_n"))),
+            "_k", F.explode(F.sequence(F.lit(1).cast("bigint"), F.col("_n")))
         )
-        .drop("_n")
+        .withColumn("copy_id", copy_id)
+        .drop("_n", "_k")
     )
 
 

@@ -6,8 +6,9 @@ the local[32] sandbox:
 - Arrow transport for the few pandas UDFs
 - shuffle partitions sized by env (driver bench sets cores)
 
-plus the one source-size probe (`input_bytes`) behind every size-driven
-fan-out decision: `ensure_parallel` and the stream state partitioning.
+plus the one source-size probe (`input_bytes`, and `scan_bytes` over a
+frame's input files) behind every size-driven decision: `ensure_parallel`,
+the stream state partitioning and the minhash_near_dups path.
 
 Lifetime of intermediates, the one rule: an operator's result owns
 everything it depends on.  An intermediate read twice is materialized
@@ -17,9 +18,10 @@ entry, no handle to release, no option.  Scratch files (stream sinks)
 are read into such a checkpoint and removed before returning.  With
 AQE on, `localCheckpoint(eager=False)` runs the intermediate's shuffle
 stages when called, so such an operator does work at call time.  Where
-recomputing measured faster (the minhash_near_dups keeper set, which
-each consumer re-reads against one shared per-hash groups exchange),
-the intermediate is not materialized at all.
+recomputing measured faster (the keeper set of the distributed
+minhash_near_dups funnel, which each consumer re-reads against one
+shared per-hash groups exchange), the intermediate is not materialized
+at all.
 """
 
 from __future__ import annotations
@@ -134,27 +136,59 @@ def input_bytes(paths: list[str]) -> int:
     return total
 
 
+# Local input bytes under which one task beats a fan-out: ensure_parallel
+# skips its repartition, and minhash_near_dups runs its whole funnel in one
+# executor task.  The minhash crossover, measured on 4 vCPUs
+# (minhash_near_dups(...).collect() at threshold 0.72 over salted
+# perfbench-style documents in 4 parquet files, one task vs the
+# distributed funnel; warm = median of 3 calls after the first):
+#
+#   docs    bytes    warm one / dist   cold one / dist
+#   1 260   0.38 MB   0.97 / 2.05 s     5.0 / 8.0 s
+#   5 040   1.39 MB   2.32 / 3.91 s     6.6 / 11.0 s
+#   10 080  2.76 MB   5.06 / 4.49 s     8.5 / 11.9 s
+#   20 160  5.49 MB  10.90 / 8.15 s    15.1 / 16.3 s
+#
+# Warm, one task wins up to ~2.4 MB; cold, past 5.5 MB.  2 MB takes the
+# one-task path only where it wins both.
+SMALL_SCAN_BYTES = 2 << 20
+
+
+def scan_bytes(df: DataFrame) -> int | None:
+    """Bytes of the local files `df` scans (`input_bytes` over
+    `df.inputFiles()`, a driver-side plan walk: no job), or None when
+    unknown: no input files (an in-memory or checkpointed frame) or a
+    path that is not local."""
+    try:
+        files = df.inputFiles()
+    except Exception:
+        return None
+    if not files:
+        return None
+    try:
+        return input_bytes(files)
+    except OSError:
+        return None
+
+
 def ensure_parallel(df: DataFrame) -> DataFrame:
     """Fan a SOURCE frame out to defaultParallelism partitions before a
     CPU-bound Arrow UDF stage (one small parquet file is ONE partition
     and would serialize it), unless the scan already has a file per
-    core or reads under 2 MB of local files — there the kernel beats
-    the shuffle + fan-out cost (+0.2 s measured on the sf0.1 ANN
-    queries).  `df.inputFiles()` is a driver-side plan walk; probing
-    `df.rdd.getNumPartitions()` forces a plan->RDD conversion, measured
-    5-8x slower on the composed dedup funnels.  Join outputs already
-    carry shuffle-partition parallelism: call this on sources only."""
+    core or reads under SMALL_SCAN_BYTES of local files — there the
+    kernel beats the shuffle + fan-out cost (+0.2 s measured on the
+    sf0.1 ANN queries).  `df.inputFiles()` is a driver-side plan walk;
+    probing `df.rdd.getNumPartitions()` forces a plan->RDD conversion,
+    measured 5-8x slower on the composed dedup funnels.  Join outputs
+    already carry shuffle-partition parallelism: call this on sources
+    only."""
     want = df.sparkSession.sparkContext.defaultParallelism
     try:
-        files = df.inputFiles()
+        if len(df.inputFiles()) >= want:
+            return df
     except Exception:
-        files = []
-    if len(files) >= want:
+        pass
+    size = scan_bytes(df)
+    if size is not None and size < SMALL_SCAN_BYTES:
         return df
-    if files:
-        try:
-            if input_bytes(files) < (2 << 20):
-                return df
-        except OSError:
-            pass
     return df.repartition(want)

@@ -301,6 +301,123 @@ def test_lsh_candidates_screen_matches_pair_join_shape(spark, fixture):
         )
 
 
+def test_signatures_np_memory_is_bounded():
+    """The signature kernel of a 1 260-doc batch (about 190 000 distinct
+    shingles) reduces permutation by permutation into the per-doc
+    minima: its traced peak stays O(shingles), far under the
+    num_perm x n_unique uint64 table (~97 MB here) that it no longer
+    allocates."""
+    import tracemalloc
+
+    from batch3dfier_spark.operators.dedup import (_shingle_hashes_batch,
+                                                   _signatures_np, perm_params)
+
+    rng = np.random.default_rng(7)
+    letters = np.array(list("abcdefghijklmnopqrstuvwxyz     "))
+    texts = ["".join(rng.choice(letters, 160)) for _ in range(1260)]
+    sh, counts = _shingle_hashes_batch(texts, 5, distinct=False)
+    a, b = perm_params(64)
+    n_unique = np.unique(sh).size
+    tracemalloc.start()
+    try:
+        sigs = _signatures_np(sh, counts, a, b)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    table = 64 * n_unique * 8
+    assert table > 90e6
+    assert peak < 8 * sh.nbytes + (8 << 20) + sigs.nbytes, (peak, table)
+
+
+def _chain_docs():
+    """Three perfbench-style near-duplicate chains of 8 docs (ids
+    100*c + j): member j holds blocks j..j+7 of a sequence of 30-word
+    blocks, so neighbours share 7 of 8 blocks and members two apart 6."""
+    rng = np.random.default_rng(5)
+    ids, texts = [], []
+    for c in range(3):
+        words = ["".join(rng.choice(list("abcdefghij"), 6))
+                 for _ in range(15 * 30)]
+        blocks = [" ".join(words[i * 30:(i + 1) * 30]) for i in range(15)]
+        for j in range(8):
+            ids.append(100 * c + j)
+            texts.append("\n".join(blocks[j:j + 8]))
+    return pd.DataFrame({"doc_id": np.array(ids, dtype=np.int64), "text": texts})
+
+
+def _minhash_both_paths(monkeypatch, docs, **kwargs):
+    """minhash_near_dups(docs) on the default path, which must be the
+    one-task path, and on the distributed path (SMALL_SCAN_BYTES = 0
+    forces it); both must return the same (id_a, id_b, jaccard)."""
+    from batch3dfier_spark import session
+    from batch3dfier_spark.operators import dedup
+
+    one_task = dedup._near_dups_one_task
+    calls = []
+
+    def counted(*a, **kw):
+        calls.append(1)
+        return one_task(*a, **kw)
+
+    monkeypatch.setattr(dedup, "_near_dups_one_task", counted)
+    key = ["id_a", "id_b"]
+    runs = {}
+    for path, bound in (("one_task", session.SMALL_SCAN_BYTES), ("dist", 0)):
+        monkeypatch.setattr(session, "SMALL_SCAN_BYTES", bound)
+        runs[path] = (dedup.minhash_near_dups(docs, **kwargs).toPandas()
+                      .sort_values(key).reset_index(drop=True))
+        assert len(calls) == 1, path  # taken on the default bound only
+    pd.testing.assert_frame_equal(runs["one_task"], runs["dist"])
+    return runs["one_task"]
+
+
+@pytest.mark.parametrize("fixture", ["sf0.01", "hot_bucket", "chains"])
+def test_minhash_near_dups_paths_agree(spark, monkeypatch, tmp_path, fixture):
+    """The one-task funnel returns exactly the distributed funnel's
+    pairs and Jaccard values: on the sf0.01 documents, on the
+    bucket_cap=16 hot-bucket fixture (the cap binds), and on
+    perfbench-style chains at threshold 0.72 (each chain a path)."""
+    if fixture == "sf0.01":
+        docs = spark.read.parquet(SF.replace("sf0.001", "sf0.01") + "/documents.parquet")
+        kwargs = {"threshold": 0.5}
+    else:
+        if fixture == "hot_bucket":
+            base = "the same exact document body repeated verbatim"
+            texts = [base] * 1000 + [base + f" variant {i} " + "x" * (i % 40)
+                                     for i in range(200)]
+            pdf = pd.DataFrame({"doc_id": np.arange(len(texts), dtype=np.int64),
+                                "text": texts})
+            kwargs = {"threshold": 0.5, "bucket_cap": 16}
+        else:
+            pdf = _chain_docs()
+            kwargs = {"threshold": 0.72}
+        spark.createDataFrame(pdf).write.parquet(str(tmp_path / "docs"))
+        docs = spark.read.parquet(str(tmp_path / "docs"))
+    got = _minhash_both_paths(monkeypatch, docs, **kwargs)
+    assert len(got) > 0
+    assert (got["id_a"] < got["id_b"]).all()
+    if fixture == "chains":
+        # every chain neighbour pair is found, no pair crosses chains
+        pairs = set(zip(got["id_a"], got["id_b"]))
+        assert {(100 * c + j, 100 * c + j + 1)
+                for c in range(3) for j in range(7)} <= pairs
+        assert all(a // 100 == b // 100 for a, b in pairs)
+
+
+def test_minhash_near_dups_in_memory_frame_takes_distributed_path(spark, monkeypatch):
+    """A frame with no input files has no known size: the funnel runs
+    distributed."""
+    from batch3dfier_spark.operators import dedup
+
+    def boom(*a, **kw):
+        raise AssertionError("one-task path taken")
+
+    monkeypatch.setattr(dedup, "_near_dups_one_task", boom)
+    got = dedup.minhash_near_dups(spark.createDataFrame(_chain_docs()),
+                                  threshold=0.72).toPandas()
+    assert len(got) >= 21
+
+
 def test_embedding_near_dups_no_driver_collect_and_exact(spark):
     """The all-pairs block scorer must (a) never collect vectors to the
     driver (the round-1 scale killer) and (b) reproduce the numpy

@@ -111,6 +111,23 @@ def test_weighted_mixture_matches_duckdb(spark):
     assert (zh["count"] >= 2).all() and (zh["count"] == zh["max"]).all()
 
 
+def test_weighted_mixture_twice_keeps_copy_ids_unique(spark, docs):
+    """A second mixture composes copy_id with the first instead of
+    overwriting it: every (doc_id, copy_id) stays unique and each doc's
+    copy ids are 1..N, where N is the product of the two draws."""
+    from batch3dfier_spark.operators.sampling import weighted_mixture
+
+    weights = {"zh": 2.0, "en": 1.5}
+    once = weighted_mixture(docs, weights, key_col="doc_id", seed="m1")
+    twice = weighted_mixture(once, weights, key_col="doc_id", seed="m1")
+    per = twice.toPandas().groupby("doc_id")["copy_id"].agg(
+        ["count", "nunique", "min", "max"])
+    assert (per["count"] == per["nunique"]).all()
+    assert (per["min"] == 1).all() and (per["max"] == per["count"]).all()
+    n1 = once.groupBy("doc_id").count().toPandas().set_index("doc_id")["count"]
+    assert (per["count"] == n1[per.index] ** 2).all()
+
+
 def test_domain_cap_matches_duckdb(spark):
     """q_domain_cap (skew-safe cap_per_key over a deliberately hot
     domain; test_oracle_contract checks it against the plain

@@ -929,8 +929,10 @@ def test_textpipe_jobs_per_step(spark, tmp_path, monkeypatch):
     assert jobs["input"] <= 1, jobs
     assert jobs["exact_dedup"] <= 3, jobs
     assert jobs["quality_filter"] <= 1, jobs
-    # the one-task CC labels are broadcast, so the drop join does not
+    # the minhash funnel runs in one task on this small input, and the
+    # one-task CC labels are broadcast, so the drop join does not
     # shuffle the step's input
-    assert jobs["near_dedup"] <= 12, jobs
+    assert jobs["near_dedup"] <= 7, jobs
     assert jobs["hash_split"] <= 1, jobs
     assert jobs["domain_cap"] <= 9, jobs
+    assert sum(jobs.values()) <= 24, jobs
